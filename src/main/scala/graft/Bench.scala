@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Throughput bench: each query timed SPARK_GRAFT_BENCH_RUNS times
   * (default 3) and reported at its MINIMUM — this box's load swings
@@ -186,22 +185,10 @@ object Bench {
       floorsForSf.fold(DefaultFloor)(
         _.getOrElse(name, DefaultFloor)) * floorScale
 
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-    // shared library session posture (AQE, cached-plan re-partitioning,
-    // UTC) — one list, owned by graft.core.SessionTune, so a user
-    // session gets the same plan shapes the bench measures
-    graft.core.SessionTune.defaults.foreach {
-      case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    // batch shuffle partitions derived from the DATA SIZE under sfDir,
-    // not the core count (guide §2; the r17 scaling block measured the
-    // cores-pinned suite 13% slower at 32 cores than 8 on sf0.1 —
-    // pure per-task fixed cost). Conf-overridable, clamped, and
-    // byte-driven at any scale — see SessionTune.
-    graft.core.SessionTune.tuneForData(spark, sfDir)
-    spark.sparkContext.setLogLevel("WARN")
+    // the library session posture (defaults + shuffle partitions
+    // derived from the bytes under sfDir, not the core count) — the
+    // same one a user session gets from graft.core.SessionTune
+    val spark = graft.core.SessionTune.session(cpus.toInt, Some(sfDir))
     val errors = scala.collection.mutable.ListBuffer.empty[String]
 
     def timeQuery(name: String, runs: Int): Double =

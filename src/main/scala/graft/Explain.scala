@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of
   * selected queries (all of them with no args). Used to check
   * pushdown/pruning/broadcast/codegen expectations hold — see
@@ -9,17 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-    // shared library session posture (SessionTune owns the list)
-    graft.core.SessionTune.defaults.foreach {
-      case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    // same byte-derived batch partitioning the bench session runs
-    // under, so dumped plans match the measured ones
-    graft.core.SessionTune.tuneForData(spark, sfDir)
-    spark.sparkContext.setLogLevel("ERROR")
+    // the bench's session posture, so dumped plans match the measured ones
+    val spark = graft.core.SessionTune.session(4, Some(sfDir), "ERROR")
     val wanted = if (args.nonEmpty) args.toSet else SparkEntry.queries.keySet
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => wanted.contains(q._1))

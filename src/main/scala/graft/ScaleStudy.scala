@@ -202,17 +202,12 @@ object ScaleStudy {
       require(unknown.isEmpty,
         s"unknown HeavyFamily/EventsFamily entries: ${unknown.mkString(", ")}")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionTune.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     buildScaled(spark, "/root/testdata/sf0.1", outDir, times = 10)
+    // the study runs at the bench's byte-derived count for the 10x corpus
+    graft.core.SessionTune.tuneForData(spark, outDir)
 
     (HeavyFamily ++ EventsFamily ++ SalesFamily)
       .filter(n => wanted.forall(_(n)))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Optional
@@ -11,23 +10,15 @@ object Verify {
     val wanted: Set[String] =
       if (args.length > 2) args.drop(2).toSet else SparkEntry.queries.keySet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-    // shared library session posture (SessionTune owns the list)
-    graft.core.SessionTune.defaults.foreach {
-      case (k, v) => builder.config(k, v) }
+    // the bench's session posture (graft.core.SessionTune)
+    val spark = graft.core.SessionTune.session(cpus.toInt, Some(sfDir))
     // SPARK_GRAFT_STATESTORE=rocksdb re-gates the stateful entries
     // under the off-heap provider (the 100 TB posture) — the oracle
-    // compare must be provider-independent, same toggle as StreamStress
+    // compare must be provider-independent (PLANS.md "Round 14:
+    // stateful family re-gated under RocksDB")
     if (sys.env.getOrElse("SPARK_GRAFT_STATESTORE", "hdfs") == "rocksdb")
-      builder.config("spark.sql.streaming.stateStore.providerClass",
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    // batch shuffle partitions from input bytes, not core count
-    // (guide §2, same derivation the bench session uses)
-    graft.core.SessionTune.tuneForData(spark, sfDir)
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // self-evidencing run metadata: a genuine re-run is
     // distinguishable from a copied artifact by its timestamps and
@@ -35,6 +26,7 @@ object Verify {
     // verify_meta.json)
     val runStartMs = System.currentTimeMillis()
     val wallS = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val failed = scala.collection.mutable.ListBuffer.empty[String]
     SparkEntry.queries.view.filterKeys(wanted).foreach { case (name, fn) =>
       // per-entry cache scope: operator-internal caches (registered
       // via CacheScope) release once the dump completes, so a full
@@ -45,6 +37,7 @@ object Verify {
           .parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       wallS(name) = (System.nanoTime() - t0) / 1e9
@@ -70,6 +63,7 @@ object Verify {
       |"wall_s_total": ${(runEndMs - runStartMs) / 1e3},
       |"sf_dir": ${q(sfDir)},
       |"n_queries": ${wallS.size},
+      |"failed": ${failed.map(q).mkString("[", ",", "]")},
       |"wall_s": ${wallS.map { case (k, v) => s"${q(k)}: $v" }
         .mkString("{", ",", "}")}}""".stripMargin.replace("\n", " ")
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"), meta)

@@ -3,14 +3,16 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
 
-/** Library-owned session posture: the confs and the partition
-  * derivation every runner (Bench / Verify / Explain / a user
-  * pipeline) must share for the operators here to keep their measured
-  * plan shapes (optimization guide §2: partition counts derive from
-  * DATA SIZE, never from whatever core count the host happens to
-  * provide).
+/** Library-owned session posture: the one place a session is built,
+  * the confs every runner (Bench / Verify / Explain / ScaleStudy / the
+  * test session / a user pipeline) must share for the operators here
+  * to keep their measured plan shapes, and the partition derivation
+  * (optimization guide §2: partition counts derive from DATA SIZE,
+  * never from whatever core count the host happens to provide).
   *
-  * Two pieces:
+  * Three pieces:
+  *
+  *  - [[session]]: the factory every runner calls.
   *
   *  - [[defaults]]: session confs the operators' plan shapes depend
   *    on. `canChangeCachedPlanOutputPartitioning` lived only in the
@@ -20,24 +22,21 @@ import org.apache.hadoop.fs.Path
   *    q_snapshot_merge 9.52 s with it off vs 2.59 s on, same code).
   *    Owning the list here makes the posture part of the library.
   *
-  *  - [[scaledPartitions]] / [[tuneForData]]: batch
-  *    `spark.sql.shuffle.partitions` derived from INPUT BYTES, the
-  *    batch twin of [[graft.streaming.StreamTune]]'s per-stream
-  *    derivation. Measured motivation (r17 driver scaling block): with
-  *    partitions pinned to the core count, the sf0.1 suite ran 13%
-  *    FASTER on 8 cores than 32 — a dozen entries ~2x slower at 32 —
-  *    pure per-task fixed cost on partitions that hold a few hundred
-  *    KB each. Deriving from bytes makes the count scale-adaptive:
-  *    tiny inputs get few partitions regardless of host width, and at
-  *    100 TB the byte term (bytes / 32 MiB) saturates any practical
-  *    core clamp, so nothing here is a local[N] tuning constant. A
-  *    deployment that knows better pins [[PartitionsConf]] and the
-  *    derivation never runs.
+  *  - [[dirBytes]] / [[scaledPartitions]]: shuffle partitions derived
+  *    from INPUT BYTES, shared by the batch derivation
+  *    ([[tuneForData]], [[BatchTargetBytes]] per partition) and the
+  *    per-stream one ([[graft.streaming.StreamTune]],
+  *    [[StreamTargetBytes]]). Measured motivation (r17 driver scaling
+  *    block): with partitions pinned to the core count, the sf0.1
+  *    suite ran 13% FASTER on 8 cores than 32 — a dozen entries ~2x
+  *    slower at 32 — pure per-task fixed cost on partitions that hold
+  *    a few hundred KB each. Deriving from bytes makes the count
+  *    scale-adaptive: tiny inputs get few partitions regardless of
+  *    host width, and at 100 TB the byte term (bytes / 2 MiB)
+  *    saturates any practical core clamp, so nothing here is a
+  *    local[N] tuning constant.
   */
 object SessionTune {
-
-  /** Hard override: use exactly this many batch shuffle partitions. */
-  val PartitionsConf = "spark.graft.batch.shufflePartitions"
 
   /** Input bytes one batch shuffle partition should own. Measured
     * full-suite A/B at sf0.1 (17 MB of input): a 2 MiB target (9
@@ -48,12 +47,16 @@ object SessionTune {
     * 4 x defaultParallelism clamp long before the byte term binds
     * (100 TB / 2 MiB >> any cluster's core count), and AQE's advisory
     * coalescing still owns the post-shuffle merge decision. */
-  val TargetBytesConf = "spark.graft.batch.targetPartitionBytes"
-  val DefaultTargetBytes: Long = 2L << 20
+  val BatchTargetBytes: Long = 2L << 20
 
-  /** Session confs the library's plan shapes assume. Apply with
-    * `SessionTune.defaults.foreach { case (k, v) => builder.config(k, v) }`
-    * (or set them on a live session — all are runtime-settable). */
+  /** Source bytes one streaming shuffle/state partition should own
+    * (see [[graft.streaming.StreamTune]] for the per-trigger
+    * state-store cost it bounds). */
+  val StreamTargetBytes: Long = 16L << 20
+
+  /** Session confs the library's plan shapes assume. [[session]]
+    * applies them; all are runtime-settable, so a user session can
+    * take them with `spark.conf.set`. */
   val defaults: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "true",
     // AQE may re-partition the OUTPUT of cached plans: a persisted
@@ -63,8 +66,25 @@ object SessionTune {
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.session.timeZone" -> "UTC")
 
-  /** Total bytes under `dir` (metadata-only, glob-aware); 0 when the
-    * path is missing — callers fall to the minimum partition count. */
+  /** The library session: `local[cpus]`, no UI, every [[defaults]]
+    * entry and `logLevel`; with a `dataDir`, batch shuffle partitions
+    * sized to its bytes ([[tuneForData]]). */
+  def session(cpus: Int, dataDir: Option[String] = None,
+      logLevel: String = "WARN"): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.ui.enabled", "false")
+    defaults.foreach { case (k, v) => builder.config(k, v) }
+    val s = builder.getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    dataDir.foreach(tuneForData(s, _))
+    s
+  }
+
+  /** Total bytes under `dir` (metadata-only, glob-aware). A missing
+    * path or an empty glob reads 0 — callers fall to the minimum
+    * partition count; any other IOException propagates, so a broken
+    * store never silently sizes the session at the floor. */
   def dirBytes(s: SparkSession, dir: String): Long = {
     val hp = new Path(dir)
     val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -74,27 +94,22 @@ object SessionTune {
         if (st.isDirectory) fs.getContentSummary(st.getPath).getLength
         else st.getLen
       }.sum
-    } catch { case _: java.io.IOException => 0L }
+    } catch { case _: java.io.FileNotFoundException => 0L }
   }
 
-  /** Batch shuffle-partition count for `bytes` of input: explicit
-    * conf wins; otherwise ceil(bytes / target) clamped to
-    * [2, 4 x defaultParallelism] — the same shape as
-    * [[graft.streaming.StreamTune.scaledPartitions]], sized for batch
-    * exchanges instead of per-trigger state stores. */
-  def scaledPartitions(s: SparkSession, bytes: Long): Int =
-    s.conf.getOption(PartitionsConf).map(_.toInt).getOrElse {
-      val target = s.conf.getOption(TargetBytesConf).map(_.toLong)
-        .getOrElse(DefaultTargetBytes)
-      val byBytes = (bytes + target - 1) / math.max(1L, target)
-      val cap = 4L * s.sparkContext.defaultParallelism
-      math.max(2L, math.min(byBytes, cap)).toInt
-    }
+  /** Shuffle-partition count for `bytes` of input at `target` bytes
+    * per partition: ceil(bytes / target) clamped to
+    * [2, 4 x defaultParallelism]. */
+  def scaledPartitions(s: SparkSession, bytes: Long, target: Long): Int = {
+    val byBytes = (bytes + target - 1) / target
+    val cap = 4L * s.sparkContext.defaultParallelism
+    math.max(2L, math.min(byBytes, cap)).toInt
+  }
 
   /** Point the session's `spark.sql.shuffle.partitions` at the size
     * of the data under `dir`. Returns the count it set. */
   def tuneForData(s: SparkSession, dir: String): Int = {
-    val n = scaledPartitions(s, dirBytes(s, dir))
+    val n = scaledPartitions(s, dirBytes(s, dir), BatchTargetBytes)
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     n
   }

@@ -523,8 +523,8 @@ object Dedup {
     * `bandBits` (fewer, wider bands — exact threshold drops to
     * nBands-1) or move to multi-band combination keys, trading the
     * exact guarantee for fan-out, exactly as the reference literature
-    * does. The same-pair-in-many-bands duplicates are removed by one
-    * distinct() on the verified output. */
+    * does. A pair that collides in several bands is emitted only from
+    * its first matching band, so the output needs no distinct(). */
   def simhashPairsBanded(
       sh: DataFrame, maxHamming: Int, bandBits: Int = 6): DataFrame = {
     val nBands = (SimhashBits + bandBits - 1) / bandBits

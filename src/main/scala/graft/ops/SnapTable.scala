@@ -826,8 +826,8 @@ object SnapTable {
     * a long-lived append table is O(commits since last checkpoint)
     * manifest reads + O(files) lines — not O(chain depth). A drain
     * that appends forever calls this every N batches
-    * ([[graft.ops.ManifestScaleStudy]] measures the walk cost it
-    * removes); [[vacuum]] still checkpoints at the horizon on its
+    * (PLANS.md "Round 17: manifest planning at 10⁴–10⁵ lines" measures
+    * the walk cost it removes); [[vacuum]] still checkpoints at the horizon on its
     * own. No-op when the checkpoint already exists. */
   def checkpointNow(s: SparkSession, table: String,
       version: Option[Int] = None): Unit = {

@@ -595,8 +595,8 @@ object StreamQueries extends graft.QueryModule {
     * posture: in-drain vacuum on every commit with retention covering
     * the replay horizon (keep = 2 ≥ the AvailableNow window), so the
     * live version count — and with it the tag scan and chain walk —
-    * stays bounded at any drain age ([[graft.streaming.SnapStress]]
-    * measures the flatness at 240 batches). The entry REQUIRES ≥2
+    * stays bounded at any drain age (PLANS.md "Round 15: snapshot
+    * drain-age study" measures the flatness at 240 batches). The entry REQUIRES ≥2
     * committed micro-batches AND the retention bound to have actually
     * engaged (exactly `keep` live versions at the end) — then
     * hash-gates the LATEST snapshot against the batch aggregate of

@@ -45,7 +45,8 @@ object CdcStream {
     * @param mvKey   the standing view's key
     * @param mvCols  the standing view's additive columns
     * @param onVersion observer per folded version: (source version,
-    *                  fold seconds) — [[CdcStress]]'s flatness probe
+    *                  fold seconds) — the per-fold flatness probe
+    *                  (PLANS.md "Round 16: MV-consumer age study")
     * @return number of source versions folded this drain (0 = caught
     *         up; redelivery is a no-op by tag)
     */
@@ -131,10 +132,11 @@ object CdcStream {
     * replayed wake-up folds zero). `Trigger.AvailableNow` drains the
     * backlog and stops (the catch-up posture); a processing-time
     * trigger is the stand-watch posture. `onFold` sees each drain's
-    * fold count ([[graft.streaming.CdcStress]] measures per-fold cost
-    * flat under it). Source-side manifest deletions by vacuum are
-    * invisible to the stream (already-processed files may vanish
-    * freely; the file source only tracks what it has seen). */
+    * fold count (per-fold cost measured flat under it: PLANS.md
+    * "Round 16: MV-consumer age study"). Source-side manifest
+    * deletions by vacuum are invisible to the stream
+    * (already-processed files may vanish freely; the file source only
+    * tracks what it has seen). */
   def watch(s: SparkSession, srcTable: String, mvTable: String,
       key: String, value: String, carry: Seq[String],
       contrib: DataFrame => DataFrame,

@@ -21,7 +21,8 @@ import graft.ops.SnapTable
   * by composing [[SnapTable.vacuum]] INTO the drain via
   * `vacuumEvery`/`keep`: every `vacuumEvery` batches the pre-horizon
   * manifests retire behind a checkpoint, holding version count — and
-  * with it per-batch commit cost — flat (measured: [[SnapStress]]).
+  * with it per-batch commit cost — flat (measured: PLANS.md "Round 15:
+  * snapshot drain-age study").
   * The one contract is RETENTION MUST COVER THE REPLAY HORIZON: a tag
   * is idempotent only while its manifest lives; vacuuming past a
   * batch that Spark could still replay re-opens its tag
@@ -52,8 +53,9 @@ object SnapStream {
     * drains whose retention must keep long history (vacuum can't
     * bound the chain), this caps every reader's chain walk at the
     * cadence instead of the drain's age
-    * ([[graft.ops.ManifestScaleStudy]]: the walk is the one
-    * depth-linear planning cost; a checkpoint collapses it 8×). */
+    * (PLANS.md "Round 17: manifest planning at 10⁴–10⁵ lines": the
+    * walk is the one depth-linear planning cost; a checkpoint
+    * collapses it 8×). */
   /** `tagScanDepth` bounds the per-commit tag-miss scan (otherwise
     * one header read per live version — the one age-linear commit
     * cost left when retention keeps long history): Spark's replay

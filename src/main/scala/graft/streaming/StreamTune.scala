@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.hadoop.fs.Path
+import graft.core.SessionTune
 
 /** Scale-adaptive shuffle/state partitioning for streaming runs
   * (optimization guide §2: derive partitioning from data size, never
@@ -12,20 +12,19 @@ import org.apache.hadoop.fs.Path
   * and commits ONE store per shuffle partition per stateful operator,
   * so a drain of B micro-batches touches B x P stores regardless of
   * row count. With `spark.sql.shuffle.partitions` tied to the core
-  * count (the batch session default here), that cost ANTI-scales with
-  * the machine: measured on this box, the attribution stream-stream
-  * join over ~2 MB of events runs 2.6 s at local[8]/P=8 and 6.5 s at
-  * local[32]/P=32 — same data, same result, 2.5x slower on 4x the
-  * cores, pure store-churn overhead.
+  * count (the batch session default before round 18), that cost
+  * ANTI-scales with the machine: measured on a 32-core host, the
+  * attribution stream-stream join over ~2 MB of events runs 2.6 s at
+  * local[8]/P=8 and 6.5 s at local[32]/P=32 — same data, same
+  * result, 2.5x slower on 4x the cores, pure store-churn overhead.
   *
   * Streaming runs therefore derive P from INPUT BYTES — the one size
-  * signal a fresh stream has before any batch runs — targeting
-  * [[TargetBytesConf]] of source data per partition (default 16 MiB),
-  * clamped to [2, 4 x defaultParallelism]. At cluster scale the
-  * byte-derived term dominates (100 TB / 16 MiB saturates any
-  * cores clamp), so this is not a local[N] tuning constant; a
-  * deployment that knows its state cardinality pins
-  * [[PartitionsConf]] outright and the derivation never runs.
+  * signal a fresh stream has before any batch runs — with the shared
+  * [[graft.core.SessionTune.scaledPartitions]] clamp at
+  * [[graft.core.SessionTune.StreamTargetBytes]] (16 MiB) of source
+  * data per partition. At cluster scale the byte-derived term
+  * dominates (100 TB / 16 MiB saturates any cores clamp), so this is
+  * not a local[N] tuning constant.
   *
   * The conf only matters at stream START (MicroBatchExecution clones
   * the session and snapshots confs then), and for a STATEFUL query
@@ -36,50 +35,16 @@ import org.apache.hadoop.fs.Path
   */
 object StreamTune {
 
-  /** Hard override: use exactly this many shuffle/state partitions
-    * for streaming runs (production deployments size state stores
-    * deliberately; the derivation below is the unconfigured default). */
-  val PartitionsConf = "spark.graft.stream.shufflePartitions"
-
-  /** Source bytes one streaming shuffle partition should own. */
-  val TargetBytesConf = "spark.graft.stream.targetPartitionBytes"
-  val DefaultTargetBytes: Long = 16L << 20
-
   /** Total bytes under each file-source path feeding `stream`
-    * (glob-aware, metadata-only). Streams without a file source — or
-    * whose landing dir is still empty — return 0 and fall back to the
-    * minimum partition count, which is right for a drop box that has
-    * not been populated yet. */
-  def sourceBytes(s: SparkSession, stream: DataFrame): Long = {
-    val paths = stream.queryExecution.analyzed.collect {
+    * ([[graft.core.SessionTune.dirBytes]] per path). Streams without
+    * a file source — or whose landing dir is still empty — return 0
+    * and fall back to the minimum partition count, which is right for
+    * a drop box that has not been populated yet. */
+  def sourceBytes(s: SparkSession, stream: DataFrame): Long =
+    stream.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.streaming.runtime.StreamingRelation =>
         r.dataSource.options.get("path")
-    }.flatten
-    paths.map { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        val matched = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Nil)
-        matched.map { st =>
-          if (st.isDirectory)
-            fs.getContentSummary(st.getPath).getLength
-          else st.getLen
-        }.sum
-      } catch { case _: java.io.IOException => 0L }
-    }.sum
-  }
-
-  /** Partition count for a streaming run over `bytes` of source:
-    * explicit conf wins; otherwise ceil(bytes / target) clamped to
-    * [2, 4 x defaultParallelism]. */
-  def scaledPartitions(s: SparkSession, bytes: Long): Int =
-    s.conf.getOption(PartitionsConf).map(_.toInt).getOrElse {
-      val target = s.conf.getOption(TargetBytesConf).map(_.toLong)
-        .getOrElse(DefaultTargetBytes)
-      val byBytes = (bytes + target - 1) / math.max(1L, target)
-      val cap = 4L * s.sparkContext.defaultParallelism
-      math.max(2L, math.min(byBytes, cap)).toInt
-    }
+    }.flatten.map(SessionTune.dirBytes(s, _)).sum
 
   /** Run `body` (which must contain the `.start()` call) with
     * `spark.sql.shuffle.partitions` derived from `stream`'s source
@@ -92,7 +57,8 @@ object StreamTune {
     val s = stream.sparkSession
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.getOption(key)
-    s.conf.set(key, scaledPartitions(s, sourceBytes(s, stream)).toString)
+    s.conf.set(key, SessionTune.scaledPartitions(
+      s, sourceBytes(s, stream), SessionTune.StreamTargetBytes).toString)
     try body
     finally prev match {
       case Some(v) => s.conf.set(key, v)

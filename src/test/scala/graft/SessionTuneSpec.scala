@@ -1,61 +1,72 @@
 package graft
 
 import graft.core.SessionTune
+import graft.streaming.{EventStream, StreamTune}
 
-/** Pins the library-owned session posture: the defaults list carries
-  * the cached-plan re-partitioning conf every snapshot entry's
-  * one-scan pre-aggregate depends on, and the batch shuffle-partition
-  * count derives from input bytes (clamped, conf-overridable) — never
-  * from the core count. */
+/** Pins the library-owned session posture: the test session comes
+  * from the same factory as every runner and so carries the defaults
+  * list (including the cached-plan re-partitioning conf every snapshot
+  * entry's one-scan pre-aggregate depends on), and shuffle partitions
+  * derive from input bytes through one clamp — never from the core
+  * count. */
 class SessionTuneSpec extends SparkSpec {
 
-  test("defaults carry the cached-plan AQE conf on a helper-built session") {
-    val b = org.apache.spark.sql.SparkSession.builder()
-    SessionTune.defaults.foreach { case (k, v) => b.config(k, v) }
-    // the shared test session already exists, so getOrCreate returns
-    // it; assert on the session after applying defaults directly
-    SessionTune.defaults.foreach { case (k, v) => spark.conf.set(k, v) }
-    assert(spark.conf.get(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
-    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+  test("the factory-built test session carries every defaults entry") {
+    SessionTune.defaults.foreach { case (k, v) =>
+      assert(TestSpark.spark.conf.get(k) == v, s"conf $k")
+    }
   }
 
   test("scaledPartitions derives from bytes with a floor of 2") {
-    val t = SessionTune.DefaultTargetBytes
-    assert(SessionTune.scaledPartitions(spark, 0L) == 2)
-    assert(SessionTune.scaledPartitions(spark, 1L) == 2)
-    assert(SessionTune.scaledPartitions(spark, 10 * t) == 10)
-    assert(SessionTune.scaledPartitions(spark, 10 * t - 1) == 10) // ceil
+    Seq(SessionTune.BatchTargetBytes, SessionTune.StreamTargetBytes).foreach { t =>
+      assert(SessionTune.scaledPartitions(spark, 0L, t) == 2)
+      assert(SessionTune.scaledPartitions(spark, 1L, t) == 2)
+      assert(SessionTune.scaledPartitions(spark, 2 * t + 1, t) == 3) // ceil
+      assert(SessionTune.scaledPartitions(spark, 10 * t, t) == 10)
+      assert(SessionTune.scaledPartitions(spark, 10 * t - 1, t) == 10)
+    }
+    assert(SessionTune.BatchTargetBytes == (2L << 20))
+    assert(SessionTune.StreamTargetBytes == (16L << 20))
   }
 
   test("scaledPartitions clamps at 4 x defaultParallelism") {
     val cap = 4 * spark.sparkContext.defaultParallelism
-    assert(SessionTune.scaledPartitions(
-      spark, Long.MaxValue / 4) == cap)
-  }
-
-  test("explicit conf override wins") {
-    spark.conf.set(SessionTune.PartitionsConf, "7")
-    try assert(SessionTune.scaledPartitions(spark, Long.MaxValue / 4) == 7)
-    finally spark.conf.unset(SessionTune.PartitionsConf)
-  }
-
-  test("target bytes conf changes the derivation") {
-    spark.conf.set(SessionTune.TargetBytesConf, "1048576")
-    try assert(SessionTune.scaledPartitions(spark, 5L << 20) == 5)
-    finally spark.conf.unset(SessionTune.TargetBytesConf)
+    Seq(SessionTune.BatchTargetBytes, SessionTune.StreamTargetBytes).foreach { t =>
+      assert(SessionTune.scaledPartitions(spark, (cap + 1) * t, t) == cap)
+      assert(SessionTune.scaledPartitions(spark, Long.MaxValue / 4, t) == cap)
+    }
   }
 
   test("tuneForData sets shuffle partitions from the data dir") {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       val n = SessionTune.tuneForData(spark, sf)
-      assert(n >= 2)
+      val bytes = SessionTune.dirBytes(spark, sf)
+      assert(bytes > 0L)
+      assert(n == SessionTune.scaledPartitions(
+        spark, bytes, SessionTune.BatchTargetBytes))
       assert(spark.conf.get("spark.sql.shuffle.partitions") == n.toString)
-      assert(SessionTune.dirBytes(spark, sf) > 0L)
-      // missing dir: no bytes, floor partition count, no crash
-      assert(SessionTune.scaledPartitions(
-        spark, SessionTune.dirBytes(spark, "/nonexistent-graft-dir")) == 2)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("dirBytes reads 0 for a missing path or an empty glob") {
+    assert(SessionTune.dirBytes(spark, "/nonexistent-graft-dir") == 0L)
+    assert(SessionTune.dirBytes(spark, s"$sf/no-such-table*.parquet") == 0L)
+  }
+
+  test("dirBytes propagates a failing store's IOException") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.globfail.impl", classOf[GlobFailFileSystem].getName)
+    val e = intercept[java.io.IOException] {
+      SessionTune.dirBytes(spark, s"globfail://x$sf")
+    }
+    assert(e.getMessage.contains("listing refused"))
+  }
+
+  test("a stream's source bytes are the shared probe over its file source") {
+    val stream = EventStream.read(spark, sf)
+    val bytes = StreamTune.sourceBytes(spark, stream)
+    assert(bytes > 0L)
+    assert(bytes == SessionTune.dirBytes(spark, s"$sf/events*.parquet"))
   }
 }

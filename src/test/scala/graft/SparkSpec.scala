@@ -3,17 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, forked by sbt). */
+/** Shared local SparkSession for all suites (one JVM, forked by sbt):
+  * the library session posture, with 4 shuffle partitions pinned so
+  * specs exercise multi-partition plans whatever the fixture size. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.core.SessionTune.session(4)
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     s
   }
   val sf: String = "/root/testdata/sf0.001"
