@@ -17,6 +17,17 @@ import org.apache.spark.sql.functions._
   * so the eval side is broadcast — the corpus is scanned once, nothing
   * shuffles on the corpus side, and per-doc aggregation is map-side
   * combined on (doc, eval_doc). No all-pairs plan at any scale.
+  *
+  * The shingle join keys on `xxhash64(g)`, a long, and carries the
+  * eval shingle along as `eg`: a single integral key builds a
+  * `LongHashedRelation` (first page 1 MiB) where a string key builds
+  * an `UnsafeHashedRelation` whose `BytesToBytesMap` takes a whole
+  * Tungsten page (64 MiB in a 3 GiB JVM) however few eval shingles
+  * there are. Only exact matches count (`count(when(g === eg))`),
+  * and a (doc, eval doc) group with none is dropped, so a hash
+  * collision never adds a row. The exact check sits in the aggregate
+  * on purpose: a post-join `filter(g === eg)` is pushed into the join
+  * condition and turned back into a string join key.
   */
 object Decontaminate {
 
@@ -164,9 +175,7 @@ object Decontaminate {
     // per-(doc, suite) best row as an argmax aggregate (map-side
     // partial combine, no window sort) — same (ratio DESC, eval_id
     // ASC) order as the old row_number spelling
-    shC.join(broadcast(shE), Seq("g"))
-      .groupBy(col("id"), col("eval_id"))
-      .agg(count(lit(1)).as("shared"), min(col("eval_ng")).as("eval_ng"))
+    shingleMatches(shC, shE)
       .join(broadcast(suites), Seq("eval_id"))
       .withColumn("ratio", col("shared") / col("eval_ng"))
       .groupBy(col("id"), col("suite"))
@@ -200,9 +209,7 @@ object Decontaminate {
     // map-side: each task ships ONE candidate per doc instead of
     // exchanging and sorting every (doc, eval) overlap row under a
     // row_number window (which also had no AQE skew split)
-    shC.join(broadcast(shEw), Seq("g"))
-      .groupBy(col("id"), col("eval_id"))
-      .agg(count(lit(1)).as("shared"), min(col("eval_ng")).as("eval_ng"))
+    shingleMatches(shC, shEw)
       .withColumn("ratio", col("shared") / col("eval_ng"))
       .groupBy(col("id"))
       .agg(max(struct(col("ratio"), (-col("eval_id")).as("nid"),
@@ -210,6 +217,19 @@ object Decontaminate {
       .select(col("id"), (-col("b.nid")).as("eval_id"), col("b.shared").as("shared"),
         col("b.eval_ng").as("eval_ng"), col("b.ratio").as("ratio"))
   }
+
+  /** (id, eval_id, shared, eval_ng) for every (doc, eval doc) pair
+    * sharing at least one shingle: corpus shingles `shC` (id, g)
+    * joined to eval shingles `shE` (eval_id, g, eval_ng) on the
+    * shingle's xxhash64, counting exact matches only. */
+  private def shingleMatches(shC: DataFrame, shE: DataFrame): DataFrame =
+    shC.withColumn("gh", xxhash64(col("g")))
+      .join(broadcast(shE.select(xxhash64(col("g")).as("gh"),
+        col("g").as("eg"), col("eval_id"), col("eval_ng"))), Seq("gh"))
+      .groupBy(col("id"), col("eval_id"))
+      .agg(count(when(col("g") === col("eg"), 1)).as("shared"),
+        min(col("eval_ng")).as("eval_ng"))
+      .filter(col("shared") > 0L)
 
   /** Semantic (embedding-cosine) decontamination — the modern
     * complement to the n-gram check: a paraphrased eval document

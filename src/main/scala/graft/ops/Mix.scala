@@ -25,6 +25,13 @@ import graft.core.CacheScope.Scoped
   * downstream if needed. Rates are exact in expectation per source;
   * the kept-set audit (docs/tokens actually kept per source) rides
   * on the output so the manifest carries its own totals.
+  *
+  * Both broadcast lookups (rates, audit) key on the source's position
+  * in `weights`, a long, not on the source string. A single integral
+  * key builds a `LongHashedRelation`, which starts at a 1 MiB page; a
+  * string key builds an `UnsafeHashedRelation` whose `BytesToBytesMap`
+  * takes a whole Tungsten page (64 MiB in a 3 GiB JVM) for a handful
+  * of rows, and the cached `kept` frame pins it until the scope ends.
   */
 object Mix {
 
@@ -49,43 +56,60 @@ object Mix {
       "duplicate source in mixture weights")
     require(weights.forall(_._2 >= 0), "negative mixture weight")
 
-    // share as a when-chain over the (small, literal) weight table;
-    // unlisted sources get 0 and drop out of the mixture
-    val share = weights.foldRight(lit(0.0): Column) { case ((s, p), rest) =>
-      when(col("source") === s, p).otherwise(rest)
-    }
-
     // narrow base feeds the availability aggregate AND the keep filter
-    val base = df.select(
-        col(idCol).as("id"),
-        col(sourceCol).as("source"),
-        tokensOf(col(textCol)).as("n_tokens"),
-        bucketPpm(col(idCol), salt).as("ppm"))
-      .scopedCache()
-    val rates = availability(base, share, budgetTokens)
+    val base = narrowBase(df, textCol, idCol, sourceCol, weights, salt, tokensOf)
+    val rates = availability(base, weights, budgetTokens)
       .withColumn("rate_ppm", least(lit(1000000L), col("rate_ppm_raw")))
       .drop("rate_ppm_raw")
-    val kept = base.join(broadcast(rates), Seq("source"))
+    val kept = base.join(broadcast(rates), Seq("src_ix"))
       .filter(col("ppm") < col("rate_ppm"))
       .drop("ppm")
       .scopedCache()
-    val audit = kept.groupBy(col("source"))
+    val audit = kept.groupBy(col("src_ix"))
       .agg(
         count(lit(1)).as("src_kept_docs"),
         sum(col("n_tokens")).as("src_kept_tokens"))
-    kept.join(broadcast(audit), Seq("source"))
+    kept.join(broadcast(audit), Seq("src_ix"))
       .select(col("id"), col("source"), col("n_tokens"),
         col("avail_docs"), col("avail_tokens"), col("target_tokens"),
         col("rate_ppm"), col("src_kept_docs"), col("src_kept_tokens"))
   }
 
-  /** Per-source availability + uncapped sampling rate. The rate
-    * guards the zero-available edge explicitly: `least`/division
-    * NULL-skipping would otherwise turn an empty source into
-    * rate 1000000 (and diverge between engines on NULL `least`). */
+  /** The source's position in `weights` as a when-chain over the
+    * (small, literal) weight table: the long join key of both
+    * broadcast lookups. An unlisted source gets NULL and drops at the
+    * inner join (a mixture is a whitelist). */
+  private def sourceIndex(weights: Seq[(String, Double)]): Column =
+    weights.zipWithIndex.foldRight(lit(null).cast("long")) {
+      case (((s, _), i), rest) => when(col("source") === s, i.toLong).otherwise(rest)
+    }
+
+  /** (id, source, src_ix, n_tokens, ppm), cached for the scope. */
+  private def narrowBase(
+      df: DataFrame, textCol: String, idCol: String, sourceCol: String,
+      weights: Seq[(String, Double)], salt: String,
+      tokensOf: Column => Column): DataFrame =
+    df.select(
+        col(idCol).as("id"),
+        col(sourceCol).as("source"),
+        tokensOf(col(textCol)).as("n_tokens"),
+        bucketPpm(col(idCol), salt).as("ppm"))
+      .withColumn("src_ix", sourceIndex(weights))
+      .scopedCache()
+
+  /** Per-source availability + uncapped sampling rate, keyed by
+    * `src_ix` (unlisted sources aggregate under NULL and match
+    * nothing). The rate guards the zero-available edge explicitly:
+    * `least`/division NULL-skipping would otherwise turn an empty
+    * source into rate 1000000 (and diverge between engines on NULL
+    * `least`). */
   private def availability(
-      base: DataFrame, share: Column, budgetTokens: Long): DataFrame =
-    base.groupBy(col("source"))
+      base: DataFrame, weights: Seq[(String, Double)],
+      budgetTokens: Long): DataFrame = {
+    val share = weights.zipWithIndex.foldRight(lit(0.0): Column) {
+      case (((_, p), i), rest) => when(col("src_ix") === i.toLong, p).otherwise(rest)
+    }
+    base.groupBy(col("src_ix"))
       .agg(
         count(lit(1)).as("avail_docs"),
         sum(col("n_tokens")).as("avail_tokens"))
@@ -95,6 +119,7 @@ object Mix {
         when(col("avail_tokens") === 0L, 0L).otherwise(
           floor(lit(1000000.0) * col("target_tokens") / col("avail_tokens"))
             .cast("long")))
+  }
 
   /** [[mix]] with UPSAMPLING: a source whose target exceeds its
     * availability is repeated — `rate` epochs per doc, where the
@@ -140,16 +165,8 @@ object Mix {
     require(weights.map(_._1).distinct.size == weights.size,
       "duplicate source in mixture weights")
     require(weights.forall(_._2 >= 0), "negative mixture weight")
-    val share = weights.foldRight(lit(0.0): Column) { case ((s, p), rest) =>
-      when(col("source") === s, p).otherwise(rest)
-    }
-    val base = df.select(
-        col(idCol).as("id"),
-        col(sourceCol).as("source"),
-        tokensOf(col(textCol)).as("n_tokens"),
-        bucketPpm(col(idCol), salt).as("ppm"))
-      .scopedCache()
-    val rates = availability(base, share, budgetTokens)
+    val base = narrowBase(df, textCol, idCol, sourceCol, weights, salt, tokensOf)
+    val rates = availability(base, weights, budgetTokens)
       .withColumnRenamed("rate_ppm_raw", "rate_ppm")
     val overLimit = concat(
       lit("mixEpochs: source '"), col("source"),
@@ -158,7 +175,7 @@ object Mix {
       lit(" tokens vs "), col("avail_tokens"),
       lit(s" available) — over maxEpochs=$maxEpochs; shrink the " +
         "budget/weight or raise maxEpochs"))
-    val kept = base.join(broadcast(rates), Seq("source"))
+    val kept = base.join(broadcast(rates), Seq("src_ix"))
       .withColumn("n_copies",
         when(col("rate_ppm") > maxEpochs * 1000000L,
           raise_error(overLimit).cast("long"))
@@ -168,11 +185,11 @@ object Mix {
         explode(sequence(lit(0L), col("n_copies") - 1L)))
       .drop("ppm")
       .scopedCache()
-    val audit = kept.groupBy(col("source"))
+    val audit = kept.groupBy(col("src_ix"))
       .agg(
         count(lit(1)).as("src_kept_copies"),
         sum(col("n_tokens")).as("src_kept_tokens"))
-    kept.join(broadcast(audit), Seq("source"))
+    kept.join(broadcast(audit), Seq("src_ix"))
       .select(col("id"), col("epoch"), col("source"), col("n_tokens"),
         col("avail_docs"), col("avail_tokens"), col("target_tokens"),
         col("rate_ppm"), col("n_copies"),
