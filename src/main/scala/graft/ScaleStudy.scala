@@ -306,7 +306,7 @@ object ScaleStudy {
       var r = 0.0
       val sec = time {
         r = recallAt(gt, Ivf.ivfTopK(emb, queryMaxId = 10L, k,
-          nClusters = 16, nProbe = probe, iters = 2))
+          nClusters = 16, nProbe = probe, iters = 2)._1)
       }
       println(f"""{"study":"$study","method":"ivf","param":$probe,"recall":$r%.3f,"sec":$sec%.3f}""")
     }

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -8,6 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[queries]]; SQL-expressible ones also contribute a DuckDB oracle
   * to [[oracleSql]] (column names aliased identically on both sides —
   * the driver sorts columns by name before hashing values).
+  *
+  * A trained entry ([[QueryModule.trained]]) builds its oracle from
+  * the model it trains, so its oracle is present in [[oracleSql]]
+  * only after that entry has run through [[queries]] in this JVM.
+  * Each run records its oracle under the entry's own name: no other
+  * entry or training call can change it, and entries may run
+  * concurrently.
   */
 object SparkEntry {
 
@@ -23,6 +34,9 @@ object SparkEntry {
     graft.queries.StreamQueries,
     graft.queries.MiscQueries)
 
+  /** Oracle SQL of each trained entry, from its latest run. */
+  private val trainedSql = new ConcurrentHashMap[String, String]()
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks
     * rows>0. The SURVEY §7.2 end-to-end slice: sales synthesis ->
     * TLQ Transform -> region rollup. */
@@ -31,16 +45,29 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_.queries).reduce(_ ++ _)
+    modules.map(_.queries).reduce(_ ++ _) ++
+      modules.flatMap(_.trained).map { case (name, fn) =>
+        name -> { (s: SparkSession, dir: String) =>
+          val (df, sql) = fn(s, dir)
+          trainedSql.put(name, sql)
+          df
+        }
+      }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    modules.map(_.oracleSql).reduce(_ ++ _)
+    modules.map(_.oracleSql).reduce(_ ++ _) ++ trainedSql.asScala
 }
 
 /** A group of related query entries (one source file per SURVEY area). */
 trait QueryModule {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracleSql: Map[String, String]
+
+  /** Entries whose answer depends on a model they train: each returns
+    * its frame and its oracle SQL, which embeds the trained model as
+    * literals. */
+  def trained: Map[String, (SparkSession, String) => (DataFrame, String)] =
+    Map.empty
 }

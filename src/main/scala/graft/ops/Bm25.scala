@@ -122,7 +122,7 @@ object Bm25 {
       k1: Double = 1.2, b: Double = 0.75,
       excludeSelf: Boolean = false): String = {
     val self = if (excludeSelf) " AND tf.doc_id <> terms.q_id" else ""
-    s"""q(q_id, qtext) AS ($queryCte),
+    s"""q AS (SELECT * FROM ($queryCte) AS t(q_id, qtext)),
        |terms AS (SELECT DISTINCT q_id, u.t AS term
        |          FROM q, UNNEST(str_split(qtext, ' ')) AS u(t)),
        |lens AS (SELECT doc_id, CAST(len(str_split(text, ' ')) AS BIGINT) AS dl

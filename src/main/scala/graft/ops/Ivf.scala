@@ -21,15 +21,12 @@ import org.apache.spark.sql.functions._
   */
 object Ivf {
 
-  /** Trained model of the most recent [[ivfTopK]] call, kept for the
-    * DuckDB oracle generator: training is data-dependent, so the
-    * replay SQL embeds the trained centroids as literals. Verify runs
-    * every query before dumping oracle_sql.json, so the stash is
-    * always populated by then. */
+  /** The trained model an [[ivfTopK]] call returns with its frame:
+    * training is data-dependent, so the DuckDB replay SQL embeds the
+    * trained centroids as literals (see [[graft.QueryModule.trained]]). */
   final case class Model(
       centroids: Array[Array[Double]], queryMaxId: Long,
       k: Int, nProbe: Int)
-  @volatile var lastModel: Option[Model] = None
 
   /** Centroids as data: one row per cluster (j, c, half = |c|²/2). */
   def centroidFrame(s: SparkSession, centroids: Array[Array[Double]]): DataFrame = {
@@ -79,15 +76,17 @@ object Ivf {
   }
 
   /** Probe-limited top-k: score queries only against vectors whose
-    * cluster is among the query's `nProbe` closest centroids. */
+    * cluster is among the query's `nProbe` closest centroids. Returns
+    * the frame and the trained model. */
   def ivfTopK(
       emb: DataFrame, queryMaxId: Long, k: Int,
-      nClusters: Int = 16, nProbe: Int = 4, iters: Int = 3): DataFrame = {
+      nClusters: Int = 16, nProbe: Int = 4,
+      iters: Int = 3): (DataFrame, Model) = {
     val base = Similarity.prepared(emb).cache() // shared by train + assign + probes
     val centroids = train(base, nClusters, iters)
-    lastModel = Some(Model(centroids, queryMaxId, k, nProbe))
-    probeTopK(assigned(base, centroids),
-      base.filter(col("vec_id") < queryMaxId), centroids, k, nProbe)
+    (probeTopK(assigned(base, centroids),
+      base.filter(col("vec_id") < queryMaxId), centroids, k, nProbe),
+      Model(centroids, queryMaxId, k, nProbe))
   }
 
   /** The probe/score/rank half, shared by [[ivfTopK]] and the

@@ -23,9 +23,9 @@ import org.apache.spark.sql.functions._
   * with one pass instead of an iteration.
   *
   * INFERENCE is exactly replayable integer arithmetic (the
-  * [[Ivf.lastModel]] post-training oracle contract): weights round to
-  * ppm longs, a row's prediction is `w0 + Σ wᵢ·xᵢ` in ppm — pure
-  * long multiply-add, so the oracle replays predictions and the
+  * post-training oracle contract of [[graft.QueryModule.trained]]):
+  * weights round to ppm longs, a row's prediction is `w0 + Σ wᵢ·xᵢ`
+  * in ppm — pure long multiply-add, so the oracle replays predictions and the
   * per-group MAPE with the weight vector inlined as literals. The
   * absolute-percentage error stays integral too:
   * `ape_ppm = |pred_ppm − y·10⁶| DIV y` (y > 0 required — both
@@ -38,16 +38,6 @@ object Ols {
   final case class Model(wPpm: Array[Long]) {
     def k: Int = wPpm.length - 1
   }
-
-  /** Stash of the most recent fit, read by the oracle builder after
-    * Verify has executed the query (deterministic: any entry fitting
-    * the same frame re-derives the identical model). */
-  @volatile var lastModel: Option[Model] = None
-
-  /** Stash of the most recent STREAMED fit
-    * ([[graft.streaming.OlsStream]]) — a separate slot so the
-    * streaming entry's oracle never races the batch entries'. */
-  @volatile var lastStreamModel: Option[Model] = None
 
   /** The normal-equation SUFFICIENT STATISTICS: the upper triangle of
     * X'X plus X'y for the intercept-augmented design, as EXACT
@@ -124,15 +114,8 @@ object Ols {
 
   /** OLS fit of LONG column `target` on LONG columns `features` (plus
     * an intercept): [[stats]] then [[SuffStats.solve]]. */
-  def fit(df: DataFrame, features: Seq[String], target: String): Model = {
-    val m = stats(df, features, target).solve()
-    lastModel = Some(m)
-    m
-  }
-
-  /** Stash of the most recent per-group fit, for the post-run oracle
-    * builder (same contract as [[lastModel]]). */
-  @volatile var lastGroupModels: Option[Map[String, Model]] = None
+  def fit(df: DataFrame, features: Seq[String], target: String): Model =
+    stats(df, features, target).solve()
 
   /** PER-GROUP OLS — the reference's per-scenario models: ONE grouped
     * pass computes EVERY group's sufficient statistics (the same
@@ -154,7 +137,7 @@ object Ols {
     val rhs = (0 to k).map(i =>
       sum((aug(i) * col(target)).cast("decimal(38,0)")).as(s"b_$i"))
     val aggs = moments ++ rhs
-    val out = df.groupBy(col(group).cast("string").as("_g"))
+    df.groupBy(col(group).cast("string").as("_g"))
       .agg(aggs.head, aggs.tail: _*).collect()
       .map { r =>
         val st = SuffStats(k, (1 to aggs.size).map(i =>
@@ -162,8 +145,6 @@ object Ols {
           else BigInt(r.getDecimal(i).toBigInteger)).toVector)
         r.getString(0) -> st.solve()
       }.toMap
-    lastGroupModels = Some(out)
-    out
   }
 
   /** Per-row prediction under PER-GROUP weights: a literal CASE chain

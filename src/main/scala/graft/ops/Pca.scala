@@ -39,14 +39,6 @@ object Pca {
     def d: Int = compPpm.head.length
   }
 
-  /** Stash for the post-fit oracle builder (the Ols.lastModel
-    * contract). */
-  @volatile var lastModel: Option[Model] = None
-
-  /** Separate stash for the ANN-composition entry's (wider) model, so
-    * its oracle never races `q_pca_project`'s. */
-  @volatile var lastAnnModel: Option[Model] = None
-
   /** Quantized coordinate i (1-based element index internally). */
   private def q(vecCol: String, i: Int): Column =
     round(element_at(col(vecCol).cast("array<double>"), i + 1) *
@@ -181,9 +173,7 @@ object Pca {
       for (i <- 0 until dims; j <- 0 until dims)
         work(i)(j) -= lambda * v(i) * v(j)
     }
-    val model = Model(comps.result())
-    lastModel = Some(model)
-    model
+    Model(comps.result())
   }
 
   /** Projection of a row onto component `c`, exact long arithmetic:

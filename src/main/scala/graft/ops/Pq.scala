@@ -35,9 +35,9 @@ import graft.core.CacheScope.Scoped
   * the (q_id, vec_id) aggregate is order-independent and replays
   * bit-for-bit in DuckDB), and the approximate norm |v|² ≈ Σ|c|² is
   * summed from per-(sub, code) integer literals computed ONCE
-  * driver-side. The trained codebooks are stashed in [[lastModel]]
-  * and embedded as literals in the generated oracle (the
-  * [[Ivf.lastModel]] contract).
+  * driver-side. Each entry point returns its trained [[Model]] with
+  * its frame, and the oracle embeds the codebooks as literals (see
+  * [[graft.QueryModule.trained]]).
   */
 object Pq {
 
@@ -49,14 +49,6 @@ object Pq {
       subDim: Int, queryMaxId: Long, k: Int,
       coarse: Option[(Array[Array[Double]], Int)], // IVF-PQ: (centroids, nProbe)
       shortlist: Int = 0) // re-ranked variant: ADC candidates per query
-
-  /** One stash per entry shape — Verify runs BOTH the ADC and the
-    * IVF-PQ query before dumping oracles, so they must not share a
-    * slot. */
-  @volatile var lastModel: Option[Model] = None
-  @volatile var lastIvfpqModel: Option[Model] = None
-  @volatile var lastRerankModel: Option[Model] = None
-  @volatile var lastIvfpqRerankModel: Option[Model] = None
 
   /** floor(|c|²·1e6) per (sub, code) — driver-side once, shared as
     * literals by the Spark plan and the oracle (zero parity risk). */
@@ -133,12 +125,12 @@ object Pq {
     * query through its m code ids. `emb` must have (vec_id,
     * embedding); queries are the rows with vec_id < queryMaxId. */
   def adcTopK(emb: DataFrame, queryMaxId: Long, k: Int,
-      m: Int = 4, ksub: Int = 16, iters: Int = 2): DataFrame = {
+      m: Int = 4, ksub: Int = 16, iters: Int = 2): (DataFrame, Model) = {
     val base = Similarity.prepared(emb).scopedCache()
     val subDim = dims(base) / m
     val codebooks = train(base, m, ksub, subDim, iters)
-    lastModel = Some(Model(codebooks, subDim, queryMaxId, k, None))
-    rankAdc(base, codebooks, subDim, queryMaxId, k, clusterOf = None)
+    (rankAdc(base, codebooks, subDim, queryMaxId, k, clusterOf = None),
+      Model(codebooks, subDim, queryMaxId, k, None))
   }
 
   /** IVF-PQ: the IVF coarse quantizer prunes candidates to the
@@ -148,15 +140,15 @@ object Pq {
     * ANN layout. */
   def ivfpqTopK(emb: DataFrame, queryMaxId: Long, k: Int,
       m: Int = 4, ksub: Int = 16, iters: Int = 2,
-      nClusters: Int = 8, nProbe: Int = 3, coarseIters: Int = 1): DataFrame = {
+      nClusters: Int = 8, nProbe: Int = 3,
+      coarseIters: Int = 1): (DataFrame, Model) = {
     val base = Similarity.prepared(emb).scopedCache()
     val subDim = dims(base) / m
     val coarse = Ivf.train(base, nClusters, coarseIters)
     val codebooks = train(base, m, ksub, subDim, iters)
-    lastIvfpqModel = Some(Model(codebooks, subDim, queryMaxId, k,
-      Some((coarse, nProbe))))
-    rankAdc(base, codebooks, subDim, queryMaxId, k,
-      clusterOf = Some((coarse, nProbe)))
+    (rankAdc(base, codebooks, subDim, queryMaxId, k,
+      clusterOf = Some((coarse, nProbe))),
+      Model(codebooks, subDim, queryMaxId, k, Some((coarse, nProbe))))
   }
 
   /** ADC shortlist + EXACT re-rank — the standard production recall
@@ -168,14 +160,15 @@ object Pq {
     * touched for a bounded candidate set (an equi-join on vec_id —
     * broadcastable when |Q|·shortlist is small). */
   def adcTopKReranked(emb: DataFrame, queryMaxId: Long, k: Int,
-      shortlist: Int, m: Int = 8, ksub: Int = 16, iters: Int = 2): DataFrame = {
+      shortlist: Int, m: Int = 8, ksub: Int = 16,
+      iters: Int = 2): (DataFrame, Model) = {
     val base = Similarity.prepared(emb).scopedCache()
     val subDim = dims(base) / m
     val codebooks = train(base, m, ksub, subDim, iters)
-    lastRerankModel = Some(Model(codebooks, subDim, queryMaxId, k, None, shortlist))
     val short = rankAdc(base, codebooks, subDim, queryMaxId, shortlist,
       clusterOf = None)
-    exactRerank(base, short, queryMaxId, k)
+    (exactRerank(base, short, queryMaxId, k),
+      Model(codebooks, subDim, queryMaxId, k, None, shortlist))
   }
 
   /** IVF-PQ + exact re-rank — BOTH production knobs composed: the
@@ -188,16 +181,17 @@ object Pq {
     * |Q|·shortlist pairs. */
   def ivfpqTopKReranked(emb: DataFrame, queryMaxId: Long, k: Int,
       shortlist: Int, m: Int = 4, ksub: Int = 16, iters: Int = 2,
-      nClusters: Int = 8, nProbe: Int = 3, coarseIters: Int = 1): DataFrame = {
+      nClusters: Int = 8, nProbe: Int = 3,
+      coarseIters: Int = 1): (DataFrame, Model) = {
     val base = Similarity.prepared(emb).scopedCache()
     val subDim = dims(base) / m
     val coarse = Ivf.train(base, nClusters, coarseIters)
     val codebooks = train(base, m, ksub, subDim, iters)
-    lastIvfpqRerankModel = Some(Model(codebooks, subDim, queryMaxId, k,
-      Some((coarse, nProbe)), shortlist))
     val short = rankAdc(base, codebooks, subDim, queryMaxId, shortlist,
       clusterOf = Some((coarse, nProbe)))
-    exactRerank(base, short, queryMaxId, k)
+    (exactRerank(base, short, queryMaxId, k),
+      Model(codebooks, subDim, queryMaxId, k, Some((coarse, nProbe)),
+        shortlist))
   }
 
   /** Exact-cosine re-rank of an approximate shortlist: full vectors

@@ -27,8 +27,8 @@ import graft.functions.HashParity
   * associative), so `weightsPpm` is a pure function of the data.
   *
   * Inference is exactly replayable integer arithmetic, the
-  * [[Ivf.lastModel]] post-training oracle contract: trained weights
-  * round to ppm longs, a doc's decision multiplies the logistic
+  * post-training oracle contract of [[graft.QueryModule.trained]]:
+  * trained weights round to ppm longs, a doc's decision multiplies the logistic
   * margin through by its token count —
   * `sum(c_b * w_ppm(b)) + bias_ppm * n_toks > 0` — so the oracle
   * replays the decision with the weight table inlined as literals
@@ -40,10 +40,6 @@ object QualityClassifier {
   final case class Model(weightsPpm: Array[Long], biasPpm: Long) {
     def nBuckets: Int = weightsPpm.length
   }
-
-  /** Stash of the most recent training run, read by the oracle
-    * builder after Verify has executed the query. */
-  @volatile var lastModel: Option[Model] = None
 
   /** Slim per-doc sparse features: (id, y, bs, xs) with
     * `xs(i) = count(bucket bs(i)) / n_toks` — tf normalization keeps
@@ -75,7 +71,7 @@ object QualityClassifier {
     * CLASS-BALANCED (each class contributes half the gradient mass
     * regardless of size — the trusted slice is always a sliver of
     * the corpus, and unweighted GD would just predict the majority).
-    * Returns the ppm-rounded model and stashes it in [[lastModel]]. */
+    * Returns the ppm-rounded model. */
   def train(pos: DataFrame, neg: DataFrame, textCol: String,
       idCol: String, nBuckets: Int = 1024, iters: Int = 12,
       lr: Double = 2.0): Model = {
@@ -132,9 +128,7 @@ object QualityClassifier {
       }
       it += 1
     }
-    val m = Model(w.map(x => math.round(x * 1e6)), math.round(bias * 1e6))
-    lastModel = Some(m)
-    m
+    Model(w.map(x => math.round(x * 1e6)), math.round(bias * 1e6))
   }
 
   /** Integer-ppm inference over a corpus: (id, n_toks, score, keep)

@@ -33,20 +33,19 @@ import graft.core.CacheScope.Scoped
   * oversized cluster are missed — the same accepted trade the paper
   * makes for cross-cluster pairs, bought only when the alternative
   * is a quadratic blowup. The reported `cluster` column is unchanged;
-  * only the join key gains the cell. The trained model is stashed in
-  * [[lastModel]] so the DuckDB oracle can replay the data-dependent
-  * assignment with the centroids as literals (same contract as
-  * [[Ivf.lastModel]]).
+  * only the join key gains the cell. [[report]] returns its trained
+  * model with its frame so the DuckDB oracle can replay the
+  * data-dependent assignment with the centroids as literals (see
+  * [[graft.QueryModule.trained]]).
   */
 object SemDedup {
 
+  /** `oversized`: (cluster, size) of the clusters [[report]]
+    * sub-split, empty when the guard never fired (and always empty
+    * from [[oversizedAudit]], which reports them as data). */
   final case class Model(
-      centroids: Array[Array[Double]], eps: Double, nClusters: Int)
-  @volatile var lastModel: Option[Model] = None
-
-  /** (cluster, size) of clusters the last [[report]] sub-split —
-    * empty when the guard never fired. */
-  @volatile var lastOversized: Seq[(Long, Long)] = Seq.empty
+      centroids: Array[Array[Double]], eps: Double, nClusters: Int,
+      oversized: Seq[(Long, Long)] = Seq.empty)
 
   /** One row per vector: (vec_id, cluster, keep, dup_of, best_sim)
     * where `dup_of` is the LOWEST lower id within `eps` in the same
@@ -69,12 +68,11 @@ object SemDedup {
       emb: DataFrame, eps: Double,
       nClusters: Int = 16, iters: Int = 3,
       maxClusterSize: Long = 1L << 16,
-      repairBits: Int = 8, repairProbe: Int = 1): DataFrame = {
+      repairBits: Int = 8, repairProbe: Int = 1): (DataFrame, Model) = {
     require(maxClusterSize > 0, "maxClusterSize must be positive")
     require(repairBits >= 0, "repairBits must be >= 0 (0 disables repair)")
     val base = Similarity.prepared(emb).scopedCache() // train + assign reuse
     val centroids = Ivf.train(base, nClusters, iters)
-    lastModel = Some(Model(centroids, eps, nClusters))
     val a0 = Ivf.assigned(base, centroids)
     // size audit: nClusters rows to the driver. Clusters over the cap
     // sub-split into ceil(size/cap) cells by vec_id modulus so the
@@ -83,7 +81,6 @@ object SemDedup {
       .collect()
       .map(r => (r.getAs[Number]("cluster").longValue(), r.getLong(1)))
     val oversized = sizes.filter(_._2 > maxClusterSize).sortBy(_._1)
-    lastOversized = oversized.toSeq
     if (oversized.nonEmpty) System.err.println(
       s"[semdedup] WARNING: ${oversized.size} cluster(s) exceed " +
         s"maxClusterSize=$maxClusterSize and are sub-split for the " +
@@ -127,11 +124,12 @@ object SemDedup {
     val dups = pairs
       .groupBy(col("vec_id"))
       .agg(min(col("b_id")).as("dup_of"), max(col("sim")).as("best_sim"))
-    a.select(col("vec_id"), col("cluster").cast("long").as("cluster"))
+    (a.select(col("vec_id"), col("cluster").cast("long").as("cluster"))
       .join(dups, Seq("vec_id"), "left")
       .withColumn("keep", col("dup_of").isNull.cast("long"))
       .na.fill(-1L, Seq("dup_of"))
-      .na.fill(0.0, Seq("best_sim"))
+      .na.fill(0.0, Seq("best_sim")),
+      Model(centroids, eps, nClusters, oversized.toSeq))
   }
 
   /** Cross-cell duplicate pairs inside OVERSIZED clusters (rows with
@@ -177,21 +175,19 @@ object SemDedup {
     * — when the cells are balanced (`r` cells of `q+1`, the rest
     * `q`, for `q = size div n_cells`, `r = size mod n_cells`);
     * whatever sizes `pmod(vec_id, n_cells)` actually produces can
-    * only expose fewer. Same training as [[report]] (sets
-    * [[lastModel]], so with [[report]]'s parameters the two entries
-    * share one model regardless of execution order) — both the trade
-    * and the repair stay observable IN DATA, not just in a stderr
-    * warning. */
+    * only expose fewer. Same training as [[report]] (with
+    * [[report]]'s parameters both return the same centroids) — both
+    * the trade and the repair stay observable IN DATA, not just in a
+    * stderr warning. */
   def oversizedAudit(
       emb: DataFrame, eps: Double,
       nClusters: Int = 16, iters: Int = 3,
       maxClusterSize: Long = 1L << 16,
-      repairBits: Int = 8, repairProbe: Int = 1): DataFrame = {
+      repairBits: Int = 8, repairProbe: Int = 1): (DataFrame, Model) = {
     require(maxClusterSize > 0, "maxClusterSize must be positive")
     require(repairBits >= 0, "repairBits must be >= 0 (0 disables repair)")
     val base = Similarity.prepared(emb).scopedCache()
     val centroids = Ivf.train(base, nClusters, iters)
-    lastModel = Some(Model(centroids, eps, nClusters))
     val cap = maxClusterSize
     val a0 = Ivf.assigned(base, centroids).scopedCache()
     val exposure = a0
@@ -223,8 +219,9 @@ object SemDedup {
           .groupBy(col("cluster").cast("long").as("cluster"))
           .agg(count(lit(1)).as("recovered_pairs"))
       }
-    exposure.join(recovered, Seq("cluster"), "left")
+    (exposure.join(recovered, Seq("cluster"), "left")
       .na.fill(0L, Seq("recovered_pairs"))
-      .orderBy(col("cluster"))
+      .orderBy(col("cluster")),
+      Model(centroids, eps, nClusters))
   }
 }

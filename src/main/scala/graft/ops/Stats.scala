@@ -41,14 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
-  /** (p_ppm, significant) per key.toString from the most recent
-    * [[welchT]] — the post-run literal stash the oracle builder
-    * replays (the Ols.lastModel contract: the t-CDF is driver
-    * arithmetic, not SQL; its RESULTS ride into the oracle as
-    * literals, including the p < 0.05 verdict so the rounded ppm
-    * never re-decides the comparison). */
-  @volatile var lastWelchP: Option[Map[String, (Long, Long)]] = None
-
   /** Per-key Welch t between `sideCol` ∈ {0, 1} populations of the
     * LONG `valueCol`: (key, n0, n1, t_ppm, df_ppm, p_ppm,
     * significant). `t_ppm = round(t·10⁶)` with t from the fixed IEEE
@@ -61,9 +53,15 @@ object Stats {
     * zero variance on both, are dropped (no computable test — the
     * guard both engines share). `keyCol` cardinality must be bounded
     * (scenarios, not data): the per-key report is collected to
-    * compute p. */
+    * compute p.
+    *
+    * Also returns (p_ppm, significant) per `key.toString`: the t-CDF
+    * is driver arithmetic, not SQL, so its RESULTS ride into the
+    * oracle as literals (see [[graft.QueryModule.trained]]),
+    * including the p < 0.05 verdict so the rounded ppm never
+    * re-decides the comparison. */
   def welchT(df: DataFrame, valueCol: String, sideCol: String,
-      keyCol: String): DataFrame = {
+      keyCol: String): (DataFrame, Map[String, (Long, Long)]) = {
     val agg = df.groupBy(col(keyCol), col(sideCol).as("_side"))
       .agg(count(lit(1)).as("n"),
         sum(col(valueCol).cast("decimal(38,0)")).as("sy"),
@@ -104,13 +102,12 @@ object Stats {
         math.round(t * 1e6), math.round(dfree * 1e6),
         math.round(p * 1e6), if (p < 0.05d) 1L else 0L)
     }
-    lastWelchP = Some(rows.zip(out).map { case (in, r) =>
-      in.get(0).toString -> (r.getLong(5), r.getLong(6)) }.toMap)
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types._
     val schema = StructType(agg.schema.head +: Seq("n0", "n1", "t_ppm",
       "df_ppm", "p_ppm", "significant").map(StructField(_, LongType)))
-    spark.createDataFrame(out.toSeq.asJava, schema)
+    (spark.createDataFrame(out.toSeq.asJava, schema),
+      out.map(r => r.get(0).toString -> (r.getLong(5), r.getLong(6))).toMap)
   }
 
   /** Two-sided p-value of Student's t at `df` degrees of freedom:

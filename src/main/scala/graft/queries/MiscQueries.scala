@@ -147,7 +147,7 @@ object MiscQueries extends graft.QueryModule {
 
   val qPayloadShuffleSql: String = {
     val vals = shufflePayloads.map(p => s"('$p')").mkString(", ")
-    s"""WITH p(payload) AS (SELECT * FROM (VALUES $vals)),
+    s"""WITH p AS (SELECT * FROM (VALUES $vals) AS t(payload)),
        |x AS (SELECT payload,
        |        CAST('0x' || substr(md5(payload || '#' || i), 1, 7) AS BIGINT) AS r
        |      FROM p CROSS JOIN UNNEST(generate_series(0, ${shuffleReps - 1})) AS u(i))
@@ -3112,12 +3112,16 @@ object MiscQueries extends graft.QueryModule {
     * trained weight vector inlined (the post-training contract), so
     * the fit itself is regression-gated: a drifting weight
     * hash-mismatches 60k predictions. */
-  def qRuntimePredict(s: SparkSession, dir: String): DataFrame = {
+  def qRuntimePredict(s: SparkSession, dir: String): (DataFrame, String) = {
     val df = olsFrame(s, dir)
     val m = Ols.fit(df, OlsFeatures, "y_c")
-    df.select(col("l_orderkey"), col("l_linenumber"), col("y_c"),
+    (df.select(col("l_orderkey"), col("l_linenumber"), col("y_c"),
         Ols.predictPpm(m, OlsFeatures).as("pred_ppm"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
+      .orderBy(col("l_orderkey"), col("l_linenumber")),
+      s"""WITH $olsFrameSql
+         |SELECT l_orderkey, l_linenumber, y_c,
+         |  CAST(${olsPredictSql(m)} AS BIGINT) AS pred_ppm
+         |FROM li ORDER BY l_orderkey, l_linenumber""".stripMargin)
   }
 
   /** Per-group prediction error AS DATA — the IC2E per-scenario MAPE
@@ -3127,12 +3131,27 @@ object MiscQueries extends graft.QueryModule {
     * (`|pred_ppm − y·10⁶| DIV y`, then `sum DIV n`), so the
     * model-evaluation loop itself — not just the fit — is
     * oracle-replayable end to end. */
-  def qPredictMape(s: SparkSession, dir: String): DataFrame = {
+  def qPredictMape(s: SparkSession, dir: String): (DataFrame, String) = {
     val df = olsFrame(s, dir)
     val m = Ols.fit(df, OlsFeatures, "y_c")
-    Ols.mapeReport(df, m, OlsFeatures, "y_c", "l_returnflag")
-      .orderBy(col("l_returnflag"))
+    (Ols.mapeReport(df, m, OlsFeatures, "y_c", "l_returnflag")
+      .orderBy(col("l_returnflag")), mapeSql(m))
   }
+
+  /** DuckDB replay of [[Ols.mapeReport]] per return flag under `m`. */
+  private def mapeSql(m: Ols.Model): String =
+    s"""WITH $olsFrameSql,
+       |p AS (SELECT l_returnflag, y_c,
+       |        CAST(${olsPredictSql(m)} AS BIGINT) AS pred_ppm
+       |      FROM li),
+       |a AS (SELECT l_returnflag,
+       |        abs(pred_ppm - y_c * 1000000) // y_c AS ape_ppm
+       |      FROM p)
+       |SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
+       |  ${Num.sumSql("ape_ppm")} AS sum_ape_ppm,
+       |  ${Num.sumSql("ape_ppm")} // count(*) AS mape_ppm
+       |FROM a GROUP BY l_returnflag
+       |ORDER BY l_returnflag""".stripMargin
 
   /** PREDICTOR COMPARISON AS DATA — the other half of the reference's
     * IC2E table ("CPU-TA < baseline / <> / >", win-tie-loss per
@@ -3150,13 +3169,13 @@ object MiscQueries extends graft.QueryModule {
     * window — shuffles the whole corpus onto 3 reducer keys, the
     * textbook skew trap; three cheap scans beat one skewed shuffle at
     * any scale. */
-  def qPredictCompare(s: SparkSession, dir: String): DataFrame = {
+  def qPredictCompare(s: SparkSession, dir: String): (DataFrame, String) = {
     val df = olsFrame(s, dir)
     val m = Ols.fit(df, OlsFeatures, "y_c")
     val base = df.groupBy(col("l_returnflag"))
       .agg(sum(col("y_c")).as("sy"), count(lit(1)).as("n0"))
       .select(col("l_returnflag"), expr("sy DIV n0").as("base_pred_c"))
-    df.withColumn("pred_ppm", Ols.predictPpm(m, OlsFeatures))
+    (df.withColumn("pred_ppm", Ols.predictPpm(m, OlsFeatures))
       .join(broadcast(base), Seq("l_returnflag"))
       .withColumn("ape_ols_ppm",
         expr("abs(pred_ppm - y_c * 1000000) DIV y_c"))
@@ -3170,7 +3189,7 @@ object MiscQueries extends graft.QueryModule {
         expr("sb DIV n").as("mape_base_ppm"))
       .withColumn("ols_wins",
         (col("mape_ols_ppm") < col("mape_base_ppm")).cast("long"))
-      .orderBy(col("l_returnflag"))
+      .orderBy(col("l_returnflag")), qPredictCompareSql(m))
   }
 
   private def qPredictCompareSql(m: Ols.Model): String =
@@ -3231,54 +3250,53 @@ object MiscQueries extends graft.QueryModule {
     * disagrees with the 1.96 normal bound (StatsSpec pins a case).
     * Keys with n < 2 on a side or zero variance on both are dropped
     * (guard mirrored in the oracle SQL). */
-  def qWelchT(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Stats.welchT(sidedEvents(s, dir),
-        valueCol = "value_c", sideCol = "side", keyCol = "event_type")
-      .orderBy(col("event_type"))
+  def qWelchT(s: SparkSession, dir: String): (DataFrame, String) = {
+    val (df, ps) = graft.ops.Stats.welchT(sidedEvents(s, dir),
+      valueCol = "value_c", sideCol = "side", keyCol = "event_type")
+    (df.orderBy(col("event_type")), qWelchTSql(ps))
+  }
 
-  /** Post-run oracle (the Ols.lastModel contract): t_ppm and df_ppm
-    * replay as the same fixed IEEE trees over exact integers; p_ppm
-    * and the p < 0.05 verdict ride in as the driver-computed
+  /** Post-run oracle (see [[graft.QueryModule.trained]]): t_ppm and
+    * df_ppm replay as the same fixed IEEE trees over exact integers;
+    * p_ppm and the p < 0.05 verdict ride in as the driver-computed
     * literals. */
-  private def qWelchTOracle: Map[String, String] =
-    graft.ops.Stats.lastWelchP.map { ps =>
-      val pCase = ps.toSeq.sortBy(_._1).map { case (k, (p, _)) =>
-        s"WHEN '$k' THEN $p" }.mkString(" ")
-      val sCase = ps.toSeq.sortBy(_._1).map { case (k, (_, sig)) =>
-        s"WHEN '$k' THEN $sig" }.mkString(" ")
-      "q_welch_t" ->
-        s"""WITH $sidedEventsSql,
-           |g AS (SELECT event_type, side, CAST(count(*) AS BIGINT) AS n,
-           |        sum(CAST(value_c AS HUGEINT)) AS sy,
-           |        sum(CAST(value_c AS HUGEINT) * value_c) AS syy
-           |      FROM ev GROUP BY event_type, side),
-           |p AS (SELECT event_type,
-           |        max(CASE WHEN side = 0 THEN n END) AS n0,
-           |        max(CASE WHEN side = 0 THEN sy END) AS sy0,
-           |        max(CASE WHEN side = 0 THEN syy END) AS syy0,
-           |        max(CASE WHEN side = 1 THEN n END) AS n1,
-           |        max(CASE WHEN side = 1 THEN sy END) AS sy1,
-           |        max(CASE WHEN side = 1 THEN syy END) AS syy1
-           |      FROM g GROUP BY event_type),
-           |u AS (SELECT event_type, n0, n1, sy0, sy1,
-           |    CAST(n0 * syy0 - sy0 * sy0 AS DOUBLE) / (n0 * (n0 - 1)) / n0
-           |      AS u0,
-           |    CAST(n1 * syy1 - sy1 * sy1 AS DOUBLE) / (n1 * (n1 - 1)) / n1
-           |      AS u1
-           |  FROM p WHERE n0 >= 2 AND n1 >= 2),
-           |t AS (SELECT event_type, n0, n1,
-           |    (CAST(sy0 AS DOUBLE) / n0 - CAST(sy1 AS DOUBLE) / n1)
-           |      / sqrt(u0 + u1) AS t_dbl,
-           |    (u0 + u1) * (u0 + u1)
-           |      / (u0 * u0 / (n0 - 1) + u1 * u1 / (n1 - 1)) AS df_dbl
-           |  FROM u WHERE u0 + u1 > 0)
-           |SELECT event_type, n0, n1,
-           |  CAST(round(t_dbl * 1000000, 0) AS BIGINT) AS t_ppm,
-           |  CAST(round(df_dbl * 1000000, 0) AS BIGINT) AS df_ppm,
-           |  CAST(CASE event_type $pCase END AS BIGINT) AS p_ppm,
-           |  CAST(CASE event_type $sCase END AS BIGINT) AS significant
-           |FROM t ORDER BY event_type""".stripMargin
-    }.toMap
+  private def qWelchTSql(ps: Map[String, (Long, Long)]): String = {
+    val pCase = ps.toSeq.sortBy(_._1).map { case (k, (p, _)) =>
+      s"WHEN '$k' THEN $p" }.mkString(" ")
+    val sCase = ps.toSeq.sortBy(_._1).map { case (k, (_, sig)) =>
+      s"WHEN '$k' THEN $sig" }.mkString(" ")
+    s"""WITH $sidedEventsSql,
+       |g AS (SELECT event_type, side, CAST(count(*) AS BIGINT) AS n,
+       |        sum(CAST(value_c AS HUGEINT)) AS sy,
+       |        sum(CAST(value_c AS HUGEINT) * value_c) AS syy
+       |      FROM ev GROUP BY event_type, side),
+       |p AS (SELECT event_type,
+       |        max(CASE WHEN side = 0 THEN n END) AS n0,
+       |        max(CASE WHEN side = 0 THEN sy END) AS sy0,
+       |        max(CASE WHEN side = 0 THEN syy END) AS syy0,
+       |        max(CASE WHEN side = 1 THEN n END) AS n1,
+       |        max(CASE WHEN side = 1 THEN sy END) AS sy1,
+       |        max(CASE WHEN side = 1 THEN syy END) AS syy1
+       |      FROM g GROUP BY event_type),
+       |u AS (SELECT event_type, n0, n1, sy0, sy1,
+       |    CAST(n0 * syy0 - sy0 * sy0 AS DOUBLE) / (n0 * (n0 - 1)) / n0
+       |      AS u0,
+       |    CAST(n1 * syy1 - sy1 * sy1 AS DOUBLE) / (n1 * (n1 - 1)) / n1
+       |      AS u1
+       |  FROM p WHERE n0 >= 2 AND n1 >= 2),
+       |t AS (SELECT event_type, n0, n1,
+       |    (CAST(sy0 AS DOUBLE) / n0 - CAST(sy1 AS DOUBLE) / n1)
+       |      / sqrt(u0 + u1) AS t_dbl,
+       |    (u0 + u1) * (u0 + u1)
+       |      / (u0 * u0 / (n0 - 1) + u1 * u1 / (n1 - 1)) AS df_dbl
+       |  FROM u WHERE u0 + u1 > 0)
+       |SELECT event_type, n0, n1,
+       |  CAST(round(t_dbl * 1000000, 0) AS BIGINT) AS t_ppm,
+       |  CAST(round(df_dbl * 1000000, 0) AS BIGINT) AS df_ppm,
+       |  CAST(CASE event_type $pCase END AS BIGINT) AS p_ppm,
+       |  CAST(CASE event_type $sCase END AS BIGINT) AS significant
+       |FROM t ORDER BY event_type""".stripMargin
+  }
 
   /** 1-D WASSERSTEIN distance as data ([[graft.ops.Stats
     * .wasserstein1]] — the `wassersteinDistance` column of the IC2E
@@ -3327,16 +3345,16 @@ object MiscQueries extends graft.QueryModule {
     * is the per-scenario MAPE table under the per-scenario weights;
     * oracle replays the CASE chain with all weight vectors inlined
     * post-fit. */
-  def qPredictGrouped(s: SparkSession, dir: String): DataFrame = {
+  def qPredictGrouped(s: SparkSession, dir: String): (DataFrame, String) = {
     val df = olsFrame(s, dir)
     val models = Ols.fitPerGroup(df, OlsFeatures, "y_c", "l_returnflag")
-    df.withColumn("pred_ppm",
+    (df.withColumn("pred_ppm",
         Ols.predictPpmGrouped(models, OlsFeatures, "l_returnflag"))
       .withColumn("ape_ppm", expr("abs(pred_ppm - y_c * 1000000) DIV y_c"))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), sum(col("ape_ppm")).as("sum_ape_ppm"))
       .withColumn("mape_ppm", expr("sum_ape_ppm DIV n"))
-      .orderBy(col("l_returnflag"))
+      .orderBy(col("l_returnflag")), qPredictGroupedSql(models))
   }
 
   private def qPredictGroupedSql(ms: Map[String, Ols.Model]): String = {
@@ -3372,7 +3390,7 @@ object MiscQueries extends graft.QueryModule {
     * worse than the group mean inside every return-flag group, which
     * is itself a finding the per-scenario fit corrects) — and the
     * entry REQUIRES the non-negativity the final division depends on. */
-  def qPredictR2(s: SparkSession, dir: String): DataFrame = {
+  def qPredictR2(s: SparkSession, dir: String): (DataFrame, String) = {
     val df = olsFrame(s, dir)
     val ms = Ols.fitPerGroup(df, OlsFeatures, "y_c", "l_returnflag")
     val rows = df
@@ -3409,8 +3427,8 @@ object MiscQueries extends graft.QueryModule {
       (g, r.getLong(1), r2.toLong)
     }
     import s.implicits._
-    out.toSeq.toDF("l_returnflag", "n", "r2_ppm")
-      .orderBy(col("l_returnflag"))
+    (out.toSeq.toDF("l_returnflag", "n", "r2_ppm")
+      .orderBy(col("l_returnflag")), qPredictR2Sql(ms))
   }
 
   private def qPredictR2Sql(ms: Map[String, Ols.Model]): String = {
@@ -3456,7 +3474,7 @@ object MiscQueries extends graft.QueryModule {
     * the final DIVs happen DRIVER-side over BigInts after gating
     * non-negativity), so the oracle replays the whole loop with the
     * weight vector and price table inlined post-fit. */
-  def qCostPredict(s: SparkSession, dir: String): DataFrame = {
+  def qCostPredict(s: SparkSession, dir: String): (DataFrame, String) = {
     val df = olsFrame(s, dir)
     val m = Ols.fit(df, OlsFeatures, "y_c")
     val rows = df
@@ -3490,10 +3508,10 @@ object MiscQueries extends graft.QueryModule {
         (sumErr * 1000000 / sumCost).toLong)
     }
     import s.implicits._
-    out.toSeq
+    (out.toSeq
       .toDF("l_returnflag", "n", "avg_cost_u", "avg_err_u",
         "cost_err_ppm")
-      .orderBy(col("l_returnflag"))
+      .orderBy(col("l_returnflag")), qCostPredictSql(m))
   }
 
   private def qCostPredictSql(m: Ols.Model): String =
@@ -3530,7 +3548,7 @@ object MiscQueries extends graft.QueryModule {
     * training the batch fit maintained incrementally, not an
     * approximation. Output: the per-scenario MAPE table scored with
     * the STREAMED weights; oracle inlines them post-run. */
-  def qOlsStream(s: SparkSession, dir: String): DataFrame = {
+  def qOlsStream(s: SparkSession, dir: String): (DataFrame, String) = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val tmp = StreamQueries.scratch(s, "olsstream")
     val df = olsFrame(s, dir)
@@ -3551,9 +3569,8 @@ object MiscQueries extends graft.QueryModule {
     require(streamed.wPpm.sameElements(batch.wPpm),
       s"streamed model drifted from the batch fit: " +
         s"${streamed.wPpm.toSeq} vs ${batch.wPpm.toSeq}")
-    Ols.lastStreamModel = Some(streamed)
-    Ols.mapeReport(df, streamed, OlsFeatures, "y_c", "l_returnflag")
-      .orderBy(col("l_returnflag"))
+    (Ols.mapeReport(df, streamed, OlsFeatures, "y_c", "l_returnflag")
+      .orderBy(col("l_returnflag")), mapeSql(streamed))
   }
 
   /** DuckDB spelling of [[olsFrame]] — keep in lock-step. */
@@ -3570,60 +3587,7 @@ object MiscQueries extends graft.QueryModule {
     (s"${m.wPpm(0)}" +: OlsFeatures.zipWithIndex.map { case (f, i) =>
       s"${m.wPpm(i + 1)} * $f" }).mkString(" + ")
 
-  /** Post-training oracles (the `Ivf.lastModel` contract): built
-    * AFTER the entries run, with the fitted ppm weights as literals. */
-  private def olsOracle: Map[String, String] =
-    Ols.lastModel.map { m =>
-      Map(
-        "q_runtime_predict" ->
-          s"""WITH $olsFrameSql
-             |SELECT l_orderkey, l_linenumber, y_c,
-             |  CAST(${olsPredictSql(m)} AS BIGINT) AS pred_ppm
-             |FROM li ORDER BY l_orderkey, l_linenumber""".stripMargin,
-        "q_predict_mape" ->
-          s"""WITH $olsFrameSql,
-             |p AS (SELECT l_returnflag, y_c,
-             |        CAST(${olsPredictSql(m)} AS BIGINT) AS pred_ppm
-             |      FROM li),
-             |a AS (SELECT l_returnflag,
-             |        abs(pred_ppm - y_c * 1000000) // y_c AS ape_ppm
-             |      FROM p)
-             |SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-             |  ${Num.sumSql("ape_ppm")} AS sum_ape_ppm,
-             |  ${Num.sumSql("ape_ppm")} // count(*) AS mape_ppm
-             |FROM a GROUP BY l_returnflag
-             |ORDER BY l_returnflag""".stripMargin,
-        "q_predict_compare" -> qPredictCompareSql(m),
-        "q_cost_predict" -> qCostPredictSql(m))
-    }.getOrElse(Map.empty) ++
-    Ols.lastGroupModels.map(ms => Map(
-      "q_predict_grouped" -> qPredictGroupedSql(ms),
-      "q_predict_r2" -> qPredictR2Sql(ms))).getOrElse(Map.empty) ++
-    Ols.lastStreamModel.map { m =>
-      "q_ols_stream" ->
-        s"""WITH $olsFrameSql,
-           |p AS (SELECT l_returnflag, y_c,
-           |        CAST(${olsPredictSql(m)} AS BIGINT) AS pred_ppm
-           |      FROM li),
-           |a AS (SELECT l_returnflag,
-           |        abs(pred_ppm - y_c * 1000000) // y_c AS ape_ppm
-           |      FROM p)
-           |SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-           |  ${Num.sumSql("ape_ppm")} AS sum_ape_ppm,
-           |  ${Num.sumSql("ape_ppm")} // count(*) AS mape_ppm
-           |FROM a GROUP BY l_returnflag
-           |ORDER BY l_returnflag""".stripMargin
-    }.toMap
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_runtime_predict" -> (qRuntimePredict _),
-    "q_predict_mape" -> (qPredictMape _),
-    "q_predict_compare" -> (qPredictCompare _),
-    "q_ols_stream" -> (qOlsStream _),
-    "q_predict_grouped" -> (qPredictGrouped _),
-    "q_predict_r2" -> (qPredictR2 _),
-    "q_cost_predict" -> (qCostPredict _),
-    "q_welch_t" -> (qWelchT _),
     "q_wasserstein" -> (qWasserstein _),
     "q_pagerank" -> (qPagerank _),
     "q_schema_evolution" -> (qSchemaEvolution _),
@@ -3685,7 +3649,7 @@ object MiscQueries extends graft.QueryModule {
     "q_gap_fill" -> (qGapFill _),
     "q_scd2" -> (qScd2 _))
 
-  def oracleSql: Map[String, String] = olsOracle ++ qWelchTOracle ++ Map(
+  def oracleSql: Map[String, String] = Map(
     "q_wasserstein" -> qWassersteinSql,
     "q_pagerank" -> qPagerankSql,
     "q_schema_evolution" -> qSchemaEvolutionSql,
@@ -3746,4 +3710,15 @@ object MiscQueries extends graft.QueryModule {
     "q_assoc_rules" -> qAssocRulesSql,
     "q_gap_fill" -> qGapFillSql,
     "q_scd2" -> qScd2Sql)
+
+  override def trained
+      : Map[String, (SparkSession, String) => (DataFrame, String)] = Map(
+    "q_runtime_predict" -> (qRuntimePredict _),
+    "q_predict_mape" -> (qPredictMape _),
+    "q_predict_compare" -> (qPredictCompare _),
+    "q_ols_stream" -> (qOlsStream _),
+    "q_predict_grouped" -> (qPredictGrouped _),
+    "q_predict_r2" -> (qPredictR2 _),
+    "q_cost_predict" -> (qCostPredict _),
+    "q_welch_t" -> (qWelchT _))
 }

@@ -446,28 +446,22 @@ object StreamQueries extends graft.QueryModule {
     * partitions, not the stream, are the queryable artifact. Same
     * (queryMaxId, k, nProbe) surface as `q_ann_ivf`, so the oracle is
     * the SAME full IVF replay with this run's centroids inlined. */
-  def qAnnStream(s: SparkSession, dir: String): DataFrame = {
+  def qAnnStream(s: SparkSession, dir: String): (DataFrame, String) = {
     import graft.core.CacheScope.Scoped
     val tmp = scratch(s, "annstream")
     val emb = s.read.parquet(s"$dir/embeddings.parquet")
     val prepared = graft.ops.Similarity.prepared(emb).scopedCache()
     val centroids = graft.ops.Ivf.train(prepared, k = 8, iters = 1)
-    annStreamModel = Some(graft.ops.Ivf.Model(centroids,
-      queryMaxId = 10L, k = 5, nProbe = 3))
     val stream = s.readStream.schema(emb.schema)
       .parquet(s"$dir/embeddings*.parquet")
     graft.streaming.VectorIndexStream.runIngest(s, stream, centroids,
       s"$tmp/index", s"$tmp/manifest", s"$tmp/ckpt")
-    graft.streaming.VectorIndexStream.searchStanding(s, s"$tmp/index",
+    (graft.streaming.VectorIndexStream.searchStanding(s, s"$tmp/index",
       s"$tmp/manifest", emb.filter(col("vec_id") < 10), centroids,
-      k = 5, nProbe = 3)
+      k = 5, nProbe = 3),
+      TrainingQueries.ivfOracleSql(graft.ops.Ivf.Model(centroids,
+        queryMaxId = 10L, k = 5, nProbe = 3)))
   }
-
-  @volatile private var annStreamModel: Option[graft.ops.Ivf.Model] = None
-
-  private def annStreamOracle: Map[String, String] =
-    annStreamModel
-      .map(m => "q_ann_stream" -> TrainingQueries.ivfOracleSql(m)).toMap
 
   /** Stream-stream inner join ([[EventStream.attributionJoin]]):
     * views matched to same-user purchases within 2 hours, both sides
@@ -655,7 +649,6 @@ object StreamQueries extends graft.QueryModule {
     "q_curate_stream" -> (qCurateStream _),
     "q_curate_decon_stream" -> (qCurateDeconStream _),
     "q_curate_full_stream" -> (qCurateFullStream _),
-    "q_ann_stream" -> (qAnnStream _),
     "q_stream_snapshot" -> (qStreamSnapshot _))
 
   def oracleSql: Map[String, String] = Map(
@@ -672,5 +665,9 @@ object StreamQueries extends graft.QueryModule {
     "q_curate_stream" -> qCurateStreamSql,
     "q_curate_decon_stream" -> qCurateDeconStreamSql,
     "q_curate_full_stream" -> qCurateFullStreamSql,
-    "q_stream_snapshot" -> qStreamSnapshotSql) ++ annStreamOracle
+    "q_stream_snapshot" -> qStreamSnapshotSql)
+
+  override def trained
+      : Map[String, (SparkSession, String) => (DataFrame, String)] =
+    Map("q_ann_stream" -> (qAnnStream _))
 }

@@ -1146,12 +1146,13 @@ object TrainingQueries extends graft.QueryModule {
 
   /** IVF ANN: k-means coarse quantizer + probe-limited search.
     * Training is data-dependent, so the DuckDB oracle is GENERATED
-    * after the query runs, with the trained centroids embedded as
-    * literals ([[ivfOracle]] reads [[Ivf.lastModel]]; Verify dumps
-    * oracle_sql.json only after running every query). */
-  def qAnnIvf(s: SparkSession, dir: String): DataFrame =
-    Ivf.ivfTopK(Tables.embeddings(s, dir), queryMaxId = 10L, k = 5,
-      nClusters = 8, nProbe = 3, iters = 1)
+    * from the trained model, with the centroids embedded as literals
+    * (a [[graft.QueryModule.trained]] entry). */
+  def qAnnIvf(s: SparkSession, dir: String): (DataFrame, String) = {
+    val (df, m) = Ivf.ivfTopK(Tables.embeddings(s, dir), queryMaxId = 10L,
+      k = 5, nClusters = 8, nProbe = 3, iters = 1)
+    (df, ivfOracleSql(m))
+  }
 
   /** DuckDB replay of [[qAnnIvf]] for the trained model: assignment
     * argmax (ties to larger j, like Spark's max(struct)), probe
@@ -1162,7 +1163,7 @@ object TrainingQueries extends graft.QueryModule {
       s"($j, ${c.mkString("[", ",", "]")}::DOUBLE[], $half)"
     }.mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |c(j, cv, half) AS (SELECT * FROM (VALUES $values)),
+       |c AS (SELECT * FROM (VALUES $values) AS t(j, cv, half)),
        |scored AS (SELECT e.vec_id, e.v, c.j,
        |             list_dot_product(e.v, c.cv) - c.half AS s
        |           FROM e CROSS JOIN c),
@@ -1186,39 +1187,39 @@ object TrainingQueries extends graft.QueryModule {
        |FROM r WHERE rn <= ${m.k} ORDER BY q_id, rank""".stripMargin
   }
 
-  private def ivfOracle: Map[String, String] =
-    Ivf.lastModel.map(m => "q_ann_ivf" -> ivfOracleSql(m)).toMap
-
   /** Product-quantization ANN ([[Pq.adcTopK]]): per-subspace
     * codebooks + integer-millionth ADC scoring. Data-dependent like
     * the IVF entry — the oracle embeds the trained codebooks as
     * literals post-run. */
-  def qAnnPq(s: SparkSession, dir: String): DataFrame =
-    Pq.adcTopK(Tables.embeddings(s, dir), queryMaxId = 10L, k = 5,
-      m = 8, ksub = 16, iters = 2)
+  def qAnnPq(s: SparkSession, dir: String): (DataFrame, String) =
+    pqEntry(Pq.adcTopK(Tables.embeddings(s, dir), queryMaxId = 10L,
+      k = 5, m = 8, ksub = 16, iters = 2))
 
   /** IVF-PQ ([[Pq.ivfpqTopK]]): coarse-probe candidate cut + ADC
     * scoring — the billion-scale composition of the two quantizers. */
-  def qAnnIvfPq(s: SparkSession, dir: String): DataFrame =
-    Pq.ivfpqTopK(Tables.embeddings(s, dir), queryMaxId = 10L, k = 5,
-      m = 8, ksub = 16, iters = 2, nClusters = 8, nProbe = 3,
-      coarseIters = 1)
+  def qAnnIvfPq(s: SparkSession, dir: String): (DataFrame, String) =
+    pqEntry(Pq.ivfpqTopK(Tables.embeddings(s, dir), queryMaxId = 10L,
+      k = 5, m = 8, ksub = 16, iters = 2, nClusters = 8, nProbe = 3,
+      coarseIters = 1))
 
   /** ADC shortlist + exact re-rank ([[Pq.adcTopKReranked]]): the
     * production recall repair — measured recall@5 on this corpus
     * 0.24 (pure ADC, m=8) → 0.80 at a 50-candidate shortlist. */
-  def qAnnPqRerank(s: SparkSession, dir: String): DataFrame =
-    Pq.adcTopKReranked(Tables.embeddings(s, dir), queryMaxId = 10L,
-      k = 5, shortlist = 50, m = 8, ksub = 16, iters = 2)
+  def qAnnPqRerank(s: SparkSession, dir: String): (DataFrame, String) =
+    pqEntry(Pq.adcTopKReranked(Tables.embeddings(s, dir),
+      queryMaxId = 10L, k = 5, shortlist = 50, m = 8, ksub = 16, iters = 2))
 
   /** IVF-PQ + exact re-rank ([[Pq.ivfpqTopKReranked]]): the full
     * production serving stack — coarse probes cut candidates, ADC
     * codes score them, the shortlist re-ranks exactly. PqSpec pins
     * recall@k at or above pure IVF-PQ on the same model settings. */
-  def qAnnIvfPqRerank(s: SparkSession, dir: String): DataFrame =
-    Pq.ivfpqTopKReranked(Tables.embeddings(s, dir), queryMaxId = 10L,
-      k = 5, shortlist = 50, m = 8, ksub = 16, iters = 2, nClusters = 8,
-      nProbe = 3, coarseIters = 1)
+  def qAnnIvfPqRerank(s: SparkSession, dir: String): (DataFrame, String) =
+    pqEntry(Pq.ivfpqTopKReranked(Tables.embeddings(s, dir),
+      queryMaxId = 10L, k = 5, shortlist = 50, m = 8, ksub = 16,
+      iters = 2, nClusters = 8, nProbe = 3, coarseIters = 1))
+
+  private def pqEntry(r: (DataFrame, Pq.Model)): (DataFrame, String) =
+    (r._1, pqOracleSql(r._2))
 
   /** DuckDB replay of the ADC pipeline for a trained [[Pq.Model]]:
     * subvector slices, assignment argmax (ties to larger j), the
@@ -1243,7 +1244,7 @@ object TrainingQueries extends graft.QueryModule {
         val half = c.map(x => x * x).sum / 2.0
         s"($j, ${c.mkString("[", ",", "]")}::DOUBLE[], $half)"
       }.mkString(", ")
-      s"""co(j, cv, half) AS (SELECT * FROM (VALUES $cvals)),
+      s"""co AS (SELECT * FROM (VALUES $cvals) AS t(j, cv, half)),
          |cosc AS (SELECT e.vec_id, e.v, co.j,
          |           list_dot_product(e.v, co.cv) - co.half AS s
          |         FROM e CROSS JOIN co),
@@ -1265,7 +1266,8 @@ object TrainingQueries extends graft.QueryModule {
         |    JOIN cprobes cp ON cp.cluster = ca.cluster AND cp.q_id = l.q_id""".stripMargin
     else ""
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |${coarseCtes}cb(sub, j, cv, half, cn2i) AS (SELECT * FROM (VALUES $values)),
+       |${coarseCtes}cb AS (SELECT * FROM (VALUES $values)
+       |  AS t(sub, j, cv, half, cn2i)),
        |sv AS (SELECT e.vec_id, s.sub,
        |         list_slice(e.v, s.sub*${m.subDim}+1, s.sub*${m.subDim}+${m.subDim}) AS sv
        |       FROM e CROSS JOIN (SELECT CAST(range AS INT) AS sub
@@ -1317,21 +1319,15 @@ object TrainingQueries extends graft.QueryModule {
          |SELECT q_id, CAST(rn AS BIGINT) AS rank, neighbor_id, sim
          |FROM r2 WHERE rn <= ${m.k} ORDER BY q_id, rank""".stripMargin
 
-  private def pqOracle: Map[String, String] =
-    Pq.lastModel.map(m => "q_ann_pq" -> pqOracleSql(m)).toMap ++
-      Pq.lastIvfpqModel.map(m => "q_ann_ivfpq" -> pqOracleSql(m)).toMap ++
-      Pq.lastRerankModel.map(m => "q_ann_pq_rerank" -> pqOracleSql(m)).toMap ++
-      Pq.lastIvfpqRerankModel
-        .map(m => "q_ann_ivfpq_rerank" -> pqOracleSql(m)).toMap
-
   /** SemDeDup: k-means clusters + within-cluster lowest-id-survives
     * near-dup removal ([[SemDedup.report]]). Like the IVF entry, the
     * oracle is generated post-training with the centroids as
     * literals. */
-  def qSemdedup(s: SparkSession, dir: String): DataFrame =
-    SemDedup.report(Tables.embeddings(s, dir), eps = 0.4,
-        nClusters = 8, iters = 1)
-      .orderBy(col("vec_id"))
+  def qSemdedup(s: SparkSession, dir: String): (DataFrame, String) = {
+    val (df, m) = SemDedup.report(Tables.embeddings(s, dir), eps = 0.4,
+      nClusters = 8, iters = 1)
+    (df.orderBy(col("vec_id")), semdedupOracleSql(m))
+  }
 
   /** DuckDB replay of [[qSemdedup]]: identical assignment argmax as
     * [[ivfOracleSql]] (ties to larger j), then the within-cluster
@@ -1342,7 +1338,7 @@ object TrainingQueries extends graft.QueryModule {
       s"($j, ${c.mkString("[", ",", "]")}::DOUBLE[], $half)"
     }.mkString(", ")
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |c(j, cv, half) AS (SELECT * FROM (VALUES $values)),
+       |c AS (SELECT * FROM (VALUES $values) AS t(j, cv, half)),
        |scored AS (SELECT e.vec_id, e.v, c.j,
        |             list_dot_product(e.v, c.cv) - c.half AS s
        |           FROM e CROSS JOIN c),
@@ -1380,12 +1376,14 @@ object TrainingQueries extends graft.QueryModule {
     * many cells, at most how many cross-cell pairs the split alone
     * would drop, and how many verified duplicates among them the
     * repair RECOVERS — the stderr warning as auditable data. Same
-    * training parameters as [[qSemdedup]], so both entries derive one
-    * shared model whichever runs first. */
-  def qSemdedupOversized(s: SparkSession, dir: String): DataFrame =
-    SemDedup.oversizedAudit(Tables.embeddings(s, dir), eps = 0.4,
-      nClusters = 8, iters = 1, maxClusterSize = SemdedupAuditCap,
+    * training parameters as [[qSemdedup]], so both entries train the
+    * same centroids. */
+  def qSemdedupOversized(s: SparkSession, dir: String): (DataFrame, String) = {
+    val (df, m) = SemDedup.oversizedAudit(Tables.embeddings(s, dir),
+      eps = 0.4, nClusters = 8, iters = 1, maxClusterSize = SemdedupAuditCap,
       repairBits = SemdedupRepairBits, repairProbe = SemdedupRepairProbe)
+    (df, semdedupOversizedSql(m))
+  }
 
   /** DuckDB replay of [[qSemdedupOversized]]: same centroid-literal
     * assignment argmax as [[semdedupOracleSql]], then cluster sizes,
@@ -1403,7 +1401,7 @@ object TrainingQueries extends graft.QueryModule {
       SemdedupRepairBits, SemdedupRepairProbe)
     val bucket = graft.ops.Similarity.bucketSql(SemdedupRepairBits)
     s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |c(j, cv, half) AS (SELECT * FROM (VALUES $values)),
+       |c AS (SELECT * FROM (VALUES $values) AS t(j, cv, half)),
        |scored AS (SELECT e.vec_id, e.v, c.j,
        |             list_dot_product(e.v, c.cv) - c.half AS s
        |           FROM e CROSS JOIN c),
@@ -1436,11 +1434,6 @@ object TrainingQueries extends graft.QueryModule {
        |FROM x LEFT JOIN rec ON rec.cluster = x.cluster
        |ORDER BY x.cluster""".stripMargin
   }
-
-  private def semdedupOracle: Map[String, String] =
-    SemDedup.lastModel.map(m => Map(
-      "q_semdedup" -> semdedupOracleSql(m),
-      "q_semdedup_oversized" -> semdedupOversizedSql(m))).getOrElse(Map.empty)
 
   // ---- multimodal --------------------------------------------------------
 
@@ -2343,19 +2336,19 @@ object TrainingQueries extends graft.QueryModule {
     * integer-ppm arithmetic. The classifier arm of quality filtering,
     * next to the LM arm (q_perplexity) and the importance arm
     * (q_importance). */
-  def qQualityClassifier(s: SparkSession, dir: String): DataFrame = {
+  def qQualityClassifier(s: SparkSession, dir: String): (DataFrame, String) = {
     val docs = Tables.documents(s, dir)
     val pos = docs.filter(pmod(col("doc_id"), lit(41)) === 0)
     val neg = docs.filter(pmod(col("doc_id"), lit(41)) =!= 0)
     val model = QualityClassifier.train(pos, neg,
       textCol = "text", idCol = "doc_id", nBuckets = 1024, iters = 12)
-    QualityClassifier.scoreReport(docs, model, "text", "doc_id")
+    (QualityClassifier.scoreReport(docs, model, "text", "doc_id")
       .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
+      .orderBy(col("doc_id")), qcOracleSql(model))
   }
 
-  /** Post-training oracle for [[qQualityClassifier]] (the
-    * [[Ivf.lastModel]] contract): the trained ppm weight table rides
+  /** Post-training oracle for [[qQualityClassifier]] (see
+    * [[graft.QueryModule.trained]]): the trained ppm weight table rides
     * as ONE literal list indexed by bucket, the decision replays as
     * `sum(c_b * w_ppm) + bias_ppm * n_toks > 0` — integer end to
     * end. */
@@ -2379,10 +2372,6 @@ object TrainingQueries extends graft.QueryModule {
        |FROM documents d LEFT JOIN sc ON d.doc_id = sc.id
        |ORDER BY d.doc_id""".stripMargin
   }
-
-  private def qcOracle: Map[String, String] =
-    QualityClassifier.lastModel
-      .map(m => "q_quality_classifier" -> qcOracleSql(m)).toMap
 
   /** ANN recall@k as data: the brute-force top-5 (ground truth)
     * joined against the multi-probe LSH top-5 for the same query set,
@@ -2510,14 +2499,14 @@ object TrainingQueries extends graft.QueryModule {
     * convention, and every vector projects in-plan as a pure long
     * multiply-add with the component vectors as literals. The oracle
     * replays both projections with the 64 ppm weights inlined
-    * post-fit (the Ivf.lastModel contract) — a drifting component
+    * post-fit (see [[graft.QueryModule.trained]]) — a drifting component
     * hash-mismatches every row. The entry REQUIRES PC1 to carry at
     * least as much projected VARIANCE as PC2 — the eigen-order
     * contract is about variance, not range: with near-equal top
     * eigenvalues (the replicated sf1 corpus) the RANGES legitimately
     * invert, which is exactly what this require's first cut tripped
     * over. */
-  def qPcaProject(s: SparkSession, dir: String): DataFrame = {
+  def qPcaProject(s: SparkSession, dir: String): (DataFrame, String) = {
     val emb = Tables.embeddings(s, dir)
     val m = Pca.fit(emb, "embedding", dims = 64, nComponents = 2)
     val out = emb.select(col("vec_id"), col("label").cast("long").as("label"),
@@ -2530,7 +2519,7 @@ object TrainingQueries extends graft.QueryModule {
     val sp = out.agg(var_samp(col("p1")), var_samp(col("p2"))).head()
     require(sp.getDouble(0) >= sp.getDouble(1) * 0.999,
       s"PC1 variance ${sp.getDouble(0)} < PC2 variance ${sp.getDouble(1)}")
-    out.orderBy(col("vec_id"))
+    (out.orderBy(col("vec_id")), pcaOracleSql(m))
   }
 
   private def pcaOracleSql(m: Pca.Model): String = {
@@ -2544,10 +2533,6 @@ object TrainingQueries extends graft.QueryModule {
        |  CAST(${proj(1)} AS BIGINT) AS p2
        |FROM e ORDER BY vec_id""".stripMargin
   }
-
-  private def pcaOracle: Map[String, String] =
-    Pca.lastModel.map(m => "q_pca_project" -> pcaOracleSql(m)).toMap ++
-      Pca.lastAnnModel.map(m => "q_ann_pca" -> qAnnPcaSql(m)).toMap
 
   /** The ppm projection of `v` (a DOUBLE[] SQL column) onto component
     * `c` of `m` — the shared spelling of [[graft.ops.Pca.projectPpm]]
@@ -2578,7 +2563,7 @@ object TrainingQueries extends graft.QueryModule {
     * buckets projections through the LSH/IVF machinery. Everything —
     * both arms, all three configurations, the recall join — replays
     * in DuckDB with the 24 component vectors inlined post-fit. */
-  def qAnnPca(s: SparkSession, dir: String): DataFrame = {
+  def qAnnPca(s: SparkSession, dir: String): (DataFrame, String) = {
     val emb = Tables.embeddings(s, dir)
     // both frames feed all three study arms — cache the bounded truth
     // (|Q|·k rows) and the slim projection table (25 longs per row),
@@ -2590,7 +2575,6 @@ object TrainingQueries extends graft.QueryModule {
       .scopedCache()
     val m = Pca.fit(emb, "embedding", dims = 64,
       nComponents = AnnPcaComps.max)
-    Pca.lastAnnModel = Some(m)
     val allPcs = 0 until AnnPcaComps.max
     // all 24 projections in ONE native expression: the 24-column
     // declarative spelling (24 × 64 round/cast/multiply slots) blows
@@ -2643,13 +2627,13 @@ object TrainingQueries extends graft.QueryModule {
     // misses would collapse into unattributable null-n_comp rows
     val truthX = truth.withColumn("n_comp",
       explode(array(AnnPcaComps.map(k => lit(k.toLong)): _*)))
-    truthX.join(approx.withColumn("hit", lit(1L)),
+    (truthX.join(approx.withColumn("hit", lit(1L)),
         Seq("n_comp", "q_id", "neighbor_id"), "left")
       .groupBy(col("n_comp"), col("q_id"))
       .agg(count(lit(1)).as("n_truth"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall_ppm", expr("n_hits * 1000000 DIV n_truth"))
-      .orderBy(col("n_comp"), col("q_id"))
+      .orderBy(col("n_comp"), col("q_id")), qAnnPcaSql(m))
   }
 
   private def qAnnPcaSql(m: Pca.Model): String = {
@@ -2705,8 +2689,6 @@ object TrainingQueries extends graft.QueryModule {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pca_project" -> (qPcaProject _),
-    "q_ann_pca" -> (qAnnPca _),
     "q_text_stats" -> (qTextStats _),
     "q_langid" -> (qLangId _),
     "q_fingerprint" -> (qFingerprint _),
@@ -2739,16 +2721,8 @@ object TrainingQueries extends graft.QueryModule {
     "q_ann_lsh_multiprobe" -> (qAnnLshMultiprobe _),
     "q_ann_lsh_multitable" -> (qAnnLshMultitable _),
     "q_embed_neardup_mp" -> (qEmbedNearDupMp _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_ann_pq" -> (qAnnPq _),
-    "q_ann_ivfpq" -> (qAnnIvfPq _),
-    "q_ann_pq_rerank" -> (qAnnPqRerank _),
-    "q_ann_ivfpq_rerank" -> (qAnnIvfPqRerank _),
-    "q_semdedup" -> (qSemdedup _),
-    "q_semdedup_oversized" -> (qSemdedupOversized _),
     "q_centroid_audit" -> (qCentroidAudit _),
     "q_ann_recall" -> (qAnnRecall _),
-    "q_quality_classifier" -> (qQualityClassifier _),
     "q_multimodal" -> (qMultimodal _),
     "q_media_frames" -> (qMediaFrames _),
     "q_media_meta" -> (qMediaMeta _),
@@ -2800,6 +2774,18 @@ object TrainingQueries extends graft.QueryModule {
     "q_wav_audio" -> qWavAudioSql,
     "q_avi_video" -> qAviVideoSql,
     "q_avi_pixels" -> qAviPixelsSql,
-    "q_tar_shards" -> qTarShardsSql) ++
-    ivfOracle ++ pqOracle ++ semdedupOracle ++ qcOracle ++ pcaOracle
+    "q_tar_shards" -> qTarShardsSql)
+
+  override def trained
+      : Map[String, (SparkSession, String) => (DataFrame, String)] = Map(
+    "q_pca_project" -> (qPcaProject _),
+    "q_ann_pca" -> (qAnnPca _),
+    "q_ann_ivf" -> (qAnnIvf _),
+    "q_ann_pq" -> (qAnnPq _),
+    "q_ann_ivfpq" -> (qAnnIvfPq _),
+    "q_ann_pq_rerank" -> (qAnnPqRerank _),
+    "q_ann_ivfpq_rerank" -> (qAnnIvfPqRerank _),
+    "q_semdedup" -> (qSemdedup _),
+    "q_semdedup_oversized" -> (qSemdedupOversized _),
+    "q_quality_classifier" -> (qQualityClassifier _))
 }

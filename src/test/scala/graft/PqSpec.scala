@@ -30,7 +30,7 @@ class PqSpec extends SparkSpec {
       (11L, Seq(0.1f, 0.9f, 0.3f, 0.0f)),
       (12L, Seq(0.5f, 0.5f, 0.1f, 0.1f))).toDF("vec_id", "embedding")
     val pq = topkPairs(Pq.adcTopK(emb, queryMaxId = 2L, k = 4,
-      m = 1, ksub = 5, iters = 0).collect())
+      m = 1, ksub = 5, iters = 0)._1.collect())
     val brute = topkPairs(Similarity.bruteForceTopK(emb,
       emb.filter($"vec_id" < 2L), k = 4).collect())
     assert(pq.keySet === brute.keySet)
@@ -47,7 +47,7 @@ class PqSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf).select("vec_id", "embedding")
       .union(dup)
     val rows = Pq.adcTopK(emb, queryMaxId = 5L, k = 20, m = 4, ksub = 16, iters = 2)
-      .filter($"q_id" === 3L).collect()
+      ._1.filter($"q_id" === 3L).collect()
     // identical vector -> identical codes -> maximal approximate sim
     // (other vectors may quantize to the same 4 codes and tie)
     val bySim = rows.map(r => r.getLong(2) -> r.getDouble(3)).toMap
@@ -61,7 +61,7 @@ class PqSpec extends SparkSpec {
       emb.filter($"vec_id" < 10L), k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val pq = Pq.adcTopK(emb, queryMaxId = 10L, k = 5,
-      m = 8, ksub = 16, iters = 2).collect()
+      m = 8, ksub = 16, iters = 2)._1.collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = (brute & pq).size.toDouble / brute.size
     // 16 codes x 8 subspaces on 64 dims is a hard quantization
@@ -69,7 +69,7 @@ class PqSpec extends SparkSpec {
     // k/n = 0.01 — with re-ranking as the production repair below
     assert(recall >= 0.12, s"adc recall@5 = $recall")
     val reranked = Pq.adcTopKReranked(emb, queryMaxId = 10L, k = 5,
-      shortlist = 50, m = 8, ksub = 16, iters = 2).collect()
+      shortlist = 50, m = 8, ksub = 16, iters = 2)._1.collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val rr = (brute & reranked).size.toDouble / brute.size
     assert(rr >= 0.6, s"reranked recall@5 = $rr") // measured 0.80
@@ -81,7 +81,7 @@ class PqSpec extends SparkSpec {
     val brute = topkPairs(Similarity.bruteForceTopK(emb,
       emb.filter($"vec_id" < 5L), k = 400).collect())
     val rr = topkPairs(Pq.adcTopKReranked(emb, queryMaxId = 5L, k = 5,
-      shortlist = 30, m = 8, ksub = 16, iters = 1).collect())
+      shortlist = 30, m = 8, ksub = 16, iters = 1)._1.collect())
     rr.foreach { case (pair, sim) =>
       assert(math.abs(sim - brute(pair)) < 1e-12,
         s"pair $pair: reranked sim $sim != exact ${brute(pair)}")
@@ -91,10 +91,10 @@ class PqSpec extends SparkSpec {
   test("IVF-PQ candidates are a subset of exhaustive ADC's (the probe cut)") {
     val emb = Tables.embeddings(spark, sf)
     val adc = Pq.adcTopK(emb, queryMaxId = 5L, k = 50,
-      m = 4, ksub = 16, iters = 2).collect()
+      m = 4, ksub = 16, iters = 2)._1.collect()
     val ivfpq = Pq.ivfpqTopK(emb, queryMaxId = 5L, k = 50,
       m = 4, ksub = 16, iters = 2, nClusters = 8, nProbe = 3,
-      coarseIters = 1).collect()
+      coarseIters = 1)._1.collect()
     val adcSims = topkPairs(adc)
     val ivfpqSims = topkPairs(ivfpq)
     // every scored pair the coarse stage admits must carry the SAME
@@ -121,10 +121,10 @@ class PqSpec extends SparkSpec {
       rows.map(r => (r.getLong(0), r.getLong(2))).toSet
     val ivfpq = pairs(Pq.ivfpqTopK(emb, queryMaxId = 10L, k = 5,
       m = 8, ksub = 16, iters = 2, nClusters = 8, nProbe = 3,
-      coarseIters = 1).collect())
+      coarseIters = 1)._1.collect())
     val rrRows = Pq.ivfpqTopKReranked(emb, queryMaxId = 10L, k = 5,
       shortlist = 50, m = 8, ksub = 16, iters = 2, nClusters = 8,
-      nProbe = 3, coarseIters = 1).collect()
+      nProbe = 3, coarseIters = 1)._1.collect()
     val rr = pairs(rrRows)
     val recallIvfpq = (brute & ivfpq).size.toDouble / brute.size
     val recallRr = (brute & rr).size.toDouble / brute.size

@@ -621,7 +621,7 @@ object SemDedupProps extends SparkProperties("semdedup") {
     graft.core.CacheScope.withScope {
       graft.ops.SemDedup.report(rows.toDF("vec_id", "embedding"),
           eps = 0.9, nClusters = k, iters = 1, maxClusterSize = cap,
-          repairBits = bits)
+          repairBits = bits)._1
         .collect()
         .map(r => r.getLong(0) ->
           (r.getAs[Long]("dup_of"), r.getAs[Long]("keep"))).toMap

@@ -84,10 +84,10 @@ class QualityClassifierSpec extends SparkSpec {
     assert(a.biasPpm === b.biasPpm && a.biasPpm === c.biasPpm)
   }
 
-  test("model is stashed for the oracle and empty training fails loudly") {
-    QualityClassifier.train(pos, neg, "text", "doc_id",
+  test("training returns its model and empty training fails loudly") {
+    val m = QualityClassifier.train(pos, neg, "text", "doc_id",
       nBuckets = 32, iters = 2)
-    assert(QualityClassifier.lastModel.exists(_.nBuckets === 32))
+    assert(m.nBuckets === 32)
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assertThrows[IllegalArgumentException](
       QualityClassifier.train(empty, empty, "text", "doc_id"))

@@ -13,7 +13,7 @@ class IvfSpec extends SparkSpec {
       .select("q_id", "neighbor_id", "sim").as[(Long, Long, Double)]
       .collect().map(t => (t._1, t._2) -> t._3).toMap
     val ivf = Ivf.ivfTopK(emb, queryMaxId = 5L, k = 5,
-      nClusters = 8, nProbe = 3, iters = 2)
+      nClusters = 8, nProbe = 3, iters = 2)._1
       .select("q_id", "neighbor_id", "sim").as[(Long, Long, Double)].collect()
     assert(ivf.nonEmpty)
     ivf.foreach { case (q, n, s) =>
@@ -26,7 +26,7 @@ class IvfSpec extends SparkSpec {
     val brute = Similarity.bruteForceTopK(emb, emb.filter($"vec_id" < 3), 5)
       .select("q_id", "rank", "neighbor_id").collect().map(_.toSeq)
     val ivf = Ivf.ivfTopK(emb, queryMaxId = 3L, k = 5,
-      nClusters = 4, nProbe = 4, iters = 1)
+      nClusters = 4, nProbe = 4, iters = 1)._1
       .select("q_id", "rank", "neighbor_id").collect().map(_.toSeq)
     assert(ivf.toSeq === brute.toSeq)
   }

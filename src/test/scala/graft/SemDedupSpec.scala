@@ -16,7 +16,7 @@ class SemDedupSpec extends SparkSpec {
     .toDF("vec_id", "embedding")
 
   test("lowest id in each near-dup group survives, distinct members keep") {
-    val r = SemDedup.report(emb, eps = 0.999, nClusters = 2, iters = 2)
+    val r = SemDedup.report(emb, eps = 0.999, nClusters = 2, iters = 2)._1
       .orderBy("vec_id").collect()
     val keep = r.map(x => x.getLong(0) -> x.getLong(4)).toMap
     val dupOf = r.map(x => x.getLong(0) -> x.getLong(2)).toMap
@@ -27,7 +27,7 @@ class SemDedupSpec extends SparkSpec {
 
   test("cross-cluster near-identical vectors are NOT compared (the paper's accepted trade)") {
     // force k = number of vectors so every vector sits alone
-    val r = SemDedup.report(emb, eps = 0.9, nClusters = 5, iters = 2)
+    val r = SemDedup.report(emb, eps = 0.9, nClusters = 5, iters = 2)._1
       .orderBy("vec_id").collect()
     assert(r.forall(_.getLong(4) === 1L))
   }
@@ -40,10 +40,10 @@ class SemDedupSpec extends SparkSpec {
     // though the exact pair join ran per cell.
     val giant = (0L until 12L).map(i => (i, Seq(1.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val r = SemDedup.report(giant, eps = 0.999, nClusters = 1, iters = 1,
-        maxClusterSize = 6L)
-      .orderBy("vec_id").collect()
-    assert(SemDedup.lastOversized.map(_._2) === Seq(12L))
+    val (split, splitModel) = SemDedup.report(giant, eps = 0.999,
+      nClusters = 1, iters = 1, maxClusterSize = 6L)
+    val r = split.orderBy("vec_id").collect()
+    assert(splitModel.oversized.map(_._2) === Seq(12L))
     assert(r.map(_.getLong(4)).toSeq === (1L +: Seq.fill(11)(0L)))
     // every duplicate's survivor is the GLOBAL head, across cells
     assert(r.drop(1).forall(_.getLong(2) === 0L))
@@ -51,7 +51,7 @@ class SemDedupSpec extends SparkSpec {
     // repairBits = 0: the documented cheap option — cells only, the
     // cross-cell miss reappears as a second surviving head (id 1)
     val cheap = SemDedup.report(giant, eps = 0.999, nClusters = 1,
-        iters = 1, maxClusterSize = 6L, repairBits = 0)
+        iters = 1, maxClusterSize = 6L, repairBits = 0)._1
       .orderBy("vec_id").collect()
     val keep = cheap.map(x => x.getLong(0) -> x.getLong(4)).toMap
     assert(keep === (0L until 12L).map(i =>
@@ -60,9 +60,10 @@ class SemDedupSpec extends SparkSpec {
       .forall(x => x.getLong(2) === x.getLong(0) % 2))
 
     // default cap: guard silent, single survivor
-    val full = SemDedup.report(giant, eps = 0.999, nClusters = 1, iters = 1)
-      .orderBy("vec_id").collect()
-    assert(SemDedup.lastOversized.isEmpty)
+    val (unsplit, unsplitModel) = SemDedup.report(giant, eps = 0.999,
+      nClusters = 1, iters = 1)
+    val full = unsplit.orderBy("vec_id").collect()
+    assert(unsplitModel.oversized.isEmpty)
     assert(full.map(_.getLong(4)).toSeq === (1L +: Seq.fill(11)(0L)))
   }
 
@@ -83,19 +84,20 @@ class SemDedupSpec extends SparkSpec {
       (5L, Seq(0.99f, 0.0f, 0.14f)),
       (10L, Seq(0.0f, 1.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    def run(cap: Long, bits: Int = 8) =
-      SemDedup.report(vs, eps = 0.999, nClusters = 1, iters = 1,
-          maxClusterSize = cap, repairBits = bits)
-        .orderBy("vec_id").collect().map(x =>
-          (x.getLong(0), x.getLong(2), x.getLong(4))).toSeq
-    val unsplit = run(cap = 100L)
+    def run(cap: Long, bits: Int = 8) = {
+      val (df, model) = SemDedup.report(vs, eps = 0.999, nClusters = 1,
+        iters = 1, maxClusterSize = cap, repairBits = bits)
+      (df.orderBy("vec_id").collect().map(x =>
+        (x.getLong(0), x.getLong(2), x.getLong(4))).toSeq, model)
+    }
+    val (unsplit, _) = run(cap = 100L)
     assert(unsplit.find(_._1 === 4L).get === ((4L, 3L, 0L))) // the dup
     assert(unsplit.count(_._3 === 0L) === 1) // ...and the only one
-    val repaired = run(cap = 3L) // the 7-member cluster splits
-    assert(SemDedup.lastOversized.nonEmpty)
+    val (repaired, model) = run(cap = 3L) // the 7-member cluster splits
+    assert(model.oversized.nonEmpty)
     assert(repaired === unsplit)
     // and the cheap option really does miss it (the pair is cross-cell)
-    val cheap = run(cap = 3L, bits = 0)
+    val (cheap, _) = run(cap = 3L, bits = 0)
     assert(cheap.find(_._1 === 4L).get === ((4L, -1L, 1L)))
   }
 
@@ -104,7 +106,7 @@ class SemDedupSpec extends SparkSpec {
     val vs = (0L until 7L).map(i => (i, Seq(1.0f, 0.0f, 0.001f * i))) ++
       Seq((10L, Seq(0.0f, 1.0f, 0.0f)), (11L, Seq(0.0f, 1.0f, 0.01f)))
     val r = SemDedup.oversizedAudit(vs.toDF("vec_id", "embedding"),
-        eps = 0.9, nClusters = 2, iters = 2, maxClusterSize = 3L)
+        eps = 0.9, nClusters = 2, iters = 2, maxClusterSize = 3L)._1
       .collect()
     // only the 7-cluster exceeds the cap: 3 cells (ceil 7/3); balanced
     // cells are (3,2,2) -> within-cell pairs 3+1+1=5; C(7,2)=21 -> 16
@@ -119,13 +121,13 @@ class SemDedupSpec extends SparkSpec {
     // repair off: exposure unchanged, nothing recovered
     val off = SemDedup.oversizedAudit(vs.toDF("vec_id", "embedding"),
         eps = 0.9, nClusters = 2, iters = 2, maxClusterSize = 3L,
-        repairBits = 0)
+        repairBits = 0)._1
       .collect()
     assert(off.head.getAs[Long]("pairs_exposed_max") === 16L)
     assert(off.head.getAs[Long]("recovered_pairs") === 0L)
     // under-cap corpus: audit is empty, never null-rowed
     assert(SemDedup.oversizedAudit(vs.toDF("vec_id", "embedding"),
-      eps = 0.9, nClusters = 2, iters = 2, maxClusterSize = 100L)
+      eps = 0.9, nClusters = 2, iters = 2, maxClusterSize = 100L)._1
       .collect().isEmpty)
   }
 
@@ -136,10 +138,10 @@ class SemDedupSpec extends SparkSpec {
     val giants = ((0L until 12L).map(i => (i, Seq(1.0f, 0.0f, 0.0f))) ++
       (100L until 112L).map(i => (i, Seq(0.0f, 1.0f, 0.0f))))
       .toDF("vec_id", "embedding")
-    val r = SemDedup.report(giants, eps = 0.999, nClusters = 2, iters = 2,
-        maxClusterSize = 6L)
-      .orderBy("vec_id").collect()
-    assert(SemDedup.lastOversized.map(_._2) === Seq(12L, 12L))
+    val (split, model) = SemDedup.report(giants, eps = 0.999,
+      nClusters = 2, iters = 2, maxClusterSize = 6L)
+    val r = split.orderBy("vec_id").collect()
+    assert(model.oversized.map(_._2) === Seq(12L, 12L))
     val keep = r.map(x => x.getLong(0) -> x.getLong(4)).toMap
     assert(keep === (0L until 12L).map(i =>
       i -> (if (i === 0L) 1L else 0L)).toMap ++
@@ -150,7 +152,7 @@ class SemDedupSpec extends SparkSpec {
 
     // the cheap option (repair off) keeps one head per parity cell
     val cheap = SemDedup.report(giants, eps = 0.999, nClusters = 2,
-        iters = 2, maxClusterSize = 6L, repairBits = 0)
+        iters = 2, maxClusterSize = 6L, repairBits = 0)._1
       .orderBy("vec_id").collect()
     val ckeep = cheap.map(x => x.getLong(0) -> x.getLong(4)).toMap
     assert(ckeep === (0L until 12L).map(i =>
@@ -161,7 +163,7 @@ class SemDedupSpec extends SparkSpec {
   }
 
   test("eps = -1 marks everything after the cluster head as duplicate") {
-    val r = SemDedup.report(emb, eps = -1.0, nClusters = 1, iters = 1)
+    val r = SemDedup.report(emb, eps = -1.0, nClusters = 1, iters = 1)._1
       .orderBy("vec_id").collect()
     assert(r.map(_.getLong(4)).toSeq === Seq(1L, 0L, 0L, 0L, 0L))
     // everyone's dup_of is the global head

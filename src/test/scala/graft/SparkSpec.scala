@@ -26,13 +26,17 @@ class EntrySpec extends SparkSpec {
   }
   test("every query has rows at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      // one cache scope per entry, as Bench and Verify run them
+      val n = graft.core.CacheScope.withScope(fn(spark, sf).count())
       assert(n > 0, s"query $name returned 0 rows")
     }
   }
   test("every oracle key has a query") {
+    // runs after every entry above, so each trained entry has
+    // recorded its oracle: the two key sets must be equal
     val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.oracleSql.keySet.diff(qs)
-    assert(missing.isEmpty, s"oracles without queries: $missing")
+    val os = SparkEntry.oracleSql.keySet
+    assert(os === qs,
+      s"oracles without queries: ${os -- qs}; queries without oracles: ${qs -- os}")
   }
 }

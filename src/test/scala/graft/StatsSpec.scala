@@ -19,7 +19,7 @@ class StatsSpec extends SparkSpec {
     // bound would call it significant and be WRONG at n = (3, 2)
     val df = Seq(("k", 0L, 1L), ("k", 0L, 2L), ("k", 0L, 3L),
       ("k", 1L, 5L), ("k", 1L, 7L)).toDF("g", "side", "y")
-    val r = Stats.welchT(df, "y", "side", "g").head()
+    val r = Stats.welchT(df, "y", "side", "g")._1.head()
     assert(r.getString(0) === "k")
     assert((r.getLong(1), r.getLong(2)) === ((3L, 2L)))
     assert(r.getLong(3) === -3464102L) // round(-3.4641016*1e6)
@@ -32,7 +32,7 @@ class StatsSpec extends SparkSpec {
     val df = (0 until 20).flatMap(i =>
       Seq(("k", 0L, (i % 5).toLong), ("k", 1L, (i % 5).toLong)))
       .toDF("g", "side", "y")
-    val r = Stats.welchT(df, "y", "side", "g").head()
+    val r = Stats.welchT(df, "y", "side", "g")._1.head()
     assert(r.getLong(3) === 0L)
     assert(r.getLong(5) === 1000000L) // p = 1 exactly at t = 0
     assert(r.getLong(6) === 0L)
@@ -50,7 +50,7 @@ class StatsSpec extends SparkSpec {
       // a healthy key survives
       ("ok", 0L, 1L), ("ok", 0L, 2L), ("ok", 1L, 5L), ("ok", 1L, 7L))
       .toDF("g", "side", "y")
-    val keys = Stats.welchT(df, "y", "side", "g")
+    val keys = Stats.welchT(df, "y", "side", "g")._1
       .select("g").collect().map(_.getString(0)).toSeq
     assert(keys === Seq("ok"))
   }

@@ -6,9 +6,10 @@ Usage: python3 tools/compare.py [sfDir] [outDir]
 Runs DuckDB on oracle_sql.json (written by graft.Verify) against the
 same parquet tables, and compares each query's Spark parquet dump:
 columns sorted by name, rows sorted by all columns, exact value match.
-An oracle that runs DuckDB out of memory as one statement is evaluated
-again with each CTE materialized in turn (`coldwarm/oracle.py`'s
-`evaluate`): same result, far less memory on the curation chain.
+Each oracle is evaluated with its CTEs materialized in turn
+(`coldwarm/oracle.py`'s `evaluate`) on a fresh connection, since the
+temp tables of one oracle would collide with the next one's CTE names:
+same result as one statement, far less memory on the curation chain.
 This is a dev tool only — NOT part of the Scala library.
 """
 import glob
@@ -29,12 +30,6 @@ import oracle as coldwarm_oracle  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
-# Caps DuckDB's buffer memory (default: 80% of RAM): an oracle that does
-# not fit stops at the cap instead of filling the machine, then takes the
-# CTE-by-CTE path.
-MEMORY_LIMIT = "4GB"
 
 
 def norm(df):
@@ -58,27 +53,13 @@ def frame_hash(df):
     return h.hexdigest()
 
 
-def oracle_frame(con, sql):
-    """The oracle's answer. DuckDB inlines a CTE that is read twice; on
-    `q_curation_full` at sf0.01 that needs more than 12 GB, so on
-    out-of-memory the CTEs are materialized one at a time instead."""
-    try:
-        return con.sql(sql).df()
-    except duckdb.OutOfMemoryException:
-        return coldwarm_oracle.evaluate(coldwarm_oracle.connect(SF), sql)
-
-
 def main():
-    con = duckdb.connect()
-    con.execute(f"SET memory_limit = '{MEMORY_LIMIT}'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
-            want = norm(oracle_frame(con, sql))
+            want = norm(coldwarm_oracle.evaluate(
+                coldwarm_oracle.connect(SF), sql))
             files = glob.glob(f"{OUT}/{name}/*.parquet")
             got = norm(duckdb.sql(
                 f"SELECT * FROM read_parquet({files!r})").df())
