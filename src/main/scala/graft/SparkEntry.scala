@@ -8,10 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Each implemented operator from SURVEY §2 contributes one entry to
-  * [[queries]]; SQL-expressible ones also contribute a DuckDB oracle
-  * to [[oracleSql]] (column names aliased identically on both sides —
-  * the driver sorts columns by name before hashing values).
+  * Each implemented operator from SURVEY §2 is registered once, in
+  * its module's [[QueryModule.entries]], as its run function together
+  * with its DuckDB oracle (column names aliased identically on both
+  * sides — the oracle compare sorts columns by name before hashing
+  * values). [[queries]] and [[oracleSql]] both derive from that map.
   *
   * A trained entry ([[QueryModule.trained]]) builds its oracle from
   * the model it trains, so its oracle is present in [[oracleSql]]
@@ -43,9 +44,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.SalesQueries.qSalesReport(spark, "/root/testdata/sf0.001")
 
+  private val registered: Map[String, (QueryModule#Run, String)] =
+    modules.map(_.entries).reduce(_ ++ _)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_.queries).reduce(_ ++ _) ++
+    registered.map { case (name, (run, _)) => name -> run } ++
       modules.flatMap(_.trained).map { case (name, fn) =>
         name -> { (s: SparkSession, dir: String) =>
           val (df, sql) = fn(s, dir)
@@ -54,16 +58,24 @@ object SparkEntry {
         }
       }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB
+    * on the same parquet tables. */
   def oracleSql: Map[String, String] =
-    modules.map(_.oracleSql).reduce(_ ++ _) ++ trainedSql.asScala
+    registered.map { case (name, (_, sql)) => name -> sql } ++
+      trainedSql.asScala
 }
 
 /** A group of related query entries (one source file per SURVEY area). */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracleSql: Map[String, String]
+  type Run = (SparkSession, String) => DataFrame
+
+  /** Each static entry, registered once by name: its run function and
+    * its oracle SQL. An entry that sets a conf or registers a temp view
+    * for its own plan does so on its own fork of the caller's session
+    * (`Bridge.cloneSession`), never on the caller's. The exception is
+    * `Tables.events`, which sets the parquet `nanosAsLong` reader conf
+    * on the session it reads with. */
+  def entries: Map[String, (Run, String)]
 
   /** Entries whose answer depends on a model they train: each returns
     * its frame and its oracle SQL, which embeds the trained model as

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
 
 /** Library-owned session posture: the one place a session is built,
-  * the confs every runner (Bench / Verify / Explain / ScaleStudy / the
-  * test session / a user pipeline) must share for the operators here
+  * the confs every runner (Bench / Verify / Explain / the test
+  * session / a user pipeline) must share for the operators here
   * to keep their measured plan shapes, and the partition derivation
   * (optimization guide §2: partition counts derive from DATA SIZE,
   * never from whatever core count the host happens to provide).

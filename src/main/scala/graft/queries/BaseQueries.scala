@@ -55,11 +55,7 @@ object BaseQueries extends graft.QueryModule {
       |  count(DISTINCT user_id) AS n_users
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q_count_distinct" -> (qCountDistinct _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "q_count_distinct" -> qCountDistinctSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q1_agg" -> (q1Agg _, q1AggSql),
+    "q_count_distinct" -> (qCountDistinct _, qCountDistinctSql))
 }

@@ -1687,83 +1687,44 @@ object CurationQueries extends graft.QueryModule {
       |  CAST(nfc_normalize(t) <> t AS BIGINT) AS changed
       |FROM t0 ORDER BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pii_scrub" -> (qPiiScrub _),
-    "q_nfc_norm" -> (qNfcNorm _),
-    "q_bpe_merges" -> (qBpeMerges _),
-    "q_bpe_bytelevel" -> (qBpeBytelevel _),
-    "q_pack_bytelevel" -> (qPackBytelevel _),
-    "q_subwords_bytelevel" -> (qSubwordsBytelevel _),
-    "q_token_ids" -> (qTokenIds _),
-    "q_detokenize" -> (qDetokenize _),
-    "q_chunk_ids" -> (qChunkIds _),
-    "q_pack_ids" -> (qPackIds _),
-    "q_pack_ids_eos" -> (qPackIdsEos _),
-    "q_curation_e2e" -> (qCurationE2e _),
-    "q_curation_full" -> (qCurationFull _),
-    "q_bpe_vocab" -> (qBpeVocab _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_decon_suites" -> (qDeconSuites _),
-    "q_decontaminate_bloom" -> (qDecontaminateBloom _),
-    "q_decontaminate_semantic" -> (qDecontaminateSemantic _),
-    "q_importance" -> (qImportance _),
-    "q_perplexity" -> (qPerplexity _),
-    "q_curriculum" -> (qCurriculum _),
-    "q_source_drift" -> (qSourceDrift _),
-    "q_datacard" -> (qDatacard _),
-    "q_rag_index" -> (qRagIndex _),
-    "q_mix" -> (qMix _),
-    "q_mix_bpe50k" -> (qMixBpe50k _),
-    "q_mix_epochs" -> (qMixEpochs _),
-    "q_pack" -> (qPack _),
-    "q_epoch_order" -> (qEpochOrder _),
-    "q_pack_nospan" -> (qPackNospan _),
-    "q_pack_bpe" -> (qPackBpe _),
-    "q_pack_bpe50k" -> (qPackBpe50k _),
-    "q_pack_epochs" -> (qPackEpochs _),
-    "q_pack_merges" -> (qPackMerges _),
-    "q_repetition" -> (qRepetition _),
-    "q_subwords" -> (qSubwords _),
-    "q_subwords_merges" -> (qSubwordsMerges _),
-    "q_text_clean" -> (qTextClean _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pii_scrub" -> qPiiScrubSql,
-    "q_nfc_norm" -> qNfcNormSql,
-    "q_bpe_merges" -> qBpeMergesSql,
-    "q_bpe_bytelevel" -> qBpeBytelevelSql,
-    "q_pack_bytelevel" -> qPackBytelevelSql,
-    "q_subwords_bytelevel" -> qSubwordsBytelevelSql,
-    "q_token_ids" -> qTokenIdsSql,
-    "q_detokenize" -> qDetokenizeSql,
-    "q_chunk_ids" -> qChunkIdsSql,
-    "q_pack_ids" -> qPackIdsSql,
-    "q_pack_ids_eos" -> qPackIdsEosSql,
-    "q_curation_e2e" -> qCurationE2eSql,
-    "q_curation_full" -> qCurationFullSql,
-    "q_bpe_vocab" -> qBpeVocabSql,
-    "q_decontaminate" -> qDecontaminateSql,
-    "q_decon_suites" -> qDeconSuitesSql,
-    "q_decontaminate_bloom" -> qDecontaminateBloomSql,
-    "q_decontaminate_semantic" -> qDecontaminateSemanticSql,
-    "q_importance" -> qImportanceSql,
-    "q_perplexity" -> qPerplexitySql,
-    "q_curriculum" -> qCurriculumSql,
-    "q_source_drift" -> qSourceDriftSql,
-    "q_datacard" -> qDatacardSql,
-    "q_rag_index" -> qRagIndexSql,
-    "q_mix" -> qMixSql,
-    "q_mix_bpe50k" -> qMixBpe50kSql,
-    "q_mix_epochs" -> qMixEpochsSql,
-    "q_pack" -> qPackSql,
-    "q_epoch_order" -> qEpochOrderSql,
-    "q_pack_nospan" -> qPackNospanSql,
-    "q_pack_bpe" -> qPackBpeSql,
-    "q_pack_bpe50k" -> qPackBpe50kSql,
-    "q_pack_epochs" -> qPackEpochsSql,
-    "q_pack_merges" -> qPackMergesSql,
-    "q_repetition" -> qRepetitionSql,
-    "q_subwords" -> qSubwordsSql,
-    "q_subwords_merges" -> qSubwordsMergesSql,
-    "q_text_clean" -> qTextCleanSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_pii_scrub" -> (qPiiScrub _, qPiiScrubSql),
+    "q_nfc_norm" -> (qNfcNorm _, qNfcNormSql),
+    "q_bpe_merges" -> (qBpeMerges _, qBpeMergesSql),
+    "q_bpe_bytelevel" -> (qBpeBytelevel _, qBpeBytelevelSql),
+    "q_pack_bytelevel" -> (qPackBytelevel _, qPackBytelevelSql),
+    "q_subwords_bytelevel" -> (qSubwordsBytelevel _, qSubwordsBytelevelSql),
+    "q_token_ids" -> (qTokenIds _, qTokenIdsSql),
+    "q_detokenize" -> (qDetokenize _, qDetokenizeSql),
+    "q_chunk_ids" -> (qChunkIds _, qChunkIdsSql),
+    "q_pack_ids" -> (qPackIds _, qPackIdsSql),
+    "q_pack_ids_eos" -> (qPackIdsEos _, qPackIdsEosSql),
+    "q_curation_e2e" -> (qCurationE2e _, qCurationE2eSql),
+    "q_curation_full" -> (qCurationFull _, qCurationFullSql),
+    "q_bpe_vocab" -> (qBpeVocab _, qBpeVocabSql),
+    "q_decontaminate" -> (qDecontaminate _, qDecontaminateSql),
+    "q_decon_suites" -> (qDeconSuites _, qDeconSuitesSql),
+    "q_decontaminate_bloom" -> (qDecontaminateBloom _, qDecontaminateBloomSql),
+    "q_decontaminate_semantic" ->
+      (qDecontaminateSemantic _, qDecontaminateSemanticSql),
+    "q_importance" -> (qImportance _, qImportanceSql),
+    "q_perplexity" -> (qPerplexity _, qPerplexitySql),
+    "q_curriculum" -> (qCurriculum _, qCurriculumSql),
+    "q_source_drift" -> (qSourceDrift _, qSourceDriftSql),
+    "q_datacard" -> (qDatacard _, qDatacardSql),
+    "q_rag_index" -> (qRagIndex _, qRagIndexSql),
+    "q_mix" -> (qMix _, qMixSql),
+    "q_mix_bpe50k" -> (qMixBpe50k _, qMixBpe50kSql),
+    "q_mix_epochs" -> (qMixEpochs _, qMixEpochsSql),
+    "q_pack" -> (qPack _, qPackSql),
+    "q_epoch_order" -> (qEpochOrder _, qEpochOrderSql),
+    "q_pack_nospan" -> (qPackNospan _, qPackNospanSql),
+    "q_pack_bpe" -> (qPackBpe _, qPackBpeSql),
+    "q_pack_bpe50k" -> (qPackBpe50k _, qPackBpe50kSql),
+    "q_pack_epochs" -> (qPackEpochs _, qPackEpochsSql),
+    "q_pack_merges" -> (qPackMerges _, qPackMergesSql),
+    "q_repetition" -> (qRepetition _, qRepetitionSql),
+    "q_subwords" -> (qSubwords _, qSubwordsSql),
+    "q_subwords_merges" -> (qSubwordsMerges _, qSubwordsMergesSql),
+    "q_text_clean" -> (qTextClean _, qTextCleanSql))
 }

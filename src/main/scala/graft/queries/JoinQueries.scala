@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.core.{Num, Tables}
 
 /** Join-shape queries (SURVEY §2.3). The reference's only joins are
@@ -158,46 +159,38 @@ object JoinQueries extends graft.QueryModule {
     * 100 TB that's ~80% of the fact rows dropped before they are
     * hashed, serialized and shuffled, paid for with one xxhash probe
     * per row inside the scan stage's codegen span. The entry REQUIRES
-    * the injected filter in its own physical plan (a regression fails
-    * the correctness gate) and materializes INSIDE the conf window so
-    * the gated result is produced by the asserted plan; broadcast is
-    * pinned off because fact-fact joins are exactly the ones too big
-    * to broadcast (the `q_bucketed_join` argument).
+    * the injected filter in the physical plan of the frame it returns
+    * (a regression fails the correctness gate). Its confs are set on
+    * its own fork of the caller's session, so the returned frame
+    * re-plans under them whenever it runs; broadcast is pinned off
+    * because fact-fact joins are exactly the ones too big to
+    * broadcast (the `q_bucketed_join` argument).
     *
     * Oracle: the plain filtered join — the bloom filter is a pure
     * pass-through optimization (false positives only ever ADMIT rows
     * the join then drops), so the result must be bit-identical. */
   def qRuntimeFilter(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = StreamQueries.scratch(s, "rbf")
-    val confs = Seq(
+    val f = Bridge.cloneSession(s)
+    import f.implicits._
+    Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
-      val li = Tables.lineitem(s, dir).select($"l_orderkey",
-        Num.cents($"l_quantity").as("qty_c"))
-      val ord = Tables.orders(s, dir)
-        .filter($"o_orderpriority" === "1-URGENT")
-        .select($"o_orderkey", $"o_orderstatus")
-      val out = li.join(ord, $"l_orderkey" === $"o_orderkey")
-        .groupBy($"o_orderstatus")
-        .agg(count(lit(1)).as("n_lines"), sum($"qty_c").as("qty_sum_c"))
-      val plan = out.queryExecution.executedPlan.toString
-      require(plan.contains("bloom_filter_agg"),
-        "runtime bloom filter missing from the join plan")
-      // the conf window closes in finally — materialize the gated
-      // result now, so what the oracle checks IS the asserted plan's
-      // output (a later lazy execution would re-plan without confs)
-      out.coalesce(1).write.parquet(s"$tmp/out")
-    } finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-    s.read.parquet(s"$tmp/out").orderBy($"o_orderstatus")
+      .foreach { case (k, v) => f.conf.set(k, v) }
+    val li = Tables.lineitem(f, dir).select($"l_orderkey",
+      Num.cents($"l_quantity").as("qty_c"))
+    val ord = Tables.orders(f, dir)
+      .filter($"o_orderpriority" === "1-URGENT")
+      .select($"o_orderkey", $"o_orderstatus")
+    val out = li.join(ord, $"l_orderkey" === $"o_orderkey")
+      .groupBy($"o_orderstatus")
+      .agg(count(lit(1)).as("n_lines"), sum($"qty_c").as("qty_sum_c"))
+      .orderBy($"o_orderstatus")
+    val plan = out.queryExecution.executedPlan.toString
+    require(plan.contains("bloom_filter_agg"),
+      "runtime bloom filter missing from the join plan")
+    out
   }
 
   val qRuntimeFilterSql: String =
@@ -217,43 +210,33 @@ object JoinQueries extends graft.QueryModule {
     * REQUIRES the executed join to really key on the salt (no
     * silent de-salting by the optimizer). */
   def qSaltedJoin(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tmp = StreamQueries.scratch(s, "salt")
-    // broadcast pinned OFF for the whole build-and-materialize window:
-    // a broadcast hash join never shuffles the fact side on (key,
-    // salt), so the skew-spreading this entry documents would not
-    // actually execute — the salt must reach a SHUFFLE join's keys
-    val k = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = s.conf.getOption(k)
-    s.conf.set(k, "-1")
-    try {
-      val ev = Tables.events(s, dir)
-        .select($"event_type", $"event_id", Num.cents($"value").as("value_c"))
-      // slim dim derived from the same corpus: per-type weight
-      val dim = ev.select($"event_type").distinct()
-        .withColumn("weight", length($"event_type").cast("long"))
-      val joined = graft.ops.Salting.saltedJoin(
-        ev, dim, "event_type", saltFrom = $"event_id", salts = 8)
-      val out = joined.groupBy($"event_type")
-        .agg(count(lit(1)).as("n"),
-          sum($"value_c" * $"weight").as("weighted_c"))
-        .orderBy($"event_type")
-      // sparkPlan, not executedPlan: AQE's adaptive wrapper hides the
-      // join from a naive collect until execution
-      val joins = out.queryExecution.sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
-      }
-      require(joins.exists(j => j.leftKeys.size >= 2 &&
-          !j.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
-        "salted join must keep (key, salt) on a SHUFFLE-class join")
-      // materialize inside the conf window so the gated result is
-      // produced by the asserted (shuffled, salted) plan
-      out.coalesce(1).write.parquet(s"$tmp/out")
-    } finally saved match {
-      case Some(v) => s.conf.set(k, v)
-      case None => s.conf.unset(k)
+    // broadcast pinned OFF on the entry's own fork: a broadcast hash
+    // join never shuffles the fact side on (key, salt), so the
+    // skew-spreading this entry documents would not actually execute
+    // — the salt must reach a SHUFFLE join's keys
+    val f = Bridge.cloneSession(s)
+    import f.implicits._
+    f.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val ev = Tables.events(f, dir)
+      .select($"event_type", $"event_id", Num.cents($"value").as("value_c"))
+    // slim dim derived from the same corpus: per-type weight
+    val dim = ev.select($"event_type").distinct()
+      .withColumn("weight", length($"event_type").cast("long"))
+    val joined = graft.ops.Salting.saltedJoin(
+      ev, dim, "event_type", saltFrom = $"event_id", salts = 8)
+    val out = joined.groupBy($"event_type")
+      .agg(count(lit(1)).as("n"),
+        sum($"value_c" * $"weight").as("weighted_c"))
+      .orderBy($"event_type")
+    // sparkPlan, not executedPlan: AQE's adaptive wrapper hides the
+    // join from a naive collect until execution
+    val joins = out.queryExecution.sparkPlan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
     }
-    s.read.parquet(s"$tmp/out").orderBy($"event_type")
+    require(joins.exists(j => j.leftKeys.size >= 2 &&
+        !j.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
+      "salted join must keep (key, salt) on a SHUFFLE-class join")
+    out
   }
 
   val qSaltedJoinSql: String =
@@ -267,19 +250,11 @@ object JoinQueries extends graft.QueryModule {
        |FROM ev JOIN d ON ev.event_type = d.event_type
        |GROUP BY ev.event_type ORDER BY ev.event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_join_star" -> (qJoinStar _),
-    "q_join_semi_anti" -> (qJoinSemiAnti _),
-    "q_parts_supplier" -> (qPartsSupplier _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q_runtime_filter" -> (qRuntimeFilter _),
-    "q_salted_join" -> (qSaltedJoin _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_join_star" -> qJoinStarSql,
-    "q_join_semi_anti" -> qJoinSemiAntiSql,
-    "q_parts_supplier" -> qPartsSupplierSql,
-    "q_bucketed_join" -> qBucketedJoinSql,
-    "q_runtime_filter" -> qRuntimeFilterSql,
-    "q_salted_join" -> qSaltedJoinSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_join_star" -> (qJoinStar _, qJoinStarSql),
+    "q_join_semi_anti" -> (qJoinSemiAnti _, qJoinSemiAntiSql),
+    "q_parts_supplier" -> (qPartsSupplier _, qPartsSupplierSql),
+    "q_bucketed_join" -> (qBucketedJoin _, qBucketedJoinSql),
+    "q_runtime_filter" -> (qRuntimeFilter _, qRuntimeFilterSql),
+    "q_salted_join" -> (qSaltedJoin _, qSaltedJoinSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.core.{Num, Tables}
 import graft.core.CacheScope.Scoped
 import graft.ops.{AsofJoin, Cms, Curriculum, Hll, LayoutAudit, Mv, Ols, PageRank, Profile, SnapTable, Upsert}
@@ -78,12 +79,14 @@ object MiscQueries extends graft.QueryModule {
        |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin
 
   /** The multi-category report as one GROUPING SETS pass (SURVEY
-    * §2.4: one section per category over the same input). */
+    * §2.4: one section per category over the same input). Its view is
+    * registered on a fork of the caller's session. */
   def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    Tables.events(s, dir)
+    val f = Bridge.cloneSession(s)
+    Tables.events(f, dir)
       .withColumn("value_c", Num.cents(col("value")))
       .createOrReplaceTempView("ev_gs")
-    s.sql(
+    f.sql(
       """SELECT event_type, user_id, count(*) AS uses,
         |  sum(value_c) AS sum_value_c
         |FROM ev_gs
@@ -3587,129 +3590,70 @@ object MiscQueries extends graft.QueryModule {
     (s"${m.wPpm(0)}" +: OlsFeatures.zipWithIndex.map { case (f, i) =>
       s"${m.wPpm(i + 1)} * $f" }).mkString(" + ")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_wasserstein" -> (qWasserstein _),
-    "q_pagerank" -> (qPagerank _),
-    "q_schema_evolution" -> (qSchemaEvolution _),
-    "q_layout_audit" -> (qLayoutAudit _),
-    "q_zorder" -> (qZorder _),
-    "q_backfill" -> (qBackfill _),
-    "q_compact_files" -> (qCompactFiles _),
-    "q_time_travel" -> (qTimeTravel _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q_snapshot_vacuum" -> (qSnapshotVacuum _),
-    "q_snapshot_optimize" -> (qSnapshotOptimize _),
-    "q_incremental_mv" -> (qIncrementalMv _),
-    "q_cdc_mv_stream" -> (qCdcMvStream _),
-    "q_snapshot_merge" -> (qSnapshotMerge _),
-    "q_snapshot_erase" -> (qSnapshotErase _),
-    "q_commit_retry" -> (qCommitRetry _),
-    "q_optimize_race" -> (qOptimizeRace _),
-    "q_snapshot_prune" -> (qSnapshotPrune _),
-    "q_snapshot_skip" -> (qSnapshotSkip _),
-    "q_snapshot_partitioned" -> (qSnapshotPartitioned _),
-    "q_sql_snapshot" -> (qSqlSnapshot _),
-    "q_delete_vectors" -> (qDeleteVectors _),
-    "q_snapshot_widen" -> (qSnapshotWiden _),
-    "q_optimize_sized" -> (qOptimizeSized _),
-    "q_snapshot_incremental" -> (qSnapshotIncremental _),
-    "q_snapshot_skip_str" -> (qSnapshotSkipStr _),
-    "q_snapshot_zorder" -> (qSnapshotZorder _),
-    "q_snapshot_schema_evo" -> (qSnapshotSchemaEvo _),
-    "q_commit_audit" -> (qCommitAudit _),
-    "q_targeted_delete" -> (qTargetedDelete _),
-    "q_partition_prune" -> (qPartitionPrune _),
-    "q_quality" -> (qQuality _),
-    "q_delta_metrics" -> (qDeltaMetrics _),
-    "q_histogram" -> (qHistogram _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_overlap_all" -> (qOverlapAll _),
-    "q_payload_shuffle" -> (qPayloadShuffle _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_asof_bucketed" -> (qAsofBucketed _),
-    "q_profile" -> (qProfile _),
-    "q_rolling_window" -> (qRollingWindow _),
-    "q_pivot" -> (qPivot _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_upsert" -> (qUpsert _),
-    "q_sliding_window" -> (qSlidingWindow _),
-    "q_quantiles" -> (qQuantiles _),
-    "q_hll_distinct" -> (qHllDistinct _),
-    "q_cms_topk" -> (qCmsTopk _),
-    "q_jsonl_gz" -> (qJsonlGz _),
-    "q_quantiles_hist" -> (qQuantilesHist _),
-    "q_funnel" -> (qFunnel _),
-    "q_cohort_retention" -> (qCohortRetention _),
-    "q_copurchase" -> (qCopurchase _),
-    "q_rfm" -> (qRfm _),
-    "q_outlier_events" -> (qOutlierEvents _),
-    "q_skew_audit" -> (qSkewAudit _),
-    "q_assoc_rules" -> (qAssocRules _),
-    "q_gap_fill" -> (qGapFill _),
-    "q_scd2" -> (qScd2 _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_wasserstein" -> qWassersteinSql,
-    "q_pagerank" -> qPagerankSql,
-    "q_schema_evolution" -> qSchemaEvolutionSql,
-    "q_layout_audit" -> qLayoutAuditSql,
-    "q_zorder" -> qZorderSql,
-    "q_backfill" -> qBackfillSql,
-    "q_compact_files" -> qCompactFilesSql,
-    "q_time_travel" -> qTimeTravelSql,
-    "q_snapshot_diff" -> qSnapshotDiffSql,
-    "q_snapshot_vacuum" -> qSnapshotVacuumSql,
-    "q_snapshot_optimize" -> qSnapshotOptimizeSql,
-    "q_incremental_mv" -> qIncrementalMvSql,
-    "q_cdc_mv_stream" -> qCdcMvStreamSql,
-    "q_snapshot_merge" -> qSnapshotMergeSql,
-    "q_snapshot_erase" -> qSnapshotEraseSql,
-    "q_commit_retry" -> qCommitRetrySql,
-    "q_optimize_race" -> qOptimizeRaceSql,
-    "q_snapshot_prune" -> qSnapshotPruneSql,
-    "q_snapshot_skip" -> qSnapshotSkipSql,
-    "q_snapshot_partitioned" -> qSnapshotPartitionedSql,
-    "q_sql_snapshot" -> qSqlSnapshotSql,
-    "q_delete_vectors" -> qDeleteVectorsSql,
-    "q_snapshot_widen" -> qSnapshotWidenSql,
-    "q_optimize_sized" -> qOptimizeSizedSql,
-    "q_snapshot_incremental" -> qSnapshotIncrementalSql,
-    "q_snapshot_skip_str" -> qSnapshotSkipStrSql,
-    "q_snapshot_zorder" -> qSnapshotZorderSql,
-    "q_snapshot_schema_evo" -> qSnapshotSchemaEvoSql,
-    "q_commit_audit" -> qCommitAuditSql,
-    "q_targeted_delete" -> qTargetedDeleteSql,
-    "q_partition_prune" -> qPartitionPruneSql,
-    "q_quality" -> qQualitySql,
-    "q_delta_metrics" -> qDeltaMetricsSql,
-    "q_histogram" -> qHistogramSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_overlap_all" -> qOverlapAllSql,
-    "q_payload_shuffle" -> qPayloadShuffleSql,
-    "q_asof_join" -> qAsofJoinSql,
-    "q_asof_bucketed" -> qAsofJoinSql, // same independent native-ASOF oracle
-    "q_profile" -> qProfileSql,
-    "q_rolling_window" -> qRollingWindowSql,
-    "q_pivot" -> qPivotSql,
-    "q_unpivot" -> qUnpivotSql,
-    "q_orc_roundtrip" -> qOrcRoundtripSql,
-    "q_upsert" -> qUpsertSql,
-    "q_sliding_window" -> qSlidingWindowSql,
-    "q_quantiles" -> qQuantilesSql,
-    "q_hll_distinct" -> qHllDistinctSql,
-    "q_cms_topk" -> qCmsTopkSql,
-    "q_jsonl_gz" -> qJsonlGzSql,
-    "q_quantiles_hist" -> qQuantilesHistSql,
-    "q_funnel" -> qFunnelSql,
-    "q_cohort_retention" -> qCohortRetentionSql,
-    "q_copurchase" -> qCopurchaseSql,
-    "q_rfm" -> qRfmSql,
-    "q_outlier_events" -> qOutlierEventsSql,
-    "q_skew_audit" -> qSkewAuditSql,
-    "q_assoc_rules" -> qAssocRulesSql,
-    "q_gap_fill" -> qGapFillSql,
-    "q_scd2" -> qScd2Sql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_wasserstein" -> (qWasserstein _, qWassersteinSql),
+    "q_pagerank" -> (qPagerank _, qPagerankSql),
+    "q_schema_evolution" -> (qSchemaEvolution _, qSchemaEvolutionSql),
+    "q_layout_audit" -> (qLayoutAudit _, qLayoutAuditSql),
+    "q_zorder" -> (qZorder _, qZorderSql),
+    "q_backfill" -> (qBackfill _, qBackfillSql),
+    "q_compact_files" -> (qCompactFiles _, qCompactFilesSql),
+    "q_time_travel" -> (qTimeTravel _, qTimeTravelSql),
+    "q_snapshot_diff" -> (qSnapshotDiff _, qSnapshotDiffSql),
+    "q_snapshot_vacuum" -> (qSnapshotVacuum _, qSnapshotVacuumSql),
+    "q_snapshot_optimize" -> (qSnapshotOptimize _, qSnapshotOptimizeSql),
+    "q_incremental_mv" -> (qIncrementalMv _, qIncrementalMvSql),
+    "q_cdc_mv_stream" -> (qCdcMvStream _, qCdcMvStreamSql),
+    "q_snapshot_merge" -> (qSnapshotMerge _, qSnapshotMergeSql),
+    "q_snapshot_erase" -> (qSnapshotErase _, qSnapshotEraseSql),
+    "q_commit_retry" -> (qCommitRetry _, qCommitRetrySql),
+    "q_optimize_race" -> (qOptimizeRace _, qOptimizeRaceSql),
+    "q_snapshot_prune" -> (qSnapshotPrune _, qSnapshotPruneSql),
+    "q_snapshot_skip" -> (qSnapshotSkip _, qSnapshotSkipSql),
+    "q_snapshot_partitioned" ->
+      (qSnapshotPartitioned _, qSnapshotPartitionedSql),
+    "q_sql_snapshot" -> (qSqlSnapshot _, qSqlSnapshotSql),
+    "q_delete_vectors" -> (qDeleteVectors _, qDeleteVectorsSql),
+    "q_snapshot_widen" -> (qSnapshotWiden _, qSnapshotWidenSql),
+    "q_optimize_sized" -> (qOptimizeSized _, qOptimizeSizedSql),
+    "q_snapshot_incremental" ->
+      (qSnapshotIncremental _, qSnapshotIncrementalSql),
+    "q_snapshot_skip_str" -> (qSnapshotSkipStr _, qSnapshotSkipStrSql),
+    "q_snapshot_zorder" -> (qSnapshotZorder _, qSnapshotZorderSql),
+    "q_snapshot_schema_evo" -> (qSnapshotSchemaEvo _, qSnapshotSchemaEvoSql),
+    "q_commit_audit" -> (qCommitAudit _, qCommitAuditSql),
+    "q_targeted_delete" -> (qTargetedDelete _, qTargetedDeleteSql),
+    "q_partition_prune" -> (qPartitionPrune _, qPartitionPruneSql),
+    "q_quality" -> (qQuality _, qQualitySql),
+    "q_delta_metrics" -> (qDeltaMetrics _, qDeltaMetricsSql),
+    "q_histogram" -> (qHistogram _, qHistogramSql),
+    "q_grouping_sets" -> (qGroupingSets _, qGroupingSetsSql),
+    "q_overlap_all" -> (qOverlapAll _, qOverlapAllSql),
+    "q_payload_shuffle" -> (qPayloadShuffle _, qPayloadShuffleSql),
+    "q_asof_join" -> (qAsofJoin _, qAsofJoinSql),
+    // the same independent native-ASOF oracle
+    "q_asof_bucketed" -> (qAsofBucketed _, qAsofJoinSql),
+    "q_profile" -> (qProfile _, qProfileSql),
+    "q_rolling_window" -> (qRollingWindow _, qRollingWindowSql),
+    "q_pivot" -> (qPivot _, qPivotSql),
+    "q_unpivot" -> (qUnpivot _, qUnpivotSql),
+    "q_orc_roundtrip" -> (qOrcRoundtrip _, qOrcRoundtripSql),
+    "q_upsert" -> (qUpsert _, qUpsertSql),
+    "q_sliding_window" -> (qSlidingWindow _, qSlidingWindowSql),
+    "q_quantiles" -> (qQuantiles _, qQuantilesSql),
+    "q_hll_distinct" -> (qHllDistinct _, qHllDistinctSql),
+    "q_cms_topk" -> (qCmsTopk _, qCmsTopkSql),
+    "q_jsonl_gz" -> (qJsonlGz _, qJsonlGzSql),
+    "q_quantiles_hist" -> (qQuantilesHist _, qQuantilesHistSql),
+    "q_funnel" -> (qFunnel _, qFunnelSql),
+    "q_cohort_retention" -> (qCohortRetention _, qCohortRetentionSql),
+    "q_copurchase" -> (qCopurchase _, qCopurchaseSql),
+    "q_rfm" -> (qRfm _, qRfmSql),
+    "q_outlier_events" -> (qOutlierEvents _, qOutlierEventsSql),
+    "q_skew_audit" -> (qSkewAudit _, qSkewAuditSql),
+    "q_assoc_rules" -> (qAssocRules _, qAssocRulesSql),
+    "q_gap_fill" -> (qGapFill _, qGapFillSql),
+    "q_scd2" -> (qScd2 _, qScd2Sql))
 
   override def trained
       : Map[String, (SparkSession, String) => (DataFrame, String)] = Map(

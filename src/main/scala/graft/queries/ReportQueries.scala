@@ -292,23 +292,13 @@ object ReportQueries extends graft.QueryModule {
        |FROM runs
        |ORDER BY memory_mb, event_id, pipeline_stage""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_e2e_report" -> (qE2eReport _),
-    "q_raw_of_group" -> (qRawOfGroup _),
-    "q_sentinel_fill" -> (qSentinelFill _),
-    "q_report_groups" -> (qReportGroups _),
-    "q_tenancy" -> (qTenancy _),
-    "q_pipeline_window" -> (qPipelineWindow _),
-    "q_union_iterations" -> (qUnionIterations _),
-    "q_overlap" -> (qOverlap _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_e2e_report" -> qE2eReportSql,
-    "q_raw_of_group" -> qRawOfGroupSql,
-    "q_sentinel_fill" -> qSentinelFillSql,
-    "q_report_groups" -> qReportGroupsSql,
-    "q_tenancy" -> qTenancySql,
-    "q_pipeline_window" -> qPipelineWindowSql,
-    "q_union_iterations" -> qUnionIterationsSql,
-    "q_overlap" -> qOverlapSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_e2e_report" -> (qE2eReport _, qE2eReportSql),
+    "q_raw_of_group" -> (qRawOfGroup _, qRawOfGroupSql),
+    "q_sentinel_fill" -> (qSentinelFill _, qSentinelFillSql),
+    "q_report_groups" -> (qReportGroups _, qReportGroupsSql),
+    "q_tenancy" -> (qTenancy _, qTenancySql),
+    "q_pipeline_window" -> (qPipelineWindow _, qPipelineWindowSql),
+    "q_union_iterations" -> (qUnionIterations _, qUnionIterationsSql),
+    "q_overlap" -> (qOverlap _, qOverlapSql))
 }

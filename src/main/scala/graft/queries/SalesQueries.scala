@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.core.Num
 import graft.etl.SalesTransform
 
@@ -77,14 +78,19 @@ object SalesQueries extends graft.QueryModule {
   /** SURVEY §7.4.5 Query-stage contract: the TLQ "Q" runs `spark.sql`
     * over the loaded SalesData view (S11 surface), with the filter
     * variants the reference documents — OrderPriority, Region, and
-    * order-date range. */
-  private def salesView(s: SparkSession, dir: String): Unit =
-    SalesTransform.transformed(s, dir).createOrReplaceTempView("SalesData")
+    * order-date range. The view is registered on a fork of the
+    * caller's session, so a caller's own `SalesData` stays as it was;
+    * the query runs on that fork. */
+  private def salesView(s: SparkSession, dir: String): SparkSession = {
+    val f = Bridge.cloneSession(s)
+    SalesTransform.transformed(f, dir).createOrReplaceTempView("SalesData")
+    f
+  }
 
   /** OrderPriority filter + per-priority rollup. */
   def qSalesPriority(s: SparkSession, dir: String): DataFrame = {
-    salesView(s, dir)
-    s.sql("""SELECT order_priority, count(*) AS n_orders,
+    val f = salesView(s, dir)
+    f.sql("""SELECT order_priority, count(*) AS n_orders,
             |  sum(revenue_c) AS sum_revenue_c, sum(units_c) AS sum_units_c
             |FROM SalesData
             |WHERE order_priority IN ('Critical', 'High')
@@ -102,8 +108,8 @@ object SalesQueries extends graft.QueryModule {
 
   /** Region + order-date-range filter, per-country rollup. */
   def qSalesDateRange(s: SparkSession, dir: String): DataFrame = {
-    salesView(s, dir)
-    s.sql("""SELECT country, count(*) AS n_orders,
+    val f = salesView(s, dir)
+    f.sql("""SELECT country, count(*) AS n_orders,
             |  sum(revenue_c) AS sum_revenue_c
             |FROM SalesData
             |WHERE region = 'EUROPE'
@@ -121,15 +127,9 @@ object SalesQueries extends graft.QueryModule {
        |  AND order_date BETWEEN DATE '1996-01-01' AND DATE '1998-12-31'
        |GROUP BY country ORDER BY country""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sales_transform" -> (qSalesTransform _),
-    "q_sales_report" -> (qSalesReport _),
-    "q_sales_priority" -> (qSalesPriority _),
-    "q_sales_date_range" -> (qSalesDateRange _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_sales_transform" -> qSalesTransformSql,
-    "q_sales_report" -> qSalesReportSql,
-    "q_sales_priority" -> qSalesPrioritySql,
-    "q_sales_date_range" -> qSalesDateRangeSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_sales_transform" -> (qSalesTransform _, qSalesTransformSql),
+    "q_sales_report" -> (qSalesReport _, qSalesReportSql),
+    "q_sales_priority" -> (qSalesPriority _, qSalesPrioritySql),
+    "q_sales_date_range" -> (qSalesDateRange _, qSalesDateRangeSql))
 }

@@ -65,11 +65,7 @@ object ScalarQueries extends graft.QueryModule {
       |    AS VARCHAR) AS js
       |FROM events ORDER BY event_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scalar_funcs" -> (qScalarFuncs _),
-    "q_json" -> (qJson _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_scalar_funcs" -> qScalarFuncsSql,
-    "q_json" -> qJsonSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_scalar_funcs" -> (qScalarFuncs _, qScalarFuncsSql),
+    "q_json" -> (qJson _, qJsonSql))
 }

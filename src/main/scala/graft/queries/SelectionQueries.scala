@@ -348,19 +348,11 @@ object SelectionQueries extends graft.QueryModule {
       |  CAST(sum(tc) - sum(tp) AS BIGINT) AS token_delta
       |FROM j GROUP BY source, status ORDER BY source, status""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_gopher_quality" -> (qGopherQuality _),
-    "q_filter_funnel" -> (qFilterFunnel _),
-    "q_budget_select" -> (qBudgetSelect _),
-    "q_c4_filter" -> (qC4Filter _),
-    "q_selection_e2e" -> (qSelectionE2e _),
-    "q_corpus_diff" -> (qCorpusDiff _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_gopher_quality" -> qGopherQualitySql,
-    "q_filter_funnel" -> qFilterFunnelSql,
-    "q_budget_select" -> qBudgetSelectSql,
-    "q_c4_filter" -> qC4FilterSql,
-    "q_selection_e2e" -> qSelectionE2eSql,
-    "q_corpus_diff" -> qCorpusDiffSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_gopher_quality" -> (qGopherQuality _, qGopherQualitySql),
+    "q_filter_funnel" -> (qFilterFunnel _, qFilterFunnelSql),
+    "q_budget_select" -> (qBudgetSelect _, qBudgetSelectSql),
+    "q_c4_filter" -> (qC4Filter _, qC4FilterSql),
+    "q_selection_e2e" -> (qSelectionE2e _, qSelectionE2eSql),
+    "q_corpus_diff" -> (qCorpusDiff _, qCorpusDiffSql))
 }

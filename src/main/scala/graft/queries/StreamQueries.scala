@@ -635,37 +635,21 @@ object StreamQueries extends graft.QueryModule {
        |  ${Num.sumSql(Num.centsSql("value"))} AS sum_c
        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_report_stream" -> (qReportStream _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_hll_stream" -> (qHllStream _),
-    "q_cms_stream" -> (qCmsStream _),
-    "q_stream_window" -> (qStreamWindow _),
-    "q_sessionize" -> (qSessionize _),
-    "q_sessionize_stream" -> (qSessionizeStream _),
-    "q_sessionize_late" -> (qSessionizeLate _),
-    "q_sessionize_bounded" -> (qSessionizeBounded _),
-    "q_funnel_stream" -> (qFunnelStream _),
-    "q_curate_stream" -> (qCurateStream _),
-    "q_curate_decon_stream" -> (qCurateDeconStream _),
-    "q_curate_full_stream" -> (qCurateFullStream _),
-    "q_stream_snapshot" -> (qStreamSnapshot _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_report_stream" -> qReportStreamSql,
-    "q_stream_join" -> qStreamJoinSql,
-    "q_hll_stream" -> qHllStreamSql,
-    "q_cms_stream" -> graft.queries.MiscQueries.qCmsTopkSql,
-    "q_stream_window" -> qStreamWindowSql,
-    "q_sessionize" -> qSessionizeSql,
-    "q_sessionize_stream" -> qSessionizeSql,
-    "q_sessionize_late" -> qSessionizeSql,
-    "q_sessionize_bounded" -> qSessionizeSql,
-    "q_funnel_stream" -> qFunnelStreamSql,
-    "q_curate_stream" -> qCurateStreamSql,
-    "q_curate_decon_stream" -> qCurateDeconStreamSql,
-    "q_curate_full_stream" -> qCurateFullStreamSql,
-    "q_stream_snapshot" -> qStreamSnapshotSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_report_stream" -> (qReportStream _, qReportStreamSql),
+    "q_stream_join" -> (qStreamJoin _, qStreamJoinSql),
+    "q_hll_stream" -> (qHllStream _, qHllStreamSql),
+    "q_cms_stream" -> (qCmsStream _, MiscQueries.qCmsTopkSql),
+    "q_stream_window" -> (qStreamWindow _, qStreamWindowSql),
+    "q_sessionize" -> (qSessionize _, qSessionizeSql),
+    "q_sessionize_stream" -> (qSessionizeStream _, qSessionizeSql),
+    "q_sessionize_late" -> (qSessionizeLate _, qSessionizeSql),
+    "q_sessionize_bounded" -> (qSessionizeBounded _, qSessionizeSql),
+    "q_funnel_stream" -> (qFunnelStream _, qFunnelStreamSql),
+    "q_curate_stream" -> (qCurateStream _, qCurateStreamSql),
+    "q_curate_decon_stream" -> (qCurateDeconStream _, qCurateDeconStreamSql),
+    "q_curate_full_stream" -> (qCurateFullStream _, qCurateFullStreamSql),
+    "q_stream_snapshot" -> (qStreamSnapshot _, qStreamSnapshotSql))
 
   override def trained
       : Map[String, (SparkSession, String) => (DataFrame, String)] =

@@ -2688,93 +2688,49 @@ object TrainingQueries extends graft.QueryModule {
        |ORDER BY n_comp, q_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_text_stats" -> (qTextStats _),
-    "q_langid" -> (qLangId _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_exact_dedup" -> (qExactDedup _),
-    "q_line_dedup" -> (qLineDedup _),
-    "q_dedup_weights" -> (qDedupWeights _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_substring_dedup" -> (qSubstringDedup _),
-    "q_substring_scrub" -> (qSubstringScrub _),
-    "q_ngram_jaccard" -> (qNgramJaccard _),
-    "q_winnow_pairs" -> (qWinnowPairs _),
-    "q_cdc_chunks" -> (qCdcChunks _),
-    "q_minhash_dedup" -> (qMinhashDedup _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_admit" -> (qDedupAdmit _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_keeplist" -> (qDedupKeeplist _),
-    "q_tfidf" -> (qTfidf _),
-    "q_bm25" -> (qBm25 _),
-    "q_hybrid_rrf" -> (qHybridRrf _),
-    "q_train_split" -> (qTrainSplit _),
-    "q_stratified" -> (qStratified _),
-    "q_source_cap" -> (qSourceCap _),
-    "q_simhash" -> (qSimhash _),
-    "q_simhash_pairs" -> (qSimhashPairs _),
-    "q_ann_topk" -> (qAnnTopK _),
-    "q_embed_neardup" -> (qEmbedNearDup _),
-    "q_embed_neardup_lsh" -> (qEmbedNearDupLsh _),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_ann_lsh_multiprobe" -> (qAnnLshMultiprobe _),
-    "q_ann_lsh_multitable" -> (qAnnLshMultitable _),
-    "q_embed_neardup_mp" -> (qEmbedNearDupMp _),
-    "q_centroid_audit" -> (qCentroidAudit _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_multimodal" -> (qMultimodal _),
-    "q_media_frames" -> (qMediaFrames _),
-    "q_media_meta" -> (qMediaMeta _),
-    "q_media_pixels" -> (qMediaPixels _),
-    "q_wav_audio" -> (qWavAudio _),
-    "q_avi_video" -> (qAviVideo _),
-    "q_avi_pixels" -> (qAviPixels _),
-    "q_tar_shards" -> (qTarShards _))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_text_stats" -> qTextStatsSql,
-    "q_langid" -> qLangIdSql,
-    "q_fingerprint" -> qFingerprintSql,
-    "q_exact_dedup" -> qExactDedupSql,
-    "q_line_dedup" -> qLineDedupSql,
-    "q_dedup_weights" -> qDedupWeightsSql,
-    "q_weighted_sample" -> qWeightedSampleSql,
-    "q_substring_dedup" -> qSubstringDedupSql,
-    "q_substring_scrub" -> qSubstringScrubSql,
-    "q_ngram_jaccard" -> qNgramJaccardSql,
-    "q_winnow_pairs" -> qWinnowPairsSql,
-    "q_cdc_chunks" -> qCdcChunksSql,
-    "q_minhash_dedup" -> qMinhashDedupSql,
-    "q_dedup_clusters" -> qDedupClustersSql,
-    "q_dedup_admit" -> qDedupAdmitSql,
-    "q_dedup_incremental" -> qDedupIncrementalSql,
-    "q_dedup_keeplist" -> qDedupKeeplistSql,
-    "q_tfidf" -> qTfidfSql,
-    "q_bm25" -> qBm25Sql,
-    "q_hybrid_rrf" -> qHybridRrfSql,
-    "q_train_split" -> qTrainSplitSql,
-    "q_stratified" -> qStratifiedSql,
-    "q_source_cap" -> qSourceCapSql,
-    "q_simhash" -> qSimhashSql,
-    "q_simhash_pairs" -> qSimhashPairsSql,
-    "q_ann_topk" -> qAnnTopKSql,
-    "q_embed_neardup" -> qEmbedNearDupSql,
-    "q_embed_neardup_lsh" -> qEmbedNearDupLshSql,
-    "q_ann_lsh" -> qAnnLshSql,
-    "q_ann_lsh_multiprobe" -> qAnnLshMultiprobeSql,
-    "q_ann_lsh_multitable" -> qAnnLshMultitableSql,
-    "q_embed_neardup_mp" -> qEmbedNearDupMpSql,
-    "q_centroid_audit" -> qCentroidAuditSql,
-    "q_ann_recall" -> qAnnRecallSql,
-    "q_multimodal" -> qMultimodalSql,
-    "q_media_frames" -> qMediaFramesSql,
-    "q_media_meta" -> qMediaMetaSql,
-    "q_media_pixels" -> qMediaPixelsSql,
-    "q_wav_audio" -> qWavAudioSql,
-    "q_avi_video" -> qAviVideoSql,
-    "q_avi_pixels" -> qAviPixelsSql,
-    "q_tar_shards" -> qTarShardsSql)
+  def entries: Map[String, (Run, String)] = Map(
+    "q_text_stats" -> (qTextStats _, qTextStatsSql),
+    "q_langid" -> (qLangId _, qLangIdSql),
+    "q_fingerprint" -> (qFingerprint _, qFingerprintSql),
+    "q_exact_dedup" -> (qExactDedup _, qExactDedupSql),
+    "q_line_dedup" -> (qLineDedup _, qLineDedupSql),
+    "q_dedup_weights" -> (qDedupWeights _, qDedupWeightsSql),
+    "q_weighted_sample" -> (qWeightedSample _, qWeightedSampleSql),
+    "q_substring_dedup" -> (qSubstringDedup _, qSubstringDedupSql),
+    "q_substring_scrub" -> (qSubstringScrub _, qSubstringScrubSql),
+    "q_ngram_jaccard" -> (qNgramJaccard _, qNgramJaccardSql),
+    "q_winnow_pairs" -> (qWinnowPairs _, qWinnowPairsSql),
+    "q_cdc_chunks" -> (qCdcChunks _, qCdcChunksSql),
+    "q_minhash_dedup" -> (qMinhashDedup _, qMinhashDedupSql),
+    "q_dedup_clusters" -> (qDedupClusters _, qDedupClustersSql),
+    "q_dedup_admit" -> (qDedupAdmit _, qDedupAdmitSql),
+    "q_dedup_incremental" -> (qDedupIncremental _, qDedupIncrementalSql),
+    "q_dedup_keeplist" -> (qDedupKeeplist _, qDedupKeeplistSql),
+    "q_tfidf" -> (qTfidf _, qTfidfSql),
+    "q_bm25" -> (qBm25 _, qBm25Sql),
+    "q_hybrid_rrf" -> (qHybridRrf _, qHybridRrfSql),
+    "q_train_split" -> (qTrainSplit _, qTrainSplitSql),
+    "q_stratified" -> (qStratified _, qStratifiedSql),
+    "q_source_cap" -> (qSourceCap _, qSourceCapSql),
+    "q_simhash" -> (qSimhash _, qSimhashSql),
+    "q_simhash_pairs" -> (qSimhashPairs _, qSimhashPairsSql),
+    "q_ann_topk" -> (qAnnTopK _, qAnnTopKSql),
+    "q_embed_neardup" -> (qEmbedNearDup _, qEmbedNearDupSql),
+    "q_embed_neardup_lsh" -> (qEmbedNearDupLsh _, qEmbedNearDupLshSql),
+    "q_ann_lsh" -> (qAnnLsh _, qAnnLshSql),
+    "q_ann_lsh_multiprobe" -> (qAnnLshMultiprobe _, qAnnLshMultiprobeSql),
+    "q_ann_lsh_multitable" -> (qAnnLshMultitable _, qAnnLshMultitableSql),
+    "q_embed_neardup_mp" -> (qEmbedNearDupMp _, qEmbedNearDupMpSql),
+    "q_centroid_audit" -> (qCentroidAudit _, qCentroidAuditSql),
+    "q_ann_recall" -> (qAnnRecall _, qAnnRecallSql),
+    "q_multimodal" -> (qMultimodal _, qMultimodalSql),
+    "q_media_frames" -> (qMediaFrames _, qMediaFramesSql),
+    "q_media_meta" -> (qMediaMeta _, qMediaMetaSql),
+    "q_media_pixels" -> (qMediaPixels _, qMediaPixelsSql),
+    "q_wav_audio" -> (qWavAudio _, qWavAudioSql),
+    "q_avi_video" -> (qAviVideo _, qAviVideoSql),
+    "q_avi_pixels" -> (qAviPixels _, qAviPixelsSql),
+    "q_tar_shards" -> (qTarShards _, qTarShardsSql))
 
   override def trained
       : Map[String, (SparkSession, String) => (DataFrame, String)] = Map(

@@ -20,23 +20,7 @@ import graft.ops.{Decontaminate, Dedup, Mix}
   * a plain string-keyed join. */
 class BroadcastKeySpec extends SparkSpec {
   import spark.implicits._
-
-  /** Every broadcast hash join of an executed plan, including those
-    * inside AQE stages and cached relations. */
-  private def broadcastJoins(p: SparkPlan): Seq[BroadcastHashJoinExec] = {
-    val here = p match {
-      case j: BroadcastHashJoinExec => Seq(j)
-      case _ => Nil
-    }
-    val below = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-      case _ => p.children ++ p.subqueries
-    }
-    here ++ below.flatMap(broadcastJoins)
-  }
+  import BroadcastKeySpec.broadcastJoins
 
   /** Build keys of the broadcast joins that are NOT one integral
     * column, after running `df`. */
@@ -140,5 +124,25 @@ class BroadcastKeySpec extends SparkSpec {
         .as[(Long, String, Long, Long, Long, Double)].collect().toSet
     }
     assert(gotSuites === wantSuites)
+  }
+}
+
+object BroadcastKeySpec {
+
+  /** Every broadcast hash join of an executed plan, including those
+    * inside AQE stages and cached relations. */
+  def broadcastJoins(p: SparkPlan): Seq[BroadcastHashJoinExec] = {
+    val here = p match {
+      case j: BroadcastHashJoinExec => Seq(j)
+      case _ => Nil
+    }
+    val below = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children ++ p.subqueries
+    }
+    here ++ below.flatMap(broadcastJoins)
   }
 }

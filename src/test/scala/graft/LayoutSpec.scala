@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.core.Tables
 
 /** Physical-layout levers for 100 TB (PLANS.md): bucketing removes
@@ -12,28 +13,30 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed tables join without a shuffle exchange") {
     val n = 8
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // broadcast off on a fork only; the tables live in the shared
+    // catalog, so they are still dropped at the end
+    val f = Bridge.cloneSession(spark)
+    f.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      spark.sql("DROP TABLE IF EXISTS li_b")
-      spark.sql("DROP TABLE IF EXISTS ord_b")
-      Tables.lineitem(spark, sf)
+      f.sql("DROP TABLE IF EXISTS li_b")
+      f.sql("DROP TABLE IF EXISTS ord_b")
+      Tables.lineitem(f, sf)
         .select("l_orderkey", "l_quantity")
         .write.bucketBy(n, "l_orderkey").sortBy("l_orderkey")
         .mode("overwrite").saveAsTable("li_b")
-      Tables.orders(spark, sf)
+      Tables.orders(f, sf)
         .select("o_orderkey", "o_totalprice")
         .write.bucketBy(n, "o_orderkey").sortBy("o_orderkey")
         .mode("overwrite").saveAsTable("ord_b")
-      val joined = spark.table("li_b")
-        .join(spark.table("ord_b"), col("l_orderkey") === col("o_orderkey"))
+      val joined = f.table("li_b")
+        .join(f.table("ord_b"), col("l_orderkey") === col("o_orderkey"))
       assert(joined.count() > 0)
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed join still shuffles:\n$plan")
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS li_b")
-      spark.sql("DROP TABLE IF EXISTS ord_b")
+      f.sql("DROP TABLE IF EXISTS li_b")
+      f.sql("DROP TABLE IF EXISTS ord_b")
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.core.SessionTune
 import graft.streaming.{EventStream, StreamTune}
 
@@ -38,15 +39,13 @@ class SessionTuneSpec extends SparkSpec {
   }
 
   test("tuneForData sets shuffle partitions from the data dir") {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      val n = SessionTune.tuneForData(spark, sf)
-      val bytes = SessionTune.dirBytes(spark, sf)
-      assert(bytes > 0L)
-      assert(n == SessionTune.scaledPartitions(
-        spark, bytes, SessionTune.BatchTargetBytes))
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == n.toString)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val f = Bridge.cloneSession(spark)
+    val n = SessionTune.tuneForData(f, sf)
+    val bytes = SessionTune.dirBytes(f, sf)
+    assert(bytes > 0L)
+    assert(n == SessionTune.scaledPartitions(
+      f, bytes, SessionTune.BatchTargetBytes))
+    assert(f.conf.get("spark.sql.shuffle.partitions") == n.toString)
   }
 
   test("dirBytes reads 0 for a missing path or an empty glob") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** AQE skew-join evidence: PLANS.md claims runtime skew splitting as
   * the lever for hot join keys at 100 TB — this spec forces the
@@ -10,35 +10,31 @@ import org.apache.spark.sql.functions._
   * plan), with results identical to the unskewed-path join.
   */
 class SkewJoinSpec extends SparkSpec {
-  import spark.implicits._
 
   test("AQE splits the hot partition of a shuffled join (skew=true)") {
-    val confs = Seq(
+    // the confs go on a fork, so the shared session never sees them
+    val f = Bridge.cloneSession(spark)
+    import f.implicits._
+    Seq(
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
-      val payload = "x" * 100
-      val hot = Seq.fill(20000)("hotkey") ++ ('a' to 'z').map(_.toString)
-      val facts = hot.zipWithIndex.map { case (k, i) => (k, i.toLong, payload) }
-        .toDF("k", "v", "payload")
-      val dim = ("hotkey" +: ('a' to 'z').map(_.toString)).zipWithIndex
-        .map { case (k, i) => (k, i.toLong) }.toDF("k", "tag")
-      val joined = facts.join(dim, Seq("k"))
-      // collect() executes joined's OWN QueryExecution — count() would
-      // finalize a different (aggregated) adaptive plan
-      val n = joined.collect().length
-      assert(n === 20000 + 26)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("skew=true"),
-        s"expected a skew-split shuffled join in:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+      .foreach { case (k, v) => f.conf.set(k, v) }
+    val payload = "x" * 100
+    val hot = Seq.fill(20000)("hotkey") ++ ('a' to 'z').map(_.toString)
+    val facts = hot.zipWithIndex.map { case (k, i) => (k, i.toLong, payload) }
+      .toDF("k", "v", "payload")
+    val dim = ("hotkey" +: ('a' to 'z').map(_.toString)).zipWithIndex
+      .map { case (k, i) => (k, i.toLong) }.toDF("k", "tag")
+    val joined = facts.join(dim, Seq("k"))
+    // collect() executes joined's OWN QueryExecution — count() would
+    // finalize a different (aggregated) adaptive plan
+    val n = joined.collect().length
+    assert(n === 20000 + 26)
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("skew=true"),
+      s"expected a skew-split shuffled join in:\n$plan")
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.StreamingQueryException
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.report.Groups
@@ -42,8 +44,9 @@ class StreamRecoverySpec extends SparkSpec {
     rows.toDF("event_type", "value_c", "value_sum_c", "user_id")
       .coalesce(1).write.parquet(s"$tmp/in/b$i.parquet")
 
-  private def src(tmp: String) = spark.readStream.schema(schema)
-    .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in/*.parquet")
+  private def src(tmp: String, s: SparkSession = spark) =
+    s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in/*.parquet")
 
   /** Crash-simulation: drop the newest checkpoint commit marker so the
     * next run replays the last batch (sink output already on disk). */
@@ -150,34 +153,28 @@ class StreamRecoverySpec extends SparkSpec {
     // the stateful-agg recovery scenario re-run with state OFF-HEAP:
     // the replayed batch must restore its state from RocksDB
     // snapshots/changelogs and still produce the identical upsert
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_recov_rdb").toString
-      val b0 = Seq(("A", 1L, 1L, 1L), ("B", 2L, 2L, 2L), ("A", 3L, 3L, 3L))
-      land(tmp, b0, 0)
-      def agg = src(tmp).groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("value_c").as("v"))
-      def run() = EventStream.runUpdateToParquet(spark, agg,
-        s"$tmp/out", s"$tmp/ckpt", Seq("event_type"))
-      val first = run().orderBy("event_type").collect().toSeq
-      assert(dropNewestCommit(s"$tmp/ckpt") === 0L)
-      val second = run().orderBy("event_type").collect().toSeq
-      assert(second === first)
-      val raw = spark.read.parquet(s"$tmp/out")
-      assert(raw.count() === 2L * first.length,
-        "replayed batch should have appended a second copy")
-      // the checkpoint really used RocksDB (its working dirs exist)
-      val sst = new java.io.File(s"$tmp/ckpt/state/0/0")
-      assert(sst.exists() && sst.listFiles().nonEmpty)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    // the provider is set on a fork; the stream runs there
+    val f = Bridge.cloneSession(spark)
+    f.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming." +
+        "state.RocksDBStateStoreProvider")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_recov_rdb").toString
+    val b0 = Seq(("A", 1L, 1L, 1L), ("B", 2L, 2L, 2L), ("A", 3L, 3L, 3L))
+    land(tmp, b0, 0)
+    def agg = src(tmp, f).groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum("value_c").as("v"))
+    def run() = EventStream.runUpdateToParquet(f, agg,
+      s"$tmp/out", s"$tmp/ckpt", Seq("event_type"))
+    val first = run().orderBy("event_type").collect().toSeq
+    assert(dropNewestCommit(s"$tmp/ckpt") === 0L)
+    val second = run().orderBy("event_type").collect().toSeq
+    assert(second === first)
+    val raw = spark.read.parquet(s"$tmp/out")
+    assert(raw.count() === 2L * first.length,
+      "replayed batch should have appended a second copy")
+    // the checkpoint really used RocksDB (its working dirs exist)
+    val sst = new java.io.File(s"$tmp/ckpt/state/0/0")
+    assert(sst.exists() && sst.listFiles().nonEmpty)
   }
 
   test("runAppendToParquet: dropped commit replays the batch; the file sink skips it") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.core.Tables
 import graft.streaming.EventStream
 
@@ -149,7 +150,6 @@ class StreamSpec extends SparkSpec {
   test("sorted sessionizer route: one exchange, one sort, equals batch on disordered input") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    import org.apache.spark.sql.graftbridge.Bridge
     val tmp = java.nio.file.Files.createTempDirectory("graft_sorted_route").toString
     // rows arrive time-SHUFFLED within the file (37 is coprime with
     // 200, so ts is a permutation of 0..199 minutes per user): any
@@ -684,22 +684,19 @@ class StreamSpec extends SparkSpec {
 
   test("stream entries take their sink root from config") {
     val root = java.nio.file.Files.createTempDirectory("graft_scratch_conf")
-    spark.conf.set(graft.queries.StreamQueries.ScratchDirConf, root.toString)
-    try {
-      val p = graft.queries.StreamQueries.scratch(spark, "t")
-      assert(p.contains(root.toString))
-      assert(new java.io.File(new java.net.URI(p).getPath).isDirectory ||
-        new java.io.File(p).isDirectory)
-      // end-to-end: the windowed-agg entry lands its sink under the
-      // configured root and still answers
-      val out = graft.queries.StreamQueries.qStreamWindow(spark, sf)
-      assert(out.count() > 0)
-      import scala.jdk.CollectionConverters._
-      val used = java.nio.file.Files.list(root).iterator().asScala.toSeq
-      assert(used.exists(_.getFileName.toString.startsWith("win-")))
-    } finally {
-      spark.conf.unset(graft.queries.StreamQueries.ScratchDirConf)
-    }
+    val f = Bridge.cloneSession(spark)
+    f.conf.set(graft.queries.StreamQueries.ScratchDirConf, root.toString)
+    val p = graft.queries.StreamQueries.scratch(f, "t")
+    assert(p.contains(root.toString))
+    assert(new java.io.File(new java.net.URI(p).getPath).isDirectory ||
+      new java.io.File(p).isDirectory)
+    // end-to-end: the windowed-agg entry lands its sink under the
+    // configured root and still answers
+    val out = graft.queries.StreamQueries.qStreamWindow(f, sf)
+    assert(out.count() > 0)
+    import scala.jdk.CollectionConverters._
+    val used = java.nio.file.Files.list(root).iterator().asScala.toSeq
+    assert(used.exists(_.getFileName.toString.startsWith("win-")))
   }
 
   test("sessionization assumeSorted streams a pre-sorted single-key source lazily") {
