@@ -36,7 +36,9 @@ object LayoutAudit {
 
   /** [[audit]] over an EXPLICIT file list (URIs) — the shape a
     * manifest-driven planner needs: a snapshot table's version names
-    * its files directly, no globbing ([[SnapTable.readRange]]). */
+    * its files directly, no globbing ([[SnapTable.readRange]]'s
+    * footer plan, and the commit-time stats that feed
+    * [[SnapTable.read]]'s manifest planner). */
   def auditFiles(s: SparkSession, files: Seq[String],
       column: String): DataFrame = {
     import scala.jdk.CollectionConverters._

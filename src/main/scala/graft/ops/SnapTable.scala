@@ -2,7 +2,14 @@ package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.sources.snap.SnapFileIndex
 
 /** A committer lost the optimistic-concurrency race: another writer
   * claimed the same version first. The loser's staging is already
@@ -40,10 +47,12 @@ class ConcurrentCommitException(msg: String)
   *
   *  4. manifests can carry per-file MIN/MAX for declared stats
   *     columns (collected once, at commit, over only the fresh
-  *     files): selective reads then plan MANIFEST-ONLY
-  *     ([[readSkip]]) — the Iceberg min/max-stats shape, which at
-  *     100 TB is the difference between a metadata decision and a
-  *     million footer probes per query.
+  *     files): a selective read — [[read]] then `.filter` — then
+  *     plans MANIFEST-ONLY through one planner ([[scan]] over
+  *     [[graft.sources.snap.SnapFileIndex]]) — the Iceberg
+  *     min/max-stats shape, which at 100 TB is the difference between
+  *     a metadata decision and a million footer probes per query;
+  *     [[scannedFiles]] reads back the files a plan admitted.
   *
   * Scale: data files are written/read fully distributed; only
   * manifests — O(new files per commit) text lines — touch the driver.
@@ -91,7 +100,7 @@ object SnapTable {
   /** Hive's null-partition directory name: `partitionBy` writes a
     * null partition value as this sentinel segment. [[FileEntry
     * .partitionValues]] surfaces it VERBATIM (a map can't hold null);
-    * the read paths re-materialize it as a typed NULL literal. */
+    * the scan's partition spec types it as NULL. */
   val NullPartition = "__HIVE_DEFAULT_PARTITION__"
 
   /** One manifest data line: a relative file path plus the per-file
@@ -246,7 +255,7 @@ object SnapTable {
     dvFiles(s, table, v).nonEmpty
 
   /** Files of snapshot `v` WITH their recorded column bounds — what a
-    * manifest-only planner reads ([[readSkip]], rewrite planning). */
+    * manifest-only planner reads ([[scan]], rewrite planning). */
   def fileEntries(s: SparkSession, table: String,
       v: Int): Seq[FileEntry] =
     resolvedLines(s, table, v).map(parseEntry)
@@ -331,8 +340,8 @@ object SnapTable {
 
   /** `#part:<col>=<catalogType>` header for a partitioned commit —
     * the DECLARED partition column type rides in the manifest, so
-    * readers re-materialize the Hive-path value as a typed literal
-    * instead of degrading a long/date partition column to string. */
+    * the scan types the Hive-path value by it instead of degrading a
+    * long/date partition column to string. */
   private def partHeader(df: DataFrame,
       partitionBy: Option[String]): Seq[String] =
     partitionBy.toSeq.map { p =>
@@ -375,6 +384,16 @@ object SnapTable {
     }
     None
   }
+
+  /** The partition column `entries` name in their Hive path segments,
+    * typed by version `v`'s `#part:` header (string for pre-header
+    * history). None when no entry is partitioned. */
+  private[graft] def partColOf(s: SparkSession, table: String, v: Int,
+      entries: Seq[FileEntry]): Option[(String, DataType)] =
+    entries.flatMap(_.partitionValues.keys).headOption.map { c =>
+      c -> partSpecOf(s, table, v).filter(_._1 == c)
+        .fold[DataType](StringType)(_._2)
+    }
 
   /** The tag committed with version `v`, if any — one header line
     * read, never a file list (what a CDC consumer reads to learn its
@@ -460,14 +479,14 @@ object SnapTable {
     * distributed footer pass over only the FRESH files (O(new files),
     * the Iceberg stats-collection cost, paid once at commit), so
     * every later selective read plans from manifest lines alone —
-    * zero footer probes, zero data pages ([[readSkip]]). Columns
+    * zero footer probes, zero data pages ([[read]] + `filter`). Columns
     * without usable footer stats record nothing for that file, and a
     * stat-less file always survives pruning.
     *
     * PARTITIONING: `partitionBy` stages Hive-layout
     * (`data/b<v>-<nonce>/<col>=<val>/…`); the manifest line's path
     * carries the partition value, so partition pruning is the same
-    * manifest-text decision as stat pruning ([[readPartitions]]), and
+    * manifest-text decision as stat pruning (both in [[scan]]), and
     * vacuum / OPTIMIZE compose per partition (the rewrite plan just
     * selects one partition's lines). A partitioned table should be
     * partitioned the same way on every commit — readers reconcile
@@ -972,44 +991,123 @@ object SnapTable {
   }
 
   /** Read snapshot `version` (latest when None) — exactly the
-    * manifest's resolved files, distributed. `mergeSchema` reconciles
-    * files written under EVOLVED schemas by name (early files' absent
-    * columns read as null — a snapshot table accretes columns over
-    * its append history exactly like a landing zone does).
-    * `schema` is the TYPE-WIDENING read path (the Delta widening
-    * surface): an explicit target schema under which Spark's parquet
-    * reader up-casts narrow file columns in-scan (int32→long,
-    * float→double) — the only way to serve a version whose files MIX
-    * column widths, where mergeSchema refuses the type conflict.
-    * Reconcile the target with [[Upsert.widen]]'s lattice; the reader
-    * fails loudly on a genuinely incompatible file. */
+    * manifest's resolved files, distributed, planned by [[scan]]. A
+    * SELECTIVE read is this frame filtered
+    * (`read(s, t).filter(col("k").between(lo, hi))`): Catalyst pushes
+    * the predicate into the manifest-backed
+    * [[graft.sources.snap.SnapFileIndex]], which prunes partitions on
+    * the Hive path segments and files on the bounds the commit
+    * recorded (`statsCols`: numeric min/max and truncated string
+    * bounds, through AND/OR/IN; absence admits), then the residual
+    * applies in-scan. [[scannedFiles]] reads back what the plan
+    * admitted. `mergeSchema` reconciles files written under EVOLVED
+    * schemas by name (early files' absent columns read as null — a
+    * snapshot table accretes columns over its append history exactly
+    * like a landing zone does). `schema` is the TYPE-WIDENING read
+    * path (the Delta widening surface): an explicit target schema
+    * under which Spark's parquet reader up-casts narrow file columns
+    * in-scan (int32→long, float→double) — the only way to serve a
+    * version whose files MIX column widths, where mergeSchema refuses
+    * the type conflict. Reconcile the target with [[Upsert.widen]]'s
+    * lattice; the reader fails loudly on a genuinely incompatible
+    * file. */
   def read(s: SparkSession, table: String,
       version: Option[Int] = None,
       mergeSchema: Boolean = false,
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
+      schema: Option[StructType] = None): DataFrame = {
+    val v = pinned(s, table, version)
+    scan(s, table, v, fileEntries(s, table, v), mergeSchema, schema)
+  }
+
+  /** `version`, or the head when None — refusing an empty table or an
+    * uncommitted version. */
+  private def pinned(s: SparkSession, table: String,
+      version: Option[Int]): Int = {
     val vs = versions(s, table)
     require(vs.nonEmpty, s"no committed snapshot under $table")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"unknown snapshot version $v (have $vs)")
-    val entries = fileEntries(s, table, v)
-    // the resolved entries already tell partitioned from flat — the
-    // `#part:` header (another chain walk) is only consulted on the
-    // partitioned path, where the TYPE is needed
-    val pc = entries.flatMap(_.partitionValues.keys).headOption
-    val out = pc match {
-      case None =>
-        val paths = entries.map(e => new Path(table, e.path).toString)
-        val rd = (mergeSchema, schema) match {
-          case (_, Some(sc)) => s.read.schema(sc)
-          case (true, None) => s.read.option("mergeSchema", "true")
-          case (false, None) => s.read
-        }
-        rd.parquet(paths: _*)
-      case Some(c) => readPartitioned(s, table, v, entries, c,
-        mergeSchema, schema)
+    v
+  }
+
+  /** THE snapshot scan planner — every read path comes through here:
+    * [[read]], [[readRange]], [[readIncremental]], [[commitDelete]],
+    * [[materializeDeletes]] and [[optimizeSized]]. `entries` (already
+    * resolved by the caller: a whole version, a footer-picked subset,
+    * an incremental delta, a rewrite's inputs) become one
+    * `HadoopFsRelation` over a [[graft.sources.snap.SnapFileIndex]]
+    * per UNIFORM subset — the Hive-partitioned files (the partition
+    * column typed by `schema` when it names it, else by the `#part:`
+    * header, else string) and, in a mixed history, the loose files,
+    * which carry the column themselves — unioned by name. Each
+    * relation applies version `v`'s deletion vectors before the union
+    * (metadata columns resolve only over a file scan); `pos` keeps the
+    * `(__snap_fpath, __snap_pos)` row identity [[commitDelete]]
+    * derives positions from. No entries: the version's schema, no
+    * rows. */
+  private def scan(s: SparkSession, table: String, v: Int,
+      entries: Seq[FileEntry], mergeSchema: Boolean,
+      schema: Option[StructType], pos: Boolean = false): DataFrame =
+    if (entries.isEmpty)
+      scan(s, table, v, fileEntries(s, table, v), mergeSchema, schema, pos)
+        .filter(lit(false))
+    else {
+      val partCol = partColOf(s, table, v, entries).map { case (c, dt) =>
+        c -> schema.flatMap(_.fields.find(_.name == c)).fold(dt)(_.dataType)
+      }
+      val (part, loose) = entries.partition(e =>
+        partCol.exists(pc => e.partitionValues.contains(pc._1)))
+      val dvs = dvFiles(s, table, v)
+      Seq(part -> partCol, loose -> None).filter(_._1.nonEmpty).map {
+        case (es, pcol) =>
+          val idx = new SnapFileIndex(s, table, es, pcol)
+          // the footer schema straight from the manifest's files: no
+          // reader resolution, no listing (one file unless merging)
+          val dataSchema = schema match {
+            case Some(sc) =>
+              StructType(sc.fields.filterNot(f => pcol.exists(_._1 == f.name)))
+            case None => Bridge.asNullable(new ParquetFileFormat().inferSchema(
+              s, Map("mergeSchema" -> mergeSchema.toString),
+              idx.allFiles()).get)
+          }
+          withDeletes(s, table, dvs, pos, s.baseRelationToDataFrame(
+            HadoopFsRelation(idx, idx.partitionSchema, dataSchema, None,
+              new ParquetFileFormat, Map.empty[String, String])(s)))
+      }.reduce(_ unionByName _)
     }
-    withDeletes(s, table, v, out)
+
+  /** The snapshot data files a frame's plan ADMITS: the files of every
+    * [[graft.sources.snap.SnapFileIndex]] scan in its executed
+    * physical plan — through AQE and its query stages — for both the
+    * V1 `FileSourceScanExec` ([[read]]) and the V2 `BatchScanExec`
+    * (`format("snap")`, SQL) surfaces, with partition and
+    * manifest-stats pruning applied; qualified paths, sorted.
+    * Against [[files]] of the version this is the admitted/total
+    * skipping reading. It plans the frame and runs no job;
+    * deletion-vector sidecars and other scans are not listed. */
+  def scannedFiles(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
+    def walk(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case f: FileSourceScanExec
+          if f.relation.location.isInstanceOf[SnapFileIndex] =>
+        f.selectedPartitions.filePartitionIterator
+          .flatMap(_.files.map(_.getPath.toString)).toSeq
+      case b: BatchScanExec => b.scan match {
+        case fs: FileScan if fs.fileIndex.isInstanceOf[SnapFileIndex] =>
+          fs.planInputPartitions().toSeq.flatMap {
+            case fp: FilePartition => fp.files.map(_.toPath.toString).toSeq
+            case _ => Nil
+          }
+        case _ => Nil
+      }
+      case other => other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan).distinct.sorted
   }
 
   /** A scanned row's data file as its MANIFEST-RELATIVE path
@@ -1025,30 +1123,28 @@ object SnapTable {
     regexp_extract(col("_metadata.file_path"),
       "^(?:.*/)?(data/b[0-9]+-[0-9a-f]{8}/.+)$", 1)
 
-  /** Apply snapshot `v`'s DELETION VECTORS (if any) to a read of its
-    * data files: anti-join on (manifest-relative file path, in-file
-    * row position) — the merge-on-read half of position deletes
-    * ([[commitDelete]]). The DV side is typically tiny (O(deleted
-    * rows)); parquet size stats let Spark broadcast it, so the cost
-    * is a scan-side hash probe, not a shuffle. No DVs → the frame
-    * passes through untouched. The frame must come STRAIGHT from a
-    * file-source scan of the snapshot's files (metadata columns
-    * resolve only there). */
-  private def withDeletes(s: SparkSession, table: String, v: Int,
-      df: DataFrame): DataFrame = {
-    val dvs = dvFiles(s, table, v)
-    if (dvs.isEmpty) df
+  /** Apply a version's DELETION VECTORS (its `dvs` sidecars) to one
+    * file-source relation of its data files: anti-join on
+    * (manifest-relative file path, in-file row position) — the
+    * merge-on-read half of position deletes ([[commitDelete]]). The
+    * DV side is typically tiny (O(deleted rows)); parquet size stats
+    * let Spark broadcast it, so the cost is a scan-side hash probe,
+    * not a shuffle, and pushed filters land under the join. No DVs →
+    * the frame passes through untouched. `pos` keeps the join keys as
+    * `__snap_fpath`/`__snap_pos`. */
+  private def withDeletes(s: SparkSession, table: String,
+      dvs: Seq[String], pos: Boolean, df: DataFrame): DataFrame =
+    if (dvs.isEmpty && !pos) df
     else {
-      val dels = s.read.parquet(dvs.map(rel =>
-          new Path(table, rel).toString): _*)
-        .select(col("file").as("__snap_fpath"),
-          col("pos").as("__snap_pos"))
-      df.withColumn("__snap_fpath", relFileCol)
+      val keyed = df.withColumn("__snap_fpath", relFileCol)
         .withColumn("__snap_pos", col("_metadata.row_index"))
-        .join(dels, Seq("__snap_fpath", "__snap_pos"), "left_anti")
-        .drop("__snap_fpath", "__snap_pos")
+      val live = if (dvs.isEmpty) keyed else keyed.join(
+        s.read.parquet(dvs.map(rel => new Path(table, rel).toString): _*)
+          .select(col("file").as("__snap_fpath"),
+            col("pos").as("__snap_pos")),
+        Seq("__snap_fpath", "__snap_pos"), "left_anti")
+      if (pos) live else live.drop("__snap_fpath", "__snap_pos")
     }
-  }
 
   /** MERGE-ON-READ DELETE (the Delta deletion-vector / Iceberg
     * position-delete shape): commit the POSITIONS matching
@@ -1082,7 +1178,8 @@ object SnapTable {
       // positions of LIVE rows matching the predicate: metadata
       // columns captured at the scan, existing vectors anti-joined
       // so a re-delete never duplicates sidecar entries
-      val matches = readWithPos(s, table, head)
+      val matches = scan(s, table, head, fileEntries(s, table, head),
+          mergeSchema = false, schema = None, pos = true)
         .filter(expr(predicate))
         .select(col("__snap_fpath").as("file"),
           col("__snap_pos").as("pos"))
@@ -1120,33 +1217,6 @@ object SnapTable {
     -1 // unreachable
   }
 
-  /** [[read]] of version `v` PLUS the scan's metadata identity
-    * columns (`__snap_fname`, `__snap_pos`), with existing deletion
-    * vectors applied — what [[commitDelete]] derives fresh positions
-    * from. Metadata columns must be captured before any join, so this
-    * re-derives the base frame rather than wrapping [[read]]. */
-  private def readWithPos(s: SparkSession, table: String,
-      v: Int): DataFrame = {
-    val entries = fileEntries(s, table, v)
-    val pc = entries.flatMap(_.partitionValues.keys).headOption
-    val base = pc match {
-      case None => s.read.parquet(entries.map(e =>
-        new Path(table, e.path).toString): _*)
-      case Some(c) => readPartitioned(s, table, v, entries, c,
-        mergeSchema = false, schema = None)
-    }
-    val withMeta = base
-      .withColumn("__snap_fpath", relFileCol)
-      .withColumn("__snap_pos", col("_metadata.row_index"))
-    val dvs = dvFiles(s, table, v)
-    if (dvs.isEmpty) withMeta
-    else withMeta.join(
-      s.read.parquet(dvs.map(rel => new Path(table, rel).toString): _*)
-        .select(col("file").as("__snap_fpath"),
-          col("pos").as("__snap_pos")),
-      Seq("__snap_fpath", "__snap_pos"), "left_anti")
-  }
-
   /** OPTIMIZE for deletion vectors — materialize merge-on-read back
     * to pure data files: rewrite ONLY the files the vectors touch
     * (positions applied in-rewrite), carry every untouched line with
@@ -1163,269 +1233,15 @@ object SnapTable {
     if (dvFiles(s, table, head0).isEmpty) return head0
     val partBy = partSpecOf(s, table, head0).map(_._1)
     rewriteWithRetry(s, table, h => {
-      val dvs = dvFiles(s, table, h)
-      val dels = s.read.parquet(dvs.map(rel =>
-        new Path(table, rel).toString): _*)
-      val affected = dels.select("file").distinct()
-        .collect().map(_.getString(0)).toSet
-      val es = fileEntries(s, table, h)
-      val (hit, keep) = es.partition(e => affected.contains(e.path))
-      def applied(base: DataFrame): DataFrame = base
-        .withColumn("__snap_fpath", relFileCol)
-        .withColumn("__snap_pos", col("_metadata.row_index"))
-        .join(dels.select(col("file").as("__snap_fpath"),
-          col("pos").as("__snap_pos")),
-          Seq("__snap_fpath", "__snap_pos"), "left_anti")
-        .drop("__snap_fpath", "__snap_pos")
-      val df = partBy match {
-        case None => applied(s.read.parquet(hit.map(e =>
-          new Path(table, e.path).toString): _*))
-        case Some(c) =>
-          // per-value arms: hive-staged files don't carry the column
-          val pdt = partTypeFor(s, table, h, c)
-          hit.groupBy(_.partitionValues(c)).toSeq.sortBy(_._1)
-            .map { case (w, ws) =>
-              applied(s.read.parquet(ws.map(e =>
-                  new Path(table, e.path).toString): _*))
-                .withColumn(c, partLitTyped(pdt, w))
-            }.reduce(_ unionByName _)
-      }
+      val affected = s.read.parquet(dvFiles(s, table, h).map(rel =>
+          new Path(table, rel).toString): _*)
+        .select("file").distinct().collect().map(_.getString(0)).toSet
+      val (hit, keep) =
+        fileEntries(s, table, h).partition(e => affected.contains(e.path))
+      val df = scan(s, table, h, hit, mergeSchema = false, schema = None)
       (df, keep.map(entryLine))
     }, statsCols = statsCols, partitionBy = partBy,
       attempts = attempts, carryDeletes = false)
-  }
-
-  /** A PARTITIONED snapshot read — the partition column does not live
-    * in the staged files (Hive layout), so a plain parquet read would
-    * silently DROP it; it reconstructs from the manifest paths. The
-    * uniform case plans as ONE relation over a manifest-backed
-    * [[graft.sources.snap.SnapFileIndex]] (typed partition column
-    * from the `#part:` header, vectorized scan, partition pruning on
-    * pushed filters); a mixed partitioned/unpartitioned history falls
-    * back to per-value literal arms plus the loose files, which carry
-    * the column themselves. */
-  private def readPartitioned(s: SparkSession, table: String, v: Int,
-      entries: Seq[FileEntry], c: String, mergeSchema: Boolean,
-      schema: Option[org.apache.spark.sql.types.StructType])
-      : DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val (part, loose) = entries.partition(_.partitionValues.contains(c))
-    def abs(es: Seq[FileEntry]) =
-      es.map(e => new Path(table, e.path).toString)
-    if (loose.isEmpty) {
-      val idx = new graft.sources.snap.SnapFileIndex(s, table, v,
-        userPartType = schema.flatMap(sc =>
-          sc.fields.find(_.name == c).map(_.dataType)))
-      val dataSchema: StructType = schema match {
-        case Some(sc) => StructType(sc.fields.filterNot(_.name == c))
-        case None if mergeSchema =>
-          s.read.option("mergeSchema", "true")
-            .parquet(abs(part): _*).schema
-        case None => s.read.parquet(abs(part).head).schema
-      }
-      s.baseRelationToDataFrame(
-        org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-          idx, idx.partitionSchema, dataSchema, None,
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetFileFormat, Map.empty[String, String])(s))
-    } else {
-      val rd = (mergeSchema, schema) match {
-        case (_, Some(sc)) =>
-          s.read.schema(StructType(sc.fields.filterNot(_.name == c)))
-        case (true, None) => s.read.option("mergeSchema", "true")
-        case (false, None) => s.read
-      }
-      val pdt = partTypeFor(s, table, v, c)
-      val arms = part.groupBy(_.partitionValues(c)).toSeq
-        .sortBy(_._1).map { case (w, es) =>
-          rd.parquet(abs(es): _*)
-            .withColumn(c, partLitTyped(pdt, w)) } ++
-        // loose files CARRY the column — read them as-is, unfiltered
-        (if (loose.isEmpty) Nil else Seq((schema match {
-          case Some(sc) => s.read.schema(sc)
-          case None if mergeSchema => s.read.option("mergeSchema", "true")
-          case None => s.read
-        }).parquet(abs(loose): _*)))
-      arms.reduce((a, b) => a.unionByName(b))
-    }
-  }
-
-  /** MANIFEST-PLANNED ranged read — the scan planning real table
-    * formats do: the manifest lines already carry per-file bounds for
-    * the commit's declared stats columns ([[commit]]'s `statsCols`),
-    * so pruning is a pure driver computation over O(files) text —
-    * ZERO footer probes, zero data pages, no executor work at all
-    * until the surviving files are scanned. A file with no recorded
-    * bounds for `column` is kept (bounds admit, absence never
-    * excludes), so mixed-provenance tables degrade to correct, never
-    * to wrong. The residual predicate still applies in-scan. Returns
-    * (pruned-in relative paths, frame) so callers can gate that
-    * pruning actually engaged — compare against [[files]] for the
-    * total. */
-  def readSkip(s: SparkSession, table: String, version: Option[Int],
-      column: String, lo: Long, hi: Long,
-      mergeSchema: Boolean = false): (Seq[String], DataFrame) = {
-    val vs = versions(s, table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"unknown snapshot version $v (have $vs)")
-    val picked = fileEntries(s, table, v).filter(e =>
-      e.stats.get(column).forall { case (mn, mx) => mn <= hi && mx >= lo })
-      .map(_.path)
-    val rd = if (mergeSchema) s.read.option("mergeSchema", "true")
-             else s.read
-    val out =
-      if (picked.isEmpty)
-        read(s, table, Some(v), mergeSchema).filter(lit(false))
-      else withDeletes(s, table, v, rd.parquet(picked.map(rel =>
-          new Path(table, rel).toString): _*))
-        .filter(col(column) >= lo && col(column) <= hi)
-    (picked, out)
-  }
-
-  /** PARTITION-PRUNED read of a partitioned snapshot table: keep
-    * exactly the manifest lines whose Hive-style path segment carries
-    * a wanted `partCol` value — pure driver text planning, like
-    * [[readSkip]] but on the partition identity instead of value
-    * bounds (files with NO such segment are kept: absence admits).
-    * The staged files don't store `partCol` (Hive layout), and
-    * Spark's own discovery refuses the mixed batch-dir structure —
-    * so the column comes back as a LITERAL per value group: one
-    * parquet relation per wanted value (each over that value's
-    * pruned-in files across every batch), unioned. Plan width is the
-    * number of REQUESTED values — the selective-read contract; a
-    * full-table read is [[read]], not a partition read. Composes
-    * with [[readSkip]]'s stats (partition prune here, then stat-prune
-    * the survivors by intersecting the entry lists). Manifest lines
-    * with no `partCol` segment are kept under EVERY requested value
-    * read, with the residual filter applied (absence admits). */
-  /** A Hive-path partition value as a TYPED column literal: cast to
-    * the commit's declared type (the `#part:` header; string when the
-    * table predates recording), [[NullPartition]] as a typed NULL —
-    * so a long/date partition column survives re-materialization
-    * instead of degrading the read schema to string. */
-  private def partTypeFor(s: SparkSession, table: String, v: Int,
-      partCol: String): org.apache.spark.sql.types.DataType =
-    partSpecOf(s, table, v).filter(_._1 == partCol).map(_._2)
-      .getOrElse(org.apache.spark.sql.types.StringType)
-
-  private def partLitTyped(dt: org.apache.spark.sql.types.DataType,
-      w: String): org.apache.spark.sql.Column =
-    (if (w == NullPartition) lit(null) else lit(w)).cast(dt)
-
-  private def partLit(s: SparkSession, table: String, v: Int,
-      partCol: String, w: String): org.apache.spark.sql.Column =
-    partLitTyped(partTypeFor(s, table, v, partCol), w)
-
-  /** Membership residual for files that CARRY the partition column:
-    * `isin` under SQL null semantics never matches null, so a
-    * requested [[NullPartition]] becomes an explicit isNull arm. */
-  private def partIn(partCol: String,
-      wanted: Seq[String]): org.apache.spark.sql.Column = {
-    val (nulls, vals) = wanted.partition(_ == NullPartition)
-    val in = if (vals.isEmpty) lit(false) else col(partCol).isin(vals: _*)
-    if (nulls.isEmpty) in else in || col(partCol).isNull
-  }
-
-  def readPartitions(s: SparkSession, table: String,
-      version: Option[Int], partCol: String,
-      values: Seq[String]): (Seq[String], DataFrame) = {
-    val vs = versions(s, table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"unknown snapshot version $v (have $vs)")
-    val wanted = values.distinct
-    val entries = fileEntries(s, table, v)
-    val pdt = partTypeFor(s, table, v, partCol) // one header walk
-    val picked = entries.filter(e =>
-        e.partitionValues.get(partCol).forall(wanted.contains))
-      .map(_.path)
-    def abs(rel: Seq[String]) =
-      rel.map(r => new Path(table, r).toString)
-    val arms = wanted.flatMap { w =>
-      val mine = entries.filter(e =>
-        e.partitionValues.get(partCol).contains(w)).map(_.path)
-      val loose = entries.filter(e =>
-        !e.partitionValues.contains(partCol)).map(_.path)
-      val tagged =
-        if (mine.isEmpty) None
-        else Some(withDeletes(s, table, v, s.read.parquet(abs(mine): _*))
-          .withColumn(partCol, partLitTyped(pdt, w)))
-      // un-partitioned files may hold any value: read them once per
-      // requested value is wrong — they carry the column themselves
-      val residual =
-        if (loose.isEmpty || wanted.indexOf(w) != 0) None
-        else Some(withDeletes(s, table, v, s.read.parquet(abs(loose): _*))
-          .filter(partIn(partCol, wanted)))
-      tagged.toSeq ++ residual.toSeq
-    }
-    val out =
-      if (arms.isEmpty) read(s, table, Some(v)).filter(lit(false))
-      else arms.reduce((a, b) => a.unionByName(b))
-    (picked, out)
-  }
-
-  /** [[readSkip]] for a STRING column: prune on the manifest's
-    * truncated byte bounds in UNSIGNED LEXICOGRAPHIC order (the
-    * parquet binary-stats order the bounds were recorded in) — the
-    * truncation is conservative by construction (recorded min ≤ true
-    * min as a prefix, recorded max ≥ true max by
-    * truncate-and-increment), so pruning can only keep extra files,
-    * never drop a matching one. The residual predicate applies
-    * in-scan under SPARK's string comparison; the two orders agree on
-    * ASCII (and on all of Unicode up to UTF-16 surrogate-order
-    * anomalies beyond the BMP) — the key-design contract for
-    * string-skippable layouts. */
-  def readSkipStr(s: SparkSession, table: String, version: Option[Int],
-      column: String, lo: String, hi: String): (Seq[String], DataFrame) = {
-    val vs = versions(s, table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"unknown snapshot version $v (have $vs)")
-    val loB = lo.getBytes("UTF-8")
-    val hiB = hi.getBytes("UTF-8")
-    val ord = LayoutAudit.byteOrd
-    val picked = fileEntries(s, table, v).filter(e =>
-      e.strStats.get(column).forall { case (mn, mx) =>
-        ord.lteq(unb64(mn), hiB) && ord.gteq(unb64(mx), loB)
-      }).map(_.path)
-    val out =
-      if (picked.isEmpty) read(s, table, Some(v)).filter(lit(false))
-      else withDeletes(s, table, v, s.read.parquet(picked.map(rel =>
-          new Path(table, rel).toString): _*))
-        .filter(col(column) >= lo && col(column) <= hi)
-    (picked, out)
-  }
-
-  /** Multi-predicate manifest skip: keep files whose recorded bounds
-    * intersect EVERY `(column, lo, hi)` range — the conjunction
-    * prunes strictly tighter than any single predicate, which is the
-    * whole point of multi-column stats on a Z-ORDERED layout (each
-    * dimension's bounds stay tight per file, so a 2-D range query
-    * proves most files out on one axis or the other). Absence admits
-    * per column, residual filters apply in-scan. */
-  def readSkipMulti(s: SparkSession, table: String, version: Option[Int],
-      preds: Seq[(String, Long, Long)],
-      mergeSchema: Boolean = false): (Seq[String], DataFrame) = {
-    require(preds.nonEmpty, "readSkipMulti needs at least one predicate")
-    val vs = versions(s, table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"unknown snapshot version $v (have $vs)")
-    val picked = fileEntries(s, table, v).filter(e =>
-      preds.forall { case (c, lo, hi) =>
-        e.stats.get(c).forall { case (mn, mx) => mn <= hi && mx >= lo }
-      }).map(_.path)
-    val rd = if (mergeSchema) s.read.option("mergeSchema", "true")
-             else s.read
-    val residual = preds.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi }.reduce(_ && _)
-    val out =
-      if (picked.isEmpty)
-        read(s, table, Some(v), mergeSchema).filter(lit(false))
-      else withDeletes(s, table, v, rd.parquet(picked.map(rel =>
-          new Path(table, rel).toString): _*)).filter(residual)
-    (picked, out)
   }
 
   /** INCREMENTAL READ — the table AS a change source (the Delta CDF /
@@ -1439,16 +1255,16 @@ object SnapTable {
     * `toV` means an overwrite/rewrite landed — row-level provenance
     * is gone and an "incremental" read would silently double-count or
     * drop; rebootstrap from the full snapshot instead, exactly the
-    * CDC gap rule). */
+    * CDC gap rule). The delta plans through [[scan]] like [[read]],
+    * so a partitioned table's typed partition column comes back. */
   def readIncremental(s: SparkSession, table: String, fromV: Int,
       toV: Int): (Seq[String], DataFrame) = {
     val vs = versions(s, table)
     require(vs.contains(fromV) && vs.contains(toV) && fromV <= toV,
       s"need committed versions fromV <= toV, got $fromV..$toV of $vs")
-    val before = files(s, table, fromV)
-    val after = files(s, table, toV)
-    val afterSet = after.toSet
-    val gone = before.filterNot(afterSet)
+    val before = files(s, table, fromV).toSet
+    val after = fileEntries(s, table, toV)
+    val gone = before -- after.map(_.path)
     require(gone.isEmpty,
       s"history between v$fromV and v$toV is not append-only " +
         s"(${gone.size} files rewritten/removed) — incremental " +
@@ -1459,62 +1275,9 @@ object SnapTable {
     require(dvFiles(s, table, fromV).toSet == dvFiles(s, table, toV).toSet,
       s"deletion vectors changed between v$fromV and v$toV — the " +
         "history is not append-only; rebootstrap from the full snapshot")
-    val beforeSet = before.toSet
-    val fresh = after.filterNot(beforeSet)
-    val out =
-      if (fresh.isEmpty) read(s, table, Some(toV)).filter(lit(false))
-      else s.read.parquet(fresh.map(rel =>
-        new Path(table, rel).toString): _*)
-    (fresh, out)
-  }
-
-  /** PARTITION + STATS pruning COMPOSED — both prunings are manifest
-    * text, so they intersect for free: keep exactly the lines whose
-    * partition value is wanted AND whose recorded `column` bounds
-    * intersect [lo, hi] (absence admits on each axis independently).
-    * This is the full Iceberg planning stack on one table — partition
-    * identity first, value bounds within it — still zero query-time
-    * metadata IO. The partition column re-materializes per value
-    * group exactly as in [[readPartitions]]. */
-  def readPartitionsRange(s: SparkSession, table: String,
-      version: Option[Int], partCol: String, values: Seq[String],
-      column: String, lo: Long, hi: Long): (Seq[String], DataFrame) = {
-    val vs = versions(s, table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"unknown snapshot version $v (have $vs)")
-    val wanted = values.distinct
-    val entries = fileEntries(s, table, v).filter(e =>
-      e.stats.get(column).forall { case (mn, mx) => mn <= hi && mx >= lo })
-    val pdt = partTypeFor(s, table, v, partCol) // one header walk
-    val picked = entries.filter(e =>
-        e.partitionValues.get(partCol).forall(wanted.contains))
-      .map(_.path)
-    def abs(rel: Seq[String]) = rel.map(r => new Path(table, r).toString)
-    val rangeResidual = col(column) >= lo && col(column) <= hi
-    val valueArms = wanted.flatMap { w =>
-      val mine = entries.filter(e =>
-        e.partitionValues.get(partCol).contains(w)).map(_.path)
-      if (mine.isEmpty) None
-      else Some(withDeletes(s, table, v, s.read.parquet(abs(mine): _*))
-        .withColumn(partCol, partLitTyped(pdt, w))
-        .filter(rangeResidual))
-    }
-    // un-partitioned files may hold any value: they carry the column
-    // themselves and take BOTH residuals (absence admitted them into
-    // `picked`; a plan that then skipped them would drop their rows)
-    val loose = entries.filter(e =>
-      !e.partitionValues.contains(partCol)).map(_.path)
-    val looseArm =
-      if (loose.isEmpty) None
-      else Some(withDeletes(s, table, v, s.read.parquet(abs(loose): _*))
-        .filter(partIn(partCol, wanted))
-        .filter(rangeResidual))
-    val arms = valueArms ++ looseArm.toSeq
-    val out =
-      if (arms.isEmpty) read(s, table, Some(v)).filter(lit(false))
-      else arms.reduce((a, b) => a.unionByName(b))
-    (picked, out)
+    val fresh = after.filterNot(e => before(e.path))
+    (fresh.map(_.path),
+      scan(s, table, toV, fresh, mergeSchema = false, schema = None))
   }
 
   /** SIZE-TARGETED COMPACTION (the Delta OPTIMIZE bin-packing shape):
@@ -1560,14 +1323,8 @@ object SnapTable {
       // output must not resurrect rows whose positions pointed at
       // the files being replaced (the dangling entries that remain
       // for replaced files then match nothing — names are unique)
-      val packed0 = withDeletes(s, table, h,
-        s.read.parquet(smalls.map(e =>
-          new Path(table, e.path).toString): _*)).repartition(nBins)
-      val packed = partition match {
-        case Some((c, v)) =>
-          packed0.withColumn(c, partLit(s, table, h, c, v))
-        case None => packed0
-      }
+      val packed = scan(s, table, h, smalls, mergeSchema = false,
+        schema = None).repartition(nBins)
       (packed, (outside ++ bigs).map(entryLine))
     }, statsCols = statsCols, partitionBy = partition.map(_._1),
       attempts = attempts)
@@ -1611,35 +1368,29 @@ object SnapTable {
     * in-scan (footer bounds admit, they never prove). On a clustered
     * layout this is the difference between reading ~the matching
     * files and reading the table — the planner's cost is metadata
-    * only, never a data page. Returns (selected files, frame) so
-    * callers can gate that pruning actually engaged. `mergeSchema`
-    * reconciles schema-evolved file mixes exactly as [[read]] does —
-    * a ranged read of an evolved snapshot must not take one file's
-    * schema for the whole scan. */
+    * only, never a data page. Returns (footer-picked file URIs,
+    * frame); the frame plans through [[scan]] like [[read]]
+    * (partition column, deletion vectors, and any recorded stats
+    * pruning further), so [[scannedFiles]] of it is what actually
+    * opens. `mergeSchema` reconciles schema-evolved file mixes
+    * exactly as [[read]] does — a ranged read of an evolved snapshot
+    * must not take one file's schema for the whole scan. */
   def readRange(s: SparkSession, table: String, version: Option[Int],
       column: String, lo: Long, hi: Long,
       mergeSchema: Boolean = false): (Seq[String], DataFrame) = {
-    val vs = versions(s, table)
-    require(vs.nonEmpty, s"no committed snapshot under $table")
-    val v = version.getOrElse(vs.last)
-    val uris = files(s, table, v)
-      .map(rel => new Path(table, rel).toUri.toString)
+    val v = pinned(s, table, version)
+    val entries = fileEntries(s, table, v)
+    val uris = entries.map(e => new Path(table, e.path).toUri.toString)
     // a file with NO usable footer stats cannot be proven out — it
     // must be read (bounds admit, absence never excludes)
     val chosen = LayoutAudit.auditFiles(s, uris, column)
       .filter(coalesce(col("col_min") <= hi && col("col_max") >= lo,
         lit(true)))
       .select(col("file")).collect().map(_.getString(0)).toSet
-    val picked = uris.filter(u =>
-      chosen.contains(u.split('/').takeRight(2).mkString("/")))
-    val rd = if (mergeSchema) s.read.option("mergeSchema", "true")
-             else s.read
-    val out =
-      if (picked.isEmpty)
-        read(s, table, Some(v), mergeSchema).filter(lit(false))
-      else withDeletes(s, table, v, rd.parquet(picked: _*))
-        .filter(col(column) >= lo && col(column) <= hi)
-    (picked, out)
+    val picked = entries.zip(uris).filter { case (_, u) =>
+      chosen.contains(u.split('/').takeRight(2).mkString("/")) }
+    (picked.map(_._2), scan(s, table, v, picked.map(_._1), mergeSchema,
+        schema = None).filter(col(column) >= lo && col(column) <= hi))
   }
 
   /** Change-data-feed between two keyed states: one full-outer join

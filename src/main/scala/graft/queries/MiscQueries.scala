@@ -2062,13 +2062,14 @@ object MiscQueries extends graft.QueryModule {
     val kmax = li.agg(max("l_orderkey")).head().getLong(0)
     val (lo, hi) = (kmax / 4, kmax / 2)
     val total = SnapTable.files(s, tbl, 1).size
-    val (picked, out) =
-      SnapTable.readRange(s, tbl, Some(1), "l_orderkey", lo, hi)
-    require(picked.nonEmpty && picked.size < total,
-      s"footer planning pruned nothing: ${picked.size} of $total files")
-    out.groupBy(pmod(col("l_orderkey"), lit(8L)).as("bucket"))
+    val out = SnapTable.readRange(s, tbl, Some(1), "l_orderkey", lo, hi)._2
+      .groupBy(pmod(col("l_orderkey"), lit(8L)).as("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("qty_c")).as("qty_sum_c"))
       .orderBy(col("bucket"))
+    val opened = SnapTable.scannedFiles(out).size
+    require(opened >= 1 && opened < total,
+      s"footer planning pruned nothing: $opened of $total files")
+    out
   }
 
   val qSnapshotPruneSql: String =
@@ -2083,16 +2084,16 @@ object MiscQueries extends graft.QueryModule {
 
   /** MANIFEST-PLANNED DATA SKIPPING — the step past `q_snapshot_prune`
     * that real table formats take ([[SnapTable.commit]] `statsCols` +
-    * [[SnapTable.readSkip]]): the COMMIT records per-file min/max
+    * [[SnapTable.read]] then `filter`): the COMMIT records per-file min/max
     * into the manifest (one footer pass over only the fresh files,
     * paid once), so the selective read's file pruning is a pure
     * driver decision over manifest text — ZERO footer probes at query
     * time, where readRange pays one per file per query. At 100 TB
     * (millions of files) that is the difference between a planner
     * decision and a million metadata RPCs — Iceberg's min/max-stats
-    * design, re-expressed. The entry REQUIRES (1) strictly fewer
-    * files planned than the snapshot holds, (2) the scan touching
-    * ONLY planned files, and (3) the manifest plan EQUAL to the
+    * design, re-expressed. The entry REQUIRES, of the files its own
+    * scan admits ([[SnapTable.scannedFiles]]): (1) strictly fewer
+    * than the snapshot holds, and (2) the manifest plan EQUAL to the
     * footer-derived plan on the same range — recorded bounds must be
     * the footer truth, or skipping silently drops rows. The append
     * chain proves stats flow through `#base:` resolution, not just
@@ -2116,8 +2117,12 @@ object MiscQueries extends graft.QueryModule {
     val kmax = li.agg(max("l_orderkey")).head().getLong(0)
     val (lo, hi) = (kmax / 4, kmax / 2)
     val total = SnapTable.files(s, tbl, 2).size
-    val (picked, out) = SnapTable.readSkip(s, tbl, Some(2),
-      "l_orderkey", lo, hi)
+    val out = SnapTable.read(s, tbl, Some(2))
+      .filter(col("l_orderkey").between(lo, hi))
+      .groupBy(col("l_returnflag"))
+      .agg(count(lit(1)).as("n"), sum(col("price_c")).as("price_sum_c"))
+      .orderBy(col("l_returnflag"))
+    val picked = SnapTable.scannedFiles(out)
     require(picked.nonEmpty && picked.size < total,
       s"manifest planning pruned nothing: ${picked.size} of $total files")
     // the recorded bounds must agree with the footers they came from:
@@ -2127,14 +2132,7 @@ object MiscQueries extends graft.QueryModule {
     def key(p: String) = p.split('/').takeRight(2).mkString("/")
     require(picked.map(key).sorted == footerPick.map(key).sorted,
       s"manifest plan diverged from footer truth: $picked vs $footerPick")
-    val pickedAbs = picked.map(rel =>
-      new org.apache.hadoop.fs.Path(tbl, rel).toUri.getPath).toSet
-    require(out.inputFiles.forall(f =>
-        pickedAbs.contains(new java.net.URI(f).getPath)),
-      "scan touched a file the manifest plan pruned out")
-    out.groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n"), sum(col("price_c")).as("price_sum_c"))
-      .orderBy(col("l_returnflag"))
+    out
   }
 
   val qSnapshotSkipSql: String =
@@ -2146,7 +2144,7 @@ object MiscQueries extends graft.QueryModule {
        |  AND l_orderkey <= (SELECT km // 2 FROM m)
        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  /** STRING-KEYED DATA SKIPPING ([[SnapTable.readSkipStr]] — the
+  /** STRING-KEYED DATA SKIPPING ([[SnapTable.read]] then `filter` — the
     * manifest stats surface for non-numeric keys, with Iceberg's
     * truncated-bounds discipline: the lower bound enters the manifest
     * as a ≤-preserving 16-byte prefix, the upper as
@@ -2156,8 +2154,8 @@ object MiscQueries extends graft.QueryModule {
     * one). Source-clustered documents, a lexicographic source-range
     * query planned from manifest text in unsigned byte order (the
     * parquet binary-stats order the bounds were recorded in); the
-    * entry REQUIRES real pruning and the scan touching only planned
-    * files. Oracle: the plain string-range filter — both engines
+    * entry REQUIRES its own scan to admit strictly fewer files than
+    * the table holds. Oracle: the plain string-range filter — both engines
     * compare ASCII identically. */
   def qSnapshotSkipStr(s: SparkSession, dir: String): DataFrame = {
     val tmp = StreamQueries.scratch(s, "snapskipstr")
@@ -2168,19 +2166,16 @@ object MiscQueries extends graft.QueryModule {
       docs.repartitionByRange(4, col("source"))
         .sortWithinPartitions(col("source")),
       tbl, "overwrite", statsCols = Seq("source"))
-    val total = SnapTable.fileEntries(s, tbl, 1).size
-    val (picked, out) = SnapTable.readSkipStr(s, tbl, None,
-      "source", "src10", "src14")
-    require(picked.nonEmpty && picked.size < total,
-      s"string skip pruned nothing: ${picked.size} of $total files")
-    val pickedAbs = picked.map(rel => new org.apache.hadoop.fs.Path(
-      tbl, rel).toUri.getPath).toSet
-    require(out.inputFiles.forall(f =>
-        pickedAbs.contains(new java.net.URI(f).getPath)),
-      "scan touched a file the string plan pruned out")
-    out.groupBy(col("source"))
+    val total = SnapTable.files(s, tbl, 1).size
+    val out = SnapTable.read(s, tbl)
+      .filter(col("source").between("src10", "src14"))
+      .groupBy(col("source"))
       .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
       .orderBy(col("source"))
+    val picked = SnapTable.scannedFiles(out).size
+    require(picked >= 1 && picked < total,
+      s"string skip pruned nothing: $picked of $total files")
+    out
   }
 
   val qSnapshotSkipStrSql: String =
@@ -2244,14 +2239,14 @@ object MiscQueries extends graft.QueryModule {
     * makes 2-D selective reads metadata-cheap ([[graft.functions
     * .ZOrderExprs.interleaveBits]] clustering committed through
     * [[SnapTable.commit]] with TWO stats columns, queried through
-    * [[SnapTable.readSkipMulti]]): z-ordering keeps BOTH dimensions'
-    * per-file bounds tight (each z-range file is a 16×16 tile in
-    * bucket space), so a 2-D range query proves most files out on one
-    * axis or the other from manifest text alone. The entry REQUIRES
-    * the conjunctive plan strictly TIGHTER than either single-axis
-    * plan (the measurable point of z-order — linear clustering makes
-    * one axis tight and leaves the other spanning everything) and the
-    * scan touching only planned files. Oracle: the plain 2-D range
+    * [[SnapTable.read]] with a 2-D `filter`): z-ordering keeps BOTH
+    * dimensions' per-file bounds tight (each z-range file is a 16×16
+    * tile in bucket space), so a 2-D range query proves most files
+    * out on one axis or the other from manifest text alone. The entry
+    * REQUIRES its own scan's conjunctive plan strictly TIGHTER than
+    * either single-axis plan (the measurable point of z-order —
+    * linear clustering makes one axis tight and leaves the other
+    * spanning everything). Oracle: the plain 2-D range
     * filter. One footer pass at commit bounds both columns
     * ([[graft.ops.LayoutAudit.auditFilesMulti]] — one read, n
     * columns). */
@@ -2275,21 +2270,20 @@ object MiscQueries extends graft.QueryModule {
       partitionBy = Some("f"))
     val (olo, ohi) = (r.getLong(0) / 4, r.getLong(0) / 2)
     val (plo, phi) = (r.getLong(1) / 4, r.getLong(1) / 2)
-    val (po, _) = SnapTable.readSkip(s, tbl, None, "l_orderkey", olo, ohi)
-    val (pp, _) = SnapTable.readSkip(s, tbl, None, "l_partkey", plo, phi)
-    val (both, out) = SnapTable.readSkipMulti(s, tbl, None,
-      Seq(("l_orderkey", olo, ohi), ("l_partkey", plo, phi)))
-    require(both.nonEmpty && both.size < po.size && both.size < pp.size,
-      s"z-order 2-D pruning must beat either axis alone: " +
-        s"${both.size} vs (${po.size}, ${pp.size})")
-    val bothAbs = both.map(rel => new org.apache.hadoop.fs.Path(
-      tbl, rel).toUri.getPath).toSet
-    require(out.inputFiles.forall(f =>
-        bothAbs.contains(new java.net.URI(f).getPath)),
-      "scan touched a file outside the 2-D plan")
-    out.groupBy(expr("l_orderkey % 4").as("bucket"))
+    val inO = col("l_orderkey").between(olo, ohi)
+    val inP = col("l_partkey").between(plo, phi)
+    def admitted(df: DataFrame) = SnapTable.scannedFiles(df).size
+    val po = admitted(SnapTable.read(s, tbl).filter(inO))
+    val pp = admitted(SnapTable.read(s, tbl).filter(inP))
+    val out = SnapTable.read(s, tbl).filter(inO && inP)
+      .groupBy(expr("l_orderkey % 4").as("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("qty_c")).as("qty_sum_c"))
       .orderBy(col("bucket"))
+    val both = admitted(out)
+    require(both >= 1 && both < po && both < pp,
+      s"z-order 2-D pruning must beat either axis alone: " +
+        s"$both vs ($po, $pp)")
+    out
   }
 
   val qSnapshotZorderSql: String =
@@ -2464,7 +2458,7 @@ object MiscQueries extends graft.QueryModule {
 
   /** PARTITIONED SNAPSHOT COMMITS — composing the table kernel with
     * the engine's partition-pruning discipline ([[SnapTable.commit]]
-    * `partitionBy` + [[SnapTable.readPartitions]]): commits stage
+    * `partitionBy` + [[SnapTable.read]] then `filter`): commits stage
     * Hive-layout (`data/b<v>-<nonce>/<col>=<val>/…`), the manifest
     * line's PATH is the partition index (plus per-file stats — both
     * prunings are manifest-text decisions), and vacuum / OPTIMIZE
@@ -2475,10 +2469,11 @@ object MiscQueries extends graft.QueryModule {
     * (versions linearize; the rewrite re-derives on staleness and
     * carries the append's files, so distinct-partition work never
     * conflicts into lost rows), then a partition-pruned two-partition
-    * read REQUIRED to plan fewer files than the table holds, touch
-    * ONLY planned files, and see compaction engaged on the optimized
-    * partition. Oracle: the plain filter over raw events — partition
-    * plumbing is pass-through or it is wrong. */
+    * read whose own scan is REQUIRED to admit fewer files than the
+    * table holds, and only the wanted partitions, with compaction
+    * engaged on the optimized partition. Oracle: the plain filter
+    * over raw events — partition plumbing is pass-through or it is
+    * wrong. */
   def qSnapshotPartitioned(s: SparkSession, dir: String): DataFrame = {
     val tmp = StreamQueries.scratch(s, "snappart")
     val tbl = s"$tmp/tbl"
@@ -2542,21 +2537,18 @@ object MiscQueries extends graft.QueryModule {
       "the race lost rows — distinct-partition work must not conflict")
     // partition-pruned read: two of five partitions
     val wanted = Seq("click", "view")
-    val (picked, out) = SnapTable.readPartitions(s, tbl, None,
-      "event_type", wanted)
+    val out = SnapTable.read(s, tbl)
+      .filter(col("event_type").isin(wanted: _*))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
+      .orderBy(col("event_type"))
+    val picked = SnapTable.scannedFiles(out)
     require(picked.nonEmpty && picked.size < head.size,
       s"partition pruning engaged nothing: ${picked.size} of ${head.size}")
     require(picked.forall(p => wanted.exists(w =>
         p.contains(s"event_type=$w"))),
       s"plan admitted a foreign partition: $picked")
-    val pickedAbs = picked.map(rel => new org.apache.hadoop.fs.Path(
-      tbl, rel).toUri.getPath).toSet
-    require(out.inputFiles.forall(f =>
-        pickedAbs.contains(new java.net.URI(f).getPath)),
-      "scan touched a file outside the partition plan")
-    out.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
-      .orderBy(col("event_type"))
+    out
   }
 
   val qSnapshotPartitionedSql: String =
@@ -2565,23 +2557,6 @@ object MiscQueries extends graft.QueryModule {
        |FROM events WHERE event_type IN ('click', 'view')
        |GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  /** SQL/CATALOG SURFACE OF THE SNAPSHOT TABLE — the DataSourceV2
-    * connector ([[graft.sources.snap.SnapSource]]) serving plain
-    * `spark.sql` over a committed snapshot: `CREATE TABLE … USING
-    * snap`, then a query whose WHERE clause reaches the MANIFEST
-    * planner — partition pruning on the Hive path segments AND
-    * per-file min/max pruning on recorded stats, both pure driver
-    * text (zero query-time footer or listing IO) — before Spark's
-    * own vectorized parquet V2 scan reads the survivors. The
-    * reference's query stage is exactly SQL over a loaded table
-    * (java_template/src/main/resources/db.properties-empty:4-8);
-    * this entry serves it at snapshot-table grain. The entry
-    * REQUIRES, against the LIVE V2 scan's plan: (1) pruning kept
-    * fewer files than the two wanted partitions hold (stats engaged
-    * beyond partition identity — ids are range-clustered, so
-    * per-file bounds are tight), and (2) at least one file survived.
-    * Oracle: the plain filter over raw events — the whole
-    * catalog/connector stack must be semantically invisible. */
   /** DELETION VECTORS — merge-on-read position deletes on the
     * snapshot table ([[SnapTable.commitDelete]]): the delete commits
     * a TINY `(file_name, pos)` sidecar referenced by `#dv:` manifest
@@ -2650,27 +2625,24 @@ object MiscQueries extends graft.QueryModule {
        |FROM events WHERE event_type <> 'error'
        |GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  /** The (single) V2 file scan inside an EXECUTED frame's physical
-    * plan — AQE-aware. How `q_sql_snapshot` asserts against the scan
-    * the query actually ran, not a re-derivation. */
-  private def v2FileScan(df: DataFrame)
-      : org.apache.spark.sql.execution.datasources.v2.FileScan = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
-    def walk(p: SparkPlan): Seq[FileScan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case b: BatchScanExec => b.scan match {
-        case f: FileScan => Seq(f)
-        case _ => Nil
-      }
-      case other => other.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan).headOption.getOrElse(
-      throw new IllegalStateException(
-        "no V2 file scan in the executed plan"))
-  }
-
+  /** SQL SURFACE OF THE SNAPSHOT TABLE — the DataSourceV2 connector
+    * ([[graft.sources.snap.SnapSource]]) serving plain `spark.sql`
+    * over a committed snapshot: `format("snap")` registered as a temp
+    * view on the entry's own session fork (nothing reaches the
+    * caller's catalog), then a query whose WHERE clause reaches the
+    * MANIFEST planner — partition pruning on the Hive path segments
+    * AND per-file min/max pruning on recorded stats, both pure driver
+    * text (zero query-time footer or listing IO) — before Spark's own
+    * vectorized parquet V2 scan reads the survivors. The reference's
+    * query stage is exactly SQL over a loaded table
+    * (java_template/src/main/resources/db.properties-empty:4-8);
+    * this entry serves it at snapshot-table grain. The entry
+    * REQUIRES, of the LIVE V2 scan's admitted files
+    * ([[SnapTable.scannedFiles]]): (1) fewer than the two wanted
+    * partitions hold (stats engaged beyond partition identity — ids
+    * are range-clustered, so per-file bounds are tight), and (2) at
+    * least one. Oracle: the plain filter over raw events — the whole
+    * connector stack must be semantically invisible. */
   def qSqlSnapshot(s: SparkSession, dir: String): DataFrame = {
     val tmp = StreamQueries.scratch(s, "snapsqlq")
     val tbl = s"$tmp/tbl"
@@ -2682,36 +2654,25 @@ object MiscQueries extends graft.QueryModule {
       tbl, "overwrite", statsCols = Seq("event_id"),
       partitionBy = Some("event_type"))
     val idMax = ev.agg(max("event_id")).head().getLong(0)
-    s.sql("DROP TABLE IF EXISTS snap_events_sql")
-    s.sql(s"CREATE TABLE snap_events_sql USING snap OPTIONS (path '$tbl')")
-    try {
-      val out = s.sql(
-        s"""SELECT event_type, count(*) AS n,
-           |  CAST(sum(value_c) AS BIGINT) AS sum_c
-           |FROM snap_events_sql
-           |WHERE event_type IN ('click', 'view')
-           |  AND event_id <= ${idMax / 4}
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-      val rows = out.count()
-      require(rows > 0, "SQL over the snapshot returned nothing")
-      // interrogate the LIVE V2 scan: its planned file set is the
-      // manifest pruning's output (FileScan.partitions replays the
-      // same listFiles the execution used)
-      val scan = v2FileScan(out)
-      val admitted = scan.planInputPartitions().map {
-        case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
-          fp.files.length
-        case _ => 0
-      }.sum
-      val total = scan.fileIndex.allFiles().size
-      val partOnly = SnapTable.fileEntries(s, tbl, 1).count(
-        _.partitionValues.get("event_type")
-          .exists(Set("click", "view").contains))
-      require(admitted >= 1 && admitted < partOnly && partOnly < total,
-        s"V2 pruning must beat partition identity alone: " +
-          s"admitted=$admitted partitions=$partOnly total=$total")
-      out
-    } finally s.sql("DROP TABLE IF EXISTS snap_events_sql")
+    val f = Bridge.cloneSession(s)
+    f.read.format("snap").load(tbl).createOrReplaceTempView("snap_events_sql")
+    val out = f.sql(
+      s"""SELECT event_type, count(*) AS n,
+         |  CAST(sum(value_c) AS BIGINT) AS sum_c
+         |FROM snap_events_sql
+         |WHERE event_type IN ('click', 'view')
+         |  AND event_id <= ${idMax / 4}
+         |GROUP BY event_type ORDER BY event_type""".stripMargin)
+    require(out.count() > 0, "SQL over the snapshot returned nothing")
+    // the LIVE V2 scan's admitted files: the manifest pruning's output
+    val admitted = SnapTable.scannedFiles(out).size
+    val entries = SnapTable.fileEntries(s, tbl, 1)
+    val partOnly = entries.count(_.partitionValues.get("event_type")
+      .exists(Set("click", "view").contains))
+    require(admitted >= 1 && admitted < partOnly && partOnly < entries.size,
+      s"V2 pruning must beat partition identity alone: " +
+        s"admitted=$admitted partitions=$partOnly total=${entries.size}")
+    out
   }
 
   val qSqlSnapshotSql: String =

@@ -17,7 +17,7 @@ import graft.ops.{LayoutAudit, SnapTable}
   * first-class table (the Delta `TahoeFileIndex` / Iceberg
   * scan-planning shape): the file listing, per-file sizes, partition
   * identities, AND per-file column bounds all come from manifest TEXT
-  * resolved once at construction — zero query-time filesystem
+  * the caller already resolved — zero query-time filesystem
   * listings, zero footer probes.
   *
   * Planning composes three prunings, all driver-side metadata:
@@ -35,49 +35,29 @@ import graft.ops.{LayoutAudit, SnapTable}
   *     pushed by the normal parquet reader at execution.
   *
   * The same index serves BOTH surfaces: the V1 `HadoopFsRelation`
-  * path ([[SnapTable.read]] on partitioned tables — one relation,
-  * typed partition column, vectorized scan) and the DataSourceV2
-  * `ParquetScanBuilder` path ([[SnapSource]] — `spark.sql` over the
-  * snapshot with pushdown reaching this planner).
+  * path (every [[SnapTable.read]], flat or partitioned — one relation
+  * per uniform file set) and the DataSourceV2 `ParquetScanBuilder`
+  * path ([[SnapSource]] — `spark.sql` over the snapshot with pushdown
+  * reaching this planner). What a plan admitted is read back off the
+  * executed plan ([[SnapTable.scannedFiles]]), never off the index.
   *
-  * Scale: O(files) manifest lines on the driver, the same order as
-  * every table format's planning cost; file statuses are synthesized
-  * from recorded `#bytes` (one `getFileStatus` fallback per legacy
-  * stat-less file only).
+  * `entries` must be uniform: every file carries `partCol`'s Hive
+  * segment, or `partCol` is None. Scale: O(files) manifest lines on
+  * the driver, the same order as every table format's planning cost;
+  * file statuses are synthesized from recorded `#bytes` (one
+  * `getFileStatus` fallback per legacy stat-less file only).
   */
 class SnapFileIndex(
     spark: SparkSession,
     val table: String,
-    val version: Int,
-    userPartType: Option[DataType] = None)
+    val entries: Seq[SnapTable.FileEntry],
+    val partCol: Option[(String, DataType)])
   extends PartitioningAwareFileIndex(spark, Map.empty, None, NoopCache) {
 
   private val tableDir = new Path(table)
   private val fs =
     tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val qualifiedDir = fs.makeQualified(tableDir)
-
-  /** Manifest entries of the pinned version, resolved once. */
-  val entries: Seq[SnapTable.FileEntry] =
-    SnapTable.fileEntries(spark, table, version)
-
-  /** The partition column and its declared type (commit header; the
-    * path segments name the column for pre-header history, typed
-    * string). None for unpartitioned tables. */
-  val partCol: Option[(String, DataType)] =
-    SnapTable.partSpecOf(spark, table, version)
-      .map { case (c, dt) => c -> userPartType.getOrElse(dt) }
-      .orElse {
-        entries.flatMap(_.partitionValues.keys).headOption
-          .map(c => c -> userPartType.getOrElse(StringType))
-      }
-
-  partCol.foreach { case (c, _) =>
-    require(entries.forall(_.partitionValues.contains(c)),
-      s"snapshot v$version of $table mixes $c-partitioned and " +
-        "unpartitioned files — the relation path needs a uniform " +
-        "layout; read the mixed snapshot via SnapTable.readPartitions")
-  }
 
   private def qualify(rel: String): Path =
     fs.makeQualified(new Path(tableDir, rel))
@@ -143,23 +123,14 @@ class SnapFileIndex(
 
   override def partitionSpec(): PartitionSpec = spec
 
-  /** (files admitted by the last plan, total files) — how callers
-    * REQUIRE that manifest pruning engaged (the `q_sql_snapshot`
-    * gate). */
-  @volatile var lastPlan: (Int, Int) = (entries.size, entries.size)
-
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val base = super.listFiles(partitionFilters, dataFilters)
-    val pruned = base.map { pd =>
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    super.listFiles(partitionFilters, dataFilters).map { pd =>
       PartitionDirectory(pd.values, pd.files.filter { f =>
         byPath.get(f.getPath).forall(e =>
           dataFilters.forall(admits(e, _)))
       })
     }.filter(_.files.nonEmpty)
-    lastPlan = (pruned.map(_.files.size).sum, entries.size)
-    pruned
-  }
 
   /** Can `e`'s recorded bounds satisfy `filter`? Conservative
     * three-valued pruning: only shapes this planner PROVES are
@@ -241,6 +212,17 @@ class SnapFileIndex(
 
   override def refresh(): Unit = ()
 
+  /** Structural, like `InMemoryFileIndex`'s root-path equality: two
+    * reads of the same file set are the same relation, so cache
+    * lookups and exchange reuse match them. */
+  override def equals(o: Any): Boolean = o match {
+    case x: SnapFileIndex => x.qualifiedDir == qualifiedDir &&
+      x.entries == entries && x.partCol == partCol
+    case _ => false
+  }
+
+  override def hashCode: Int = (qualifiedDir, entries, partCol).hashCode
+
   override def sizeInBytes: Long = statuses.map(_._1.getLen).sum
 
   override def inputFiles: Array[String] =
@@ -251,5 +233,25 @@ class SnapFileIndex(
   override def partitionSchema: StructType = partCol match {
     case Some((c, dt)) => StructType(Seq(StructField(c, dt)))
     case None => StructType(Nil)
+  }
+}
+
+object SnapFileIndex {
+
+  /** The index over ALL of snapshot `version` — what the V2 connector
+    * plans over. Refuses a mixed partitioned/loose history: one
+    * relation needs a uniform layout, and [[SnapTable.read]] is what
+    * unions the uniform subsets. */
+  def forVersion(spark: SparkSession, table: String,
+      version: Int): SnapFileIndex = {
+    val entries = SnapTable.fileEntries(spark, table, version)
+    val partCol = SnapTable.partColOf(spark, table, version, entries)
+    partCol.foreach { case (c, _) =>
+      require(entries.forall(_.partitionValues.contains(c)),
+        s"snapshot v$version of $table mixes $c-partitioned and " +
+          "unpartitioned files — the relation path needs a uniform " +
+          "layout; read the mixed snapshot via SnapTable.read")
+    }
+    new SnapFileIndex(spark, table, entries, partCol)
   }
 }

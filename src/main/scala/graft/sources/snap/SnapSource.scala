@@ -73,8 +73,8 @@ object SnapSource {
   /** Table path + version options → the pinned-version V2 table.
     * Instances cache per (path, resolved version): schema inference,
     * `getTable`, and every scan of one SQL statement share one
-    * manifest resolution, and specs can reach the live
-    * [[SnapFileIndex]] to REQUIRE pruning engaged. */
+    * manifest resolution. What a query's scan admitted is read off
+    * its executed plan ([[SnapTable.scannedFiles]]). */
   private val tables =
     new java.util.concurrent.ConcurrentHashMap[String, SnapV2Table]()
 
@@ -116,17 +116,6 @@ object SnapSource {
       _ => new SnapV2Table(spark, path, version, merge, pinned))
   }
 
-  /** The live index behind `path`'s cached table at `version` (latest
-    * when None) — what `q_sql_snapshot` asserts pruning against. */
-  def indexOf(spark: SparkSession, path: String,
-      version: Option[Int] = None): SnapFileIndex = {
-    val v = version.getOrElse(SnapTable.versions(spark, path).last)
-    val t = tables.get(keyOf(spark, path, v))
-    require(t != null, s"no resolved snap table for $path@v$v " +
-      s"(have ${tables.keySet()})")
-    t.index
-  }
-
   /** DataFrame over the connector (the non-SQL entry point). */
   def load(spark: SparkSession, path: String,
       version: Option[Int] = None): DataFrame = {
@@ -150,7 +139,7 @@ class SnapV2Table(spark: SparkSession, path: String, version: Int,
     s"snapshot v$version of $path carries deletion vectors — " +
       "OPTIMIZE to materialize them, or read via SnapTable.read")
 
-  val index = new SnapFileIndex(spark, path, version)
+  val index = SnapFileIndex.forVersion(spark, path, version)
 
   /** Data-file schema (excludes the partition column — Hive staging
     * strips it from the files). */

@@ -45,9 +45,10 @@ object SnapStream {
     * SKIP-PLANNABLE from birth: each batch's commit records its
     * fresh files' bounds into the manifest (one footer pass over the
     * batch's own files — O(batch), never O(table)), so
-    * [[SnapTable.readSkip]] plans selective reads over the live feed
-    * without a single query-time footer probe. `partitionBy` stages
-    * each batch Hive-layout for [[SnapTable.readPartitions]].
+    * a filtered [[SnapTable.read]] plans selective reads over the
+    * live feed without a single query-time footer probe.
+    * `partitionBy` stages each batch Hive-layout, so the same read
+    * prunes partitions too.
     * `checkpointEvery > 0` writes a CADENCED head checkpoint
     * ([[SnapTable.checkpointNow]]) every that-many commits — for
     * drains whose retention must keep long history (vacuum can't

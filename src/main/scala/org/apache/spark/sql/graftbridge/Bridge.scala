@@ -12,6 +12,11 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `schema` with every field nullable, as a file source reads it
+    * (`StructType.asNullable` is private[spark]). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** A forked session sharing the SparkContext and cached data but
     * with an ISOLATED conf — the scoped-conf idiom (set a legacy
     * reader conf on the clone, probe, discard) without mutating the

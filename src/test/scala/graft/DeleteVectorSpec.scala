@@ -52,8 +52,9 @@ class DeleteVectorSpec extends SparkSpec {
     // stats on surviving rows stay exact
     assert(SnapTable.read(spark, tbl).agg(sum("k")).head().getLong(0) ===
       (1L to 1000L).filter(_ % 10 != 3).sum)
-    // selective read paths apply the vectors too
-    val (_, skip) = SnapTable.readSkip(spark, tbl, None, "k", 1, 500)
+    // a selective read prunes files UNDER the vector anti-join
+    val skip = SnapTable.read(spark, tbl).filter(col("k").between(1L, 500L))
+    assert(SnapTable.scannedFiles(skip).size < 4)
     assert(skip.count() === (1L to 500L).count(_ % 10 != 3))
     // a second delete composes; a no-match delete is a no-op
     val v3 = SnapTable.commitDelete(spark, tbl, "m = 7")
@@ -92,7 +93,8 @@ class DeleteVectorSpec extends SparkSpec {
     assert(SnapTable.read(spark, tbl).count() === 900L)
     assert(SnapTable.read(spark, tbl).filter(col("m") === 3).count() === 0L)
     // stats survive materialization for untouched planning
-    val (picked, rs) = SnapTable.readSkip(spark, tbl, None, "k", 1, 250)
+    val rs = SnapTable.read(spark, tbl).filter(col("k").between(1L, 250L))
+    val picked = SnapTable.scannedFiles(rs)
     assert(picked.nonEmpty &&
       picked.size < SnapTable.files(spark, tbl, vM).size)
     assert(rs.count() === (1L to 250L).count(_ % 10 != 3))
@@ -114,7 +116,7 @@ class DeleteVectorSpec extends SparkSpec {
     SnapTable.commitDelete(spark, tbl, "p = 2 AND k <= 300")
     val expect = (1L to 600L).filterNot(i => i % 3 == 2 && i <= 300)
     assert(SnapTable.read(spark, tbl).count() === expect.size.toLong)
-    val (_, rp) = SnapTable.readPartitions(spark, tbl, None, "p", Seq("2"))
+    val rp = SnapTable.read(spark, tbl).filter(col("p") === 2L)
     assert(rp.count() === (1L to 600L).count(i => i % 3 == 2 && i > 300))
     // materialize keeps the layout partitioned and typed
     val vM = SnapTable.materializeDeletes(spark, tbl, statsCols = Seq("k"))

@@ -55,6 +55,9 @@ class EntryIsolationSpec extends SparkSpec {
     try {
       assert(run("q_sales_priority")._2.nonEmpty)
       assert(run("q_grouping_sets")._2.nonEmpty)
+      assert(run("q_sql_snapshot")._2.nonEmpty)
+      assert(!spark.catalog.tableExists("snap_events_sql"),
+        "q_sql_snapshot registered snap_events_sql on the caller's session")
       val view = spark.table("SalesData")
       assert(view.columns.toSeq === Seq("id", "tag"),
         "the caller's SalesData view was replaced")

@@ -44,8 +44,8 @@ class SnapSqlSpec extends SparkSpec {
 
     // BOTH prunings engaged: partition pruning keeps grp=3's 4 files,
     // manifest id-bounds keep only the slice intersecting [100,300]
-    val idx = SnapSource.indexOf(spark, tbl)
-    val (admitted, total) = idx.lastPlan
+    val admitted = SnapTable.scannedFiles(q).size
+    val total = SnapTable.files(spark, tbl, 1).size
     assert(total === 20, s"expected 20 manifest entries, saw $total")
     assert(admitted < 4 && admitted >= 1,
       s"partition+stats pruning did not engage: $admitted of $total")
@@ -173,7 +173,8 @@ class SnapSqlSpec extends SparkSpec {
     val q = spark.sql(
       "SELECT sum(id) AS s FROM snap_flat WHERE id BETWEEN 10 AND 120")
     assert(q.head().getLong(0) === (10L to 120L).sum)
-    val (admitted, total) = SnapSource.indexOf(spark, tbl).lastPlan
+    val admitted = SnapTable.scannedFiles(q).size
+    val total = SnapTable.files(spark, tbl, 1).size
     assert(total === 8 && admitted < 8,
       s"range-clustered layout must prune: $admitted of $total")
   }

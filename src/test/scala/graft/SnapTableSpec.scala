@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import org.apache.spark.sql.types.LongType
 import graft.ops.{ConcurrentCommitException, SnapTable}
+import graft.sources.snap.SnapFileIndex
 
 /** Snapshot-table contract: manifests are the only truth readers see,
   * append shares files instead of copying data, history stays
@@ -338,7 +342,7 @@ class SnapTableSpec extends SparkSpec {
       tbl, "append", audit = Some(even)) === 2)
   }
 
-  test("manifest file stats: commit records per-file bounds; readSkip plans manifest-only") {
+  test("manifest file stats: commit records per-file bounds; filtered reads prune") {
     val tbl = Files.createTempDirectory("graft_snap_stats").toString + "/t"
     // two clustered commits: 4 range-disjoint files each
     def batch(lo: Long): org.apache.spark.sql.DataFrame =
@@ -356,15 +360,9 @@ class SnapTableSpec extends SparkSpec {
     val spans = entries.map(_.stats("k")).sortBy(_._1)
     assert(spans.head._1 === 0L && spans.last._2 === 799L)
     // a range covering ~2 of 8 files: pruning is manifest text only
-    val (picked, df) = SnapTable.readSkip(spark, tbl, None, "k",
-      lo = 390L, hi = 410L)
-    assert(picked.size < 8, s"no pruning engaged: $picked")
-    val scanned = df.inputFiles.map(_.split('/').takeRight(2)
-      .mkString("/")).toSet
-    val pickedKeys = picked.map(_.split('/').takeRight(2)
-      .mkString("/")).toSet
-    assert(scanned.subsetOf(pickedKeys),
-      s"scan touched a pruned-out file: ${scanned -- pickedKeys}")
+    val df = SnapTable.read(spark, tbl).filter(col("k").between(390L, 410L))
+    val picked = SnapTable.scannedFiles(df)
+    assert(picked.nonEmpty && picked.size < 8, s"no pruning engaged: $picked")
     // and the residual predicate keeps the answer exact
     assert(df.agg(sum("v")).head().getLong(0) ===
       (390L to 410L).map(_ * 2).sum)
@@ -372,7 +370,9 @@ class SnapTableSpec extends SparkSpec {
     SnapTable.commit(spark, batch(800L), tbl, "append",
       statsCols = Seq("k"))
     SnapTable.vacuum(spark, tbl, keep = 2)
-    val (p2, df2) = SnapTable.readSkip(spark, tbl, Some(2), "k", 0L, 99L)
+    val df2 = SnapTable.read(spark, tbl, Some(2))
+      .filter(col("k").between(0L, 99L))
+    val p2 = SnapTable.scannedFiles(df2)
     assert(p2.size === 1, s"checkpointed stats lost: $p2")
     assert(df2.count() === 100L)
   }
@@ -386,7 +386,8 @@ class SnapTableSpec extends SparkSpec {
     SnapTable.commit(spark,
       (1000L until 1100L).map(k => (k, k)).toDF("k", "v").coalesce(1),
       tbl, "append")
-    val (picked, df) = SnapTable.readSkip(spark, tbl, None, "k", 0L, 50L)
+    val df = SnapTable.read(spark, tbl).filter(col("k").between(0L, 50L))
+    val picked = SnapTable.scannedFiles(df)
     // the stat-less file cannot be proven out — it must be read
     assert(picked.size === 2, s"absence must admit, never exclude: $picked")
     assert(df.count() === 51L)
@@ -401,7 +402,8 @@ class SnapTableSpec extends SparkSpec {
       SnapTable.versions(spark, tbl).last)
     assert(e3.size === 2 && e3.forall(_.stats.contains("k")),
       s"stats dropped through the rewrite: $e3")
-    val (p3, _) = SnapTable.readSkip(spark, tbl, None, "k", 2000L, 2005L)
+    val p3 = SnapTable.scannedFiles(
+      SnapTable.read(spark, tbl).filter(col("k").between(2000L, 2005L)))
     assert(p3.size === 1, s"rewrite output should plan selectively: $p3")
   }
 
@@ -498,9 +500,9 @@ class SnapTableSpec extends SparkSpec {
     assert(entries.forall(_.stats.contains("k")),
       "partitioned staging must still record stats")
     // partition-pruned read: only p=a files planned; the partition
-    // column comes back as a real column via basePath discovery
-    val (picked, df) = SnapTable.readPartitions(spark, tbl, None, "p",
-      Seq("a"))
+    // column comes back typed from the manifest paths
+    val df = SnapTable.read(spark, tbl).filter(col("p") === "a")
+    val picked = SnapTable.scannedFiles(df)
     assert(picked.nonEmpty && picked.size < entries.size)
     assert(picked.forall(_.contains("p=a")), picked)
     assert(df.columns.contains("p"))
@@ -533,8 +535,8 @@ class SnapTableSpec extends SparkSpec {
     // partition b's live files in the SAME (nested) batch dirs
     assert(SnapTable.vacuum(spark, tbl, keep = 1) > 0)
     assert(SnapTable.read(spark, tbl).count() === 200L)
-    assert(SnapTable.readPartitions(spark, tbl, None, "p", Seq("b"))
-      ._2.agg(sum("v")).head().getLong(0) ===
+    assert(SnapTable.read(spark, tbl).filter(col("p") === "b")
+      .agg(sum("v")).head().getLong(0) ===
       (1 until 200 by 2).map(_ * 10L).sum)
   }
 
@@ -593,12 +595,12 @@ class SnapTableSpec extends SparkSpec {
     assert(after.count(_.partitionValues("p") == "a") === 1)
     assert(after.filter(_.partitionValues("p") == "b")
       .map(_.path).toSet === bBefore)
-    assert(SnapTable.readPartitions(spark, tbl, None, "p", Seq("a"))
-      ._2.agg(sum("v")).head().getLong(0) ===
+    assert(SnapTable.read(spark, tbl).filter(col("p") === "a")
+      .agg(sum("v")).head().getLong(0) ===
       (0 until 100 by 2).map(_.toLong).sum)
   }
 
-  test("readPartitionsRange: partition and stats pruning intersect from one manifest") {
+  test("a filtered read intersects partition and stats pruning from one manifest") {
     val tbl = Files.createTempDirectory("graft_snap_prr").toString + "/t"
     def batch(ks: Range) = ks.map(k =>
         (k.toLong, if (k % 2 == 0) "a" else "b", k.toLong))
@@ -608,13 +610,15 @@ class SnapTableSpec extends SparkSpec {
       statsCols = Seq("k"), partitionBy = Some("p"))
     val total = SnapTable.fileEntries(spark, tbl, 1).size
     // one partition of two AND one range stripe of four
-    val (picked, df) = SnapTable.readPartitionsRange(spark, tbl, None,
-      "p", Seq("a"), "k", 0L, 80L)
+    val inA = col("p") === "a"
+    val inRange = col("k").between(0L, 80L)
+    val df = SnapTable.read(spark, tbl).filter(inA && inRange)
+    val picked = SnapTable.scannedFiles(df)
     assert(picked.nonEmpty && picked.size < total, s"$picked of $total")
     assert(picked.forall(_.contains("p=a")))
     // strictly tighter than either pruning alone
-    val (partOnly, _) = SnapTable.readPartitions(spark, tbl, None,
-      "p", Seq("a"))
+    val partOnly = SnapTable.scannedFiles(
+      SnapTable.read(spark, tbl).filter(inA))
     assert(picked.size < partOnly.size,
       "stats pruning must engage on top of partition pruning")
     assert(df.agg(sum("v")).head().getLong(0) ===
@@ -626,8 +630,8 @@ class SnapTableSpec extends SparkSpec {
       Seq((40L, "a", 40L), (41L, "b", 41L), (1000L, "a", 1000L))
         .toDF("k", "p", "v").coalesce(1),
       tbl, "append", statsCols = Seq("k"))
-    val (p2, df2) = SnapTable.readPartitionsRange(spark, tbl, None,
-      "p", Seq("a"), "k", 0L, 80L)
+    val df2 = SnapTable.read(spark, tbl).filter(inA && inRange)
+    val p2 = SnapTable.scannedFiles(df2)
     assert(p2.size === picked.size + 1,
       "the loose file must be admitted by absence")
     assert(df2.agg(sum("v")).head().getLong(0) ===
@@ -662,13 +666,14 @@ class SnapTableSpec extends SparkSpec {
       .contains(e.partitionValues("p"))), entries.map(_.path))
     // skip planning over the live feed: the 120..180 range lives in
     // batch 2 only -> its two partition files of six total
-    val (picked, df) = SnapTable.readSkip(spark, tbl, None, "k",
-      120L, 180L)
+    val inRange = col("k").between(120L, 180L)
+    val df = SnapTable.read(spark, tbl).filter(inRange)
+    val picked = SnapTable.scannedFiles(df)
     assert(picked.size === 2, s"skip planning over the live feed: $picked")
     assert(df.count() === 61L)
     // partition planning over the live feed composes with the range
-    val (both, dfb) = SnapTable.readPartitionsRange(spark, tbl, None,
-      "p", Seq("a"), "k", 120L, 180L)
+    val dfb = SnapTable.read(spark, tbl).filter(col("p") === "a" && inRange)
+    val both = SnapTable.scannedFiles(dfb)
     assert(both.size === 1 && both.head.contains("p=a"), both)
     assert(dfb.count() === 31L)
   }
@@ -702,8 +707,9 @@ class SnapTableSpec extends SparkSpec {
       java.util.Base64.getDecoder.decode(mn).length <= 16 &&
         java.util.Base64.getDecoder.decode(mx).length <= 16
     })
-    val (picked, df) = SnapTable.readSkipStr(spark, tbl, None, "uid",
-      f"u${50}%05d", f"u${99}%05d_${"z" * 20}")
+    val df = SnapTable.read(spark, tbl)
+      .filter(col("uid").between(f"u${50}%05d", f"u${99}%05d_${"z" * 20}"))
+    val picked = SnapTable.scannedFiles(df)
     assert(picked.nonEmpty && picked.size < 4, s"no pruning: $picked")
     assert(df.count() === 50L)
     assert(df.agg(sum("v")).head().getLong(0) === (50L to 99L).sum)
@@ -806,6 +812,86 @@ class SnapTableSpec extends SparkSpec {
       "recorded k bounds must surface in the metadata table")
   }
 
+  test("readRange and readIncremental of a partitioned table carry the typed partition column") {
+    val tbl = Files.createTempDirectory("graft_snap_pcol").toString + "/t"
+    def batch(ks: Range) = ks.map(k => (k.toLong, k % 2L, k * 10L))
+      .toDF("k", "p", "v")
+    SnapTable.commit(spark, batch(0 until 100), tbl, "overwrite",
+      partitionBy = Some("p"))
+    SnapTable.commit(spark, batch(100 until 200), tbl, "append",
+      partitionBy = Some("p"))
+    val (_, rr) = SnapTable.readRange(spark, tbl, None, "k", 10L, 20L)
+    assert(rr.columns.toSeq === Seq("k", "v", "p"))
+    assert(rr.schema("p").dataType === LongType)
+    assert(rr.filter(col("p") === 1L).count() === 5L)
+    val (fresh, inc) = SnapTable.readIncremental(spark, tbl, 1, 2)
+    assert(fresh.nonEmpty && fresh.forall(_.startsWith("data/b2-")))
+    assert(inc.columns.toSeq === Seq("k", "v", "p"))
+    assert(inc.schema("p").dataType === LongType)
+    assert(inc.agg(sum("p")).head().getLong(0) === 50L)
+  }
+
+  /** The manifest-backed file scans in a frame's physical plan. */
+  private def snapScans(df: DataFrame): Seq[FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec
+          if f.relation.location.isInstanceOf[SnapFileIndex] => f
+    }
+
+  private def unions(df: DataFrame) =
+    df.queryExecution.sparkPlan.collect { case u: UnionExec => u }
+
+  test("plan shape: a filtered read of a uniform snapshot plans one file scan and no Union") {
+    val tbl = Files.createTempDirectory("graft_snap_shape").toString + "/t"
+    val rows = (0L until 160L).map(k => (k, if (k % 2 == 0) "a" else "b", k))
+      .toDF("k", "p", "v")
+      .repartitionByRange(8, col("k")).sortWithinPartitions(col("k"))
+    SnapTable.commit(spark, rows, tbl, "overwrite",
+      statsCols = Seq("k"), partitionBy = Some("p"))
+    val total = SnapTable.files(spark, tbl, 1).size
+    val q = SnapTable.read(spark, tbl).filter(col("k").between(10L, 20L))
+    assert(snapScans(q).size === 1 && unions(q).isEmpty)
+    val admitted = SnapTable.scannedFiles(q)
+    assert(admitted.nonEmpty && admitted.size < total,
+      s"${admitted.size} of $total")
+    // deletion vectors apply per relation: still one scan, and the
+    // range still prunes under the anti-join
+    SnapTable.commitDelete(spark, tbl, "v = 15")
+    val q2 = SnapTable.read(spark, tbl).filter(col("k").between(10L, 20L))
+    assert(snapScans(q2).size === 1 && unions(q2).isEmpty)
+    assert(SnapTable.scannedFiles(q2) === admitted)
+    assert(q2.count() === 10L)
+    // an unpartitioned snapshot reads through the same single relation
+    val flat = Files.createTempDirectory("graft_snap_shapef").toString + "/t"
+    SnapTable.commit(spark, rows.drop("p"), flat, "overwrite",
+      statsCols = Seq("k"))
+    val qf = SnapTable.read(spark, flat).filter(col("k") <= 5L)
+    assert(snapScans(qf).size === 1 && unions(qf).isEmpty)
+    assert(SnapTable.scannedFiles(qf).size === 1)
+  }
+
+  test("plan shape: a mixed partitioned/loose history plans exactly two scans, both pruning on stats") {
+    val tbl = Files.createTempDirectory("graft_snap_mixed").toString + "/t"
+    def rows = (0L until 200L).map(k => (k, if (k % 2 == 0) "a" else "b", k))
+      .toDF("k", "p", "v")
+      .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
+    SnapTable.commit(spark, rows, tbl, "overwrite",
+      statsCols = Seq("k"), partitionBy = Some("p"))
+    // the loose append carries p in its files
+    SnapTable.commit(spark, rows, tbl, "append", statsCols = Seq("k"))
+    val q = SnapTable.read(spark, tbl).filter(col("k").between(10L, 20L))
+    val scans = snapScans(q)
+    assert(scans.size === 2 && unions(q).size === 1)
+    scans.foreach { f =>
+      val held = f.relation.location.asInstanceOf[SnapFileIndex].entries.size
+      val admitted = f.selectedPartitions.totalNumberOfFiles
+      assert(admitted >= 1 && admitted < held, s"$admitted of $held")
+    }
+    assert(q.count() === 22L)
+    assert(q.filter(col("p") === "a").agg(sum("k")).head().getLong(0) ===
+      2 * (10L to 20L by 2).sum)
+  }
+
   test("partition values needing Hive escaping (and null) survive the path roundtrip") {
     val tbl = Files.createTempDirectory("graft_snap_esc").toString + "/t"
     // ':', space, '%' all percent-escape in the Hive path; null lands
@@ -817,17 +903,15 @@ class SnapTableSpec extends SparkSpec {
     val vals = SnapTable.fileEntries(spark, tbl, 1)
       .flatMap(_.partitionValues.get("p")).toSet
     assert(vals === Set("a:b", "c d", "e%f", SnapTable.NullPartition))
-    // readPartitions matches caller-supplied raw values
-    val (picked, out) = SnapTable.readPartitions(spark, tbl, None,
-      "p", Seq("a:b", "c d"))
-    assert(picked.size === 2)
+    // a partition filter matches caller-supplied raw values
+    val out = SnapTable.read(spark, tbl).filter(col("p").isin("a:b", "c d"))
+    assert(SnapTable.scannedFiles(out).size === 2)
     assert(out.orderBy("k").collect().map(r =>
       (r.getLong(0), r.getString(1))).toSeq ===
       Seq((1L, "a:b"), (2L, "c d")))
-    // the null partition is addressable via the sentinel, as real null
-    val (pn, on) = SnapTable.readPartitions(spark, tbl, None,
-      "p", Seq(SnapTable.NullPartition))
-    assert(pn.size === 1)
+    // the null partition prunes as a real null
+    val on = SnapTable.read(spark, tbl).filter(col("p").isNull)
+    assert(SnapTable.scannedFiles(on).size === 1)
     val nr = on.collect()
     assert(nr.length === 1 && nr(0).getLong(0) === 4L && nr(0).isNullAt(1))
     // full read() reconstructs the column for every row
@@ -848,8 +932,9 @@ class SnapTableSpec extends SparkSpec {
     val r = SnapTable.read(spark, tbl)
     assert(r.schema("f").dataType === org.apache.spark.sql.types.LongType)
     assert(r.filter(col("f") > 2L).count() === 10L)
-    // readPartitions: the re-materialized literal is typed too
-    val (_, rp) = SnapTable.readPartitions(spark, tbl, None, "f", Seq("3"))
+    // a partition-pruned read keeps the type
+    val rp = SnapTable.read(spark, tbl).filter(col("f") === 3L)
+    assert(SnapTable.scannedFiles(rp).forall(_.contains("/f=3/")))
     assert(rp.schema("f").dataType === org.apache.spark.sql.types.LongType)
     assert(rp.agg(sum("f")).head().getLong(0) === 30L)
     // OPTIMIZE of one partition preserves the declared type

@@ -10,6 +10,9 @@ Each oracle is evaluated with its CTEs materialized in turn
 (`coldwarm/oracle.py`'s `evaluate`) on a fresh connection, since the
 temp tables of one oracle would collide with the next one's CTE names:
 same result as one statement, far less memory on the curation chain.
+An oracle with a non-recursive CTE that carries a column list is
+reported as an error naming the entry and the CTE, since that
+evaluation drops the list.
 This is a dev tool only — NOT part of the Scala library.
 """
 import glob
@@ -17,6 +20,7 @@ import hashlib
 import json
 import math
 import os
+import re
 import sys
 
 import duckdb
@@ -53,11 +57,26 @@ def frame_hash(df):
     return h.hexdigest()
 
 
+def check_ctes(name, sql):
+    """Refuses a non-recursive CTE with a column list, `c(j, v) AS
+    (...)`: `evaluate` materializes it as `CREATE TEMP TABLE c AS ...`
+    and drops the list, so the oracle would fail to bind or, worse,
+    bind to the body's own column names."""
+    ctes, _ = coldwarm_oracle.split_ctes(sql)
+    for cte, cols, body in ctes:
+        if cols and not re.search(rf"\b{cte}\b", body):
+            raise ValueError(
+                f"oracle of {name}: CTE {cte}{cols} has a column list but "
+                f"does not reference itself; name the columns on the "
+                f"subquery instead (AS t{cols})")
+
+
 def main():
     oracle = json.load(open(f"{OUT}/oracle_sql.json"))
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
+            check_ctes(name, sql)
             want = norm(coldwarm_oracle.evaluate(
                 coldwarm_oracle.connect(SF), sql))
             files = glob.glob(f"{OUT}/{name}/*.parquet")
