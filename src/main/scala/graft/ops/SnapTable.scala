@@ -27,7 +27,7 @@ class ConcurrentCommitException(msg: String)
   *     filesystem rename. A crash anywhere before the rename leaves an
   *     orphaned staging directory no reader ever lists — the same
   *     marker-last contract the streaming drains use
-  *     ([[graft.streaming.IndexCompaction]]), here giving BATCH
+  *     ([[graft.streaming.Drain]]), here giving BATCH
   *     writers snapshot isolation. The nonce means two writers racing
   *     the same version NEVER share a staging path: the loser reclaims
   *     exactly its own files, the winner's manifest references exactly

@@ -284,6 +284,16 @@ object StreamQueries extends graft.QueryModule {
       .orderBy(col("user_id"), col("session_idx"))
   }
 
+  /** The `documents` landing dir as a file stream (its schema probed
+    * from the table's footer), with the decontamination entries' eval
+    * slice (doc_id % 53 == 0) beside it. */
+  private def documentsFeed(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val docs = s.read.parquet(s"$dir/documents.parquet")
+    (s.readStream.schema(docs.schema).parquet(s"$dir/documents*.parquet"),
+      docs.filter(pmod(col("doc_id"), lit(53)) === 0))
+  }
+
   /** The continuous-ingest filter funnel
     * ([[graft.streaming.FunnelStream]]) driven as a real stream over
     * the documents table (one AvailableNow batch here; the per-batch
@@ -292,9 +302,7 @@ object StreamQueries extends graft.QueryModule {
     * it exactly, batch column included. */
   def qFunnelStream(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratch(s, "funnel")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
+    val (stream, _) = documentsFeed(s, dir)
     graft.streaming.FunnelStream.runFunnel(s, stream, "text", "doc_id",
       "lang", s"$tmp/index", s"$tmp/funnel", s"$tmp/ckpt")
   }
@@ -311,9 +319,7 @@ object StreamQueries extends graft.QueryModule {
     * funnel survivors into the pack layout — in one statement. */
   def qCurateStream(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratch(s, "curate")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
+    val (stream, _) = documentsFeed(s, dir)
     graft.streaming.CurationStream.runCurate(s, stream, "text", "doc_id",
       "lang", s"$tmp/index", s"$tmp/admitted", s"$tmp/manifest",
       s"$tmp/ckpt")
@@ -341,11 +347,7 @@ object StreamQueries extends graft.QueryModule {
     * dedup variants. */
   def qCurateDeconStream(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratch(s, "curatedc")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
-    val evalSet = s.read.parquet(s"$dir/documents.parquet")
-      .filter(pmod(col("doc_id"), lit(53)) === 0)
+    val (stream, evalSet) = documentsFeed(s, dir)
     graft.streaming.CurationStream.runCurate(s, stream, "text", "doc_id",
       "lang", s"$tmp/index", s"$tmp/admitted", s"$tmp/manifest",
       s"$tmp/ckpt", evalDf = Some(evalSet))
@@ -407,11 +409,7 @@ object StreamQueries extends graft.QueryModule {
     * unchanged. */
   def qCurateFullStream(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratch(s, "curatefull")
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
-    val evalSet = s.read.parquet(s"$dir/documents.parquet")
-      .filter(pmod(col("doc_id"), lit(53)) === 0)
+    val (stream, evalSet) = documentsFeed(s, dir)
     graft.streaming.CurationStream.runCurate(s, stream, "text", "doc_id",
       "lang", s"$tmp/index", s"$tmp/admitted", s"$tmp/manifest",
       s"$tmp/ckpt", budget = 1024L,

@@ -131,9 +131,8 @@ object CdcStream {
     * signal; the cursor lives in the MV's own commit log, so a
     * replayed wake-up folds zero). `Trigger.AvailableNow` drains the
     * backlog and stops (the catch-up posture); a processing-time
-    * trigger is the stand-watch posture. `onFold` sees each drain's
-    * fold count (per-fold cost measured flat under it: PLANS.md
-    * "Round 16: MV-consumer age study"). Source-side manifest
+    * trigger is the stand-watch posture (per-fold cost measured flat:
+    * PLANS.md "Round 16: MV-consumer age study"). Source-side manifest
     * deletions by vacuum are invisible to the stream
     * (already-processed files may vanish freely; the file source only
     * tracks what it has seen). */
@@ -143,7 +142,6 @@ object CdcStream {
       mvKey: String, mvCols: Seq[String],
       checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow(),
-      onFold: Int => Unit = _ => (),
       onVersion: (Int, Double) => Unit = (_, _) => ()): StreamingQuery =
     s.readStream
       .option("maxFilesPerTrigger", 1)
@@ -152,8 +150,9 @@ object CdcStream {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (_: DataFrame, _: Long) =>
-        onFold(runMaintain(s, srcTable, mvTable, key, value, carry,
-          contrib, mvKey, mvCols, onVersion))
+        runMaintain(s, srcTable, mvTable, key, value, carry,
+          contrib, mvKey, mvCols, onVersion)
+        ()
       }
       .start()
 }

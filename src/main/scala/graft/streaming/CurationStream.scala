@@ -25,10 +25,9 @@ import graft.ops.{Funnel, Pack}
   *     per-pack `manifest/batch=N` — its `_SUCCESS` is the batch's
   *     commit marker.
   *
-  * Same idempotence contract as [[DedupStream]]/[[FunnelStream]]:
-  * overwrite-mode per-batch partitions, marker written last, standing
-  * reads at `batch < batchId` — a redelivered half-written batch
-  * replays cleanly and never dedups against its own first attempt.
+  * Batches commit on the [[Drain]] protocol (the manifest is the
+  * marker): a redelivered half-written batch replays cleanly and
+  * never dedups against its own first attempt.
   */
 object CurationStream {
 
@@ -43,58 +42,41 @@ object CurationStream {
       budget: Long = 512L, nShards: Int = 8,
       compactEvery: Option[Int] = None, keepRecent: Int = 2,
       evalDf: Option[DataFrame] = None,
-      deconFlagAt: Double = 0.2,
-      mixRatesPpm: Option[Seq[(String, Long)]] = None,
-      sourceCol: String = "source", mixSalt: String = "mix"): DataFrame = {
-    compactEvery.foreach(n => require(n >= 1, "compactEvery must be >= 1"))
+      mixRatesPpm: Option[Seq[(String, Long)]] = None): DataFrame = {
     // the eval suite is FROZEN for the drain's lifetime: shingle it
     // once here and cache, instead of re-exploding it every batch
     val shE = evalDf.map(ev =>
       graft.ops.Decontaminate.evalShingles(ev, textCol, idCol).cache())
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curateBatch(s, batch, textCol, idCol, langCol, indexDir,
-          admittedDir, manifestDir, batchId, budget, nShards,
-          evalDf, deconFlagAt, mixRatesPpm, sourceCol, mixSalt,
-          evalShingles = shE)
-        // only the INDEX compacts — admitted/manifest are the output,
-        // not state the loop re-reads (the DedupStream decision-log
-        // contract)
-        IndexCompaction.maybeCompact(s, new Path(manifestDir),
-          Seq(new Path(indexDir) -> Seq("fp")), batchId, compactEvery,
-          keepRecent)
-      }
-      .start()
-    try q.awaitTermination()
+    // only the INDEX compacts — admitted/manifest are the output, not
+    // state the loop re-reads
+    try Drain.foreachBatch(s, stream, checkpointDir, compactEvery.map(n =>
+        Drain.Compaction(n, keepRecent, manifestDir,
+          Seq(Drain.Table(indexDir, Seq("fp")))))) { (batch, batchId) =>
+      curateBatch(s, batch, textCol, idCol, langCol, indexDir,
+        admittedDir, manifestDir, batchId, budget, nShards,
+        evalDf, mixRatesPpm, evalShingles = shE)
+    }
     finally shE.foreach(_.unpersist())
-    val md = new Path(manifestDir)
-    val fs = md.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(md), s"no manifest rows written under $manifestDir")
-    s.read.option("basePath", manifestDir).parquet(manifestDir)
-      .withColumn("batch", col("batch").cast("long"))
+    Drain.readBack(s, manifestDir)
       .orderBy(col("batch"), col("shard"), col("pack_id"))
   }
 
   /** One curation cycle — also directly usable by a batch caller.
     * Idempotent per (dirs, batchId). With `evalDf` set, each batch is
-    * DECONTAMINATED before the funnel: docs whose best n-gram overlap
-    * with the (static, broadcast-small) eval suite reaches
-    * `deconFlagAt` are dropped — batch-local like the quality gates,
-    * no cross-batch state, and the eval docs themselves (ratio 1.0
-    * against their own shingles) can never reach the manifest. */
+    * DECONTAMINATED before the funnel: docs whose best 3-gram overlap
+    * with the (static, broadcast-small) eval suite reaches 0.2 are
+    * dropped — batch-local like the quality gates, no cross-batch
+    * state, and the eval docs themselves (ratio 1.0 against their own
+    * shingles) can never reach the manifest. With `mixRatesPpm` set,
+    * the batch's `source` column keys the frozen rates (salt "mix"). */
   def curateBatch(
       s: SparkSession, batch: DataFrame, textCol: String, idCol: String,
       langCol: String, indexDir: String, admittedDir: String,
       manifestDir: String, batchId: Long, budget: Long,
       nShards: Int, evalDf: Option[DataFrame] = None,
-      deconFlagAt: Double = 0.2,
       mixRatesPpm: Option[Seq[(String, Long)]] = None,
-      sourceCol: String = "source", mixSalt: String = "mix",
       evalShingles: Option[DataFrame] = None): Unit =
-    graft.core.CacheScope.withScope {
+    Drain.gate(s, manifestDir, batchId, Seq(indexDir)) {
       // `evalShingles` (the drain's cached frame) wins over
       // re-shingling `evalDf` — a direct batch caller may pass either
       val shE = evalShingles.orElse(evalDf.map(ev =>
@@ -102,53 +84,50 @@ object CurationStream {
       val gated = shE.fold(batch) { sh =>
         batch.join(
           graft.ops.Decontaminate.flaggedIdsPreShingled(batch, sh,
-              textCol, idCol, n = 3, flagAt = deconFlagAt)
+              textCol, idCol, n = 3, flagAt = 0.2)
             .withColumnRenamed("id", idCol),
           Seq(idCol), "left_anti")
       }
-      // gate + flags + cross-batch survivors + index append: the
-      // shared cycle (manifest is this drain's commit marker)
-      FunnelStream.survivorCycle(s, gated, textCol, idCol, langCol,
-          indexDir, manifestDir, batchId)
-        .foreach { case (_, surv) =>
-          val packed = graft.core.CacheScope.cache(mixRatesPpm match {
-            case None =>
-              Pack.assignPacksOn(surv.select(col("id"), col("n_words")),
-                "id", col("n_words"), budget, nShards)
-            case Some(rates) =>
-              // fixed-rate mixing/upsampling before packing: rates
-              // are frozen offline, the batch applies them locally
-              // (Mix.copiesAtRatesOn); copies pack on the composite
-              // (doc, epoch) key exactly as the batch operator does
-              // one source per id even if the batch redelivered the
-              // same row twice (the funnel admits one survivor; a
-              // plain join would multiply its copies)
-              val srcOf = batch
-                .select(col(idCol).as("id"), col(sourceCol).as("source"))
-                .groupBy(col("id")).agg(min(col("source")).as("source"))
-              val copies = graft.ops.Mix.copiesAtRatesOn(
-                surv.select(col("id"), col("n_words").as("n_tokens"))
-                  .join(srcOf, Seq("id")),
-                rates, mixSalt)
-              Pack.assignPacksOn(
-                copies.select(
-                  concat_ws("#", col("id"), col("epoch")).as("copy_id"),
-                  col("id").as("doc"), col("epoch"), col("n_tokens")),
-                "copy_id", col("n_tokens"), budget, nShards)
-          })
-          val admitted = mixRatesPpm match {
-            case None =>
-              packed.select(col("id"), col("toks"), col("shard"),
-                col("pack_id"))
-            case Some(_) =>
-              packed.select(col("doc").as("id"), col("epoch"),
-                col("toks"), col("shard"), col("pack_id"))
-          }
-          admitted
-            .write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
-          Pack.summarize(packed,
-              if (mixRatesPpm.isDefined) "copy_id" else "id")
-            .write.mode("overwrite").parquet(s"$manifestDir/batch=$batchId")
-        }
+      // flags + cross-batch survivors + index append: the shared half
+      val (_, surv) = FunnelStream.survivors(s, gated, textCol, idCol,
+        langCol, indexDir, batchId)
+      val packed = graft.core.CacheScope.cache(mixRatesPpm match {
+        case None =>
+          Pack.assignPacksOn(surv.select(col("id"), col("n_words")),
+            "id", col("n_words"), budget, nShards)
+        case Some(rates) =>
+          // fixed-rate mixing/upsampling before packing: rates
+          // are frozen offline, the batch applies them locally
+          // (Mix.copiesAtRatesOn); copies pack on the composite
+          // (doc, epoch) key exactly as the batch operator does
+          // one source per id even if the batch redelivered the
+          // same row twice (the funnel admits one survivor; a
+          // plain join would multiply its copies)
+          val srcOf = batch
+            .select(col(idCol).as("id"), col("source"))
+            .groupBy(col("id")).agg(min(col("source")).as("source"))
+          val copies = graft.ops.Mix.copiesAtRatesOn(
+            surv.select(col("id"), col("n_words").as("n_tokens"))
+              .join(srcOf, Seq("id")),
+            rates, "mix")
+          Pack.assignPacksOn(
+            copies.select(
+              concat_ws("#", col("id"), col("epoch")).as("copy_id"),
+              col("id").as("doc"), col("epoch"), col("n_tokens")),
+            "copy_id", col("n_tokens"), budget, nShards)
+      })
+      val admitted = mixRatesPpm match {
+        case None =>
+          packed.select(col("id"), col("toks"), col("shard"),
+            col("pack_id"))
+        case Some(_) =>
+          packed.select(col("doc").as("id"), col("epoch"),
+            col("toks"), col("shard"), col("pack_id"))
+      }
+      admitted
+        .write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
+      Pack.summarize(packed,
+          if (mixRatesPpm.isDefined) "copy_id" else "id")
+        .write.mode("overwrite").parquet(s"$manifestDir/batch=$batchId")
     }
 }

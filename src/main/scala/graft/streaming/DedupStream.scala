@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.ops.Dedup
 
 /** Continuous-ingest dedup: the incremental ADMISSION loop
@@ -26,15 +24,11 @@ import graft.ops.Dedup
   * express — and every step inside the batch is the same distributed
   * plan the batch entry (`q_dedup_admit`) runs.
   *
-  * IDEMPOTENT under at-least-once redelivery: foreachBatch may
-  * re-execute a batch id after a failure, so every write lands in a
-  * per-batch partition directory with mode=overwrite, the decision
-  * write commits LAST (its `_SUCCESS` marker is the batch's commit
-  * record — seen => the whole cycle already ran, skip), and the
-  * standing side reads only partitions with `batch < batchId`, so a
-  * half-written own batch can never leak into its own verify (a doc
-  * would otherwise match its first-attempt rows at jaccard 1 and
-  * reject itself).
+  * IDEMPOTENT under at-least-once redelivery: batches commit on the
+  * [[Drain]] protocol with the decision partition as the marker, and
+  * the standing side reads only `batch < batchId`, so a half-written
+  * own batch never leaks into its own verify (a doc would otherwise
+  * match its first-attempt rows at jaccard 1 and reject itself).
   *
   * Admission semantics are per-batch-vs-standing: duplicates WITHIN
   * one micro-batch are both admitted (intra-batch dedup composes
@@ -51,37 +45,22 @@ object DedupStream {
   /** Drain `stream` (a streaming DataFrame of documents) through the
     * admission loop with `Trigger.AvailableNow`, then return the
     * accumulated decision log. Dirs must be on shared storage on a
-    * real cluster (same contract as the other streaming sinks).
+    * real cluster ([[Drain]]).
     * `compactEvery = Some(n)` runs [[compactIndex]] after every n-th
     * committed batch, keeping the standing side's partition count
-    * bounded across an unbounded drain (the compactor is idempotent
-    * and crash-safe, so compacting inside the drain loop is sound —
-    * the next batch's recovery pass completes any interrupted
-    * swap). */
+    * bounded across an unbounded drain. */
   def runAdmit(
       s: SparkSession, stream: DataFrame, textCol: String, idCol: String,
       indexDir: String, decisionsDir: String, checkpointDir: String,
       threshold: Double = 0.5, maxDf: Long = 1000L,
       compactEvery: Option[Int] = None, keepRecent: Int = 2): DataFrame = {
-    compactEvery.foreach(n => require(n >= 1, "compactEvery must be >= 1"))
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatch(s, batch, textCol, idCol, indexDir, decisionsDir,
-          batchId, threshold, maxDf)
-        compactEvery.filter(n => (batchId + 1) % n == 0).foreach { _ =>
-          compactIndex(s, indexDir, decisionsDir, keepRecent); ()
-        }
-      }
-      .start()
-    q.awaitTermination()
-    val dec = new Path(decisionsDir)
-    val fs = dec.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(dec), s"no decisions written under $decisionsDir")
-    s.read.option("basePath", decisionsDir).parquet(decisionsDir)
-      .drop("batch")
+    Drain.foreachBatch(s, stream, checkpointDir, compactEvery.map(n =>
+        Drain.Compaction(n, keepRecent, decisionsDir,
+          indexTables(indexDir)))) { (batch, batchId) =>
+      admitBatch(s, batch, textCol, idCol, indexDir, decisionsDir,
+        batchId, threshold, maxDf)
+    }
+    Drain.readBack(s, decisionsDir).drop("batch")
   }
 
   /** One admission cycle — also directly usable by a batch caller
@@ -92,28 +71,11 @@ object DedupStream {
       s: SparkSession, batch: DataFrame, textCol: String, idCol: String,
       indexDir: String, decisionsDir: String, batchId: Long,
       threshold: Double, maxDf: Long): Unit =
-    graft.core.CacheScope.withScope {
-      val conf = s.sparkContext.hadoopConfiguration
-      val fs = new Path(indexDir).getFileSystem(conf)
-      // the decision log may live on a different scheme than the
-      // index — resolve its own FileSystem for the marker probe
-      val dfs = new Path(decisionsDir).getFileSystem(conf)
-      // a compaction that crashed mid-swap leaves the index missing
-      // rows it has safely staged — roll it forward BEFORE reading
-      // the standing side (cheap: one listing per table, which the
-      // standing read pays anyway)
-      Seq("bands", "shingles")
-        .foreach(t => recoverCompaction(fs, new Path(s"$indexDir/$t")))
-      val decBatchDir = s"$decisionsDir/batch=$batchId"
-      // commit marker: the decision partition's _SUCCESS is written
-      // LAST — present means this batch fully ran already
-      if (dfs.exists(new Path(s"$decBatchDir/_SUCCESS"))) return
-
+    Drain.gate(s, decisionsDir, batchId, indexTables(indexDir).map(_.dir)) {
       // committed batch < batchId partitions by explicit path
-      // (torn-write-safe: a crashed own-batch write never reaches
-      // schema inference — see IndexCompaction.readStanding)
+      // (torn-write-safe, see Drain.readStanding)
       def standing(dir: String, like: DataFrame): DataFrame =
-        IndexCompaction.readStanding(s, fs, new Path(dir), batchId, like)
+        Drain.readStanding(s, dir, batchId, like)
 
       val sh0 = Dedup.wordShingles(batch, textCol, idCol)
       val bandsDir = s"$indexDir/bands"
@@ -143,51 +105,27 @@ object DedupStream {
         .write.mode("overwrite").parquet(s"$bandsDir/batch=$batchId")
       newSh.join(admitted, Seq("id"))
         .write.mode("overwrite").parquet(s"$shinglesDir/batch=$batchId")
-      decisions.write.mode("overwrite").parquet(decBatchDir)
+      decisions.write.mode("overwrite")
+        .parquet(s"$decisionsDir/batch=$batchId")
     }
 
   // ---- index compaction ---------------------------------------------------
 
-  /** Compact the standing index. Every admission cycle lists and
-    * reads ALL prior `batch=K` partitions, so after thousands of
-    * batches both the listing and the standing-side scan degrade
-    * linearly in drain age. Compaction rewrites all partitions at or
-    * below a cutoff into ONE `batch=cutoff` partition per table —
-    * bands clustered by (band, bh) and shingles by g, so the
-    * compacted row groups carry the min/max stats the standing-side
-    * joins skip on.
-    *
-    * The cutoff is `maxCommitted - keepRecent`: the most recent
-    * `keepRecent` committed batches stay as separate partitions — a
-    * retention watermark for inspecting or re-driving recent batches.
-    * CORRECTNESS never depends on it: a redelivered batch either
-    * committed (its decision `_SUCCESS` short-circuits the cycle — it
-    * never reads the index again) or did not, in which case its id
-    * exceeds every committed id, hence the cutoff, and its
-    * `batch < id` standing read sees the compacted partition whole.
-    * The decision LOG is never compacted — it is the output, not
-    * state the loop re-reads.
-    *
-    * Crash safety is roll-forward: rows stage into a dot-dir the
-    * readers ignore, `_SUCCESS` (written last by the committer) marks
-    * the stage complete, and only then are source partitions dropped
-    * and the stage renamed in. A crash before `_SUCCESS` discards the
-    * stage; a crash after it leaves a state [[recoverCompaction]]
-    * completes — and every admission cycle runs recovery first, so a
-    * crashed compactor can never silently shrink the standing side.
-    * Run between drains (or from a maintenance job); one compactor at
-    * a time per index.
-    *
-    * Returns the cutoff if any table was rewritten. */
+  /** Compact the standing index: every partition at or below
+    * `maxCommitted - keepRecent` folds into one `batch=cutoff`
+    * partition per table ([[Drain.compactCommitted]]), bands
+    * clustered by (band, bh) and shingles by g. The most recent
+    * `keepRecent` committed batches stay separate, a retention
+    * watermark for inspecting or re-driving recent batches;
+    * correctness never depends on it. The decision LOG is never
+    * compacted: it is the output, not state the loop re-reads. Run
+    * between drains or from a maintenance job; one compactor at a
+    * time per index. Returns the cutoff if any table was rewritten. */
   def compactIndex(s: SparkSession, indexDir: String, decisionsDir: String,
       keepRecent: Int = 2): Option[Long] =
-    IndexCompaction.compactCommitted(s, new Path(decisionsDir),
-      Seq(new Path(s"$indexDir/bands") -> Seq("band", "bh"),
-        new Path(s"$indexDir/shingles") -> Seq("g")),
-      keepRecent)
+    Drain.compactCommitted(s, decisionsDir, indexTables(indexDir), keepRecent)
 
-  /** See [[IndexCompaction.recover]] (kept for the admission cycle's
-    * pre-read recovery call and existing callers). */
-  private[graft] def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Unit = IndexCompaction.recover(fs, dir)
+  private def indexTables(indexDir: String): Seq[Drain.Table] = Seq(
+    Drain.Table(s"$indexDir/bands", Seq("band", "bh")),
+    Drain.Table(s"$indexDir/shingles", Seq("g")))
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 import graft.core.Num
 
@@ -477,19 +477,12 @@ object EventStream {
   def runUpdateToParquet(
       s: SparkSession, agg: DataFrame, outDir: String,
       checkpointDir: String, keyCols: Seq[String]): DataFrame = {
-    val q = StreamTune.withStreamShuffle(agg) {
-      agg.writeStream
-        .outputMode(OutputMode.Update)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("_batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-    }
-    q.awaitTermination()
+    Drain.await(agg, checkpointDir, OutputMode.Update, streamShuffle = true)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.withColumn("_batch_id", lit(batchId))
+          .write.mode("append").parquet(outDir)
+        ()
+      })
     latestPerKey(
       readBackOrEmpty(s, outDir, agg.schema.add("_batch_id", LongType)),
       keyCols)
@@ -497,13 +490,17 @@ object EventStream {
 
   /** A zero-row stream writes nothing, so the sink dir may be absent
     * or data-file-free; reading back with the expected schema (rather
-    * than inference) returns an empty frame instead of erroring. */
+    * than inference) returns an empty frame instead of erroring. The
+    * probe goes through the dir's own Hadoop FileSystem, so a sink on
+    * any scheme reads back. */
   private def readBackOrEmpty(
-      s: SparkSession, outDir: String, schema: StructType): DataFrame =
-    if (new java.io.File(outDir).exists)
+      s: SparkSession, outDir: String, schema: StructType): DataFrame = {
+    val out = new org.apache.hadoop.fs.Path(outDir)
+    if (out.getFileSystem(s.sparkContext.hadoopConfiguration).exists(out))
       s.read.schema(schema).parquet(outDir)
     else s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  }
 
   /** Last-update-wins compaction of an Update-mode batch log: for each
     * key keep the row from the highest `_batch_id`. */
@@ -524,16 +521,8 @@ object EventStream {
   def runAppendToParquet(
       s: SparkSession, stream: DataFrame, outDir: String,
       checkpointDir: String): DataFrame = {
-    val q = StreamTune.withStreamShuffle(stream) {
-      stream.writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    q.awaitTermination()
+    Drain.await(stream, checkpointDir, streamShuffle = true)(
+      _.format("parquet").option("path", outDir))
     readBackOrEmpty(s, outDir, stream.schema)
   }
 

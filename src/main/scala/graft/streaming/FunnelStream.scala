@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.ops.Funnel
 
 /** Continuous-ingest filter funnel: the staged attrition report
@@ -25,18 +23,14 @@ import graft.ops.Funnel
   *     both the doc and the token count agree with the batch twin
   *     regardless of which copy each side kept).
   *
-  * Same idempotence contract as [[DedupStream]]: per-batch partition
-  * dirs in overwrite mode, the funnel partition commits LAST (its
-  * `_SUCCESS` is the batch's marker — present means the whole cycle
-  * ran, skip), and the standing side reads only committed
-  * `batch < batchId` partitions by explicit path
-  * ([[IndexCompaction.readStanding]] — a torn own-batch write can
-  * never poison a redelivery). The cycle mechanics (marker gate,
-  * recovery, standing anti-join, index append) are
-  * [[FunnelStream.survivorCycle]], shared with [[CurationStream]].
-  * State is one slim parquet table of fingerprints — no driver-side
-  * state store; `compactEvery` bounds its partition count across an
-  * unbounded drain via [[IndexCompaction]].
+  * Batches commit on the [[Drain]] protocol: the funnel partition is
+  * the marker, written last; the standing side reads only committed
+  * `batch < batchId` partitions. The survivor half of the cycle
+  * (flags, standing anti-join, index append) is
+  * [[FunnelStream.survivors]], shared with [[CurationStream]]. State
+  * is one slim parquet table of fingerprints, no driver-side state
+  * store; `compactEvery` bounds its partition count across an
+  * unbounded drain.
   */
 object FunnelStream {
 
@@ -51,62 +45,35 @@ object FunnelStream {
       langCol: String, indexDir: String, funnelDir: String,
       checkpointDir: String, compactEvery: Option[Int] = None,
       keepRecent: Int = 2): DataFrame = {
-    compactEvery.foreach(n => require(n >= 1, "compactEvery must be >= 1"))
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        funnelBatch(s, batch, textCol, idCol, langCol,
-          indexDir, funnelDir, batchId)
-        IndexCompaction.maybeCompact(s, new Path(funnelDir),
-          Seq(new Path(indexDir) -> Seq("fp")), batchId, compactEvery,
-          keepRecent)
-      }
-      .start()
-    q.awaitTermination()
-    val fd = new Path(funnelDir)
-    val fs = fd.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(fd), s"no funnel rows written under $funnelDir")
-    s.read.option("basePath", funnelDir).parquet(funnelDir)
-      // the partition column infers as int; the log's contract is long
-      .withColumn("batch", col("batch").cast("long"))
-      .orderBy(col("batch"), col("stage_idx"))
+    Drain.foreachBatch(s, stream, checkpointDir, compactEvery.map(n =>
+        Drain.Compaction(n, keepRecent, funnelDir,
+          Seq(Drain.Table(indexDir, Seq("fp")))))) { (batch, batchId) =>
+      funnelBatch(s, batch, textCol, idCol, langCol,
+        indexDir, funnelDir, batchId)
+    }
+    Drain.readBack(s, funnelDir).orderBy(col("batch"), col("stage_idx"))
   }
 
-  /** The shared half of a funnel/curation cycle: compaction
-    * recovery, the marker gate, per-batch flags, cross-batch
-    * survivors, and the index append. Returns None when `markerDir`'s
-    * `batch=batchId` already committed (the redelivery short-circuit);
-    * otherwise Some((flags, survivors)) — both cached in the ambient
-    * [[graft.core.CacheScope]] — AFTER appending the survivors'
-    * fingerprints to `indexDir/batch=batchId`. The caller writes its
-    * own outputs and MUST write the `markerDir/batch=batchId`
-    * partition last (its `_SUCCESS` is the commit marker this gate
-    * tests). */
-  private[streaming] def survivorCycle(
+  /** The shared half of a funnel/curation cycle, run inside the
+    * caller's [[Drain.gate]]: per-batch flags, cross-batch survivors,
+    * and the index append. Returns (flags, survivors), both cached in
+    * the ambient [[graft.core.CacheScope]], AFTER appending the
+    * survivors' fingerprints to `indexDir/batch=batchId`. */
+  private[streaming] def survivors(
       s: SparkSession, batch: DataFrame, textCol: String, idCol: String,
-      langCol: String, indexDir: String, markerDir: String,
-      batchId: Long): Option[(DataFrame, DataFrame)] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val ifs = new Path(indexDir).getFileSystem(conf)
-    val mfs = new Path(markerDir).getFileSystem(conf)
-    // roll a crashed index compaction forward before reading the
-    // standing side (same contract as DedupStream.admitBatch)
-    IndexCompaction.recover(ifs, new Path(indexDir))
-    if (mfs.exists(new Path(s"$markerDir/batch=$batchId/_SUCCESS")))
-      return None
+      langCol: String, indexDir: String,
+      batchId: Long): (DataFrame, DataFrame) = {
     val f = graft.core.CacheScope.cache(
       Funnel.flags(batch, textCol, idCol, langCol))
-    val standing = IndexCompaction.readStanding(s, ifs,
-      new Path(indexDir), batchId, f.select(col("fp")))
+    val standing = Drain.readStanding(s, indexDir, batchId,
+      f.select(col("fp")))
     // first-wins within the batch, then against everything admitted
     // before it (slim anti-join on the fingerprint only)
     val surv = graft.core.CacheScope.cache(
       Funnel.uniqueWithin(f).join(standing, Seq("fp"), "left_anti"))
     surv.select(col("fp"))
       .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-    Some((f, surv))
+    (f, surv)
   }
 
   /** One funnel cycle — also directly usable by a batch caller that
@@ -115,12 +82,10 @@ object FunnelStream {
       s: SparkSession, batch: DataFrame, textCol: String, idCol: String,
       langCol: String, indexDir: String, funnelDir: String,
       batchId: Long): Unit =
-    graft.core.CacheScope.withScope {
-      survivorCycle(s, batch, textCol, idCol, langCol, indexDir,
-          funnelDir, batchId)
-        .foreach { case (f, surv) =>
-          Funnel.stageSummary(f, surv)
-            .write.mode("overwrite").parquet(s"$funnelDir/batch=$batchId")
-        }
+    Drain.gate(s, funnelDir, batchId, Seq(indexDir)) {
+      val (f, surv) = survivors(s, batch, textCol, idCol, langCol,
+        indexDir, batchId)
+      Funnel.stageSummary(f, surv)
+        .write.mode("overwrite").parquet(s"$funnelDir/batch=$batchId")
     }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
 import graft.ops.{Ols, SnapTable}
 
@@ -55,22 +54,15 @@ object OlsStream {
   def runFit(s: SparkSession, stream: DataFrame, features: Seq[String],
       target: String, statsTable: String, ckpt: String): Ols.Model = {
     val k = features.size
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val add = Ols.stats(batch, features, target)
-        val standing =
-          if (SnapTable.versions(s, statsTable).isEmpty)
-            Ols.SuffStats(k, Vector.fill(add.m.size)(BigInt(0)))
-          else statsOf(s, statsTable, k)
-        SnapTable.commitIfAbsent(s, toDf(s, standing.add(add)),
-          statsTable, "overwrite", s"batch-$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    Drain.foreachBatch(s, stream, ckpt) { (batch, batchId) =>
+      val add = Ols.stats(batch, features, target)
+      val standing =
+        if (SnapTable.versions(s, statsTable).isEmpty)
+          Ols.SuffStats(k, Vector.fill(add.m.size)(BigInt(0)))
+        else statsOf(s, statsTable, k)
+      SnapTable.commitIfAbsent(s, toDf(s, standing.add(add)),
+        statsTable, "overwrite", s"batch-$batchId")
+    }
     statsOf(s, statsTable, k).solve()
   }
 }

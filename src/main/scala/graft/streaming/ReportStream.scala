@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.report.Groups
 
 /** Continuous report-section refresh — the streaming twin of the
@@ -48,13 +46,18 @@ object ReportStream {
       compactEvery: Option[Int] = None, keepRecent: Int = 1): DataFrame = {
     require(keepRecent >= 1,
       "keepRecent < 1 would fold a batch the checkpoint may replay")
-    require(compactEvery.forall(_ >= 1),
-      "compactEvery < 1 is meaningless (0 divides-by-zero mid-drain)")
     val category = cfg.category
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // the runs store is its own marker table. Compaction folds every
+    // batch at least keepRecent behind the newest committed one into
+    // one category-partitioned prefix (keepRecent >= 1 keeps the
+    // replay window out of the fold: an uncommitted batch only ever
+    // overwrites its OWN prefix on restart), so listing cost per
+    // refresh is O(keepRecent + 1), not O(drain age), and the
+    // refresh's category pruning survives the fold.
+    Drain.foreachBatch(s, stream, checkpointDir, compactEvery.map(n =>
+        Drain.Compaction(n, keepRecent, runsDir,
+          Seq(Drain.Table(runsDir, Seq(category), partitioned = true))))) {
+      (batch, batchId) =>
         val rows = prepare(batch)
         // bounded collect: one value per group present in THIS batch
         val affected = rows.select(category).distinct().collect().map(_.get(0))
@@ -76,9 +79,7 @@ object ReportStream {
           // a crashed compaction swap may have deleted source batch
           // dirs without renaming the stage in — roll it forward (or
           // discard an uncommitted stage) before the standing read
-          val runsPath = new Path(runsDir)
-          val fs = runsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-          IndexCompaction.recover(fs, runsPath)
+          Drain.recover(s, runsDir)
           val changedRuns = s.read.option("basePath", runsDir)
             .parquet(s"$runsDir/batch=*")
             .filter(catMatch)
@@ -88,24 +89,8 @@ object ReportStream {
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(category)
             .parquet(reportDir)
-          // bound the store's batch-prefix count: fold every batch at
-          // least keepRecent behind the newest committed one into a
-          // single compacted partition (keepRecent >= 1 keeps the
-          // replay window out of the fold — an uncommitted batch only
-          // ever overwrites its OWN prefix on restart). Listing cost
-          // per refresh is then O(keepRecent + 1), not O(drain age).
-          compactEvery.filter(n => (batchId + 1) % n == 0).foreach { _ =>
-            IndexCompaction.batchIds(fs, runsPath)
-              .filter(b => fs.exists(new Path(runsPath, s"batch=$b/_SUCCESS")))
-              .reduceOption(_ max _).map(_ - keepRecent).filter(_ > 0)
-              .foreach(cutoff => IndexCompaction.compactTablePartitioned(
-                s, fs, runsPath, cutoff, Seq(category)))
-          }
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    }
     s.read.parquet(reportDir)
   }
 }

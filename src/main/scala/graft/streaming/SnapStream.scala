@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.ops.SnapTable
 
 /** Continuous ingestion INTO a snapshot-versioned table
@@ -48,49 +47,25 @@ object SnapStream {
     * a filtered [[SnapTable.read]] plans selective reads over the
     * live feed without a single query-time footer probe.
     * `partitionBy` stages each batch Hive-layout, so the same read
-    * prunes partitions too.
-    * `checkpointEvery > 0` writes a CADENCED head checkpoint
-    * ([[SnapTable.checkpointNow]]) every that-many commits — for
-    * drains whose retention must keep long history (vacuum can't
-    * bound the chain), this caps every reader's chain walk at the
-    * cadence instead of the drain's age
-    * (PLANS.md "Round 17: manifest planning at 10⁴–10⁵ lines": the
-    * walk is the one depth-linear planning cost; a checkpoint
-    * collapses it 8×). */
-  /** `tagScanDepth` bounds the per-commit tag-miss scan (otherwise
-    * one header read per live version — the one age-linear commit
-    * cost left when retention keeps long history): Spark's replay
-    * window is the newest uncommitted batch, so any depth past a
-    * handful of versions holds the idempotence contract; 64 is miles
-    * of margin. */
+    * prunes partitions too. The per-commit tag-miss scan is bounded
+    * at 64 versions (otherwise one header read per live version, the
+    * one age-linear commit cost left when retention keeps long
+    * history): Spark's replay window is the newest uncommitted batch,
+    * so 64 is miles of margin. */
   def runIngest(s: SparkSession, stream: DataFrame, table: String,
       ckpt: String, vacuumEvery: Int = 0, keep: Int = 0,
-      afterCommit: Long => Unit = _ => (),
       statsCols: Seq[String] = Nil,
-      partitionBy: Option[String] = None,
-      checkpointEvery: Int = 0,
-      tagScanDepth: Int = 64): Unit = {
+      partitionBy: Option[String] = None): Unit = {
     require(vacuumEvery == 0 || keep >= 2,
       "in-drain vacuum must keep at least 2 versions " +
         "(retention must cover the streaming replay horizon)")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val v = SnapTable.commitIfAbsent(s, batch, table, "append",
-            s"batch-$batchId", statsCols, partitionBy,
-            tagScanDepth = tagScanDepth)
-          if (vacuumEvery > 0 && v % vacuumEvery == 0)
-            SnapTable.vacuum(s, table, keep)
-          if (checkpointEvery > 0 && v % checkpointEvery == 0)
-            SnapTable.checkpointNow(s, table)
-          afterCommit(batchId)
-        }
-        ()
+    Drain.foreachBatch(s, stream, ckpt) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val v = SnapTable.commitIfAbsent(s, batch, table, "append",
+          s"batch-$batchId", statsCols, partitionBy, tagScanDepth = 64)
+        if (vacuumEvery > 0 && v % vacuumEvery == 0)
+          SnapTable.vacuum(s, table, keep)
       }
-      .start()
-    q.awaitTermination()
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.ops.{Ivf, Similarity}
 
 /** CONTINUOUS vector-index ingestion — the vector-store write path as
@@ -20,11 +19,10 @@ import graft.ops.{Ivf, Similarity}
   * table: the drain holds no cross-batch state beyond the index
   * partitions themselves.
   *
-  * Idempotence is the established marker-last contract: per-batch
-  * overwrite partitions, the per-cluster count manifest commits LAST
-  * (`manifest/batch=N/_SUCCESS` is the marker), a redelivered batch
-  * sees its marker and no-ops, and [[IndexCompaction]] bounds the
-  * standing partition count in-drain with crash-safe roll-forward.
+  * Batches commit on the [[Drain]] protocol with the per-cluster
+  * count manifest as the marker: a redelivered batch no-ops, and
+  * in-drain compaction bounds the standing partition count with
+  * crash-safe roll-forward.
   */
 object VectorIndexStream {
 
@@ -36,25 +34,12 @@ object VectorIndexStream {
       centroids: Array[Array[Double]], indexDir: String,
       manifestDir: String, checkpointDir: String,
       compactEvery: Option[Int] = None, keepRecent: Int = 2): DataFrame = {
-    compactEvery.foreach(n => require(n >= 1, "compactEvery must be >= 1"))
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(s, batch, centroids, indexDir, manifestDir, batchId)
-        IndexCompaction.maybeCompact(s, new Path(manifestDir),
-          Seq(new Path(indexDir) -> Seq("cluster")), batchId,
-          compactEvery, keepRecent)
-      }
-      .start()
-    q.awaitTermination()
-    val md = new Path(manifestDir)
-    val fs = md.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(md), s"no manifest rows written under $manifestDir")
-    s.read.option("basePath", manifestDir).parquet(manifestDir)
-      .withColumn("batch", col("batch").cast("long"))
-      .orderBy(col("batch"), col("cluster"))
+    Drain.foreachBatch(s, stream, checkpointDir, compactEvery.map(n =>
+        Drain.Compaction(n, keepRecent, manifestDir,
+          Seq(Drain.Table(indexDir, Seq("cluster")))))) { (batch, batchId) =>
+      ingestBatch(s, batch, centroids, indexDir, manifestDir, batchId)
+    }
+    Drain.readBack(s, manifestDir).orderBy(col("batch"), col("cluster"))
   }
 
   /** One ingestion cycle — also usable by a batch caller. Idempotent
@@ -63,13 +48,7 @@ object VectorIndexStream {
       s: SparkSession, batch: DataFrame,
       centroids: Array[Array[Double]], indexDir: String,
       manifestDir: String, batchId: Long): Unit =
-    graft.core.CacheScope.withScope {
-      val conf = s.sparkContext.hadoopConfiguration
-      val ifs = new Path(indexDir).getFileSystem(conf)
-      val mfs = new Path(manifestDir).getFileSystem(conf)
-      IndexCompaction.recover(ifs, new Path(indexDir))
-      if (mfs.exists(new Path(s"$manifestDir/batch=$batchId/_SUCCESS")))
-        return
+    Drain.gate(s, manifestDir, batchId, Seq(indexDir)) {
       val asg = graft.core.CacheScope.cache(
         Ivf.assigned(Similarity.prepared(batch), centroids))
       asg.select(col("cluster"), col("vec_id"), col("v"), col("nrm"))
@@ -94,22 +73,15 @@ object VectorIndexStream {
       s: SparkSession, indexDir: String, manifestDir: String,
       queries: DataFrame, centroids: Array[Array[Double]],
       k: Int, nProbe: Int): DataFrame = {
-    val conf = s.sparkContext.hadoopConfiguration
     val indexPath = new Path(indexDir)
-    val ifs = indexPath.getFileSystem(conf)
-    val mfs = new Path(manifestDir).getFileSystem(conf)
-    val committed = IndexCompaction.batchIds(mfs, new Path(manifestDir))
-      .filter(b => mfs.exists(new Path(s"$manifestDir/batch=$b/_SUCCESS")))
+    val ifs = indexPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val committed = Drain.committed(s, manifestDir)
     require(committed.nonEmpty, s"no committed batches under $manifestDir")
-    val present = IndexCompaction.batchIds(ifs, indexPath).toSet
-    val stageDone: Option[Long] =
-      if (!ifs.exists(indexPath)) None
-      else ifs.listStatus(indexPath).toSeq
-        .filter(_.isDirectory).map(_.getPath)
-        .filter(_.getName.startsWith(".compact_"))
-        .filter(p => ifs.exists(new Path(p, "_SUCCESS")))
-        .map(_.getName.stripPrefix(".compact_").toLong)
-        .sorted.lastOption
+    val present = Drain.batchIds(ifs, indexPath).toSet
+    val stageDone: Option[Long] = Drain.stages(ifs, indexPath)
+      .filter(p => ifs.exists(new Path(p, "_SUCCESS")))
+      .map(_.getName.stripPrefix(".compact_").toLong)
+      .sorted.lastOption
     val paths: Seq[String] = stageDone match {
       case Some(c) =>
         val tail = committed.filter(_ > c)

@@ -19,27 +19,12 @@ import graft.streaming.{CurationStream, DedupStream, EventStream,
   *
   * One scenario additionally lands the crash MID-COMPACTION: the
   * replay begins with the index in the worst swap state a crashed
-  * [[graft.streaming.IndexCompaction]] can leave (stage complete,
+  * [[graft.streaming.Drain]] compaction can leave (stage complete,
   * sources deleted, rename not done) and must roll it forward before
   * the next live batch reads the standing side.
   */
-class DrainRecoverySpec extends SparkSpec {
+class DrainRecoverySpec extends SparkSpec with CheckpointCrash {
   import spark.implicits._
-
-  /** Crash-simulation (same as StreamRecoverySpec): drop the newest
-    * checkpoint commit so the next run replays the batch whose sink
-    * output is already on disk. */
-  private def dropNewestCommit(ckpt: String): Long = {
-    val commits = new java.io.File(s"$ckpt/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    assert(commits.nonEmpty, "no committed batches to drop")
-    val newest = commits.last
-    val id = newest.getName.toLong
-    assert(newest.delete(), s"could not delete $newest")
-    val crc = new java.io.File(s"$ckpt/commits/.$id.crc")
-    if (crc.exists()) crc.delete()
-    id
-  }
 
   private def commitIds(ckpt: String): Set[Long] =
     new java.io.File(s"$ckpt/commits").listFiles()

@@ -277,6 +277,8 @@ class S3AIoSpec extends SparkSpec {
   private def bindStub(): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.s3a.impl", classOf[S3AStubFileSystem].getName)
+    hc.set("fs.AbstractFileSystem.s3a.impl",
+      classOf[S3AStubAbstractFileSystem].getName)
     // Hadoop's defaults pre-bind the s3a committer factory from
     // hadoop-aws; that jar is deliberately absent here (no egress), so
     // unbind it and let writes take the default FileOutputCommitter.
@@ -323,6 +325,26 @@ class S3AIoSpec extends SparkSpec {
       s"filter not pushed to the s3a scan:\n$plan")
     assert(plan.contains("ReadSchema: struct<n_name:string,n_regionkey:"),
       s"scan not pruned to the 2 needed columns:\n$plan")
+  }
+
+  test("S8: the stream sinks drain into an s3a:// outDir and read their rows back") {
+    import spark.implicits._
+    import graft.streaming.EventStream
+    bindStub()
+    val tmp = Files.createTempDirectory("graft_s3a_stream").toString
+    Seq((1L, 10L), (2L, 20L), (1L, 5L)).toDF("k", "v")
+      .coalesce(1).write.parquet(s"$tmp/in")
+    def src() = spark.readStream
+      .schema("k LONG, v LONG").parquet(s"$tmp/in")
+    val appended = EventStream.runAppendToParquet(spark, src(),
+      s"s3a://test-bucket$tmp/append", s"$tmp/ckpt_append")
+    assert(appended.as[(Long, Long)].collect().sorted.toSeq ===
+      Seq((1L, 5L), (1L, 10L), (2L, 20L)))
+    val updated = EventStream.runUpdateToParquet(spark,
+      src().groupBy($"k").agg(sum($"v").as("v")),
+      s"s3a://test-bucket$tmp/update", s"$tmp/ckpt_update", keyCols = Seq("k"))
+    assert(updated.as[(Long, Long)].collect().sorted.toSeq ===
+      Seq((1L, 15L), (2L, 20L)))
   }
 }
 

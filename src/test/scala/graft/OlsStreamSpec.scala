@@ -10,7 +10,7 @@ import graft.streaming.OlsStream
   * twice — the tagged-stats-snapshot contract, same axis as the other
   * standing drains.
   */
-class OlsStreamSpec extends SparkSpec {
+class OlsStreamSpec extends SparkSpec with CheckpointCrash {
   import spark.implicits._
 
   private val schema = StructType(Seq(
@@ -21,16 +21,6 @@ class OlsStreamSpec extends SparkSpec {
 
   private def src(tmp: String) = spark.readStream.schema(schema)
     .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in/*.parquet")
-
-  private def dropNewestCommit(ckpt: String): Unit = {
-    val commits = new java.io.File(s"$ckpt/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    assert(commits.nonEmpty)
-    val id = commits.last.getName.toLong
-    assert(commits.last.delete())
-    val crc = new java.io.File(s"$ckpt/commits/.$id.crc")
-    if (crc.exists()) crc.delete()
-  }
 
   test("streamed fit == batch fit, and dropped-commit replay folds nothing twice") {
     val tmp = java.nio.file.Files

@@ -47,3 +47,11 @@ class S3AStubFileSystem extends RawLocalFileSystem {
   override def listStatus(f: Path): Array[FileStatus] =
     super.listStatus(f).map(material)
 }
+
+/** The same local-backed `s3a://` stub behind Hadoop's
+  * `AbstractFileSystem` API (`fs.AbstractFileSystem.s3a.impl`): the
+  * streaming file sink keeps its `_spark_metadata` log through
+  * `FileContext`, which hadoop-aws serves with its own `S3A` class. */
+class S3AStubAbstractFileSystem(uri: URI, conf: Configuration)
+    extends org.apache.hadoop.fs.DelegateToFileSystem(
+      uri, new S3AStubFileSystem, conf, "s3a", false)

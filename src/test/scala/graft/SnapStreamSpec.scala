@@ -11,7 +11,7 @@ import graft.streaming.SnapStream
   * batch's rows a second time — the tagged-manifest idempotence is
   * what holds, not foreachBatch luck.
   */
-class SnapStreamSpec extends SparkSpec {
+class SnapStreamSpec extends SparkSpec with CheckpointCrash {
   import spark.implicits._
 
   private val schema = StructType(Seq(
@@ -22,18 +22,6 @@ class SnapStreamSpec extends SparkSpec {
 
   private def src(tmp: String) = spark.readStream.schema(schema)
     .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in/*.parquet")
-
-  private def dropNewestCommit(ckpt: String): Long = {
-    val commits = new java.io.File(s"$ckpt/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    assert(commits.nonEmpty, "no committed batches to drop")
-    val newest = commits.last
-    val id = newest.getName.toLong
-    assert(newest.delete(), s"could not delete $newest")
-    val crc = new java.io.File(s"$ckpt/commits/.$id.crc")
-    if (crc.exists()) crc.delete()
-    id
-  }
 
   test("dropped-commit replay appends nothing: the tag already committed") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_snapstream").toString

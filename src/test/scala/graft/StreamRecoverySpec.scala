@@ -27,7 +27,7 @@ import graft.streaming.{EventStream, ReportStream}
   * the checkpoint — exactly the on-disk state after a crash that hit
   * between the sink write and the commit-log write.
   */
-class StreamRecoverySpec extends SparkSpec {
+class StreamRecoverySpec extends SparkSpec with CheckpointCrash {
   import spark.implicits._
 
   private val schema = StructType(Seq(
@@ -47,22 +47,6 @@ class StreamRecoverySpec extends SparkSpec {
   private def src(tmp: String, s: SparkSession = spark) =
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in/*.parquet")
-
-  /** Crash-simulation: drop the newest checkpoint commit marker so the
-    * next run replays the last batch (sink output already on disk). */
-  private def dropNewestCommit(ckpt: String): Long = {
-    val commits = new java.io.File(s"$ckpt/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toLong)
-    assert(commits.nonEmpty, "no committed batches to drop")
-    val newest = commits.last
-    val id = newest.getName.toLong
-    assert(newest.delete(), s"could not delete $newest")
-    // the local-FS checksum sidecar must go too, or the replay's
-    // commit rename fails on the stale .crc
-    val crc = new java.io.File(s"$ckpt/commits/.$id.crc")
-    if (crc.exists()) crc.delete()
-    id
-  }
 
   test("ReportStream: crash between runs write and section upsert, restart repairs") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_recov_rs").toString
