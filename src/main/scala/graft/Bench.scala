@@ -145,6 +145,8 @@ object Bench {
     require(resetNames.subsetOf(filters.toSet),
       s"--reset names not in this sweep: ${
         (resetNames -- filters.toSet).mkString(", ")}")
+    // positional args restrict the sweep to named queries
+    val wanted = SparkEntry.select(filters.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt)
@@ -208,16 +210,6 @@ object Bench {
         (System.nanoTime() - t0) / 1e9
       }.min
 
-    // positional args restrict the sweep to named queries; an unknown
-    // name fails LOUDLY (a typo'd filter would otherwise print a
-    // healthy-looking zero-query sweep and exit 0 — a silent empty
-    // sweep could poison a round artifact)
-    val unknown = filters.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown query filter(s): ${unknown.mkString(", ")} — " +
-        s"valid names: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    val wanted =
-      if (filters.nonEmpty) filters.toSet else SparkEntry.queries.keySet
     val sweep = SparkEntry.queries.keys.filter(wanted).map { name =>
       name -> timeQuery(name, nRuns)
     }.toMap

@@ -7,9 +7,9 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val wanted = SparkEntry.select(args.toSeq)
     // the bench's session posture, so dumped plans match the measured ones
     val spark = graft.core.SessionTune.session(4, Some(sfDir), "ERROR")
-    val wanted = if (args.nonEmpty) args.toSet else SparkEntry.queries.keySet
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => wanted.contains(q._1))
       .foreach { case (name, fn) =>

@@ -58,6 +58,19 @@ object SparkEntry {
         }
       }
 
+  /** The entries `names` asks for; all of them when it is empty. An
+    * unknown name fails loudly, listing the valid ones: a typo must
+    * not run an empty sweep or write an empty dump that reads as
+    * healthy. Bench, Verify and Explain all select through here. */
+  def select(names: Seq[String]): Set[String] = {
+    val known = queries.keySet
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty,
+      s"unknown entry name(s): ${unknown.mkString(", ")} — " +
+        s"valid names: ${known.toSeq.sorted.mkString(", ")}")
+    if (names.isEmpty) known else names.toSet
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB
     * on the same parquet tables. */
   def oracleSql: Map[String, String] =

@@ -7,8 +7,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val wanted: Set[String] =
-      if (args.length > 2) args.drop(2).toSet else SparkEntry.queries.keySet
+    val wanted = SparkEntry.select(args.toSeq.drop(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the bench's session posture (graft.core.SessionTune)
     val spark = graft.core.SessionTune.session(cpus.toInt, Some(sfDir))

@@ -2,13 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge, ExpectsBinaryInput}
 import org.apache.spark.sql.types._
 
-/** RIFF/AVI video-container parsing as native codegen'd expressions
+/** RIFF/AVI video-container parsing as native codegen'd functions
   * over an opaque `binary` column — the video-modality member of the
   * real-bytes family (PNG pixels, tar shards, WAV PCM): a real chunk
   * walk that DESCENDS into LIST chunks (RIFF is uniformly chunked,
@@ -29,56 +26,18 @@ object AviExprs {
     * scale (strh of the first `vids` stream; fps = rate/scale). NULL
     * unless the bytes are a RIFF/AVI with both headers present. */
   def aviMeta(c: Column): Column =
-    Bridge.column(AviMeta(Bridge.expression(c)))
+    NativeCall.column("avi_meta", AviWalk, "meta",
+      ArrayType(LongType, containsNull = false), Seq(BinaryType))(c)
 
   /** `array<struct<idx:long, offset:long, size:long>>` of the movi
     * video-frame chunks (00dc/00db) in stream order; offset addresses
     * the first payload byte inside the container. */
   def aviFrames(c: Column): Column =
-    Bridge.column(AviFrames(Bridge.expression(c)))
+    NativeCall.column("avi_frames", AviWalk, "frames", AviWalk.FramesSchema,
+      Seq(BinaryType))(c)
 }
 
-case class AviMeta(child: Expression)
-    extends UnaryExpression with ExpectsBinaryInput {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "avi_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    AviWalk.meta(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AviWalk.meta($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-case class AviFrames(child: Expression)
-    extends UnaryExpression with ExpectsBinaryInput {
-
-  override def dataType: DataType = AviWalk.FramesSchema
-  override def nullable: Boolean = true
-  override def prettyName: String = "avi_frames"
-
-  override def nullSafeEval(input: Any): Any =
-    AviWalk.frames(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AviWalk.frames($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object AviWalk {
+object AviWalk extends Serializable {
 
   val FramesSchema: ArrayType = ArrayType(StructType(Seq(
     StructField("idx", LongType, nullable = false),

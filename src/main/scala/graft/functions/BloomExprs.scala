@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
+import org.apache.spark.sql.types.{BooleanType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Scan-stage n-gram bloom membership: does ANY word n-gram of `child`
+/** Scan-stage n-gram bloom membership: does ANY word n-gram of a text
   * (whitespace tokens, the [[graft.ops.TextAnalysis.tokens]] convention)
   * hit the bloom filter?
   *
@@ -24,40 +21,17 @@ import org.apache.spark.util.sketch.BloomFilter
   * bloom false positives — the flagged set is bit-identical to the
   * exact path's.
   *
-  * The expression is codegen'd (a helper call inside the enclosing
-  * WholeStageCodegen stage, same pattern as [[BpeExprs]]); the filter
-  * rides the plan's reference array, serialized once per task, and the
-  * probe hashes the text's UTF-8 bytes in place — shingle byte ranges
-  * are sliced straight out of the document (tokens are single-space
-  * separated by the `split(text, " ")` convention, so every shingle IS
-  * a contiguous byte range of the text; empty tokens from doubled
-  * spaces round-trip identically on both sides).
+  * The probe is one codegen'd call inside the enclosing
+  * WholeStageCodegen stage (a [[NativeCall]] on this kernel); the
+  * filter rides the plan's reference array, serialized once per task,
+  * and the probe hashes the text's UTF-8 bytes in place — shingle
+  * byte ranges are sliced straight out of the document (tokens are
+  * single-space separated by the `split(text, " ")` convention, so
+  * every shingle IS a contiguous byte range of the text; empty tokens
+  * from doubled spaces round-trip identically on both sides). Two
+  * kernels compare by `n` and the filter's bits.
   */
-case class ShingleBloomContains(child: Expression, n: Int, bloom: BloomFilter)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "shingle_bloom_contains"
-
-  override def nullSafeEval(input: Any): Any =
-    BloomExprs.containsAnyShingle(input.asInstanceOf[UTF8String], n, bloom)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bf = ctx.addReferenceObj("shingleBloom", bloom,
-      classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BloomExprs.containsAnyShingle($c, $n, $bf);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BloomExprs {
-
-  /** Expose the expression as a Column (Spark 4 classic bridge). */
-  def shingleMightOverlap(text: Column, n: Int, bloom: BloomFilter): Column =
-    Bridge.column(ShingleBloomContains(Bridge.expression(text), n, bloom))
+final case class ShingleBloom(n: Int, bloom: BloomFilter) {
 
   /** True iff any word n-gram of `text` might be in `bloom`. Tokens are
     * split on single spaces (the engine-wide convention); each shingle
@@ -66,7 +40,7 @@ object BloomExprs {
     * exactly the bytes `concat_ws(" ", slice(tokens, i, n))` would
     * produce. Documents with fewer than n tokens carry no n-gram
     * evidence and return false. */
-  def containsAnyShingle(text: UTF8String, n: Int, bloom: BloomFilter): Boolean = {
+  def containsAny(text: UTF8String): Boolean = {
     val bytes = text.getBytes
     // token start offsets: 0 and every byte after a space
     var nTokens = 1
@@ -92,4 +66,12 @@ object BloomExprs {
     }
     false
   }
+}
+
+object BloomExprs {
+
+  /** True iff any word n-gram of `text` might be in `bloom`. */
+  def shingleMightOverlap(text: Column, n: Int, bloom: BloomFilter): Column =
+    NativeCall.column("shingle_bloom_contains", ShingleBloom(n, bloom),
+      "containsAny", BooleanType, Seq(StringType))(text)
 }

@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-level trie for greedy longest-match tokenization — the
@@ -36,8 +33,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - builds are memoized per JVM keyed by an md5 of the piece list,
   *    so the table is constructed once per executor, not once per
   *    task deserialization.
+  *  - a trie compares by its piece list, so two plans built from
+  *    equal vocabularies are `sameSemantics`.
   */
-final class ByteTrie(pieces: Seq[String]) extends Serializable {
+final case class ByteTrie(pieces: Seq[String]) {
 
   // built per JVM via the companion's memo cache; never serialized
   @transient private lazy val t: ByteTrie.Tables = ByteTrie.tablesFor(pieces)
@@ -159,61 +158,9 @@ object ByteTrie {
   }
 }
 
-/** Greedy longest-match BPE token count as a native expression: one
-  * trie walk per row, codegen'd into the enclosing WholeStageCodegen
-  * stage. Result-identical to [[graft.ops.Bpe.tokenCount]]'s
-  * compiled-alternation regex (property-pinned in BpeSpec), so the
-  * DuckDB oracle for the regex path gates this one too. */
-case class BpeTokenCount(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bpe_token_count"
-
-  @transient private lazy val trie = new ByteTrie(vocab)
-
-  override def nullSafeEval(input: Any): Any =
-    trie.countTokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the reference serializes only the piece list; tables rebuild
-    // lazily per executor JVM (memoized in ByteTrie.cache)
-    val trieRef = ctx.addReferenceObj("bpeTrie", trie,
-      classOf[ByteTrie].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $trieRef.countTokens($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Greedy longest-match segmentation as a native expression: the
-  * token ARRAY under the vocab — [[BpeTokenCount]]'s walk emitting
-  * the pieces, for subword-level statistics and piece-faithful
-  * downstream features at any vocabulary size. */
-case class BpeTokenize(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-  override def prettyName: String = "bpe_tokenize"
-
-  @transient private lazy val trie = new ByteTrie(vocab)
-
-  override def nullSafeEval(input: Any): Any =
-    trie.tokenize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val trieRef = ctx.addReferenceObj("bpeTrie", trie,
-      classOf[ByteTrie].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $trieRef.tokenize($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** Greedy longest-match BPE as native functions: each is one
+  * [[NativeCall]] of a [[ByteTrie]] method, so the plan carries the
+  * piece list once and the tables rebuild lazily per executor JVM. */
 object BpeExprs {
   // validate at plan-build time on the driver: a bad vocab should be
   // one clearly-attributed IllegalArgumentException here, not N
@@ -224,9 +171,19 @@ object BpeExprs {
     vocab
   }
 
+  /** Greedy longest-match token count: one trie walk per row, inside
+    * the enclosing whole-stage codegen stage. Result-identical to
+    * [[graft.ops.Bpe.tokenCount]]'s compiled-alternation regex
+    * (property-pinned in BpeSpec), so the DuckDB oracle for the regex
+    * path gates this one too. */
   def tokenCountFast(text: Column, vocab: Seq[String]): Column =
-    Bridge.column(BpeTokenCount(Bridge.expression(text), checked(vocab)))
+    NativeCall.column("bpe_token_count", ByteTrie(checked(vocab)),
+      "countTokens", LongType, Seq(StringType))(text)
 
+  /** Greedy longest-match segmentation: the token array under the
+    * vocab ([[tokenCountFast]]'s walk emitting the pieces). */
   def tokenizeFast(text: Column, vocab: Seq[String]): Column =
-    Bridge.column(BpeTokenize(Bridge.expression(text), checked(vocab)))
+    NativeCall.column("bpe_tokenize", ByteTrie(checked(vocab)),
+      "tokenize", ArrayType(StringType, containsNull = false),
+      Seq(StringType))(text)
 }

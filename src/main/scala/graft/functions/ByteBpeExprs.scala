@@ -1,18 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.ByteLevel
 
 /** BYTE-LEVEL merge-ranked BPE — the full published GPT-2
   * construction: [[ByteLevel.Gpt2Pattern]] pre-tokenization, the
   * 256-symbol byte alphabet ([[ByteLevel.encode]]), then the ordered
-  * merge loop of [[MergeRanker]]. Unlike the letter-only merge path
+  * merge loop of [[MergeRank]]. Unlike the letter-only merge path
   * (`MergeExprs`), pieces containing digits, punctuation, and
   * non-ASCII bytes participate in merges — so a published tokenizer's
   * merges file, loaded verbatim ([[graft.ops.Bpe.parseMergesVerbatim]]),
@@ -26,72 +23,27 @@ import graft.ops.ByteLevel
   * join); the rank map builds lazily per JVM; per-pre-token results
   * memoize per executor (bounded), so a natural-language corpus pays
   * the merge loop once per distinct pre-token per executor, not once
-  * per occurrence. Both expressions are codegen'd — token accounting
-  * stays inside WholeStageCodegen, never leaving the scan stage.
+  * per occurrence. Every [[ByteBpeExprs]] function is one codegen'd
+  * call — token accounting stays inside WholeStageCodegen, never
+  * leaving the scan stage.
   */
-final class ByteBpeRanker(merges: Seq[(String, String)]) extends Serializable {
+final case class ByteBpeRanker(merges: Seq[(String, String)]) extends MergeRank {
 
-  // rank key a+" "+b is unambiguous BY CONSTRUCTION: byte-level
-  // symbols never contain a raw space (byte 0x20 encodes to 'Ġ')
-  @transient private lazy val rank: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](merges.size * 2)
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
-      require(!a.contains(' ') && !b.contains(' '),
-        s"byte-level merge symbols must not contain raw spaces: '$a $b'")
-      m.putIfAbsent(a + " " + b, Integer.valueOf(i))
-    }
-    m
+  // byte-level symbols never contain a raw space (byte 0x20 encodes
+  // to 'Ġ'): a merge with one is not in byte-symbol space at all
+  merges.foreach { case (a, b) =>
+    require(!a.contains(' ') && !b.contains(' '),
+      s"byte-level merge symbols must not contain raw spaces: '$a $b'")
   }
 
-  // per-JVM pre-token cache, keyed by the RAW pre-token; bounded in
-  // BOTH entry count and entry size — pre-tokens are unbounded (one
-  // letter/punct run each), so an entry-count cap alone would let an
-  // adversarial corpus of huge distinct runs retain gigabytes. Beyond
-  // either bound every pre-token still computes correctly, just
-  // uncached.
-  @transient private lazy val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-  private val MemoCap = 1 << 16
-  private val MemoMaxLen = 1 << 12
+  protected def baseSymbols(w: String): Array[String] =
+    ByteLevel.encode(w).map(_.toString).toArray
 
   /** Byte-level segmentation of ONE pre-token: encode to byte
-    * symbols, then merge every occurrence of the lowest-ranked
-    * adjacent pair until no listed pair remains (same fixpoint as the
-    * one-at-a-time replay the oracle runs — see [[MergeRanker]]'s
+    * symbols, then the shared merge loop (same fixpoint as the
+    * one-at-a-time replay the oracle runs — see [[MergeRank]]'s
     * equivalence note). */
-  def segmentPreToken(w: String): Array[String] = {
-    val cached = memo.get(w)
-    if (cached != null) return cached
-    var syms: Array[String] = ByteLevel.encode(w).map(_.toString).toArray
-    var done = false
-    while (!done && syms.length > 1) {
-      var bestRank = Int.MaxValue
-      var i = 0
-      while (i < syms.length - 1) {
-        val r = rank.get(syms(i) + " " + syms(i + 1))
-        if (r != null && r < bestRank) bestRank = r
-        i += 1
-      }
-      if (bestRank == Int.MaxValue) done = true
-      else {
-        val (pa, pb) = merges(bestRank)
-        val out = Array.newBuilder[String]
-        var j = 0
-        while (j < syms.length) {
-          if (j < syms.length - 1 && syms(j) == pa && syms(j + 1) == pb) {
-            out += pa + pb
-            j += 2
-          } else {
-            out += syms(j)
-            j += 1
-          }
-        }
-        syms = out.result()
-      }
-    }
-    if (w.length <= MemoMaxLen && memo.size < MemoCap) memo.put(w, syms)
-    syms
-  }
+  def segmentPreToken(w: String): Array[String] = segment(w)
 
   /** The merge-derived VOCABULARY, by the published construction: the
     * 256 byte symbols first in ascending mapped-code-point order
@@ -120,7 +72,7 @@ final class ByteBpeRanker(merges: Seq[(String, String)]) extends Serializable {
   def tokenIds(s: UTF8String): GenericArrayData = {
     val out = new scala.collection.mutable.ArrayBuffer[Any](16)
     ByteLevel.preTokenize(s.toString).foreach { w =>
-      val syms = segmentPreToken(w)
+      val syms = segment(w)
       var i = 0
       while (i < syms.length) {
         val id = pieceId.get(syms(i))
@@ -171,7 +123,7 @@ final class ByteBpeRanker(merges: Seq[(String, String)]) extends Serializable {
   def countTokens(s: UTF8String): Long = {
     var n = 0L
     ByteLevel.preTokenize(s.toString)
-      .foreach(w => n += segmentPreToken(w).length)
+      .foreach(w => n += segment(w).length)
     n
   }
 
@@ -180,117 +132,37 @@ final class ByteBpeRanker(merges: Seq[(String, String)]) extends Serializable {
   def tokenize(s: UTF8String): GenericArrayData = {
     val out = new scala.collection.mutable.ArrayBuffer[AnyRef](16)
     ByteLevel.preTokenize(s.toString).foreach { w =>
-      segmentPreToken(w).foreach(p => out += UTF8String.fromString(p))
+      segment(w).foreach(p => out += UTF8String.fromString(p))
     }
     new GenericArrayData(out.toArray)
   }
 }
 
-/** Byte-level BPE token count as a codegen'd native expression. */
-case class ByteBpeTokenCount(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "byte_bpe_token_count"
-
-  @transient private lazy val ranker = new ByteBpeRanker(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    ranker.countTokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("byteBpeRanker", ranker,
-      classOf[ByteBpeRanker].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countTokens($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Byte-level BPE segmentation as a native expression: the token
-  * ARRAY, pieces in byte-symbol space. */
-case class ByteBpeTokenize(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "byte_bpe_tokenize"
-
-  @transient private lazy val ranker = new ByteBpeRanker(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    ranker.tokenize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("byteBpeRanker", ranker,
-      classOf[ByteBpeRanker].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.tokenize($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Token IDS under the merge-derived vocabulary, as a native
-  * expression — `array<int>`, the dtype a packed training batch
-  * stores. */
-case class ByteBpeTokenIds(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-  override def prettyName: String = "byte_bpe_token_ids"
-
-  @transient private lazy val ranker = new ByteBpeRanker(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    ranker.tokenIds(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("byteBpeRanker", ranker,
-      classOf[ByteBpeRanker].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.tokenIds($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Detokenization as a native expression: `array<int>` token ids back
-  * to the document text — the inverse of [[ByteBpeTokenIds]] and the
-  * proof that the id stream is a loader-faithful artifact. */
-case class ByteBpeDecode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "byte_bpe_decode"
-
-  @transient private lazy val ranker = new ByteBpeRanker(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    ranker.decodeIds(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("byteBpeRanker", ranker,
-      classOf[ByteBpeRanker].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.decodeIds($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** Byte-level BPE as native functions over one [[ByteBpeRanker]]:
+  * each is one call per row inside the enclosing whole-stage codegen
+  * stage. */
 object ByteBpeExprs {
+  private def call(name: String, method: String, out: DataType, in: DataType,
+      c: Column, merges: Seq[(String, String)]): Column =
+    NativeCall.column(name, ByteBpeRanker(merges), method, out, Seq(in))(c)
+
   def byteTokenCount(text: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(ByteBpeTokenCount(Bridge.expression(text), merges))
+    call("byte_bpe_token_count", "countTokens", LongType, StringType, text, merges)
 
+  /** The token array, pieces in byte-symbol space. */
   def byteTokenize(text: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(ByteBpeTokenize(Bridge.expression(text), merges))
+    call("byte_bpe_tokenize", "tokenize",
+      ArrayType(StringType, containsNull = false), StringType, text, merges)
 
+  /** Token ids under the merge-derived vocabulary: `array<int>`, the
+    * dtype a packed training batch stores. */
   def byteTokenIds(text: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(ByteBpeTokenIds(Bridge.expression(text), merges))
+    call("byte_bpe_token_ids", "tokenIds",
+      ArrayType(IntegerType, containsNull = false), StringType, text, merges)
 
+  /** Detokenization: `array<int>` token ids back to the document text,
+    * the proof that the id stream is a loader-faithful artifact. */
   def byteDecodeIds(ids: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(ByteBpeDecode(Bridge.expression(ids), merges))
+    call("byte_bpe_decode", "decodeIds", StringType,
+      ArrayType(IntegerType), ids, merges)
 }

@@ -23,13 +23,13 @@ object GraftExtensions {
   private val dotProductDescriptor
       : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("dot_product"),
-    new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),
-    (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)))
+    new ExpressionInfo(classOf[NativeCall].getName, "dot_product"),
+    (exprs: Seq[Expression]) => VectorExprs.dotProduct(exprs(0), exprs(1)))
 
   /** Register on an existing session. */
   def register(s: SparkSession): Unit =
     s.sessionState.functionRegistry.createOrReplaceTempFunction(
       "dot_product",
-      exprs => DotProduct(exprs(0), exprs(1)),
+      exprs => VectorExprs.dotProduct(exprs(0), exprs(1)),
       "built-in")
 }

@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.{Bridge, ExpectsBinaryInput}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Header-level image dimension parsing as a native codegen'd
-  * expression over an opaque `binary` media column — the metadata
+  * function over an opaque `binary` media column — the metadata
   * pass a training-data ingest runs over every blob BEFORE any pixel
   * work is scheduled (filter by size/aspect, plan resizes, route to
   * decoders). Both formats are parsed from their public container
@@ -19,11 +16,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
 object MediaExprs {
 
   /** Packed `(width << 32) | height` of a PNG or JPEG blob; NULL for
-    * anything else. Packing keeps the expression a primitive long —
-    * stays inside whole-stage codegen; unpack with `shiftright` /
-    * `& 0xffffffff`. */
+    * anything else. Packing keeps the result one long; unpack with
+    * [[width]] / [[height]]. */
   def imageDims(c: Column): Column =
-    Bridge.column(ImagePackedDims(Bridge.expression(c)))
+    NativeCall.column("image_packed_dims", ImagePackedDims, "dims",
+      LongType, Seq(BinaryType))(c)
 
   def width(packed: Column): Column =
     org.apache.spark.sql.functions.shiftright(packed, 32)
@@ -38,36 +35,15 @@ object MediaExprs {
     * filter types). NULL for anything that is not a well-formed 8-bit
     * color-type-2 non-interlaced PNG. */
   def pngRgb(c: Column): Column =
-    Bridge.column(PngRgb(Bridge.expression(c)))
+    NativeCall.column("png_rgb", PngRgb, "decode", BinaryType, Seq(BinaryType))(c)
 }
 
-case class PngRgb(child: Expression)
-    extends UnaryExpression with ExpectsBinaryInput {
+object PngRgb extends Serializable {
 
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "png_rgb"
-
-  override def nullSafeEval(input: Any): Any =
-    PngRgb.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PngRgb.decode($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PngRgb {
-
-  /** Decoded `w*h*3` RGB bytes, or null. Shared by the interpreted
-    * and generated paths. Supports exactly the still-dominant corpus
-    * shape (8-bit truecolor, non-interlaced); anything else — or any
-    * malformed byte — degrades to null, never throws (a poison blob
-    * must not kill a 100 TB scan stage). */
+  /** Decoded `w*h*3` RGB bytes, or null. Supports exactly the
+    * still-dominant corpus shape (8-bit truecolor, non-interlaced);
+    * anything else — or any malformed byte — degrades to null, never
+    * throws (a poison blob must not kill a 100 TB scan stage). */
   def decode(b: Array[Byte]): Array[Byte] = {
     if (b.length < 33) return null
     val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
@@ -181,36 +157,19 @@ object PngRgb {
   private def be32(b: Array[Byte], i: Int): Int = ByteReads.be32(b, i)
 }
 
-case class ImagePackedDims(child: Expression)
-    extends UnaryExpression with ExpectsBinaryInput {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "image_packed_dims"
-
-  override def nullSafeEval(input: Any): Any = {
-    val p = ImagePackedDims.packed(input.asInstanceOf[Array[Byte]])
-    if (p < 0L) null else java.lang.Long.valueOf(p)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ImagePackedDims.packed($c);
-      if (${ev.value} < 0L) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ImagePackedDims {
+object ImagePackedDims extends Serializable {
 
   /** `(width << 32) | height`, or -1 if the bytes are not a
-    * recognizable PNG or JPEG header. Shared by the interpreted and
-    * generated paths. */
+    * recognizable PNG or JPEG header. */
   def packed(b: Array[Byte]): Long = {
     val png = pngDims(b)
     if (png >= 0L) png else jpegDims(b)
+  }
+
+  /** [[packed]] with the -1 sentinel as null (SQL NULL). */
+  def dims(b: Array[Byte]): java.lang.Long = {
+    val p = packed(b)
+    if (p < 0L) null else java.lang.Long.valueOf(p)
   }
 
   private def u8(b: Array[Byte], i: Int): Int = ByteReads.u8(b, i)

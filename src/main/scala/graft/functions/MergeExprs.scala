@@ -1,16 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Merge-ranked (true BPE) tokenization: apply an ORDERED merge-rule
-  * list exactly the way published byte-pair tokenizers do — repeatedly
-  * merge the adjacent symbol pair with the lowest merge rank, all
-  * occurrences left-to-right, until no listed pair remains. This is
+/** Merge-ranked (true BPE) tokenization, the one inference loop both
+  * merge rankers share ([[MergeRanker]] over letters, [[ByteBpeRanker]]
+  * over bytes; they differ only in how a pre-token splits into base
+  * symbols). Apply an ORDERED merge-rule list exactly the way
+  * published byte-pair tokenizers do — repeatedly merge the adjacent
+  * symbol pair with the lowest merge rank, all occurrences
+  * left-to-right, until no listed pair remains. This is
   * the inference loop of the Sennrich et al. (ACL 2016) subword-BPE
   * construction as popularized by the GPT-2 tokenizer; unlike greedy
   * longest-match ([[ByteTrie]], WordPiece-style), it reproduces a real
@@ -27,36 +27,45 @@ import org.apache.spark.unsafe.types.UTF8String
   * Scale design mirrors [[ByteTrie]]: the serialized form is the
   * merge-pair list (bounded-small — a production tokenizer ships
   * ~50k rules ≈ a few hundred KB); the rank map builds lazily per
-  * JVM. Per-word results are memoized per instance (bounded), so a
-  * natural-language corpus — whose distinct-word count is far below
+  * JVM. Per-pre-token results are memoized per instance (bounded), so
+  * a natural-language corpus — whose distinct-word count is far below
   * its token count — pays the merge loop once per distinct word per
-  * executor, not once per occurrence.
+  * executor, not once per occurrence. A ranker compares by its merge
+  * list, so plans built from equal merges are `sameSemantics`.
   */
-final class MergeRanker(merges: Seq[(String, String)]) extends Serializable {
+abstract class MergeRank extends Serializable {
+
+  /** The ordered merge rules; a rule's rank is its index. */
+  def merges: Seq[(String, String)]
+
+  /** A pre-token's base symbols, before any merge. */
+  protected def baseSymbols(w: String): Array[String]
+
+  @transient private lazy val pairs: Array[(String, String)] = merges.toArray
 
   @transient private lazy val rank: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](merges.size * 2)
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
+    val m = new java.util.HashMap[String, Integer](pairs.length * 2)
+    pairs.zipWithIndex.foreach { case ((a, b), i) =>
       m.putIfAbsent(a + "\u0000" + b, Integer.valueOf(i))
     }
     m
   }
 
-  // per-JVM word cache; bounded in BOTH entry count and entry size
-  // (words are unbounded letter runs, so a count cap alone would let
-  // an adversarial corpus of huge distinct runs retain gigabytes per
-  // executor). Beyond either bound every word still computes
+  // per-JVM pre-token cache; bounded in BOTH entry count and entry
+  // size (pre-tokens are unbounded runs, so a count cap alone would
+  // let an adversarial corpus of huge distinct runs retain gigabytes
+  // per executor). Beyond either bound every pre-token still computes
   // correctly, just uncached.
   @transient private lazy val memo =
     new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-  private val MemoCap = 1 << 16
-  private val MemoMaxLen = 1 << 12
 
-  /** Segment one pre-token (` ?[A-Za-z]+`) by ordered merge rules. */
-  def segmentWord(w: String): Array[String] = {
+  /** Segment one pre-token by ordered merge rules: merge every
+    * occurrence of the lowest-ranked adjacent pair until no listed
+    * pair remains. */
+  protected final def segment(w: String): Array[String] = {
     val cached = memo.get(w)
     if (cached != null) return cached
-    var syms: Array[String] = w.map(_.toString).toArray
+    var syms = baseSymbols(w)
     var done = false
     while (!done && syms.length > 1) {
       var bestRank = Int.MaxValue
@@ -70,7 +79,7 @@ final class MergeRanker(merges: Seq[(String, String)]) extends Serializable {
       else {
         // merge every occurrence of the winning pair, left to right
         // (overlaps resolve leftmost-first: "aaa" + (a,a) -> [aa, a])
-        val (pa, pb) = merges(bestRank)
+        val (pa, pb) = pairs(bestRank)
         val out = Array.newBuilder[String]
         var j = 0
         while (j < syms.length) {
@@ -85,9 +94,25 @@ final class MergeRanker(merges: Seq[(String, String)]) extends Serializable {
         syms = out.result()
       }
     }
-    if (w.length <= MemoMaxLen && memo.size < MemoCap) memo.put(w, syms)
+    if (w.length <= MergeRank.MemoMaxLen && memo.size < MergeRank.MemoCap)
+      memo.put(w, syms)
     syms
   }
+}
+
+object MergeRank {
+  private val MemoCap = 1 << 16
+  private val MemoMaxLen = 1 << 12
+}
+
+/** The letter-level merge ranker: pre-tokens are ` ?[A-Za-z]+` runs,
+  * split into one base symbol per character. */
+final case class MergeRanker(merges: Seq[(String, String)]) extends MergeRank {
+
+  protected def baseSymbols(w: String): Array[String] = w.map(_.toString).toArray
+
+  /** Segment one pre-token (` ?[A-Za-z]+`) by ordered merge rules. */
+  def segmentWord(w: String): Array[String] = segment(w)
 
   private def isLetter(c: Char): Boolean =
     (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
@@ -108,7 +133,7 @@ final class MergeRanker(merges: Seq[(String, String)]) extends Serializable {
         val start = i
         if (c == ' ') i += 1
         while (i < len && isLetter(str.charAt(i))) i += 1
-        segmentWord(str.substring(start, i))
+        segment(str.substring(start, i))
           .foreach(p => out += UTF8String.fromString(p))
       } else {
         val w = if (Character.isHighSurrogate(c) && i + 1 < len &&
@@ -137,7 +162,7 @@ final class MergeRanker(merges: Seq[(String, String)]) extends Serializable {
         val start = i
         if (c == ' ') i += 1
         while (i < len && isLetter(str.charAt(i))) i += 1
-        n += segmentWord(str.substring(start, i)).length
+        n += segment(str.substring(start, i)).length
       } else {
         // fallback: one token per code point (surrogate pair = one)
         i += (if (Character.isHighSurrogate(c) && i + 1 < len &&
@@ -149,60 +174,17 @@ final class MergeRanker(merges: Seq[(String, String)]) extends Serializable {
   }
 }
 
-/** Merge-ranked BPE token count as a codegen'd native expression —
-  * the [[BpeTokenCount]] shape with the merge loop instead of the
-  * trie walk. */
-case class BpeMergeTokenCount(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "bpe_merge_token_count"
-
-  @transient private lazy val ranker = new MergeRanker(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    ranker.countTokens(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mergeRanker", ranker,
-      classOf[MergeRanker].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.countTokens($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Merge-ranked segmentation as a native expression: the token ARRAY
-  * under the merge list ([[BpeMergeTokenCount]]'s walk emitting the
-  * pieces). */
-case class BpeMergeTokenize(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
-  override def prettyName: String = "bpe_merge_tokenize"
-
-  @transient private lazy val ranker = new MergeRanker(merges)
-
-  override def nullSafeEval(input: Any): Any =
-    ranker.tokenize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mergeRanker", ranker,
-      classOf[MergeRanker].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.tokenize($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
+/** Merge-ranked BPE as native functions: [[ByteTrie]]'s greedy walk
+  * replaced by the [[MergeRanker]] loop, one call per row inside the
+  * enclosing whole-stage codegen stage. */
 object MergeExprs {
   def mergeTokenCount(text: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(BpeMergeTokenCount(Bridge.expression(text), merges))
+    NativeCall.column("bpe_merge_token_count", MergeRanker(merges),
+      "countTokens", LongType, Seq(StringType))(text)
 
+  /** The token array under the merge list. */
   def mergeTokenize(text: Column, merges: Seq[(String, String)]): Column =
-    Bridge.column(BpeMergeTokenize(Bridge.expression(text), merges))
+    NativeCall.column("bpe_merge_tokenize", MergeRanker(merges),
+      "tokenize", ArrayType(StringType, containsNull = false),
+      Seq(StringType))(text)
 }

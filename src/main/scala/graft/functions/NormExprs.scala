@@ -1,51 +1,31 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.{Bridge, ExpectsStringInput}
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode normalization as a native codegen'd expression.
+/** Unicode normalization as a native codegen'd function.
   *
   * Every serious text pipeline canonicalizes before hashing or
   * tokenizing: NFC composes "e" + COMBINING ACUTE into the single
   * codepoint "é", so visually-identical strings hash identically and
   * a BPE vocabulary sees one spelling. Spark ships no normalization
-  * function; a Scala UDF would leave codegen — this is the
-  * (b)-preference native `Expression` with `doGenCode`, calling the
-  * JVM's built-in `java.text.Normalizer` (UAX #15 conformant; no new
-  * dependency). The DuckDB oracle replays through `nfc_normalize`
+  * function; a Scala UDF would leave codegen — this is one
+  * [[NativeCall]] of the JVM's built-in `java.text.Normalizer`
+  * (UAX #15 conformant; no new dependency). The DuckDB oracle replays through `nfc_normalize`
   * (utf8proc — also UAX #15 conformant, so stable codepoints agree
   * bit-for-bit).
   */
 object NormExprs {
 
   /** NFC-normalize a string column (null in, null out). */
-  def nfc(c: Column): Column = Bridge.column(NfcNormalize(Bridge.expression(c)))
+  def nfc(c: Column): Column =
+    NativeCall.column("nfc_normalize", NfcNormalize, "normalize", StringType,
+      Seq(StringType))(c)
 }
 
-case class NfcNormalize(child: Expression)
-    extends UnaryExpression with ExpectsStringInput {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    NfcNormalize.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NfcNormalize.normalize($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object NfcNormalize {
-  /** Static helper shared by the interpreted and generated paths.
-    * Fast path: `isNormalized` is O(n) with no allocation for the
+object NfcNormalize extends Serializable {
+  /** Fast path: `isNormalized` is O(n) with no allocation for the
     * (overwhelmingly common) already-NFC input. */
   def normalize(s: UTF8String): UTF8String = {
     val str = s.toString

@@ -1,17 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge, ExpectsBinaryInput, ExpectsBinaryLongLongInput}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Pixel-plane operators over decoded RGB byte planes
   * ([[MediaExprs.pngRgb]] output: `w*h*3` row-major bytes) — the
   * vision-preprocessing steps (center crop, nearest-neighbor resize,
   * channel statistics) a multimodal training ingest runs between
-  * decode and the trainer. All native codegen'd expressions: the
+  * decode and the trainer. Each is one native codegen'd call: the
   * pixel loops stay inside the scan-stage whole-stage-codegen span,
   * no UDF boundary, no per-pixel row explosion — and every output is
   * integer-derived, so the DuckDB oracle recomputes each value from
@@ -26,22 +24,30 @@ import org.apache.spark.sql.types._
   */
 object RgbExprs {
 
+  private val Plane = Seq(BinaryType, LongType, LongType)
+
   /** Centered square crop with side `min(w, h)` of a `w*h*3` RGB
-    * plane; NULL when the plane's length disagrees with (w, h). */
+    * plane; NULL when the plane's length disagrees with (w, h). Any
+    * integral dims column is cast to long here. */
   def rgbCenterCrop(rgb: Column, w: Column, h: Column): Column =
-    Bridge.column(RgbCenterCrop(Bridge.expression(rgb),
-      Bridge.expression(w), Bridge.expression(h)))
+    NativeCall.column("rgb_center_crop", RgbOps, "centerCrop", BinaryType,
+      Plane)(rgb, w.cast("long"), h.cast("long"))
 
   /** Nearest-neighbor resize of a `w*h*3` plane to `outW x outH`. */
   def rgbResize(rgb: Column, w: Column, h: Column,
-      outW: Int, outH: Int): Column =
-    Bridge.column(RgbResize(Bridge.expression(rgb),
-      Bridge.expression(w), Bridge.expression(h), outW, outH))
+      outW: Int, outH: Int): Column = {
+    require(outW > 0 && outH > 0 && outW.toLong * outH * 3 <= Int.MaxValue,
+      s"resize target out of range: ${outW}x$outH")
+    NativeCall.column("rgb_resize", RgbOps, "resize", BinaryType,
+      Plane ++ Seq(IntegerType, IntegerType))(
+      rgb, w.cast("long"), h.cast("long"), lit(outW), lit(outH))
+  }
 
   /** `array<long>` of 8: channel sums (r, g, b), pixel count, and a
     * 4-bin luminance histogram (`(299r+587g+114b) DIV 1000 DIV 64`). */
   def rgbStats(rgb: Column): Column =
-    Bridge.column(RgbStats(Bridge.expression(rgb)))
+    NativeCall.column("rgb_stats", RgbOps, "stats",
+      ArrayType(LongType, containsNull = false), Seq(BinaryType))(rgb)
 
   /** Classic uncompressed-DIB frame (BOTTOM-UP BGR rows padded to
     * 4-byte boundaries — BITMAPINFOHEADER with positive biHeight,
@@ -49,115 +55,26 @@ object RgbExprs {
     * plane; NULL when the byte length disagrees with the stride
     * layout. The raw-video twin of [[MediaExprs.pngRgb]]. */
   def dibRgb(dib: Column, w: Column, h: Column): Column =
-    Bridge.column(DibRgb(Bridge.expression(dib),
-      Bridge.expression(w), Bridge.expression(h)))
+    NativeCall.column("dib_rgb", RgbOps, "dibToRgb", BinaryType,
+      Plane)(dib, w.cast("long"), h.cast("long"))
 }
 
-case class RgbCenterCrop(first: Expression, second: Expression,
-    third: Expression)
-    extends TernaryExpression with ExpectsBinaryLongLongInput {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rgb_center_crop"
-
-  override def nullSafeEval(rgb: Any, w: Any, h: Any): Any =
-    RgbOps.centerCrop(rgb.asInstanceOf[Array[Byte]],
-      w.asInstanceOf[Long].toInt, h.asInstanceOf[Long].toInt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, w, h) => s"""
-      ${ev.value} = graft.functions.RgbOps.centerCrop($b, (int) $w, (int) $h);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-case class RgbResize(first: Expression, second: Expression,
-    third: Expression, outW: Int, outH: Int)
-    extends TernaryExpression with ExpectsBinaryLongLongInput {
-
-  require(outW > 0 && outH > 0 && outW.toLong * outH * 3 <= Int.MaxValue,
-    s"resize target out of range: ${outW}x$outH")
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "rgb_resize"
-
-  override def nullSafeEval(rgb: Any, w: Any, h: Any): Any =
-    RgbOps.resize(rgb.asInstanceOf[Array[Byte]],
-      w.asInstanceOf[Long].toInt, h.asInstanceOf[Long].toInt, outW, outH)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, w, h) => s"""
-      ${ev.value} = graft.functions.RgbOps.resize($b, (int) $w, (int) $h, $outW, $outH);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-case class DibRgb(first: Expression, second: Expression,
-    third: Expression)
-    extends TernaryExpression with ExpectsBinaryLongLongInput {
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "dib_rgb"
-
-  override def nullSafeEval(dib: Any, w: Any, h: Any): Any =
-    RgbOps.dibToRgb(dib.asInstanceOf[Array[Byte]],
-      w.asInstanceOf[Long].toInt, h.asInstanceOf[Long].toInt)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, w, h) => s"""
-      ${ev.value} = graft.functions.RgbOps.dibToRgb($b, (int) $w, (int) $h);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression =
-    copy(first = f, second = s, third = t)
-}
-
-case class RgbStats(child: Expression)
-    extends UnaryExpression with ExpectsBinaryInput {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "rgb_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    RgbOps.stats(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.RgbOps.stats($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object RgbOps {
+object RgbOps extends Serializable {
 
   /** Per-side cap: keeps `3*w*h` inside Int range (the plane-length
     * guard would otherwise wrap for hostile column values and let an
     * out-of-bounds copy throw instead of returning NULL). */
   val MaxSide = 1 << 20
 
+  private def sideOk(w: Long, h: Long): Boolean =
+    w > 0 && h > 0 && w <= MaxSide && h <= MaxSide
+
   /** Centered `side x side` crop, side = min(w, h); null when the
     * plane length does not match `w*h*3` (dims and plane must come
     * from the same decode). */
-  def centerCrop(b: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    if (w <= 0 || h <= 0 || w > MaxSide || h > MaxSide ||
-      b.length.toLong != 3L * w * h) return null
+  def centerCrop(b: Array[Byte], wl: Long, hl: Long): Array[Byte] = {
+    if (!sideOk(wl, hl) || b.length.toLong != 3L * wl * hl) return null
+    val w = wl.toInt; val h = hl.toInt
     val side = math.min(w, h)
     val x0 = (w - side) / 2
     val y0 = (h - side) / 2
@@ -172,9 +89,9 @@ object RgbOps {
 
   /** Nearest-neighbor resize with floor index mapping:
     * `srcX = dstX * w DIV outW` (and likewise for rows). */
-  def resize(b: Array[Byte], w: Int, h: Int, outW: Int, outH: Int): Array[Byte] = {
-    if (w <= 0 || h <= 0 || w > MaxSide || h > MaxSide ||
-      b.length.toLong != 3L * w * h) return null
+  def resize(b: Array[Byte], wl: Long, hl: Long, outW: Int, outH: Int): Array[Byte] = {
+    if (!sideOk(wl, hl) || b.length.toLong != 3L * wl * hl) return null
+    val w = wl.toInt; val h = hl.toInt
     val out = new Array[Byte](outW * outH * 3)
     var y = 0
     while (y < outH) {
@@ -196,8 +113,9 @@ object RgbOps {
     * the output reads storage row `h-1-y`, channels swap B↔R, the
     * per-row padding (stride − 3w bytes) drops. Null when the buffer
     * is not exactly `stride*h` bytes for `stride = 4*ceil(3w/4)`. */
-  def dibToRgb(b: Array[Byte], w: Int, h: Int): Array[Byte] = {
-    if (w <= 0 || h <= 0 || w > MaxSide || h > MaxSide) return null
+  def dibToRgb(b: Array[Byte], wl: Long, hl: Long): Array[Byte] = {
+    if (!sideOk(wl, hl)) return null
+    val w = wl.toInt; val h = hl.toInt
     val stride = (3 * w + 3) / 4 * 4
     if (b.length.toLong != stride.toLong * h) return null
     val out = new Array[Byte](w * h * 3)

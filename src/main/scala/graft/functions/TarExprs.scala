@@ -2,14 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge, ExpectsBinaryInput}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** POSIX-ustar member listing as a native codegen'd expression over a
+/** POSIX-ustar member listing as a native codegen'd function over a
   * shard's opaque `binary` column — the scan-stage step that turns
   * "a directory of tar shards" (the WebDataset layout multimodal
   * training corpora ship in) into per-member rows without touching a
@@ -32,40 +29,21 @@ object TarExprs {
     * members; offset addresses the first data byte inside the shard.
     * NULL when the bytes are not a ustar archive. */
   def tarEntries(c: Column): Column =
-    Bridge.column(TarEntries(Bridge.expression(c)))
+    NativeCall.column("tar_entries", TarEntries, "entries", TarEntries.Schema,
+      Seq(BinaryType))(c)
 }
 
-case class TarEntries(child: Expression)
-    extends UnaryExpression with ExpectsBinaryInput {
-
-  override def dataType: DataType = TarEntries.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "tar_entries"
-
-  override def nullSafeEval(input: Any): Any =
-    TarEntries.entries(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TarEntries.entries($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TarEntries {
+object TarEntries extends Serializable {
 
   val Schema: ArrayType = ArrayType(StructType(Seq(
     StructField("name", StringType, nullable = false),
     StructField("offset", LongType, nullable = false),
     StructField("size", LongType, nullable = false))), containsNull = false)
 
-  /** Shared by the interpreted and generated paths. Returns null for
-    * a blob whose first block is not a checksum-valid ustar header;
-    * stops at the end-of-archive zero block, at truncation, or at the
-    * first corrupt header past a valid prefix. */
+  /** The regular members, or null for a blob whose first block is
+    * not a checksum-valid ustar header; stops at the end-of-archive
+    * zero block, at truncation, or at the first corrupt header past a
+    * valid prefix. */
   def entries(b: Array[Byte]): GenericArrayData = {
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     var pos = 0

@@ -1,33 +1,39 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
-/** Dot product of two double arrays as a native Catalyst expression.
+/** Vector kernels as native functions.
   *
-  * The `zip_with` + `aggregate` composition allocates an intermediate
-  * boxed array per row and evaluates lambdas interpretively — at
-  * millions of candidate pairs x 64 dims that dominates ANN runtime.
-  * This expression is one primitive loop, codegen'd into the enclosing
-  * WholeStageCodegen stage.
-  *
-  * Accumulation order is ascending index (a sequential left fold) —
-  * bit-identical to the `aggregate`-based form and to the DuckDB
-  * oracle's list_cosine_similarity.
+  * Dot product: the `zip_with` + `aggregate` composition allocates an
+  * intermediate boxed array per row and evaluates lambdas
+  * interpretively — at millions of candidate pairs x 64 dims that
+  * dominates ANN runtime. [[dot]] is one primitive loop, called once
+  * per row inside the enclosing WholeStageCodegen stage. Accumulation
+  * order is ascending index (a sequential left fold) — bit-identical
+  * to the `aggregate`-based form and to the DuckDB oracle's
+  * list_cosine_similarity.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+object VectorExprs extends Serializable {
 
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dot_product"
+  private val DoubleArray = ArrayType(DoubleType)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData].toDoubleArray()
-    val y = b.asInstanceOf[ArrayData].toDoubleArray()
+  /** `dot_product(a, b)` over two `array<double>` expressions (the SQL
+    * registration in [[GraftExtensions]] builds it too). */
+  def dotProduct(a: Expression, b: Expression): Expression =
+    NativeCall("dot_product", this, "dot", DoubleType,
+      Seq(DoubleArray, DoubleArray), Seq(a, b))
+
+  def dotFast(a: Column, b: Column): Column =
+    Bridge.column(dotProduct(Bridge.expression(a), Bridge.expression(b)))
+
+  /** Sum of `x(i) * y(i)` over the shorter length. */
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val x = a.toDoubleArray()
+    val y = b.toDoubleArray()
     val n = math.min(x.length, y.length)
     var s = 0.0
     var i = 0
@@ -35,47 +41,35 @@ case class DotProduct(left: Expression, right: Expression)
     s
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |double[] $x = $a.toDoubleArray();
-         |double[] $y = $b.toDoubleArray();
-         |int $n = Math.min($x.length, $y.length);
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) { $s += $x[$i] * $y[$i]; }
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object VectorExprs {
-  /** Expose the expression as a Column (Spark 4 classic bridge). */
-  def dotFast(a: Column, b: Column): Column =
-    Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
-
   /** All k PCA projections of a double-array column in ONE primitive
-    * loop — see [[PcaProjectAll]]. `compPpm` is the component matrix
+    * loop — see [[PcaProjector]]. `compPpm` is the component matrix
     * (k rows of d ppm weights). */
   def pcaProjectAll(v: Column, compPpm: Seq[Array[Long]]): Column =
-    Bridge.column(PcaProjectAll(Bridge.expression(v), compPpm.toArray))
+    NativeCall.column("pca_project_all", new PcaProjector(compPpm.toArray),
+      "project", ArrayType(LongType, containsNull = false), Seq(DoubleArray))(v)
 }
 
-/** The shared projection kernel: quantize each coordinate ONCE
+/** All k PCA component projections of one vector as ONE kernel
+  * returning `array<long>`.
+  *
+  * The declarative spelling — k separate columns, each a d-term
+  * `lit(w)·q_i` fold with its own `round`/`cast` per coordinate —
+  * generates k·d expression slots; at k=24, d=64 the projection
+  * select blows the JVM's 64 KB method limit ("Code grows beyond
+  * 64 KB"), falls out of whole-stage codegen entirely, and evaluates
+  * interpreted, re-quantizing every coordinate k times. This kernel
+  * quantizes each coordinate once and emits all k sums in a primitive
+  * loop, codegen'd as a single call. Arithmetic is bit-identical to
+  * the declarative form (same rounding call, same ascending-index long
+  * accumulation), which the PcaSpec parity test pins.
+  *
+  * The projection: quantize each coordinate ONCE
   * (`(long) round(v_i · 10⁶)` under HALF_UP — the exact arithmetic of
   * `round(col · 1e6, 0).cast("long")`, via the same
   * `BigDecimal.valueOf(x).setScale(0, HALF_UP)` call Spark's Round
   * executes on doubles), then one long multiply-add loop per
-  * component. Serializable so the codegen reference object ships to
-  * executors. */
+  * component. Two projectors compare by their matrix's values, so
+  * equal projections stay `sameSemantics`. */
 private[functions] final class PcaProjector(
     val compPpm: Array[Array[Long]]) extends Serializable {
   private val k = compPpm.length
@@ -107,43 +101,14 @@ private[functions] final class PcaProjector(
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
-}
 
-/** All k PCA component projections of one vector as ONE native
-  * expression returning `array<long>`.
-  *
-  * The declarative spelling — k separate columns, each a d-term
-  * `lit(w)·q_i` fold with its own `round`/`cast` per coordinate —
-  * generates k·d expression slots; at k=24, d=64 the projection
-  * select blows the JVM's 64 KB method limit ("Code grows beyond
-  * 64 KB"), falls out of whole-stage codegen entirely, and evaluates
-  * interpreted, re-quantizing every coordinate k times. This
-  * expression quantizes each coordinate once and emits all k sums in
-  * a primitive loop, codegen'd as a single call. Arithmetic is
-  * bit-identical to the declarative form (same rounding call, same
-  * ascending-index long accumulation), which the PcaSpec parity test
-  * pins. */
-case class PcaProjectAll(child: Expression, compPpm: Array[Array[Long]])
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, LongType}
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "pca_project_all"
-
-  @transient private lazy val projector = new PcaProjector(compPpm)
-
-  override def nullSafeEval(input: Any): Any =
-    projector.project(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pcaProjector", projector,
-      classOf[PcaProjector].getName)
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = $ref.project($c);
-       |${ev.isNull} = (${ev.value} == null);
-     """.stripMargin)
+  override def equals(o: Any): Boolean = o match {
+    case p: PcaProjector =>
+      java.util.Arrays.deepEquals(
+        compPpm.asInstanceOf[Array[AnyRef]], p.compPpm.asInstanceOf[Array[AnyRef]])
+    case _ => false
   }
 
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
+  override def hashCode: Int =
+    java.util.Arrays.deepHashCode(compPpm.asInstanceOf[Array[AnyRef]])
 }

@@ -1,14 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.{Bridge, ExpectsBinaryInput}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, LongType}
 
 /** RIFF/WAV audio parsing + PCM statistics as ONE native codegen'd
-  * expression over an opaque `binary` column — the audio-modality
+  * function over an opaque `binary` column — the audio-modality
   * twin of [[MediaExprs.pngRgb]]: a real chunk walk (RIFF fourcc +
   * little-endian u32 size, odd-chunk pad bytes honored), the
   * canonical 16-byte PCM `fmt ` chunk, and one pass over the
@@ -29,40 +26,20 @@ object WavExprs {
     * (|s| >= 32000). NULL unless the bytes are a PCM s16le
     * RIFF/WAVE. */
   def wavInfo(c: Column): Column =
-    Bridge.column(WavInfo(Bridge.expression(c)))
+    NativeCall.column("wav_info", WavInfo, "parse",
+      ArrayType(LongType, containsNull = false), Seq(BinaryType))(c)
 }
 
-case class WavInfo(child: Expression)
-    extends UnaryExpression with ExpectsBinaryInput {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "wav_info"
-
-  override def nullSafeEval(input: Any): Any =
-    WavInfo.parse(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.WavInfo.parse($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WavInfo {
+object WavInfo extends Serializable {
 
   /** Threshold for the clipping screen: |s| at or beyond this counts
     * as clipped (slightly inside full scale, the usual detector). */
   val ClipAt = 32000
 
   /** [rate, channels, bits, nFramesPerChannel, sumAbs, maxAbs,
-    * nClipped], or null. Shared by the interpreted and generated
-    * paths. Only uncompressed PCM s16le is in contract (format 1,
-    * bits 16) — the dominant raw-audio corpus shape; anything else
-    * degrades to null. */
+    * nClipped], or null. Only uncompressed PCM s16le is in contract
+    * (format 1, bits 16) — the dominant raw-audio corpus shape;
+    * anything else degrades to null. */
   def parse(b: Array[Byte]): GenericArrayData = {
     if (b.length < 44) return null
     if (!fourcc(b, 0, "RIFF") || !fourcc(b, 8, "WAVE")) return null

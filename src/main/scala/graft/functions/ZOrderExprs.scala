@@ -1,10 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** Z-ORDER (Morton) interleave of two non-negative long keys — the
   * multi-dimensional clustering primitive: sorting by the interleaved
@@ -14,9 +11,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * groups. A linear sort gives this on its leading column only; at
   * 100 TB the difference is scanning one dimension's slice versus the
   * whole table (the Delta/Iceberg OPTIMIZE ZORDER technique, here as
-  * a plain codegen'd expression + range-partitioned write).
+  * a plain codegen'd function + range-partitioned write).
   */
-object ZOrder {
+object ZOrder extends Serializable {
 
   /** Bit-interleave two keys in [0, 2^31): a's bits land on even
     * positions, b's on odd — 62 bits out, order-preserving per
@@ -36,27 +33,10 @@ object ZOrder {
   }
 }
 
-/** [[ZOrder.interleave]] as a codegen'd native expression. */
-case class InterleaveBits(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "interleave_bits"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ZOrder.interleave(a.asInstanceOf[Long], b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ZOrder.interleave($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 object ZOrderExprs {
+  /** [[ZOrder.interleave]] as a native function; any integral key
+    * column is cast to long here. */
   def interleaveBits(a: Column, b: Column): Column =
-    Bridge.column(InterleaveBits(
-      Bridge.expression(a.cast("long")), Bridge.expression(b.cast("long"))))
+    NativeCall.column("interleave_bits", ZOrder, "interleave", LongType,
+      Seq(LongType, LongType))(a.cast("long"), b.cast("long"))
 }

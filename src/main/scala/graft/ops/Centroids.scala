@@ -19,7 +19,7 @@ import graft.ops.Similarity.dot
   *    division agrees across engines regardless of sign;
   *  - squared Euclidean distances to the quantized centroids are
   *    exact in double arithmetic (all terms far below 2^53), computed
-  *    with the codegen'd [[graft.functions.DotProduct]] loop via
+  *    with the codegen'd [[graft.functions.VectorExprs.dot]] loop via
   *    `d2 = |v|^2 + |c|^2 - 2<v,c>` — no interpreted lambda fold in
   *    the hot path.
   *

@@ -13,7 +13,7 @@ import graft.core.CacheScope.Scoped
   * bucket — an equi-join — instead of all-pairs).
   *
   * Performance notes (measured at sf0.1):
-  *  - dot products use the codegen'd [[graft.functions.DotProduct]]
+  *  - dot products use the codegen'd [[graft.functions.VectorExprs.dot]]
   *    expression (one primitive loop per pair) — the `zip_with` +
   *    `aggregate` composition interprets lambdas over boxed doubles
   *    and was ~40x slower at 4M pairs;

@@ -1228,7 +1228,7 @@ object MiscQueries extends graft.QueryModule {
 
   /** Z-ORDER CLUSTERED LAYOUT under the oracle: lineitem lands
     * clustered by the Morton interleave of its (orderkey, partkey)
-    * buckets ([[graft.functions.InterleaveBits]], the codegen'd
+    * buckets ([[graft.functions.ZOrderExprs.interleaveBits]], the codegen'd
     * expression `ZOrderSpec` pins against the driver function), each
     * file owning one contiguous z-range — then per z-range row counts
     * and BOTH dimensions' min/max are read back from parquet FOOTER
@@ -2502,13 +2502,10 @@ object MiscQueries extends graft.QueryModule {
       def call(): Int = {
         gate.countDown(); gate.await()
         SnapTable.rewriteWithRetry(s, tbl, h => {
-          val es = SnapTable.fileEntries(s, tbl, h)
-          val (mine, keep) = es.partition(
+          val keep = SnapTable.fileEntries(s, tbl, h).filterNot(
             _.partitionValues.get("event_type").contains("error"))
-          val compacted = s.read.parquet(mine.map(e =>
-              new org.apache.hadoop.fs.Path(tbl, e.path).toString): _*)
-            .withColumn("event_type", lit("error"))
-            .coalesce(1)
+          val compacted = SnapTable.read(s, tbl, Some(h))
+            .filter(col("event_type") === "error").coalesce(1)
           (compacted, keep.map(SnapTable.entryLine))
         }, statsCols = Seq("event_id"), partitionBy = Some("event_type"))
       }

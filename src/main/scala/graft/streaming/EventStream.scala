@@ -317,19 +317,6 @@ object EventStream {
     ordered.map(_.toString)
   }
 
-  /** Object-store-safe ordering: COPY the landing entries into
-    * `stagingDir` in rank order instead of rewriting modtimes in
-    * place (which S3A ignores — [[orderLanding]] detects that and
-    * points here). Each staged entry gets a zero-padded rank-prefixed
-    * name, so both creation order and name order carry the ranking;
-    * copies are spaced past the filesystem's modtime granularity so
-    * their creation times strictly ascend even where `setTimes` is a
-    * no-op (the spacing wait triggers only when copies outrun the
-    * clock; `setTimes` is still attempted best-effort for stores that
-    * honor it). Point the stream at `stagingDir` and drain from
-    * there. Data moves once — the price of ordering on a store
-    * without mutable metadata; the manifest pass itself is still
-    * metadata-only. Returns the staged paths in rank order. */
   /** MANIFEST-GATED ordered drain — the modtime-FREE ordering route:
     * rank the landing entries once (the same metadata-only pass as
     * [[orderLanding]]), then REVEAL them to a running drain one at a
@@ -367,6 +354,19 @@ object EventStream {
     }
   }
 
+  /** Object-store-safe ordering: COPY the landing entries into
+    * `stagingDir` in rank order instead of rewriting modtimes in
+    * place (which S3A ignores — [[orderLanding]] detects that and
+    * points here). Each staged entry gets a zero-padded rank-prefixed
+    * name, so both creation order and name order carry the ranking;
+    * copies are spaced past the filesystem's modtime granularity so
+    * their creation times strictly ascend even where `setTimes` is a
+    * no-op (the spacing wait triggers only when copies outrun the
+    * clock; `setTimes` is still attempted best-effort for stores that
+    * honor it). Point the stream at `stagingDir` and drain from
+    * there. Data moves once — the price of ordering on a store
+    * without mutable metadata; the manifest pass itself is still
+    * metadata-only. Returns the staged paths in rank order. */
   def orderLandingStaged(
       s: SparkSession, glob: String, stagingDir: String,
       byName: Boolean = true, eventTimeCol: String = "ts"): Seq[String] = {
@@ -568,18 +568,6 @@ object EventStream {
     stream.withWatermark("tsT", delay)
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** St5: live progress observation — the Spark-native form of the
-    * reference's `.progress.txt` polling (experiment_caller.py:103-111
-    * / interactive_helpers.py:589-617): a StreamingQueryListener
-    * accumulating per-micro-batch input-row counts.
-    *
-    * `onlyName` scopes the tally to one named query. The listener bus
-    * is JVM-global and asynchronous: events still queued from a query
-    * that already terminated are delivered to listeners registered at
-    * DELIVERY time, so an unfiltered listener on a busy session tallies
-    * other queries' stragglers. A production observer names its query
-    * and filters, exactly like the reference polls one run's own
-    * progress file. */
   /** F14 twin: the reference's `.progress.txt` byte format
     * (experiment_caller.py:103-111) — the file holds `str(percent)`
     * where `percent = round(done/max*100)` under PYTHON'S round,
@@ -610,7 +598,15 @@ object EventStream {
     * counts, optionally EMITTING the reference's progress file
     * (`progressFile` = (path, expected total rows)) in its exact
     * byte format after every batch, so tooling that tails the
-    * reference's file works against the stream unchanged. */
+    * reference's file works against the stream unchanged.
+    *
+    * `onlyName` scopes the tally to one named query. The listener bus
+    * is JVM-global and asynchronous: events still queued from a query
+    * that already terminated are delivered to listeners registered at
+    * DELIVERY time, so an unfiltered listener on a busy session tallies
+    * other queries' stragglers. A production observer names its query
+    * and filters, exactly like the reference polls one run's own
+    * progress file. */
   class ProgressListener(onlyName: Option[String] = None,
       progressFile: Option[(java.nio.file.Path, Long)] = None)
       extends org.apache.spark.sql.streaming.StreamingQueryListener {

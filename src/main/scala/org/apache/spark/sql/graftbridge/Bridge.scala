@@ -62,35 +62,3 @@ object Bridge {
     q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
       .streamingQuery.lastExecution.executedPlan.toString
 }
-
-/** Analysis-time string-input contract for the engine's custom
-  * expressions: a non-string child becomes a clean DATATYPE_MISMATCH
-  * error instead of a runtime ClassCastException / codegen compile
-  * failure. `AbstractDataType` (the `inputTypes` element type) is
-  * private[sql] in Spark 4, so the mixin lives in this bridge
-  * package rather than next to the expressions. */
-trait ExpectsStringInput
-    extends org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] =
-    Seq(org.apache.spark.sql.types.StringType)
-}
-
-/** Binary-input twin of [[ExpectsStringInput]]. */
-trait ExpectsBinaryInput
-    extends org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] =
-    Seq(org.apache.spark.sql.types.BinaryType)
-}
-
-/** Ternary `(binary, long, long)` contract with implicit coercion:
-  * int-typed dimension columns are cast to long at analysis time
-  * instead of hitting `asInstanceOf[Long]` at runtime — preserving
-  * the byte-walk family's degrade-to-NULL-never-throw contract for
-  * any integral dims input. */
-trait ExpectsBinaryLongLongInput
-    extends org.apache.spark.sql.catalyst.expressions.ImplicitCastInputTypes {
-  override def inputTypes: Seq[org.apache.spark.sql.types.AbstractDataType] =
-    Seq(org.apache.spark.sql.types.BinaryType,
-      org.apache.spark.sql.types.LongType,
-      org.apache.spark.sql.types.LongType)
-}

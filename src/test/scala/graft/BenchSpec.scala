@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Adjudication machinery: the isolated-pass retry that keeps a
   * single loaded-box reading out of the artifact, and the
-  * min-observed floors record. Pure logic — no SparkSession. */
+  * min-observed floors record, and the runners' entry-name check.
+  * Pure logic — no SparkSession. */
 class BenchSpec extends AnyFunSuite {
 
   private def scripted(readings: Double*): () => Double = {
@@ -58,5 +59,21 @@ class BenchSpec extends AnyFunSuite {
       "sf0.1" -> Map("q_a" -> 1.6, "q_b" -> 0.95),
       "sf0.001" -> Map("q_a" -> 0.2))
     assert(Bench.parseFloors(Bench.renderFloors(floors)) === floors)
+  }
+
+  test("Bench, Verify and Explain refuse an unknown entry name before any work") {
+    val dump = java.nio.file.Files.createTempDirectory("verify-typo").resolve("dump")
+    val typo = "q_no_such_entry"
+    Seq[(String, () => Unit)](
+      "Bench" -> (() => Bench.main(Array(typo))),
+      "Verify" -> (() => Verify.main(Array("unused-sf", dump.toString, typo))),
+      "Explain" -> (() => Explain.main(Array(typo)))
+    ).foreach { case (runner, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(typo) && e.getMessage.contains("valid names"),
+        s"$runner: ${e.getMessage}")
+    }
+    assert(!java.nio.file.Files.exists(dump), "Verify wrote a dump for a typo")
+    assert(SparkEntry.select(Nil) === SparkEntry.queries.keySet)
   }
 }

@@ -509,32 +509,40 @@ class SnapTableSpec extends SparkSpec {
     assert(df.count() === 100L)
     assert(df.agg(sum("v")).head().getLong(0) ===
       (0 until 200 by 2).map(_ * 10L).sum)
+    // a live deletion vector on partition a (5 rows), which the
+    // OPTIMIZE below must read through, never resurrect
+    assert(SnapTable.commitDelete(spark, tbl, "p = 'a' AND k < 10") === 3)
+    assert(SnapTable.dvFiles(spark, tbl, 3).nonEmpty)
     // per-partition OPTIMIZE: compact p=a to one file; p=b carried
     // untouched (with its stats); a concurrent-safe rewrite loop
     val bBefore = entries.filter(_.partitionValues("p") == "b")
       .map(_.path).toSet
     SnapTable.rewriteWithRetry(spark, tbl, h => {
-      val es = SnapTable.fileEntries(spark, tbl, h)
-      val (mine, keep) = es.partition(_.partitionValues("p") == "a")
-      val compacted = spark.read
-        .parquet(mine.map(e =>
-          new org.apache.hadoop.fs.Path(tbl, e.path).toString): _*)
-        .withColumn("p", lit("a")) // Hive layout: the path holds p
-        .coalesce(1)
+      val keep = SnapTable.fileEntries(spark, tbl, h)
+        .filterNot(_.partitionValues("p") == "a")
+      val compacted = SnapTable.read(spark, tbl, Some(h))
+        .filter(col("p") === "a").coalesce(1)
       (compacted, keep.map(SnapTable.entryLine))
     }, statsCols = Seq("k"), partitionBy = Some("p"))
-    val e3 = SnapTable.fileEntries(spark, tbl, 3)
-    assert(e3.count(_.partitionValues("p") == "a") === 1,
+    val e4 = SnapTable.fileEntries(spark, tbl, 4)
+    assert(e4.count(_.partitionValues("p") == "a") === 1,
       "OPTIMIZE should leave one file in partition a")
-    assert(e3.filter(_.partitionValues("p") == "b")
+    assert(e4.filter(_.partitionValues("p") == "b")
       .map(_.path).toSet === bBefore,
       "partition b must be carried byte-identical")
-    assert(e3.forall(_.stats.contains("k")),
+    assert(e4.forall(_.stats.contains("k")),
       "stats must survive the per-partition rewrite")
+    def deletedStayDeleted(): Unit = {
+      assert(SnapTable.read(spark, tbl).filter(col("p") === "a").count() === 95L)
+      assert(SnapTable.read(spark, tbl).filter(col("k") < 10 && col("p") === "a")
+        .count() === 0L, "OPTIMIZE resurrected deleted rows")
+    }
+    deletedStayDeleted()
     // vacuum reclaims partition a's pre-OPTIMIZE files but must keep
     // partition b's live files in the SAME (nested) batch dirs
     assert(SnapTable.vacuum(spark, tbl, keep = 1) > 0)
-    assert(SnapTable.read(spark, tbl).count() === 200L)
+    assert(SnapTable.read(spark, tbl).count() === 195L)
+    deletedStayDeleted()
     assert(SnapTable.read(spark, tbl).filter(col("p") === "b")
       .agg(sum("v")).head().getLong(0) ===
       (1 until 200 by 2).map(_ * 10L).sum)
