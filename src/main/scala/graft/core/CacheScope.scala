@@ -27,6 +27,8 @@ import org.apache.spark.sql.DataFrame
   */
 object CacheScope {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass.getName.stripSuffix("$"))
+
   private val active =
     new ThreadLocal[scala.collection.mutable.ListBuffer[DataFrame]]()
 
@@ -48,7 +50,9 @@ object CacheScope {
   /** Run `body`, then unpersist every cache registered inside it.
     * Non-blocking release: the storage is dropped asynchronously,
     * which is fine — nothing can re-reference the plans after the
-    * scope ends. */
+    * scope ends. A failed release (a stopped session, say) is logged
+    * at WARN with its exception and not rethrown: it must not mask
+    * the body's result or its own exception. */
   def withScope[T](body: => T): T = {
     val prev = active.get()
     val buf = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -58,7 +62,10 @@ object CacheScope {
       if (prev == null) active.remove() else active.set(prev)
       buf.foreach { df =>
         try df.unpersist(blocking = false)
-        catch { case _: Exception => () } // a dead session is not an error here
+        catch {
+          case e: Exception =>
+            log.warn("CacheScope could not unpersist a scoped cache", e)
+        }
       }
     }
   }

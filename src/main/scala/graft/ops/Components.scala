@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Connected components over a candidate-pair edge list — the cluster
@@ -10,21 +10,39 @@ import org.apache.spark.sql.functions._
   * needs per-document cluster ids (keep one canonical doc per
   * component, drop the rest).
   *
-  * Algorithm: iterative min-label propagation. Every node starts
-  * labeled with its own id; each round a node takes the min of its
-  * label and its neighbors' labels; fixpoint = every node carries the
-  * min id of its component. Near-dup graphs are dense cliques with
-  * tiny diameter, so 2-4 rounds is typical; a pointer-jumping step
-  * per batch doubles the established reach, so even long-path
-  * components converge in O(log diameter) batches. Each round is two
-  * bounded shuffles over slim (long, long) rows: one equi-join of the
-  * symmetric edge list against the current labels, one min-aggregate
-  * — no all-pairs work, no driver-side graph. `localCheckpoint()` truncates the lineage at each batch of
-  * rounds so the plan does not grow with iterations (the classic
-  * iterative-DataFrame trap), and the convergence test reads the
-  * already-materialized checkpoint, costing one cheap count per batch.
+  * Two paths, one answer (every node labeled with the min id of its
+  * component), chosen by the size of the edge set:
+  *
+  *  - Bounded edge set (at most `DriverEdges` edges, 16 B each as a
+  *    (long, long) pair, so at most ~16 MB of payload): one
+  *    `limit(DriverEdges + 1)` collect brings the edges to the driver,
+  *    a local union-find labels their endpoints, and the labels come
+  *    back as a broadcast `LocalRelation` left-joined to `nodes`, so
+  *    isolated nodes label themselves. `nodes` is corpus-sized and is
+  *    never collected. Near-dup edge sets are a small fraction of the
+  *    corpus (verified pairs, not all pairs), so this is the path a
+  *    dedup chain takes: ≤ 4 jobs, where the distributed loop spends
+  *    two per batch of rounds plus its setup.
+  *  - Larger edge set: iterative min-label propagation
+  *    ([[distributedComponents]]), which never holds the graph in one
+  *    place. It stays because the library's posture is a corpus of
+  *    100 TB, whose edge set may not fit a driver: each round is two
+  *    bounded shuffles over slim (long, long) rows, and a
+  *    pointer-jumping step per batch makes even long-path components
+  *    converge in O(log diameter) batches.
+  *
+  * The edge plan (candidates plus verification, in a dedup chain) is
+  * evaluated once on either path: the deciding collect reads a cache
+  * of the edge pairs, and the distributed loop builds on that cache.
   */
 object Components {
+
+  /** Edge-count bound of the driver path: 1,000,000 (long, long) edges
+    * × 16 B ≈ 16 MB collected to the driver, the most any call brings
+    * there (the deciding collect stops at one edge past it). */
+  private val DriverEdges = 1000000
+
+  private val LongPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
 
   /** One propagation round, declaratively: every node's label becomes
     * the min of its own and its neighbors' labels. Extra columns on
@@ -68,11 +86,97 @@ object Components {
       .drop("jlbl")
   }
 
-  /** Per-node component labels for `nodes` (single column `id`) under
-    * `edges` (`id1`, `id2`, undirected; endpoints must be drawn from
-    * `nodes` — every caller derives pairs from the same id set it
-    * labels). Output: (id, cluster_id) where cluster_id = min node id
-    * reachable from id.
+  /** Per-node component labels for `nodes` (single column `id`, long,
+    * distinct) under `edges` (`id1`, `id2`, undirected; endpoints must
+    * be drawn from `nodes` — every caller derives pairs from the same
+    * id set it labels). Output: (id, cluster_id) where cluster_id =
+    * min node id reachable from id.
+    *
+    * One bounded action decides the path: at most `DriverEdges`
+    * edges are labeled on the driver ([[driverComponents]]); more run
+    * the distributed loop, where `maxIters` and `roundsPerCheck` apply
+    * ([[distributedComponents]]). The edge pairs are cached for the
+    * decision and released before this returns, so the edge plan runs
+    * once on either path.
+    */
+  def connectedComponents(
+      nodes: DataFrame, edges: DataFrame, maxIters: Int = 25,
+      roundsPerCheck: Int = 2): DataFrame = {
+    val pairs = edges.select(col("id1"), col("id2")).cache()
+    try {
+      val head = pairs.limit(DriverEdges + 1).as(LongPair).collect()
+      if (head.length <= DriverEdges) driverComponents(nodes, head)
+      else distributedComponents(nodes, pairs, maxIters, roundsPerCheck)
+    } finally pairs.unpersist(blocking = false)
+  }
+
+  /** Labels for a bounded edge set, computed on the driver: the
+    * endpoints' labels ([[endpointLabels]]) handed back as a
+    * `LocalRelation` broadcast on its long `id` key — a
+    * `LongHashedRelation`, at most 2 × `DriverEdges` rows — and
+    * left-joined to `nodes`, so a node on no edge labels itself. */
+  private def driverComponents(
+      nodes: DataFrame, edges: Array[(Long, Long)]): DataFrame = {
+    val lbl = nodes.sparkSession.createDataset(endpointLabels(edges))(LongPair)
+      .toDF("id", "lbl")
+    nodes.select(col("id")).join(broadcast(lbl), Seq("id"), "left")
+      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
+  }
+
+  /** (id, min id of its component) for every endpoint of `edges`, by
+    * union-find over dense indices into the sorted distinct ids: the
+    * min index of a component is its min id, and every union keeps the
+    * smaller root. `find` is iterative with path compression, so a
+    * 10⁶-long chain cannot overflow the stack. */
+  private[graft] def endpointLabels(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val ids = new Array[Long](2 * edges.length)
+    var i = 0
+    while (i < edges.length) {
+      ids(2 * i) = edges(i)._1
+      ids(2 * i + 1) = edges(i)._2
+      i += 1
+    }
+    java.util.Arrays.sort(ids)
+    var n = 0
+    i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var cur = x
+      while (parent(cur) != root) {
+        val next = parent(cur)
+        parent(cur) = root
+        cur = next
+      }
+      root
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(index(a)), find(index(b)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (0 until n).map(k => (ids(k), ids(find(k))))
+  }
+
+  /** Labels by distributed min-label propagation, for edge sets past
+    * the driver bound.
+    *
+    * Algorithm: every node starts labeled with its own id; each round
+    * a node takes the min of its label and its neighbors' labels;
+    * fixpoint = every node carries the min id of its component.
+    * Near-dup graphs are dense cliques with tiny diameter, so 2-4
+    * rounds is typical; a pointer-jumping step per batch doubles the
+    * established reach, so even long-path components converge in
+    * O(log diameter) batches. `localCheckpoint()` truncates the
+    * lineage at each batch of rounds so the plan does not grow with
+    * iterations (the classic iterative-DataFrame trap), and the
+    * convergence test reads the already-materialized checkpoint,
+    * costing one cheap count per batch.
     *
     * Rounds run in BATCHES of `roundsPerCheck` between actions: each
     * batch is one materialization job (the chained declarative rounds)
@@ -84,8 +188,9 @@ object Components {
     * final-round-and-jump-changed-nothing is exactly "that application
     * was a no-op", i.e. the propagation fixpoint: the batch that
     * converges also detects it, with no confirmation batch after.
+    * Throws if the labels still move after `maxIters` rounds.
     */
-  def connectedComponents(
+  private[graft] def distributedComponents(
       nodes: DataFrame, edges: DataFrame, maxIters: Int = 25,
       roundsPerCheck: Int = 2): DataFrame = {
     // one pass over the edge list (a union of two selects would scan

@@ -655,7 +655,10 @@ object TrainingQueries extends graft.QueryModule {
   /** The keep frame both [[qDedupKeeplist]] and the end-to-end
     * curation chain ([[CurationQueries.qCurationE2e]]) consume:
     * (id, cluster_id, cluster_size, keep, n_tokens), cached for the
-    * enclosing entry's scope. */
+    * enclosing entry's scope. The verified edges are a small fraction
+    * of the corpus, so [[Components.connectedComponents]] normally
+    * labels them on the driver: the verify plan runs once, in one
+    * bounded collect, and the labels join back to every document. */
   private[queries] def keepFrame(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
     val idx = Dedup.cappedIndex(

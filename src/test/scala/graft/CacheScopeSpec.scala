@@ -72,4 +72,59 @@ class CacheScopeSpec extends SparkSpec {
     }
     assert((persistedKeys -- before).isEmpty)
   }
+
+  test("a failed release is logged at WARN with its exception, not thrown") {
+    // a JVM holds one SparkContext, so the session this test stops is
+    // a throwaway one in a child JVM (StoppedScopeProbe below)
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toList
+    val opens = jvmArgs.zip(jvmArgs.drop(1) :+ "").flatMap {
+      case ("--add-opens", v) => Seq("--add-opens", v)
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case _ => Nil
+    }
+    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx1g") ++ opens ++
+      Seq("-cp", sys.props("java.class.path"), "graft.StoppedScopeProbe")
+    val proc = new ProcessBuilder(cmd.asJava).redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() == 0, out)
+    val lines = out.linesIterator.toSeq
+    assert(lines.contains("probe: scope returned"), out)
+    assert(lines.exists(l => l.startsWith("probe: WARN CacheScope could not unpersist") &&
+      !l.endsWith("thrown=none")), out)
+  }
+}
+
+/** Child-JVM half of the failed-release test: a scoped cache that is
+  * materialized, then its session stopped inside the scope, so the
+  * release at scope end fails. Prints what CacheScope logged. */
+object StoppedScopeProbe {
+  import org.apache.logging.log4j.LogManager
+  import org.apache.logging.log4j.core.{LogEvent, Logger}
+  import org.apache.logging.log4j.core.appender.AbstractAppender
+  import org.apache.logging.log4j.core.config.Property
+
+  def main(args: Array[String]): Unit = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("probe", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        seen.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage} " +
+          s"thrown=${Option(e.getThrown).fold("none")(_.getClass.getName)}")
+        ()
+      }
+    }
+    val spark = graft.core.SessionTune.session(1)
+    // after the session: starting Spark reloads the log configuration
+    appender.start()
+    LogManager.getLogger("graft.core.CacheScope").asInstanceOf[Logger]
+      .addAppender(appender)
+    CacheScope.withScope {
+      CacheScope.cache(spark.range(10).toDF("id")).count()
+      spark.stop()
+    }
+    println("probe: scope returned")
+    seen.forEach(l => println(s"probe: $l"))
+  }
 }

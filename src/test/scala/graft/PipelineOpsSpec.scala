@@ -1,33 +1,62 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.ops.{AsofJoin, Components, Profile, Split, TextAnalysis, Upsert}
 
 class ComponentsSpec extends SparkSpec {
   import spark.implicits._
 
+  // the two tests below pin the distributed loop: at their sizes
+  // connectedComponents itself takes the driver path
   test("min-label propagation finds components on a chain (diameter > 1 round)") {
     // 1-2-3-4 is a chain: the min label needs 3 hops to reach node 4,
     // proving the loop iterates to fixpoint rather than one round
     val nodes = (1L to 7L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L)).toDF("id1", "id2")
-    val got = Components.connectedComponents(nodes, edges)
+    val got = Components.distributedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 7L))
   }
 
+  private def path(n: Long) =
+    ((0L until n).toDF("id"), (0L until n - 1).map(i => (i, i + 1)).toDF("id1", "id2"))
+
   test("pointer jumping converges a 100-node path within default rounds") {
     // diameter 99: pure propagation would need 99 rounds and exit
     // maxIters=25 non-converged; the per-batch pointer jump doubles
-    // reach, so this converges — and non-convergence now throws
-    // rather than returning partial clusters
-    val n = 100L
-    val nodes = (0L until n).toDF("id")
-    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("id1", "id2")
-    val got = Components.connectedComponents(nodes, edges)
+    // reach, so this converges
+    val (nodes, edges) = path(100L)
+    val got = Components.distributedComponents(nodes, edges)
       .collect().map(r => r.getLong(1)).distinct
     assert(got.toSeq === Seq(0L))
+  }
+
+  test("the distributed loop throws rather than return partial clusters") {
+    // two rounds and one jump reach a handful of hops, not 99
+    val (nodes, edges) = path(100L)
+    intercept[IllegalStateException](
+      Components.distributedComponents(nodes, edges, maxIters = 2))
+  }
+
+  test("the driver path labels the same 100-node path in one pass") {
+    val (nodes, edges) = path(100L)
+    val got = Components.connectedComponents(nodes, edges, maxIters = 2)
+      .collect().map(r => r.getLong(1)).distinct
+    assert(got.toSeq === Seq(0L))
+  }
+
+  test("driver union-find walks a 10^6-long chain without recursion") {
+    // edges from the far end first: each union hangs the previous
+    // root under a smaller id, building a 10^6-deep parent chain that
+    // a recursive find would overflow on
+    val n = 1000000L
+    val edges = (n - 2 to 0L by -1L).map(i => (i, i + 1)).toArray
+    val labels = Components.endpointLabels(edges)
+    assert(labels.length == n)
+    assert(labels.forall(_._2 == 0L))
   }
 
   test("cluster sizes attach per node") {
@@ -37,6 +66,46 @@ class ComponentsSpec extends SparkSpec {
         Components.connectedComponents(nodes, edges))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === Set((1L, 1L, 3L), (2L, 1L, 3L), (3L, 1L, 3L), (4L, 4L, 1L)))
+  }
+
+  /** Jobs started by `body`, counted off the listener bus. */
+  private def jobsOf(body: => Unit): Int = {
+    Bridge.drainListenerBus(spark) // flush prior tests' events
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      Bridge.drainListenerBus(spark)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a bounded edge set is labeled in at most 4 jobs; the loop takes more") {
+    // 65 edges over 100 nodes: five 13-edge chains, 30 isolated nodes
+    val nodes = (0L until 100L).toDF("id")
+    val edges = (0L until 5L).flatMap(c => (0L until 13L).map(i =>
+      (c * 20 + i, c * 20 + i + 1))).toDF("id1", "id2")
+    assert(edges.count() == 65)
+    var driver: Set[Long] = Set.empty
+    val bounded = jobsOf {
+      driver = Components.connectedComponents(nodes, edges)
+        .collect().map(_.getLong(1)).toSet
+    }
+    var loop: Set[Long] = Set.empty
+    val distributed = jobsOf {
+      loop = Components.distributedComponents(nodes, edges)
+        .collect().map(_.getLong(1)).toSet
+    }
+    info(s"bounded path: $bounded jobs, distributed loop: $distributed jobs")
+    assert(driver === loop)
+    assert(driver.size === 5 + 30)
+    assert(bounded <= 4, s"bounded path took $bounded jobs")
+    assert(distributed > 4, s"distributed loop took only $distributed jobs")
   }
 }
 

@@ -443,15 +443,25 @@ object DecontaminateProps extends SparkProperties("decontaminate") {
 object ComponentsProps extends SparkProperties("components") {
   import spark.implicits._
 
-  private val genGraph: org.scalacheck.Gen[(Int, List[(Long, Long)])] =
+  /** Graphs of 2-20 nodes mixing random edges, a chain over a random
+    * subset (either direction, so union order varies), a star, and
+    * repeats of all three; random edges and the star's center may be
+    * self edges, and nodes on no edge stay isolated. */
+  private val genGraph: Gen[(Int, List[(Long, Long)])] =
     for {
       n <- Gen.choose(2, 20)
-      ne <- Gen.choose(0, 25)
-      es <- Gen.listOfN(ne, for {
-        a <- Gen.choose(0L, (n - 1).toLong)
-        b <- Gen.choose(0L, (n - 1).toLong)
-      } yield (a, b))
-    } yield (n, es.filter(e => e._1 != e._2))
+      ids = (0L until n.toLong).toList
+      random <- Gen.choose(0, 12).flatMap(Gen.listOfN(_,
+        Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids))))
+      k <- Gen.choose(0, n)
+      picked <- Gen.pick(k, ids)
+      down <- Gen.oneOf(false, true)
+      chainIds = if (down) picked.sorted.reverse.toList else picked.toList
+      center <- Gen.oneOf(ids)
+      leaves <- Gen.someOf(ids)
+      es = random ++ chainIds.zip(chainIds.drop(1)) ++ leaves.map(center -> _)
+      dups <- Gen.someOf(es)
+    } yield (n, es ++ dups)
 
   /** Brute-force union-find oracle. */
   private def brute(n: Int, es: List[(Long, Long)]): Map[Long, Long] = {
@@ -465,13 +475,17 @@ object ComponentsProps extends SparkProperties("components") {
     (0 until n).map(i => i.toLong -> find(i).toLong).toMap
   }
 
+  // both paths: connectedComponents takes the driver path at these
+  // sizes, distributedComponents is the loop past the driver bound
   property("min-label propagation == union-find") =
     Prop.forAll(genGraph) { case (n, es) =>
       val nodes = (0L until n.toLong).toDF("id")
       val edges = es.toDF("id1", "id2")
-      val got = graft.ops.Components.connectedComponents(nodes, edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      got == brute(n, es)
+      def labels(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = brute(n, es)
+      labels(graft.ops.Components.connectedComponents(nodes, edges)) == want &&
+        labels(graft.ops.Components.distributedComponents(nodes, edges)) == want
     }
 }
 
