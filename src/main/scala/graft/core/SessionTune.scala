@@ -54,9 +54,34 @@ object SessionTune {
     * state-store cost it bounds). */
   val StreamTargetBytes: Long = 16L << 20
 
+  /** Characters of plan text the driver renders per description
+    * (`spark.sql.maxPlanStringLength`, see [[defaults]]). */
+  val MaxPlanText: Int = 256 << 10
+
   /** Session confs the library's plan shapes assume. [[session]]
     * applies them; all are runtime-settable, so a user session can
-    * take them with `spark.conf.set`. */
+    * take them with `spark.conf.set`.
+    *
+    * `spark.sql.maxPlanStringLength` bounds the plan text the driver
+    * renders and retains. Spark renders a `formatted` description at
+    * every SQL execution start and every AQE re-plan, UI on or off,
+    * and keeps the latest one per execution in the SQL status store.
+    * A cached plan prints inside every plan that reads it, and AQE
+    * prints its final and its initial plan, so a scoped cache read
+    * twice per level (the curation chain) grows the text 4x per
+    * level: the final `q_curation_full` collect rendered 27.4 M
+    * characters across 8 descriptions (4.26 M the largest), and the
+    * status store kept 8.8 MB of it, 8% of the driver heap peak.
+    * Spark's own conf doc says to set this lower "if plan strings are
+    * taking up too much memory". At 256 KiB the plans without
+    * repeated nesting stay whole (the largest in a `graft.Verify`
+    * sweep, `q_curation_e2e`, is 245 K characters); a longer text is
+    * cut with Spark's `... N more characters` marker and a WARN
+    * naming its full length. The cap covers SQL-start and
+    * AQE-update descriptions, cached-RDD names and `explain`, so
+    * [[graft.Explain]] dumps carry it too. No library check reads
+    * plan text (the plan checks walk the tree, [[Plans]]), so a cut
+    * description never changes an answer. */
   val defaults: Seq[(String, String)] = Seq(
     "spark.sql.adaptive.enabled" -> "true",
     // AQE may re-partition the OUTPUT of cached plans: a persisted
@@ -64,7 +89,8 @@ object SessionTune {
     // count and every downstream action pays that task count
     // regardless of data size (byte-driven at any scale).
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.maxPlanStringLength" -> MaxPlanText.toString)
 
   /** The library session: `local[cpus]`, no UI, every [[defaults]]
     * entry and `logLevel`; with a `dataDir`, batch shuffle partitions

@@ -1078,21 +1078,19 @@ object SnapTable {
 
   /** The snapshot data files a frame's plan ADMITS: the files of every
     * [[graft.sources.snap.SnapFileIndex]] scan in its executed
-    * physical plan — through AQE and its query stages — for both the
-    * V1 `FileSourceScanExec` ([[read]]) and the V2 `BatchScanExec`
-    * (`format("snap")`, SQL) surfaces, with partition and
-    * manifest-stats pruning applied; qualified paths, sorted.
-    * Against [[files]] of the version this is the admitted/total
-    * skipping reading. It plans the frame and runs no job;
-    * deletion-vector sidecars and other scans are not listed. */
+    * physical plan ([[graft.core.Plans.nodes]]: through AQE, its query
+    * stages and subqueries) for both the V1 `FileSourceScanExec`
+    * ([[read]]) and the V2 `BatchScanExec` (`format("snap")`, SQL)
+    * surfaces, with partition and manifest-stats pruning applied;
+    * qualified paths, sorted. Against [[files]] of the version this is
+    * the admitted/total skipping reading. It plans the frame and runs
+    * no job; deletion-vector sidecars and other scans are not
+    * listed. */
   def scannedFiles(df: DataFrame): Seq[String] = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.datasources.FilePartition
     import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
-    def walk(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
+    graft.core.Plans.nodes(df.queryExecution.executedPlan).flatMap {
       case f: FileSourceScanExec
           if f.relation.location.isInstanceOf[SnapFileIndex] =>
         f.selectedPartitions.filePartitionIterator
@@ -1105,9 +1103,8 @@ object SnapTable {
           }
         case _ => Nil
       }
-      case other => other.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan).distinct.sorted
+      case _ => Nil
+    }.toSeq.distinct.sorted
   }
 
   /** A scanned row's data file as its MANIFEST-RELATIVE path

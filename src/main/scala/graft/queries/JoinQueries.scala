@@ -2,8 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.core.{Num, Tables}
+import graft.core.{Num, Plans, Tables}
 
 /** Join-shape queries (SURVEY §2.3). The reference's only joins are
   * nested loops over in-memory lists; here each gets the right Spark
@@ -171,27 +172,39 @@ object JoinQueries extends graft.QueryModule {
     * the join then drops), so the result must be bit-identical. */
   def qRuntimeFilter(s: SparkSession, dir: String): DataFrame = {
     val f = Bridge.cloneSession(s)
-    import f.implicits._
     Seq(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
       .foreach { case (k, v) => f.conf.set(k, v) }
+    val out = runtimeFilterJoin(f, dir)
+    require(hasRuntimeBloomFilter(out.queryExecution.executedPlan),
+      "runtime bloom filter missing from the join plan")
+    out
+  }
+
+  /** [[qRuntimeFilter]]'s join under `f`'s confs, unchecked. */
+  private[graft] def runtimeFilterJoin(f: SparkSession,
+      dir: String): DataFrame = {
+    import f.implicits._
     val li = Tables.lineitem(f, dir).select($"l_orderkey",
       Num.cents($"l_quantity").as("qty_c"))
     val ord = Tables.orders(f, dir)
       .filter($"o_orderpriority" === "1-URGENT")
       .select($"o_orderkey", $"o_orderstatus")
-    val out = li.join(ord, $"l_orderkey" === $"o_orderkey")
+    li.join(ord, $"l_orderkey" === $"o_orderkey")
       .groupBy($"o_orderstatus")
       .agg(count(lit(1)).as("n_lines"), sum($"qty_c").as("qty_sum_c"))
       .orderBy($"o_orderstatus")
-    val plan = out.queryExecution.executedPlan.toString
-    require(plan.contains("bloom_filter_agg"),
-      "runtime bloom filter missing from the join plan")
-    out
   }
+
+  /** `plan` probes a runtime bloom filter: some node holds the
+    * `might_contain` Spark injects (its filter is built by a
+    * `bloom_filter_agg` subquery). */
+  private[graft] def hasRuntimeBloomFilter(plan: SparkPlan): Boolean =
+    Plans.expressions(plan).exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain])
 
   val qRuntimeFilterSql: String =
     s"""SELECT o_orderstatus, count(*) AS n_lines,

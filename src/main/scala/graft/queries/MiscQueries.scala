@@ -3,8 +3,9 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.core.{Num, Tables}
+import graft.core.{Num, Plans, Tables}
 import graft.core.CacheScope.Scoped
 import graft.ops.{AsofJoin, Cms, Curriculum, Hll, LayoutAudit, Mv, Ols, PageRank, Profile, SnapTable, Upsert}
 import graft.report.Overlap
@@ -1082,6 +1083,16 @@ object MiscQueries extends graft.QueryModule {
     * dimension day comes from the fact), replayed over the raw
     * events table. */
   def qPartitionPrune(s: SparkSession, dir: String): DataFrame = {
+    val out = partitionPruneJoin(s, dir)
+    require(hasDynamicPruning(out.queryExecution.executedPlan),
+      "dynamic partition pruning missing from the fact scan's plan")
+    out
+  }
+
+  /** [[qPartitionPrune]]'s layout and join under `s`'s confs,
+    * unchecked. */
+  private[graft] def partitionPruneJoin(s: SparkSession,
+      dir: String): DataFrame = {
     val tmp = StreamQueries.scratch(s, "dpp")
     val dayUs = 86400L * 1000000L
     Tables.events(s, dir)
@@ -1102,16 +1113,25 @@ object MiscQueries extends graft.QueryModule {
       .withColumn("dow", pmod(col("d"), lit(7L)))
       .coalesce(1).write.parquet(s"$tmp/days")
     val dim = s.read.parquet(s"$tmp/days").filter(col("dow") === 2L)
-    val out = fact.join(dim, Seq("d"))
+    fact.join(dim, Seq("d"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value_c")).as("sum_c"),
         count_distinct(col("d")).as("n_days"))
       .orderBy(col("event_type"))
-    val plan = out.queryExecution.executedPlan.toString
-    require(plan.toLowerCase.contains("dynamicpruning"),
-      "dynamic partition pruning missing from the fact scan's plan")
-    out
+  }
+
+  /** `plan` prunes partitions at run time: some scan filter is a
+    * `DynamicPruningExpression` over a pruning subquery (not the
+    * literal `true` it degrades to when the build side cannot be
+    * reused). */
+  private[graft] def hasDynamicPruning(plan: SparkPlan): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression, Literal}
+    Plans.expressions(plan).exists {
+      case DynamicPruningExpression(_: Literal) => false
+      case _: DynamicPruningExpression => true
+      case _ => false
+    }
   }
 
   val qPartitionPruneSql: String =
@@ -2922,20 +2942,47 @@ object MiscQueries extends graft.QueryModule {
     * fidelity is exactly "the bytes that come back are the bytes
     * that went in". */
   def qOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
+    val out = orcRoundtripScan(s, dir)
+    require(orcFilterPushed(out.queryExecution.executedPlan),
+      "event_type filter not pushed into the ORC scan")
+    out
+  }
+
+  /** [[qOrcRoundtrip]]'s write and filtered read under `s`'s confs,
+    * unchecked. */
+  private[graft] def orcRoundtripScan(s: SparkSession,
+      dir: String): DataFrame = {
     val tmp = StreamQueries.scratch(s, "orc")
     Tables.events(s, dir)
       .select(col("event_id"), col("event_type"),
         Num.cents(col("value")).as("value_c"))
       .write.format("orc").save(s"$tmp/ev")
-    val out = s.read.format("orc").load(s"$tmp/ev")
+    s.read.format("orc").load(s"$tmp/ev")
       .filter(col("event_type") =!= "error")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value_c")).as("sum_c"))
       .orderBy(col("event_type"))
-    val plan = out.queryExecution.executedPlan.toString
-    require(plan.contains("PushedFilters: [IsNotNull(event_type), Not(EqualTo(event_type,error))]"),
-      s"event_type filter not pushed into the ORC scan:\n${plan.take(800)}")
-    out
+  }
+
+  /** `plan` pushes [[qOrcRoundtrip]]'s filter into its ORC reader: an
+    * ORC file scan hands `IsNotNull(event_type)` and
+    * `Not(EqualTo(event_type, error))` to the reader, and the scan's
+    * session lets the reader use them (`spark.sql.orc.filterPushdown`;
+    * the reader reads the conf of the relation's session). */
+  private[graft] def orcFilterPushed(plan: SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+    import org.apache.spark.sql.sources.{EqualTo, Filter, IsNotNull, Not}
+    val want = Set[Filter](IsNotNull("event_type"),
+      Not(EqualTo("event_type", "error")))
+    Plans.nodes(plan).exists {
+      case f: FileSourceScanExec =>
+        f.relation.fileFormat.isInstanceOf[OrcFileFormat] &&
+          f.relation.sparkSession.conf
+            .get("spark.sql.orc.filterPushdown").toBoolean &&
+          want.subsetOf(Bridge.pushedFilters(f).toSet)
+      case _ => false
+    }
   }
 
   val qOrcRoundtripSql: String =

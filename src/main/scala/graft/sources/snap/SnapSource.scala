@@ -70,13 +70,26 @@ class SnapSource extends TableProvider with DataSourceRegister {
 
 object SnapSource {
 
+  /** Resolved tables [[tables]] keeps. A statement reads a handful of
+    * tables; the bound only stops a long-lived JVM from pinning every
+    * table (and its session) it ever resolved. */
+  private[graft] val MaxTables = 16
+
   /** Table path + version options → the pinned-version V2 table.
-    * Instances cache per (path, resolved version): schema inference,
-    * `getTable`, and every scan of one SQL statement share one
-    * manifest resolution. What a query's scan admitted is read off
-    * its executed plan ([[SnapTable.scannedFiles]]). */
+    * Instances cache per (path, resolved version), least recently
+    * used first out past [[MaxTables]]: schema inference, `getTable`,
+    * and every scan of one SQL statement share one manifest
+    * resolution. What a query's scan admitted is read off its
+    * executed plan ([[SnapTable.scannedFiles]]). Guarded by itself. */
   private val tables =
-    new java.util.concurrent.ConcurrentHashMap[String, SnapV2Table]()
+    new java.util.LinkedHashMap[String, SnapV2Table](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, SnapV2Table]): Boolean =
+        size() > MaxTables
+    }
+
+  /** Resolved tables held now (at most [[MaxTables]]). */
+  private[graft] def cachedTables: Int = tables.synchronized(tables.size())
 
   /** Cache key: the FULLY QUALIFIED table uri — the catalog hands
     * paths in varying spellings (bare, `file:`-qualified); one table
@@ -112,8 +125,14 @@ object SnapSource {
       options.containsKey("timestampAsOf")
     val key = keyOf(spark, path, version) +
       (if (merge) "+merge" else "") + (if (pinned) "+pin" else "")
-    tables.computeIfAbsent(key,
-      _ => new SnapV2Table(spark, path, version, merge, pinned))
+    // resolved outside the lock (it reads the manifest and a footer);
+    // a concurrent resolution of the same key keeps the first one in
+    tables.synchronized(Option(tables.get(key))).getOrElse {
+      val t = new SnapV2Table(spark, path, version, merge, pinned)
+      tables.synchronized {
+        Option(tables.putIfAbsent(key, t)).getOrElse(t)
+      }
+    }
   }
 
   /** DataFrame over the connector (the non-SQL entry point). */

@@ -52,6 +52,16 @@ object Bridge {
       org.apache.spark.sql.jdbc.JdbcDialects.get(url))
   }
 
+  /** The source filters a V1 file scan hands its reader: its data
+    * filters translated as the scan itself translates them (the
+    * scan's `pushedDownFilters` and the translation are not public). */
+  def pushedFilters(scan: org.apache.spark.sql.execution.FileSourceScanExec)
+      : Seq[org.apache.spark.sql.sources.Filter] = {
+    import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils}
+    val nested = DataSourceUtils.supportNestedPredicatePushdown(scan.relation)
+    scan.dataFilters.flatMap(DataSourceStrategy.translateFilter(_, nested))
+  }
+
   /** Executed physical plan of a streaming query's last micro-batch —
     * lets specs assert planning facts (e.g. that a planted repartition
     * + secondary sort satisfied a stateful operator's required

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.ops.SnapTable
@@ -177,5 +178,28 @@ class SnapSqlSpec extends SparkSpec {
     val total = SnapTable.files(spark, tbl, 1).size
     assert(total === 8 && admitted < 8,
       s"range-clustered layout must prune: $admitted of $total")
+  }
+
+  test("snap source: resolved tables stay bounded; an evicted one re-resolves") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val tbl = freshTbl("graft_snaplru")
+    (1 to SnapSource.MaxTables + 1).foreach { i =>
+      SnapTable.commit(spark, Seq((i.toLong, i * 10L)).toDF("k", "v"), tbl,
+        if (i == 1) "overwrite" else "append")
+    }
+    val vs = SnapTable.versions(spark, tbl)
+    assert(vs.size === SnapSource.MaxTables + 1)
+    def at(v: Int) = SnapSource.resolve(spark, new CaseInsensitiveStringMap(
+      Map("path" -> tbl, "versionAsOf" -> v.toString).asJava))
+    val first = at(vs.head)
+    assert(at(vs.head) eq first, "one resolution per key while cached")
+    val rows = SnapSource.load(spark, tbl, Some(vs.head)).collect().toSet
+    vs.tail.foreach(at)
+    assert(SnapSource.cachedTables === SnapSource.MaxTables)
+    val again = at(vs.head)
+    assert(again ne first, "the least recently used table was evicted")
+    assert(SnapSource.load(spark, tbl, Some(vs.head)).collect().toSet === rows)
+    assert(rows === Set(Row(1L, 10L)))
   }
 }
