@@ -29,17 +29,18 @@ object Par {
     * partitions (never narrow), and probing it via `Dataset.rdd`
     * under AQE would materialize its query stages at
     * plan-construction time — jobs whose results the rewritten plan
-    * then re-executes. Scan-lineage plans are exchange-free by
-    * construction, so AQE never wraps them and the
-    * `rdd.getNumPartitions` probe only builds lineage (no job) and
-    * reports the scan's split count. Row placement is the only thing
-    * that changes, so operators built on this stay
-    * partitioning-invariant.
+    * then re-executes. For a file scan, a local batch or a
+    * projection of one, the `rdd.getNumPartitions` probe only builds
+    * lineage (no job) and reports the split count. A cached leaf is
+    * the exception: the probe builds the cache's RDD, and when the
+    * cached plan has exchanges AQE runs their stages right then, at
+    * plan-construction time. Row placement is the only thing that
+    * changes, so operators built on this stay partitioning-invariant.
     *
     * Caller contract: a frame that was JOINED before the explode
     * (broadcast joins keep the streamed side's narrow partitioning
     * but still plan an exchange, so the join is skipped here) should
-    * be cached first — the cache scan is a leaf that probes cleanly,
+    * be cached first — the cache scan is a leaf the probe accepts,
     * and such frames feed multiple branches anyway (see
     * qCurationFull's corpus/clean). */
   def widen(df: DataFrame): DataFrame =

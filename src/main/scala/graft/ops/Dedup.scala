@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.HashParity
+import graft.functions.{HashParity, SketchExprs}
 import graft.core.CacheScope.Scoped
 
 /** Deduplication operators for a training-data pipeline.
@@ -20,7 +20,11 @@ import graft.core.CacheScope.Scoped
   *  - MinHash: one aggregate builds 64-component signatures; LSH
   *    banding turns near-dup search into an equi-join on
   *    (band, band-hash) — no all-pairs comparison at any scale.
-  *  - SimHash: one aggregate of 64 bit-majority counters.
+  *  - SimHash: one aggregate of 60 bit-majority counters.
+  *
+  * Each sketch (the MinHash signature, the SimHash counters) is one
+  * fixed-width native fold on [[graft.functions.NativeAgg]], never k
+  * aggregate expressions.
   */
 object Dedup {
 
@@ -153,21 +157,19 @@ object Dedup {
 
   /** MinHash signatures: k affine permutations of ONE 28-bit md5
     * shingle hash — `h_i = (a_i * h28(g) + b_i) mod (2^31-1)` — each
-    * slot the min over the doc's shingles. One aggregate.
+    * slot the min over the doc's shingles. Output `(id, sig)` with
+    * `sig` the k slots as `array<bigint>`.
     *
-    * md5-parity ([[graft.functions.HashParity]]) rather than xxhash64
-    * is deliberate: the affine scheme hashes each shingle ONCE (the k
-    * slots are fused multiply-adds in the same codegen stage) instead
-    * of k times, and the whole signature replays in DuckDB SQL, so the
-    * operator is independently oracle-checked. */
-  def minhashSignatures(sh: DataFrame, k: Int = 64): DataFrame = {
-    val hashed = sh.withColumn("hg", HashParity.h28(col("g")))
-    val aggs = (0 until k).map { i =>
-      min((lit(HashParity.minhashA(i)) * col("hg") + lit(HashParity.minhashB(i)))
-        % HashParity.MinhashP).as(s"h$i")
-    }
-    hashed.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
+    * One aggregate: the signature is a single fixed-width native fold
+    * ([[graft.functions.MinHashFold]] on [[graft.functions.NativeAgg]]),
+    * so each shingle is hashed once and the k slots are one loop over
+    * the aggregate's k long words, with no generated code for the
+    * slots. md5-parity ([[graft.functions.HashParity]]) rather than
+    * xxhash64 keeps the whole signature replayable in DuckDB SQL, so
+    * the operator is independently oracle-checked. */
+  def minhashSignatures(sh: DataFrame, k: Int = 64): DataFrame =
+    sh.withColumn("hg", HashParity.h28(col("g")))
+      .groupBy(col("id")).agg(SketchExprs.minhash(col("hg"), k).as("sig"))
 
   /** SOFT exact dedup: duplicate-aware sampling weights instead of
     * removal. Every doc in an exact-duplicate cluster of size n gets
@@ -219,18 +221,14 @@ object Dedup {
 
   /** LSH banding: signature -> (band, band-hash) rows. Docs sharing
     * any band-hash are near-dup candidates. Band hash = 60-bit md5 of
-    * the comma-joined slot minima (cross-engine replayable). */
-  def lshBands(sig: DataFrame, k: Int = 64, bandSize: Int = 4): DataFrame = {
-    val nBands = k / bandSize
-    val bands = (0 until nBands).map { j =>
-      struct(lit(j).as("band"),
-        HashParity.h60(concat_ws(",",
-          (j * bandSize until (j + 1) * bandSize).map(i => col(s"h$i")): _*))
-          .as("bh"))
-    }
-    sig.select(col("id"), explode(array(bands: _*)).as("b"))
-      .select(col("id"), col("b.band").as("band"), col("b.bh").as("bh"))
-  }
+    * the comma-joined slot minima (cross-engine replayable). All
+    * `k / bandSize` band hashes of a signature come from one native
+    * call ([[graft.functions.Sketch.lshBands]]), exploded with their
+    * band index. */
+  def lshBands(sig: DataFrame, k: Int = 64, bandSize: Int = 4): DataFrame =
+    sig.select(col("id"),
+        posexplode(SketchExprs.lshBands(col("sig"), k / bandSize, bandSize)))
+      .select(col("id"), col("pos").as("band"), col("col").as("bh"))
 
   /** Candidate near-dup pairs: equi-join on (band, band-hash). */
   def minhashCandidates(bands: DataFrame): DataFrame = {
@@ -463,22 +461,17 @@ object Dedup {
   val SimhashBits: Int = 60
 
   /** SimHash: 60-bit bit-majority fingerprint of token hashes.
-    * One aggregate of 60 counters; near-dups share high-bit buckets. */
-  def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val tok = graft.core.Par.widen(df)
+    * One aggregate, a single native fold of 60 counters
+    * ([[graft.functions.SimHashFold]]), then the bit assembly;
+    * near-dups share high-bit buckets. */
+  def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    graft.core.Par.widen(df)
       .select(col(idCol).as("id"),
-      explode(TextAnalysis.tokens(col(textCol))).as("t"))
+        explode(TextAnalysis.tokens(col(textCol))).as("t"))
       .withColumn("th", HashParity.h60(col("t")))
-    val bitAggs = (0 until SimhashBits).map { b =>
-      sum(when(shiftrightunsigned(col("th"), b).bitwiseAND(1L) === 1L, 1L)
-        .otherwise(-1L)).as(s"b$b")
-    }
-    val counted = tok.groupBy(col("id")).agg(bitAggs.head, bitAggs.tail: _*)
-    val assembled = (0 until SimhashBits)
-      .map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(0L))
-      .reduce(_ + _)
-    counted.select(col("id"), assembled.as("simhash"))
-  }
+      .groupBy(col("id"))
+      .agg(SketchExprs.simhashCounters(col("th"), SimhashBits).as("c"))
+      .select(col("id"), SketchExprs.simhashBits(col("c")).as("simhash"))
 
   /** Single-family SimHash near-dup pairs: equi-join on the high
     * `bucketBits` of the fingerprint (candidate generation), then the

@@ -173,7 +173,7 @@ object Mix {
       lit("' needs "), format_number(col("rate_ppm") / 1e6, 1),
       lit(" epochs (target "), col("target_tokens"),
       lit(" tokens vs "), col("avail_tokens"),
-      lit(s" available) — over maxEpochs=$maxEpochs; shrink the " +
+      lit(s" available) - over maxEpochs=$maxEpochs; shrink the " +
         "budget/weight or raise maxEpochs"))
     val kept = base.join(broadcast(rates), Seq("src_ix"))
       .withColumn("n_copies",

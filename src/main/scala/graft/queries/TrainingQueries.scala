@@ -384,7 +384,7 @@ object TrainingQueries extends graft.QueryModule {
     val counts = Dedup.minhashCandidates(Dedup.lshBands(sig, 64, 4))
       .select(explode(array(col("id1"), col("id2"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("n_candidates"))
-    sig.select(col("id").as("doc_id"), col("h0"))
+    sig.select(col("id").as("doc_id"), col("sig")(0).as("h0"))
       .join(counts.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_candidates"))
       .orderBy(col("doc_id"))
@@ -659,7 +659,7 @@ object TrainingQueries extends graft.QueryModule {
     * of the corpus, so [[Components.connectedComponents]] normally
     * labels them on the driver: the verify plan runs once, in one
     * bounded collect, and the labels join back to every document. */
-  private[queries] def keepFrame(docs: DataFrame): DataFrame = {
+  private[graft] def keepFrame(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
     val idx = Dedup.cappedIndex(
         Dedup.wordShingles(docs, "text", "doc_id"), 1000L)

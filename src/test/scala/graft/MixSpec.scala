@@ -141,6 +141,16 @@ class MixSpec extends SparkSpec {
       Seq("a" -> 0.5, "b" -> 0.5), budgetTokens = 500L, salt = "t").count()
   }
 
+  test("mixEpochs: the plan description is Latin-1, so it is stored one byte per character") {
+    val df = Mix.mixEpochs(docs, "text", "doc_id", "source",
+      Seq("a" -> 0.5, "b" -> 0.5), budgetTokens = 500L, salt = "t")
+    df.collect()
+    val desc = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(desc.contains("maxEpochs=16"))
+    assert(desc.forall(_ <= '\u00ff'), desc.filter(_ > '\u00ff').distinct)
+  }
+
   test("mix is invariant to partitioning and row order") {
     val shuffled = docs.orderBy(rand(7)).repartition(7)
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =

@@ -89,7 +89,11 @@ class NativeFunctionSpec extends SparkSpec {
     Native("pca_project_all", () => VectorExprs.pcaProjectAll(col("v"), comps),
       () => VectorExprs.pcaProjectAll(col("s"), comps)),
     Native("interleave_bits", () => ZOrderExprs.interleaveBits(long, long + 1),
-      () => ZOrderExprs.interleaveBits(col("v"), long)))
+      () => ZOrderExprs.interleaveBits(col("v"), long)),
+    Native("lsh_bands", () => SketchExprs.lshBands(array(long, long * 7, long - 2, lit(5L)), 2, 2),
+      () => SketchExprs.lshBands(col("s"), 2, 2)),
+    Native("simhash_bits", () => SketchExprs.simhashBits(array(long - 1, lit(-1L), long)),
+      () => SketchExprs.simhashBits(col("v"))))
 
   /** Three rows of every input type, none foldable: the calls plan as
     * a Project over Range, not as constants. */
@@ -100,7 +104,7 @@ class NativeFunctionSpec extends SparkSpec {
     array(col("id").cast("int"), lit(77), lit(220)).as("ids"))
 
   test("the table covers every native function") {
-    assert(natives.map(_.name).distinct.size === 23)
+    assert(natives.map(_.name).distinct.size === 25)
   }
 
   natives.foreach { n =>
